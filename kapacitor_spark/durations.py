@@ -69,7 +69,3 @@ def to_interval(d: str | int | float) -> str:
     """Duration → Spark interval string with microsecond fidelity."""
     micros = round(parse_duration(d) * 1_000_000)
     return f"{micros} microseconds"
-
-
-def seconds_expr(d: str | int | float) -> float:
-    return parse_duration(d)

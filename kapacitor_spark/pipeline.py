@@ -220,15 +220,6 @@ class Pipeline:
         self.df.explain(mode)
         return self
 
-    def cardinality(self) -> int:
-        """Working group cardinality — the reference's per-node
-        working_cardinality stat (/root/reference/node.go edge stats;
-        integration harness testStreamerCardinality). One distinct-count
-        over the group dims; ungrouped pipelines report 1."""
-        if not self.dims:
-            return 1
-        return self.df.select(*self.dims).distinct().count()
-
     # ------------------------------------------------------------------ #
     # §2.2 projections / per-row transforms
     # ------------------------------------------------------------------ #
@@ -632,7 +623,8 @@ class Pipeline:
         and re-sort for their per-streak window (plan: 6 Window / 4 Sort
         operators); both outputs are pure functions of the same streak id
         and the same per-streak ordering, so the fusion computes them in
-        one per-streak window (4 Window / 2 Sort) — identical values."""
+        one per-streak window (at most 3 Window / 2 Sort, pinned by
+        test_plans.py) — identical values."""
         df, ok = self._streak_id(self._expr(cond))
         w = Window.partitionBy(
             *[F.col(d) for d in self.dims], F.col("__streak")

@@ -213,16 +213,3 @@ def read_table(spark: SparkSession, path: str):
     if memo is not None and memo_key is not None:
         memo[memo_key] = df
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Read driver testdata parquet tables; returns dict name -> DataFrame.
-
-    Reads stay lazy/declarative so Catalyst gets full pushdown/pruning into
-    the scan; callers filter/select lazily.
-    """
-    names = names or (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    )
-    return {n: read_table(spark, f"{sf_dir}/{n}.parquet") for n in names}

@@ -105,6 +105,8 @@ def load_sideload_levels(
         base = ""
     else:
         base = source[len("file://"):] if source.startswith("file://") else source
+        if not os.path.isdir(base):
+            raise ValueError(f"sideload: source directory {base!r} does not exist")
     lookups, ons = [], []
     for tmpl in order:
         m = _TMPL.search(tmpl)
@@ -132,7 +134,11 @@ def load_sideload_levels(
                         continue
                     val = fn[len(fprefix): len(fn) - len(suffix)]
                     rows.append({key: val, **_load_file(os.path.join(d, fn))})
-        pdf = pd.DataFrame(rows) if rows else pd.DataFrame({key: []})
-        lookups.append(spark.createDataFrame(pdf))
+        # a level with no matching entries is an empty lookup: every
+        # point falls through to the next level or the .field() default
+        lookups.append(
+            spark.createDataFrame(pd.DataFrame(rows)) if rows
+            else spark.createDataFrame([], f"`{key}` string")
+        )
         ons.append([key])
     return lookups, ons

@@ -74,23 +74,6 @@ def build_warc(
     return bytes(out)
 
 
-def _gunzip_members(data: bytes) -> bytes:
-    """Decompress a concatenation of gzip members (the .warc.gz layout)."""
-    out = bytearray()
-    rest = data
-    while rest:
-        d = zlib.decompressobj(31)
-        try:
-            out += d.decompress(rest)
-            out += d.flush()
-        except zlib.error as e:  # corrupt member: keep the ValueError contract
-            raise ValueError(f"warc: corrupt gzip member ({e})") from e
-        if not d.eof:
-            raise ValueError("warc: truncated gzip member")
-        rest = d.unused_data
-    return bytes(out)
-
-
 def _scan_records(data: bytes, final: bool) -> tuple:
     """Parse complete records off ``data``; return ``(records, consumed)``.
 

@@ -17,6 +17,17 @@ Spark mapping:
   (/root/reference/edge/grouped.go, task.go:532-586); checkpointing
   replaces snapshot/restore.
 
+Every event-time keyed operator runs on ONE kernel, ``_keyed_scan``: per
+group it sorts each micro-batch slice by event time and folds it through
+the operator's ``step(carry, pdf)``. The carry is any picklable value,
+stored pickled in a single ``BinaryType`` state column — operators never
+declare their own state schema or encoding. Checkpoints written before
+this state layout (per-operator state columns) cannot be resumed: Spark's
+state-schema check rejects them when the query starts
+(``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``); start from a fresh
+checkpoint. Only the processing-time operators (deadman_stream,
+stats_stream, window_barrier_stream) drive ``GroupState`` timers directly.
+
 The DECLARATIVE subset of Pipeline (where/eval/default/shift/union/
 window_time+agg) works unchanged on streaming DataFrames — Spark plans it
 incrementally. Only the ordered-window operators need the stateful forms
@@ -25,8 +36,9 @@ below, because event order across micro-batches requires keyed state.
 
 from __future__ import annotations
 
+import pickle
 import threading
-from typing import Iterator, Sequence
+from typing import Callable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -34,12 +46,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
-    DoubleType, LongType, StringType, StructField, StructType,
+    BinaryType, DoubleType, LongType, StringType, StructField, StructType,
+    TimestampType,
 )
 
 from kapacitor_spark.durations import parse_duration, to_interval
 from kapacitor_spark.streaming.state import (
-    LEVEL_IDX, LEVELS, determine_levels, new_state, walk_levels,
+    LEVELS, determine_levels, new_state, walk_levels,
 )
 
 __all__ = [
@@ -72,6 +85,87 @@ def barrier(df: DataFrame, time_col: str, delay: str | float) -> DataFrame:
     (/root/reference/barrier.go:86-335). ``delay`` bounds state retention
     and drops late data, exactly the reference's barrier contract."""
     return df.withWatermark(time_col, to_interval(delay))
+
+
+def _col(x) -> "F.Column":
+    """SQL string or Column → Column."""
+    return F.expr(x) if isinstance(x, str) else x
+
+
+def _t_us(s: pd.Series) -> np.ndarray:
+    """Event-time column → int64 epoch µs."""
+    return s.to_numpy(dtype="datetime64[us]").astype("int64")
+
+
+_CARRY_SCHEMA = StructType([StructField("carry", BinaryType())])
+
+
+def _keyed_scan(
+    df: DataFrame,
+    time_col: str,
+    dims: Sequence[str],
+    tiebreak: Sequence[str],
+    step: Callable,
+    init,
+    out_schema: StructType,
+    idle_timeout: str | float | None = None,
+) -> DataFrame:
+    """The keyed-state kernel every event-time stateful operator runs on
+    — the per-group receiver of the reference's edge/grouped.go, with the
+    checkpoint as its snapshot/restore (task.go:532-586).
+
+    Per group and micro-batch, each non-empty slice is stably sorted on
+    ``(time_col, *tiebreak)`` and folded through ``step(carry, pdf) ->
+    (carry, out_pdf)``; ``out_pdf``'s ``out_schema`` columns are emitted.
+    The carry starts as (a copy of) ``init`` and persists pickled in one
+    BinaryType state column. Empty ``dims`` key every row on one
+    synthetic constant — a single group, serial at this stage like the
+    reference's ungrouped stream task.
+
+    ``idle_timeout``: event-time DeleteGroup (see alert_stream) — the
+    group's state is dropped once the watermark passes its last event
+    time + ``idle_timeout``; requires an upstream watermark."""
+    timeout_ms = (
+        round(parse_duration(idle_timeout) * 1000)
+        if idle_timeout is not None else None
+    )
+    out_cols = [f.name for f in out_schema]
+    sort_cols = [time_col, *tiebreak]
+    init_blob = pickle.dumps(init)
+
+    def machine(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+        if state.hasTimedOut:
+            state.remove()
+            return
+        carry = pickle.loads(state.get[0] if state.exists else init_blob)
+        last_ms = None
+        for pdf in pdfs:
+            if not len(pdf):
+                continue
+            pdf = pdf.sort_values(sort_cols, kind="stable")
+            carry, out = step(carry, pdf)
+            if len(out):
+                yield out[out_cols]
+            if timeout_ms is not None:
+                ms = int(_t_us(pdf[time_col])[-1]) // 1000
+                last_ms = ms if last_ms is None else max(last_ms, ms)
+        state.update((pickle.dumps(carry),))
+        if last_ms is not None:
+            state.setTimeoutTimestamp(last_ms + timeout_ms)
+
+    if not dims:
+        df = df.withColumn("__g", F.lit(0))
+    return df.groupBy(*[F.col(d) for d in dims or ["__g"]]).applyInPandasWithState(
+        machine,
+        outputStructType=out_schema,
+        stateStructType=_CARRY_SCHEMA,
+        outputMode="append",
+        timeoutConf=(
+            GroupStateTimeout.EventTimeTimeout
+            if timeout_ms is not None
+            else GroupStateTimeout.NoTimeout
+        ),
+    )
 
 
 def _episode_durations(lvs, tms_us, last_level: int, ep_start: int):
@@ -133,15 +227,92 @@ def _count_window_step(carry, since, vals, period_count, every_count,
     return out, gate, arr[-period_count:], int((since + len(vals)) % every_count)
 
 
-def _level_expr(crit, warn, info) -> "F.Column":
-    expr = F.lit("OK")
-    if info is not None:
-        expr = F.when(F.expr(info) if isinstance(info, str) else info, "INFO").otherwise(expr)
-    if warn is not None:
-        expr = F.when(F.expr(warn) if isinstance(warn, str) else warn, "WARNING").otherwise(expr)
-    if crit is not None:
-        expr = F.when(F.expr(crit) if isinstance(crit, str) else crit, "CRITICAL").otherwise(expr)
-    return expr
+_LEVEL_NAMES = np.array(LEVELS, dtype=object)
+
+
+class _AlertStage:
+    """The alert machine every alerting stream operator ends in (the
+    reference's alert.go:989-1290): levels from predicate masks —
+    first match of CRITICAL > WARNING > INFO, or the reset-hysteresis
+    walk (determine_levels) when any reset is set — then the
+    .durationField episode clock and walk_levels. Called as
+    ``stage(carry, rows) -> (carry, emitted rows + level [+ duration])``;
+    the carry is (walk state, episode-start µs), seeded by ``init``.
+
+    ``preds``/``resets`` map level (1=INFO, 2=WARNING, 3=CRITICAL) to a
+    TICK lambda source string (compiled to pandas), a callable
+    ``f(rows) -> ndarray``, or None."""
+
+    def __init__(
+        self, time_col, preds, resets, *, state_changes_only, events_only,
+        max_interval, no_recoveries, flapping, history, duration_field,
+    ):
+        from kapacitor_spark.functions.lambdas import compile_lambda_pandas
+
+        def lv(x):
+            if isinstance(x, str):
+                return compile_lambda_pandas(x, time_col)
+            return x
+
+        self.time_col = time_col
+        self.preds = {l: lv(preds[l]) for l in (1, 2, 3)}
+        self.resets = {l: lv(resets[l]) for l in (1, 2, 3)}
+        self.defined = {l for l, f in self.preds.items() if f is not None}
+        self.has_reset = {l: f is not None for l, f in self.resets.items()}
+        self.use_resets = any(self.has_reset.values())
+        self.mi_us = (
+            round(parse_duration(max_interval) * 1_000_000)
+            if max_interval is not None else None
+        )
+        flap_low, flap_high = flapping if flapping else (None, None)
+        self.walk_kw = dict(
+            state_changes_only=state_changes_only, no_recoveries=no_recoveries,
+            events_only=events_only, flap_low=flap_low, flap_high=flap_high,
+            max_interval_us=self.mi_us,
+        )
+        self.duration_field = duration_field
+        self.fields = [StructField("level", StringType())] + (
+            [StructField(duration_field, LongType())] if duration_field else []
+        )
+        self.init = (new_state(history), -1)
+
+    def __call__(self, carry, rows: pd.DataFrame):
+        if not len(rows):
+            return carry, rows
+        st, ep_start = carry
+        n = len(rows)
+        m = {
+            l: f(rows) if f is not None else np.zeros(n, dtype=bool)
+            for l, f in self.preds.items()
+        }
+        if self.use_resets:
+            r = {
+                l: np.asarray(f(rows), dtype=object) if f is not None
+                else np.full(n, None, dtype=object)
+                for l, f in self.resets.items()
+            }
+            lvs, _ = determine_levels(
+                m, r, self.defined, self.has_reset, st["last_level"]
+            )
+        else:
+            # first match of CRITICAL > WARNING > INFO (alert.go:915-950):
+            # ascending, a higher level overrides
+            lvs = np.zeros(n, dtype=np.int64)
+            for l in sorted(self.defined):
+                lvs = np.where(m[l], l, lvs)
+        tms = _t_us(rows[self.time_col])
+        if self.duration_field is not None:
+            # st["last_level"] is still the PRE-walk carry here
+            durs, ep_start = _episode_durations(
+                lvs, tms, st["last_level"], ep_start
+            )
+            rows = rows.assign(**{self.duration_field: durs})
+        emit, st = walk_levels(
+            lvs, st, times=tms if self.mi_us is not None else None,
+            **self.walk_kw,
+        )
+        rows = rows.assign(level=_LEVEL_NAMES[lvs])
+        return (st, ep_start), rows.loc[emit]
 
 
 def alert_stream(
@@ -165,7 +336,7 @@ def alert_stream(
     duration_field: str | None = None,
 ) -> DataFrame:
     """Streaming alert state machine (/root/reference/alert.go:989-1290):
-    level CASE is evaluated declaratively; transitions / flapping
+    level predicates are evaluated declaratively; transitions / flapping
     suppression live in keyed state that persists across micro-batches
     (checkpoint = the reference's snapshot/restore, task.go:532).
 
@@ -203,170 +374,33 @@ def alert_stream(
     level-history ring + flapping flag — a few hundred bytes, safe at
     millions of groups.
     """
-    resets = {1: info_reset, 2: warn_reset, 3: crit_reset}
+    # predicates run declaratively (codegen'd) into mask columns; the
+    # level walk reads them inside the keyed machine
     preds = {1: info, 2: warn, 3: crit}
-    use_resets = any(v is not None for v in resets.values())
-    if use_resets:
-        # pre-evaluate predicates declaratively (codegen'd); the held-
-        # level walk happens inside the keyed machine where `cur` is state
-        lv_df = df
-        for l in (1, 2, 3):
-            p = preds[l]
-            lv_df = lv_df.withColumn(
-                f"__m{l}",
-                (F.expr(p) if isinstance(p, str) else p)
-                if p is not None else F.lit(False),
-            )
-            rs = resets[l]
-            lv_df = lv_df.withColumn(
-                f"__r{l}",
-                (F.expr(rs) if isinstance(rs, str) else rs).cast("boolean")
-                if rs is not None
-                else F.lit(None).cast("boolean"),
-            )
-        lv_df = lv_df.withColumn("level", F.lit("")).withColumn(
-            "__lv", F.lit(0).cast("int")
-        )
-    else:
-        lv_df = df.withColumn("level", _level_expr(crit, warn, info)).withColumn(
-            "__lv", F.coalesce(
-                F.array_position(F.array(*[F.lit(x) for x in LEVELS]), F.col("level")) - 1,
-                F.lit(0),
-            ).cast("int")
-        )
-    defined = {l for l in (1, 2, 3) if preds[l] is not None}
-    has_reset = {l: resets[l] is not None for l in (1, 2, 3)}
-    out_cols = ["level"] + ([duration_field] if duration_field else [])
-    out_schema = StructType(
-        [lv_df.schema[c] for c in df.columns]
-        + [StructField("level", StringType())]
-        + ([StructField(duration_field, LongType())] if duration_field else [])
+    resets = {1: info_reset, 2: warn_reset, 3: crit_reset}
+    lv_df = df
+    for l in (1, 2, 3):
+        if preds[l] is not None:
+            lv_df = lv_df.withColumn(f"__m{l}", F.coalesce(_col(preds[l]), F.lit(False)))
+            preds[l] = lambda rows, c=f"__m{l}": rows[c].to_numpy(dtype=bool)
+        if resets[l] is not None:
+            lv_df = lv_df.withColumn(f"__r{l}", _col(resets[l]).cast("boolean"))
+            resets[l] = lambda rows, c=f"__r{l}": rows[c].to_numpy(dtype=object)
+    stage = _AlertStage(
+        time_col, preds, resets, state_changes_only=state_changes_only,
+        events_only=events_only, max_interval=max_interval,
+        no_recoveries=no_recoveries, flapping=flapping, history=history,
+        duration_field=duration_field,
     )
-    state_schema = StructType(
-        [
-            StructField("last_level", LongType()),
-            StructField("history", StringType()),  # csv ring — tiny
-            StructField("idx", LongType()),
-            StructField("flapping", LongType()),
-            # lastTriggered event-time µs (stateChangesOnly(maxInterval)
-            # expiry, alert.go:1288-1290); -1 = never triggered
-            StructField("last_trig", LongType()),
-            # episode-start event-time µs (.durationField); -1 = none
-            StructField("ep_start", LongType()),
-        ]
-    )
-    flap_low, flap_high = flapping if flapping else (None, None)
-    in_cols = list(df.columns)
-
-    timeout_ms = (
-        round(parse_duration(idle_timeout) * 1000) if idle_timeout is not None else None
-    )
-    mi_us = (
-        round(parse_duration(max_interval) * 1_000_000)
-        if max_interval is not None
-        else None
-    )
-    tcol = time_col
-
-    def machine(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if timeout_ms is not None and state.hasTimedOut:
-            # DeleteGroup: idle group — discard state, emit nothing
-            state.remove()
-            yield pd.DataFrame(columns=in_cols + out_cols)
-            return
-        if state.exists:
-            last_level, hist_csv, idx, flap, last_trig, ep_start = state.get
-            ep_start = int(ep_start)
-            st = {
-                "last_level": int(last_level),
-                "history": [int(x) for x in hist_csv.split(",")],
-                "idx": int(idx),
-                "flapping": bool(flap),
-                "last_triggered": None if last_trig == -1 else int(last_trig),
-            }
-        else:
-            st = new_state(history)
-            ep_start = -1
-        outs = []
-        max_event_ms = None
-        for pdf in pdfs:
-            pdf = pdf.sort_values([time_col, *tiebreak], kind="stable")
-            if timeout_ms is not None and len(pdf):
-                ms = int(pd.Timestamp(pdf[tcol].iloc[-1]).value // 1_000_000)
-                max_event_ms = ms if max_event_ms is None else max(max_event_ms, ms)
-            tms = (
-                pdf[tcol].to_numpy(dtype="datetime64[us]").astype("int64")
-                if mi_us is not None
-                else None
-            )
-            if use_resets:
-                m = {l: pdf[f"__m{l}"].fillna(False).to_numpy() for l in (1, 2, 3)}
-                r = {l: pdf[f"__r{l}"].to_numpy(dtype=object) for l in (1, 2, 3)}
-                lvs, _ = determine_levels(
-                    m, r, defined, has_reset, st["last_level"]
-                )
-                pdf = pdf.assign(level=[LEVELS[int(x)] for x in lvs])
-            else:
-                lvs = pdf["__lv"].to_numpy()
-            if duration_field is not None:
-                # st["last_level"] is still the PRE-walk carry here
-                durs, ep_start = _episode_durations(
-                    lvs,
-                    pdf[tcol].to_numpy(dtype="datetime64[us]")
-                    .astype("int64"),
-                    st["last_level"], ep_start,
-                )
-                pdf = pdf.assign(**{duration_field: durs})
-            emit, st = walk_levels(
-                lvs,
-                st,
-                state_changes_only=state_changes_only,
-                no_recoveries=no_recoveries,
-                events_only=events_only,
-                flap_low=flap_low,
-                flap_high=flap_high,
-                times=tms,
-                max_interval_us=mi_us,
-            )
-            outs.append(pdf.loc[emit, in_cols + out_cols])
-        lt = st.get("last_triggered")
-        state.update(
-            (
-                st["last_level"],
-                ",".join(str(x) for x in st["history"]),
-                st["idx"],
-                int(st["flapping"]),
-                -1 if lt is None else int(lt),
-                int(ep_start),
-            )
-        )
-        if timeout_ms is not None and max_event_ms is not None:
-            # event-time timeout: fires when the watermark passes the
-            # group's last event time + idle_timeout — barrier().delete()
-            # semantics, deterministic under replay
-            state.setTimeoutTimestamp(max_event_ms + timeout_ms)
-        yield from outs
-
-    if not dims:
-        lv_df = lv_df.withColumn("__g", F.lit(0))
-    gcols = [F.col(d) for d in dims] if dims else [F.col("__g")]
-    return lv_df.groupBy(*gcols).applyInPandasWithState(
-        machine,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return _keyed_scan(
+        lv_df, time_col, dims, tiebreak, stage, stage.init,
+        StructType(df.schema.fields + stage.fields),
+        idle_timeout=idle_timeout,
     )
 
 
-#: window_alert_stream partial-aggregate algebra: per-agg
-#: (init_from_chunk, merge, finalize) over JSON-serializable partials.
+#: Aggregations window_alert_stream supports — the names its partial
+#: algebra (_chunk_stats / _merge / _final) implements.
 _WA_AGGS = {
     "count", "sum", "mean", "min", "max", "stddev", "median", "spread",
     "first", "last",
@@ -435,68 +469,35 @@ def window_alert_stream(
     millions of groups; parallel across groups, sequential only within a
     group's own micro-batch slice like every keyed operator here.
     """
-    from kapacitor_spark.functions.lambdas import compile_lambda_pandas
-
     if agg not in _WA_AGGS:
         raise ValueError(
             f"window_alert_stream: unsupported aggregation {agg!r} "
             f"(supported: {sorted(_WA_AGGS)})"
         )
-    # UNGROUPED tasks (r11 3rd wave): a synthetic constant key gives
-    # "keyed state with no key" — ONE group, serial at this stage like
-    # the reference's own ungrouped stream task (a single node walks the
-    # points); the upstream scan stays parallel and state is bytes.
     period_us = round(parse_duration(period) * 1_000_000)
     every_us = round(parse_duration(every) * 1_000_000)
     if period_us <= 0 or every_us <= 0:
         raise ValueError("window_alert_stream: period/every must be > 0")
-    mi_us = (
-        round(parse_duration(max_interval) * 1_000_000)
-        if max_interval is not None else None
-    )
     out_col = out_col or f"__{agg}"
-
-    def _lv(x):
-        if x is None:
-            return None
-        return compile_lambda_pandas(x, time_col) if isinstance(x, str) else x
-
-    preds = {1: _lv(info), 2: _lv(warn), 3: _lv(crit)}
-    resets = {1: _lv(info_reset), 2: _lv(warn_reset), 3: _lv(crit_reset)}
-    use_resets = any(v is not None for v in resets.values())
-    defined = {l for l in (1, 2, 3) if preds[l] is not None}
-    has_reset = {l: resets[l] is not None for l in (1, 2, 3)}
-    flap_low, flap_high = flapping if flapping else (None, None)
-
-    dim_fields = [df.schema[d] for d in dims]
-    from pyspark.sql.types import TimestampType
-    val_type = LongType() if agg == "count" else DoubleType()
+    stage = _AlertStage(
+        time_col, {1: info, 2: warn, 3: crit},
+        {1: info_reset, 2: warn_reset, 3: crit_reset},
+        state_changes_only=state_changes_only, events_only=events_only,
+        max_interval=max_interval, no_recoveries=no_recoveries,
+        flapping=flapping, history=history, duration_field=duration_field,
+    )
     out_schema = StructType(
         [StructField(time_col, TimestampType())]
-        + [StructField(f.name, f.dataType) for f in dim_fields]
-        + [StructField(out_col, val_type), StructField("level", StringType())]
-        + ([StructField(duration_field, LongType())] if duration_field else [])
+        + [StructField(d, df.schema[d].dataType) for d in dims]
+        + [StructField(out_col, LongType() if agg == "count" else DoubleType())]
+        + stage.fields
     )
-    state_schema = StructType([
-        StructField("wins", StringType()),      # JSON {start_us: partial}
-        StructField("max_ts", LongType()),
-        StructField("last_level", LongType()),
-        StructField("history", StringType()),
-        StructField("idx", LongType()),
-        StructField("flapping", LongType()),
-        StructField("last_trig", LongType()),
-        # episode-start µs for .durationField (window-start times);
-        # -1 = no episode yet
-        StructField("ep_start", LongType()),
-    ])
     n_off = max(1, -(-period_us // every_us))
     tcol, fld = time_col, field
-    tb = list(tiebreak)
-    import json
 
     def _chunk_stats(pdf: pd.DataFrame) -> dict:
         """Per-window partials for this batch slice: {start_us: partial}."""
-        ts = pdf[tcol].to_numpy().astype("datetime64[us]").astype(np.int64)
+        ts = _t_us(pdf[tcol])
         v = pd.to_numeric(pdf[fld], errors="coerce").to_numpy(dtype=float)
         frames = []
         for j in range(n_off):
@@ -598,129 +599,28 @@ def window_alert_stream(
             return float(np.sqrt(m2 / (n - 1))) if n > 1 else None
         return float(p[1])  # first/last
 
-    def machine(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            (wins_js, max_ts, last_level, hist_csv, idx, flap, last_trig,
-             ep_start) = state.get
-            ep_start = int(ep_start)
-            wins = {int(k): v for k, v in json.loads(wins_js).items()}
-            st = {
-                "last_level": int(last_level),
-                "history": [int(x) for x in hist_csv.split(",")],
-                "idx": int(idx),
-                "flapping": bool(flap),
-                "last_triggered": None if last_trig == -1 else int(last_trig),
-            }
-            max_ts = int(max_ts)
-        else:
-            wins, max_ts, st = {}, -(1 << 62), new_state(history)
-            ep_start = -1
-        outs = []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values([tcol, *tb], kind="stable")
-            for s, part in _chunk_stats(pdf).items():
-                wins[s] = _merge(wins[s], part) if s in wins else part
-            bts = int(
-                pdf[tcol].to_numpy().astype("datetime64[us]")
-                .astype(np.int64)[-1]
-            )
-            max_ts = max(max_ts, bts)
-            # finalize sealed windows in start order
-            done = sorted(s for s in wins if s + period_us <= max_ts)
-            if not done:
-                continue
-            vals = []
-            for s in done:
-                vals.append((s, _final(wins.pop(s))))
-            if agg == "count":
-                vcol = np.array([v for _, v in vals], dtype=np.int64)
-            else:
-                # None (empty mean / n<=1 stddev) → NaN so level
-                # predicates compare False, matching NULL semantics
-                vcol = np.array(
-                    [np.nan if v is None else v for _, v in vals],
-                    dtype=float,
-                )
-            rows = pd.DataFrame({
-                tcol: pd.to_datetime(
-                    np.array([s for s, _ in vals], dtype="int64"), unit="us"
-                ),
-                **{
-                    d: np.repeat(
-                        np.array([key[i]], dtype=object), len(vals)
-                    )
-                    for i, d in enumerate(dims)
-                },
-                out_col: vcol,
-            })
-            if use_resets:
-                m = {
-                    l: (preds[l](rows) if preds[l] is not None
-                        else np.zeros(len(rows), dtype=bool))
-                    for l in (1, 2, 3)
-                }
-                r = {
-                    l: (resets[l](rows).astype(object)
-                        if resets[l] is not None
-                        else np.full(len(rows), None, dtype=object))
-                    for l in (1, 2, 3)
-                }
-                lvs, _ = determine_levels(
-                    m, r, defined, has_reset, st["last_level"]
-                )
-            else:
-                # first matching of CRITICAL > WARNING > INFO
-                # (alert.go:915-950) — ascending, higher level overrides
-                lvs = np.zeros(len(rows), dtype=np.int64)
-                for l in (1, 2, 3):
-                    if preds[l] is not None:
-                        lvs = np.where(preds[l](rows), l, lvs)
-            tms = np.array([s for s, _ in vals], dtype=np.int64)
-            if duration_field is not None:
-                # emitted window rows' event time = window start;
-                # st["last_level"] is the pre-walk carry
-                durs, ep_start = _episode_durations(
-                    lvs, tms, st["last_level"], ep_start
-                )
-            emit, st = walk_levels(
-                lvs, st,
-                state_changes_only=state_changes_only,
-                no_recoveries=no_recoveries,
-                events_only=events_only,
-                flap_low=flap_low, flap_high=flap_high,
-                times=tms if mi_us is not None else None,
-                max_interval_us=mi_us,
-            )
-            rows = rows.assign(level=[LEVELS[int(x)] for x in lvs])
-            if duration_field is not None:
-                rows = rows.assign(**{duration_field: durs})
-            outs.append(rows.loc[emit])
-        lt = st.get("last_triggered")
-        state.update((
-            json.dumps({str(k): v for k, v in wins.items()}),
-            int(max_ts),
-            st["last_level"],
-            ",".join(str(x) for x in st["history"]),
-            st["idx"],
-            int(st["flapping"]),
-            -1 if lt is None else int(lt),
-            int(ep_start),
-        ))
-        yield from outs
+    def step(carry, pdf):
+        wins, max_ts, alert = carry
+        for s, part in _chunk_stats(pdf).items():
+            wins[s] = _merge(wins[s], part) if s in wins else part
+        max_ts = max(max_ts, int(_t_us(pdf[tcol])[-1]))
+        # finalize sealed windows in start order
+        done = sorted(s for s in wins if s + period_us <= max_ts)
+        vals = [_final(wins.pop(s)) for s in done]
+        # None (empty mean / n<=1 stddev) → NaN so level predicates
+        # compare False, matching NULL semantics
+        rows = pd.DataFrame({
+            tcol: pd.to_datetime(np.array(done, dtype="int64"), unit="us"),
+            **{d: pdf[d].iat[0] for d in dims},
+            out_col: np.array(vals, dtype=np.int64) if agg == "count"
+            else np.array([np.nan if v is None else v for v in vals], dtype=float),
+        })
+        alert, rows = stage(alert, rows)
+        return (wins, max_ts, alert), rows
 
-    if not dims:
-        df = df.withColumn("__g", F.lit(0))
-    gcols = [F.col(d) for d in dims] if dims else [F.col("__g")]
-    return df.groupBy(*gcols).applyInPandasWithState(
-        machine,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_scan(
+        df, time_col, dims, tiebreak, step, ({}, -(1 << 62), stage.init),
+        out_schema,
     )
 
 
@@ -737,60 +637,23 @@ def state_count_stream(
     consecutive-true counter surviving micro-batch boundaries; -1 when
     false. State per group: one int64. ``idle_timeout``: event-time
     DeleteGroup (see alert_stream) — requires an upstream watermark."""
-    c_df = df.withColumn(
-        "__ok", F.expr(cond) if isinstance(cond, str) else cond
-    )
-    out_schema = StructType(
-        [c_df.schema[c] for c in df.columns] + [StructField(as_, LongType())]
-    )
-    state_schema = StructType([StructField("streak", LongType())])
-    in_cols = list(df.columns)
-    timeout_ms = (
-        round(parse_duration(idle_timeout) * 1000) if idle_timeout is not None else None
-    )
+    c_df = df.withColumn("__ok", F.coalesce(_col(cond), F.lit(False)))
 
-    def machine(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if timeout_ms is not None and state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(columns=in_cols + [as_])
-            return
-        streak = state.get[0] if state.exists else 0
-        max_event_ms = None
-        for pdf in pdfs:
-            pdf = pdf.sort_values([time_col, *tiebreak], kind="stable")
-            if timeout_ms is not None and len(pdf):
-                ms = int(pd.Timestamp(pdf[time_col].iloc[-1]).value // 1_000_000)
-                max_event_ms = ms if max_event_ms is None else max(max_event_ms, ms)
-            ok = pdf["__ok"].fillna(False).to_numpy()
-            # vectorized streak: reset indices mark False rows; streak =
-            # running count since last False, seeded by the carried streak
-            n = len(ok)
-            idx = np.arange(n)
-            reset = np.where(~ok, idx, -1)
-            last_reset = np.maximum.accumulate(reset)
-            out = idx - last_reset
-            seen_reset = last_reset >= 0
-            # before any reset, out = i+1 already (idx - (-1)); add carry
-            out = np.where(seen_reset, out, out + streak)
-            out = np.where(ok, out, -1)
-            streak = int(out[-1]) if n and out[-1] > 0 else (0 if n else streak)
-            pdf = pdf[in_cols].copy()
-            pdf[as_] = out
-            yield pdf
-        state.update((int(streak),))
-        if timeout_ms is not None and max_event_ms is not None:
-            state.setTimeoutTimestamp(max_event_ms + timeout_ms)
+    def step(streak, pdf):
+        ok = pdf["__ok"].to_numpy(dtype=bool)
+        # vectorized streak: reset indices mark False rows; streak =
+        # running count since last False, seeded by the carried streak
+        idx = np.arange(len(ok))
+        last_reset = np.maximum.accumulate(np.where(~ok, idx, -1))
+        # before any reset, out = i+1 already (idx - (-1)); add carry
+        out = np.where(last_reset >= 0, idx - last_reset, idx + 1 + streak)
+        out = np.where(ok, out, -1)
+        return max(int(out[-1]), 0), pdf.assign(**{as_: out})
 
-    return c_df.groupBy(*[F.col(d) for d in dims]).applyInPandasWithState(
-        machine,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if idle_timeout is not None
-            else GroupStateTimeout.NoTimeout
-        ),
+    return _keyed_scan(
+        c_df, time_col, dims, tiebreak, step, 0,
+        StructType(df.schema.fields + [StructField(as_, LongType())]),
+        idle_timeout=idle_timeout,
     )
 
 
@@ -808,47 +671,25 @@ def state_duration_stream(
     state's first point); -1 while false. State per group: the episode's
     start time (one int64) — it survives micro-batch boundaries, so a
     state entered in one batch keeps accruing duration in the next."""
-    c_df = df.withColumn(
-        "__ok", F.expr(cond) if isinstance(cond, str) else cond
-    )
-    out_schema = StructType(
-        [c_df.schema[c] for c in df.columns] + [StructField(as_, DoubleType())]
-    )
-    state_schema = StructType([StructField("start_us", LongType())])
+    c_df = df.withColumn("__ok", F.coalesce(_col(cond), F.lit(False)))
     unit_us = float(round(parse_duration(unit) * 1_000_000))
-    tcol, tb = time_col, list(tiebreak)
-    in_cols = list(df.columns)
 
-    def machine(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        start = state.get[0] if state.exists else -1
-        for pdf in pdfs:
-            pdf = pdf.sort_values([tcol, *tb], kind="stable")
-            ok = pdf["__ok"].fillna(False).to_numpy()
-            t = pdf[tcol].to_numpy(dtype="datetime64[us]").astype("int64")
-            n = len(ok)
-            idx = np.arange(n)
-            # first index of each true-run; rows before any in-batch reset
-            # belong to the carried episode (if one is open)
-            reset = np.where(~ok, idx, -1)
-            last_reset = np.maximum.accumulate(reset)
-            run_first = np.clip(last_reset + 1, 0, max(n - 1, 0))
-            starts = t[run_first]
-            if start >= 0:
-                starts = np.where(last_reset < 0, start, starts)
-            dur = np.where(ok, (t - starts) / unit_us, -1.0)
-            out = pdf[in_cols].copy()
-            out[as_] = dur
-            yield out
-            if n:
-                start = int(starts[-1]) if ok[-1] else -1
-        state.update((int(start),))
+    def step(start, pdf):
+        ok = pdf["__ok"].to_numpy(dtype=bool)
+        t = _t_us(pdf[time_col])
+        idx = np.arange(len(ok))
+        # first index of each true-run; rows before any in-batch reset
+        # belong to the carried episode (if one is open)
+        last_reset = np.maximum.accumulate(np.where(~ok, idx, -1))
+        starts = t[np.clip(last_reset + 1, 0, len(ok) - 1)]
+        if start >= 0:
+            starts = np.where(last_reset < 0, start, starts)
+        dur = np.where(ok, (t - starts) / unit_us, -1.0)
+        return (int(starts[-1]) if ok[-1] else -1), pdf.assign(**{as_: dur})
 
-    return c_df.groupBy(*[F.col(d) for d in dims]).applyInPandasWithState(
-        machine,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_scan(
+        c_df, time_col, dims, tiebreak, step, -1,
+        StructType(df.schema.fields + [StructField(as_, DoubleType())]),
     )
 
 
@@ -866,49 +707,26 @@ def sigma_stream(
     window aggregates (Pipeline.sigma); here the running (n, mean, M2)
     Welford state persists across micro-batches — numerically stable,
     12 bytes of state per group, vectorized per batch."""
-    out_schema = StructType(
-        [df.schema[c] for c in df.columns] + [StructField(as_, DoubleType())]
-    )
-    state_schema = StructType(
-        [
-            StructField("n", LongType()),
-            StructField("mean", DoubleType()),
-            StructField("m2", DoubleType()),
-        ]
-    )
-    in_cols = list(df.columns)
 
-    def machine(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        n, mean, m2 = state.get if state.exists else (0, 0.0, 0.0)
-        for pdf in pdfs:
-            pdf = pdf.sort_values([time_col, *tiebreak], kind="stable")
-            x = pdf[fld].to_numpy(dtype=float)
-            k = len(x)
-            # vectorized Welford: running means/M2 over (carry + batch)
-            # reconstructed from cumulative sums seeded with carry stats
-            cnt = n + np.arange(1, k + 1, dtype=float)
-            csum = n * mean + np.cumsum(x)
-            means = csum / cnt
-            prev_means = np.concatenate(([mean], means[:-1]))
-            dm2 = (x - prev_means) * (x - means)
-            m2s = m2 + np.cumsum(dm2)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sd = np.sqrt(m2s / np.maximum(cnt - 1, 1))
-                sig = np.abs(x - means) / sd
-            sig = np.where((cnt < 2) | (sd == 0) | ~np.isfinite(sig), 0.0, sig)
-            out = pdf[in_cols].copy()
-            out[as_] = sig
-            yield out
-            if k:
-                n, mean, m2 = int(cnt[-1]), float(means[-1]), float(m2s[-1])
-        state.update((n, mean, m2))
+    def step(carry, pdf):
+        n, mean, m2 = carry
+        x = pdf[fld].to_numpy(dtype=float)
+        # vectorized Welford: running means/M2 over (carry + batch)
+        # reconstructed from cumulative sums seeded with carry stats
+        cnt = n + np.arange(1, len(x) + 1, dtype=float)
+        means = (n * mean + np.cumsum(x)) / cnt
+        prev_means = np.concatenate(([mean], means[:-1]))
+        m2s = m2 + np.cumsum((x - prev_means) * (x - means))
+        with np.errstate(divide="ignore", invalid="ignore"):
+            sd = np.sqrt(m2s / np.maximum(cnt - 1, 1))
+            sig = np.abs(x - means) / sd
+        sig = np.where((cnt < 2) | (sd == 0) | ~np.isfinite(sig), 0.0, sig)
+        carry = (int(cnt[-1]), float(means[-1]), float(m2s[-1]))
+        return carry, pdf.assign(**{as_: sig})
 
-    return df.groupBy(*[F.col(d) for d in dims]).applyInPandasWithState(
-        machine,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_scan(
+        df, time_col, dims, tiebreak, step, (0, 0.0, 0.0),
+        StructType(df.schema.fields + [StructField(as_, DoubleType())]),
     )
 
 
@@ -945,17 +763,14 @@ def autoscale_stream(
     """
     if min < 1:
         raise ValueError(f"minimum count must be >= 1, got {min}")
-    init = dict(initial or {})
+    init = {rid: int(n) for rid, n in (initial or {}).items()}
     lo, hi = int(min), int(max)
     inc_us = round(parse_duration(increase_cooldown) * 1_000_000)
     dec_us = round(parse_duration(decrease_cooldown) * 1_000_000)
     work = df.withColumn("__rid", autoscaler.resource_id_column()).filter(
         F.col("__rid").isNotNull() & (F.col("__rid") != "")
     )
-    work = work.withColumn(
-        "__want",
-        (F.expr(replicas) if isinstance(replicas, str) else replicas).cast("long"),
-    )
+    work = work.withColumn("__want", _col(replicas).cast("long"))
     out_schema = StructType(
         [
             StructField(time_col, work.schema[time_col].dataType),
@@ -964,63 +779,38 @@ def autoscale_stream(
             StructField("new", LongType()),
         ]
     )
-    state_schema = StructType(
-        [
-            StructField("has_cur", LongType()),
-            StructField("current", LongType()),
-            StructField("last_inc", LongType()),
-            StructField("last_dec", LongType()),
-        ]
-    )
-    tcol, tb = time_col, list(tiebreak)
 
     from kapacitor_spark.operators.autoscale import NEVER, decision_step
 
-    def machine(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        rid = key[0]
-        if state.exists:
-            has_cur, current, last_inc, last_dec = state.get
-        else:
-            if rid in init:
-                has_cur, current = 1, int(init[rid])
-            else:
-                has_cur, current = 0, 0
-            last_inc = last_dec = NEVER
+    def step(carry, pdf):
+        rid = pdf["__rid"].iat[0]
+        # carry: (current replicas or None while unknown, last_inc,
+        # last_dec); None until the group's first slice looks up initial
+        current, last_inc, last_dec = carry or (init.get(rid), NEVER, NEVER)
+        want = pdf["__want"].to_numpy(dtype=object)
+        times = _t_us(pdf[time_col])
         rows = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values([tcol, *tb], kind="stable")
-            want = pdf["__want"].to_numpy(dtype=object)
-            times = pdf[tcol].to_numpy(dtype="datetime64[us]").astype("int64")
-            for i in range(len(pdf)):
-                w = want[i]
-                if w is None or pd.isna(w):
-                    continue
-                if not has_cur:
-                    # unknown resource: first CLAMPED value seeds state
-                    # (reuse the step with current == the clamped value)
-                    _, _, _, _, seeded = decision_step(
-                        -1, w, lo, hi, 0, NEVER, NEVER, 0, 0
-                    )
-                    has_cur, current = 1, seeded
-                    continue
-                old = current
-                action, current, last_inc, last_dec, new = decision_step(
-                    current, w, lo, hi, int(times[i]),
-                    last_inc, last_dec, inc_us, dec_us,
-                )
-                if action in ("inc", "dec"):
-                    rows.append((pdf[tcol].iat[i], rid, old, new))
-        state.update((has_cur, current, last_inc, last_dec))
-        cols = [f.name for f in out_schema.fields]
-        yield pd.DataFrame(rows, columns=cols)
+        for i, w in enumerate(want):
+            if w is None or pd.isna(w):
+                continue
+            if current is None:
+                # unknown resource: first CLAMPED value seeds state
+                # (reuse the step with current == the clamped value)
+                current = decision_step(-1, w, lo, hi, 0, NEVER, NEVER, 0, 0)[4]
+                continue
+            old = current
+            action, current, last_inc, last_dec, new = decision_step(
+                current, w, lo, hi, int(times[i]),
+                last_inc, last_dec, inc_us, dec_us,
+            )
+            if action in ("inc", "dec"):
+                rows.append((pdf[time_col].iat[i], rid, old, new))
+        return (
+            (current, last_inc, last_dec),
+            pd.DataFrame(rows, columns=out_schema.fieldNames()),
+        )
 
-    return work.groupBy("__rid").applyInPandasWithState(
-        machine,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _keyed_scan(work, time_col, ["__rid"], tiebreak, step, None, out_schema)
 
 
 def ordered_transform_stream(
@@ -1053,63 +843,33 @@ def ordered_transform_stream(
     out_type = LongType() if op == "elapsed" else DoubleType()
     base = [df.schema[c] for c in df.columns if c != out]
     out_schema = StructType(base + [StructField(out, out_type)])
-    schema_cols = [f.name for f in out_schema]
-    state_schema = StructType(
-        [
-            StructField("has_prev", LongType()),
-            StructField("last_t", LongType()),
-            StructField("last_v", DoubleType()),
-            StructField("run_sum", DoubleType()),
-        ]
-    )
-    tcol, tb = time_col, list(tiebreak)
 
-    def machine(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        has_prev, last_t, last_v, run_sum = (
-            state.get if state.exists else (0, 0, 0.0, 0.0)
-        )
-        for pdf in pdfs:
-            pdf = pdf.sort_values([tcol, *tb], kind="stable")
-            x = pdf[fld].to_numpy(dtype=float)
-            k = len(x)
-            if k == 0:
-                continue
-            if op == "cumulative_sum":
-                res = pdf.copy()
-                res[out] = run_sum + np.cumsum(x)
-                run_sum = float(res[out].iloc[-1])
-                yield res[schema_cols]
-                continue
-            t = pdf[tcol].to_numpy(dtype="datetime64[us]").astype("int64")
-            pt = np.concatenate(([last_t], t))
-            pv = np.concatenate(([last_v], x))
-            dv = np.diff(pv)
-            dt = np.diff(pt)
-            keep = np.ones(k, dtype=bool)
-            if not has_prev:
-                keep[0] = False
-            if op == "derivative":
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    vals = dv / (dt / float(unit_us))
-                keep &= dt != 0  # zero elapsed: emit nothing, advance prev
-                if non_negative:
-                    keep &= ~(vals < 0)
-            elif op == "difference":
-                vals = dv
-            else:  # elapsed
-                vals = dt // unit_us
-            res = pdf.copy()
-            res[out] = vals
-            yield res.loc[keep, schema_cols]
-            has_prev, last_t, last_v = 1, int(t[-1]), float(x[-1])
-        state.update((has_prev, last_t, last_v, run_sum))
+    def step(carry, pdf):
+        has_prev, last_t, last_v, run_sum = carry
+        x = pdf[fld].to_numpy(dtype=float)
+        if op == "cumulative_sum":
+            vals = run_sum + np.cumsum(x)
+            return (has_prev, last_t, last_v, float(vals[-1])), pdf.assign(**{out: vals})
+        t = _t_us(pdf[time_col])
+        dv = np.diff(np.concatenate(([last_v], x)))
+        dt = np.diff(np.concatenate(([last_t], t)))
+        keep = np.ones(len(x), dtype=bool)
+        keep[0] = bool(has_prev)
+        if op == "derivative":
+            with np.errstate(divide="ignore", invalid="ignore"):
+                vals = dv / (dt / float(unit_us))
+            keep &= dt != 0  # zero elapsed: emit nothing, advance prev
+            if non_negative:
+                keep &= ~(vals < 0)
+        elif op == "difference":
+            vals = dv
+        else:  # elapsed
+            vals = dt // unit_us
+        carry = (1, int(t[-1]), float(x[-1]), run_sum)
+        return carry, pdf.assign(**{out: vals}).loc[keep]
 
-    return df.groupBy(*[F.col(d) for d in dims]).applyInPandasWithState(
-        machine,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_scan(
+        df, time_col, dims, tiebreak, step, (0, 0, 0.0, 0.0), out_schema
     )
 
 
@@ -1216,29 +976,12 @@ def sample_count_stream(
     input. State: one scalar; parallel across groups."""
     if n <= 0:
         raise ValueError("sample_count_stream: n must be >= 1")
-    out_schema = df.schema
-    schema_cols = [f.name for f in out_schema]
-    state_schema = StructType([StructField("cnt", LongType())])
-    tcol, tb = time_col, list(tiebreak)
 
-    def machine(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        cnt = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values([tcol, *tb], kind="stable")
-            keep = (cnt + np.arange(len(pdf))) % n == 0
-            cnt += len(pdf)
-            yield pdf.loc[keep, schema_cols]
-        state.update((int(cnt),))
+    def step(cnt, pdf):
+        keep = (cnt + np.arange(len(pdf))) % n == 0
+        return cnt + len(pdf), pdf.loc[keep]
 
-    return df.groupBy(*[F.col(d) for d in dims]).applyInPandasWithState(
-        machine,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _keyed_scan(df, time_col, dims, tiebreak, step, 0, df.schema)
 
 
 def change_detect_stream(
@@ -1257,49 +1000,30 @@ def change_detect_stream(
     compare via their canonical reprs (exact for the point model's
     float/int/string/bool types, and a mid-stream TYPE change — the
     reference's Changing_Type golden — always differs)."""
-    import json
-
-    in_cols = list(df.columns)
-    out_schema = StructType([df.schema[c] for c in in_cols])
-    state_schema = StructType([StructField("prev", StringType())])
-    tcol, tb = time_col, list(tiebreak)
     flds = list(fields)
 
     def key(v):
         return None if pd.isna(v) else repr(v)
 
-    def machine(key_, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        prev = json.loads(state.get[0]) if state.exists else None
-        for pdf in pdfs:
-            pdf = pdf.sort_values([tcol, *tb], kind="stable")
-            n = len(pdf)
-            if n == 0:
-                continue
-            keep = np.zeros(n, dtype=bool)
-            for f_ in flds:
-                ks = [key(v) for v in pdf[f_]]
-                pk = [prev[f_] if prev is not None else "\x00missing"] + ks[:-1]
-                # batch rule per field: lag NULL -> keep; changed -> keep;
-                # went NULL while lag wasn't -> keep. "\x00missing" marks
-                # NO previous point at all (first ever row: keep).
-                for i in range(n):
-                    p = pk[i]
-                    if p == "\x00missing" or p is None:
-                        keep[i] = True
-                    elif ks[i] is None or ks[i] != p:
-                        keep[i] = True
-            prev = {f_: key(pdf[f_].iloc[-1]) for f_ in flds}
-            yield pdf.loc[keep, in_cols]
-        if prev is not None:
-            state.update((json.dumps(prev),))
+    def step(prev, pdf):
+        n = len(pdf)
+        keep = np.zeros(n, dtype=bool)
+        for f_ in flds:
+            ks = [key(v) for v in pdf[f_]]
+            pk = [prev[f_] if prev is not None else "\x00missing"] + ks[:-1]
+            # batch rule per field: lag NULL -> keep; changed -> keep;
+            # went NULL while lag wasn't -> keep. "\x00missing" marks
+            # NO previous point at all (first ever row: keep).
+            for i in range(n):
+                p = pk[i]
+                if p == "\x00missing" or p is None:
+                    keep[i] = True
+                elif ks[i] is None or ks[i] != p:
+                    keep[i] = True
+        prev = {f_: key(pdf[f_].iloc[-1]) for f_ in flds}
+        return prev, pdf.loc[keep]
 
-    return df.groupBy(*[F.col(d) for d in dims]).applyInPandasWithState(
-        machine,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _keyed_scan(df, time_col, dims, tiebreak, step, None, df.schema)
 
 
 def join_stream(
@@ -1442,44 +1166,16 @@ def window_count_stream(
         + [df.schema[d] for d in dims]
         + [StructField(as_, DoubleType())]
     )
-    state_schema = StructType(
-        [StructField("ring", StringType()), StructField("since_emit", LongType())]
-    )
 
-    def machine(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        # Vectorized: concatenate (carry ring + batch values) and compute
-        # every trailing-window aggregate with numpy — cumsum prefix sums
-        # for sum/mean/count, a sliding_window_view (front-padded with
-        # identity values, so warm-up windows < period_count are exact)
-        # for min/max. No per-row Python.
-        if state.exists:
-            ring_csv, since = state.get
-            carry = (
-                np.array(ring_csv.split(","), dtype=float)
-                if ring_csv
-                else np.empty(0)
-            )
-            since = int(since)
-        else:
-            carry, since = np.empty(0), 0
-        for pdf in pdfs:
-            pdf = pdf.sort_values([time_col, *tiebreak], kind="stable")
-            vals = pdf[fld].to_numpy(dtype=float)
-            out, emit, carry, since = _count_window_step(
-                carry, since, vals, period_count, every_count, agg,
-                full_only,
-            )
-            res = pdf.loc[emit, [time_col, *dims]].copy()
-            res[as_] = out[emit]
-            yield res
-        state.update((",".join(repr(x) for x in carry), since))
+    def step(carry, pdf):
+        out, emit, ring, since = _count_window_step(
+            *carry, pdf[fld].to_numpy(dtype=float), period_count,
+            every_count, agg, full_only,
+        )
+        return (ring, since), pdf.loc[emit].assign(**{as_: out[emit]})
 
-    return df.groupBy(*[F.col(d) for d in dims]).applyInPandasWithState(
-        machine,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_scan(
+        df, time_col, dims, tiebreak, step, (np.empty(0), 0), out_schema
     )
 
 
@@ -1523,140 +1219,35 @@ def window_count_alert_stream(
     micro-batches. Emitted rows keep the triggering point's event time,
     exactly like the batch replay. State per group: ≤ period_count
     doubles + the alert ring — bytes, safe at millions of groups."""
-    from kapacitor_spark.functions.lambdas import compile_lambda_pandas
-
     if agg not in ("mean", "sum", "count", "min", "max"):
         raise ValueError(f"unsupported count-window agg {agg!r}")
-    # ungrouped: one synthetic group (serial at this stage, like the
-    # reference's ungrouped stream task) — see window_alert_stream
-    mi_us = (
-        round(parse_duration(max_interval) * 1_000_000)
-        if max_interval is not None else None
+    stage = _AlertStage(
+        time_col, {1: info, 2: warn, 3: crit},
+        {1: info_reset, 2: warn_reset, 3: crit_reset},
+        state_changes_only=state_changes_only, events_only=events_only,
+        max_interval=max_interval, no_recoveries=no_recoveries,
+        flapping=flapping, history=history, duration_field=duration_field,
     )
-
-    def _lv(x):
-        if x is None:
-            return None
-        return compile_lambda_pandas(x, time_col) if isinstance(x, str) else x
-
-    preds = {1: _lv(info), 2: _lv(warn), 3: _lv(crit)}
-    resets = {1: _lv(info_reset), 2: _lv(warn_reset), 3: _lv(crit_reset)}
-    use_resets = any(v is not None for v in resets.values())
-    defined = {l for l in (1, 2, 3) if preds[l] is not None}
-    has_reset = {l: resets[l] is not None for l in (1, 2, 3)}
-    flap_low, flap_high = flapping if flapping else (None, None)
-
     out_schema = StructType(
         [df.schema[time_col]]
         + [df.schema[d] for d in dims]
-        + [StructField(as_, DoubleType()), StructField("level", StringType())]
-        + ([StructField(duration_field, LongType())] if duration_field else [])
+        + [StructField(as_, DoubleType())]
+        + stage.fields
     )
-    state_schema = StructType([
-        StructField("ring", StringType()),
-        StructField("since_emit", LongType()),
-        StructField("last_level", LongType()),
-        StructField("history", StringType()),
-        StructField("idx", LongType()),
-        StructField("flapping", LongType()),
-        StructField("last_trig", LongType()),
-        StructField("ep_start", LongType()),
-    ])
 
-    def machine(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            (ring_csv, since, last_level, hist_csv, idx, flap, last_trig,
-             ep_start) = state.get
-            carry = (
-                np.array(ring_csv.split(","), dtype=float)
-                if ring_csv else np.empty(0)
-            )
-            since, ep_start = int(since), int(ep_start)
-            st = {
-                "last_level": int(last_level),
-                "history": [int(x) for x in hist_csv.split(",")],
-                "idx": int(idx),
-                "flapping": bool(flap),
-                "last_triggered": None if last_trig == -1 else int(last_trig),
-            }
-        else:
-            carry, since, ep_start = np.empty(0), 0, -1
-            st = new_state(history)
-        outs = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values([time_col, *tiebreak], kind="stable")
-            vals = pdf[fld].to_numpy(dtype=float)
-            out, gate, carry, since = _count_window_step(
-                carry, since, vals, period_count, every_count, agg,
-                full_only,
-            )
-            if not gate.any():
-                continue
-            rows = pdf.loc[gate, [time_col, *dims]].copy()
-            rows[as_] = out[gate]
-            if use_resets:
-                m = {
-                    l: (preds[l](rows) if preds[l] is not None
-                        else np.zeros(len(rows), dtype=bool))
-                    for l in (1, 2, 3)
-                }
-                r = {
-                    l: (resets[l](rows).astype(object)
-                        if resets[l] is not None
-                        else np.full(len(rows), None, dtype=object))
-                    for l in (1, 2, 3)
-                }
-                lvs, _ = determine_levels(
-                    m, r, defined, has_reset, st["last_level"]
-                )
-            else:
-                lvs = np.zeros(len(rows), dtype=np.int64)
-                for l in (1, 2, 3):
-                    if preds[l] is not None:
-                        lvs = np.where(preds[l](rows), l, lvs)
-            tms = (
-                rows[time_col].to_numpy(dtype="datetime64[us]")
-                .astype("int64")
-            )
-            if duration_field is not None:
-                durs, ep_start = _episode_durations(
-                    lvs, tms, st["last_level"], ep_start
-                )
-            emit, st = walk_levels(
-                lvs, st,
-                state_changes_only=state_changes_only,
-                no_recoveries=no_recoveries,
-                events_only=events_only,
-                flap_low=flap_low, flap_high=flap_high,
-                times=tms if mi_us is not None else None,
-                max_interval_us=mi_us,
-            )
-            rows = rows.assign(level=[LEVELS[int(x)] for x in lvs])
-            if duration_field is not None:
-                rows = rows.assign(**{duration_field: durs})
-            outs.append(rows.loc[emit])
-        lt = st.get("last_triggered")
-        state.update((
-            ",".join(repr(x) for x in carry),
-            since,
-            st["last_level"],
-            ",".join(str(x) for x in st["history"]),
-            st["idx"],
-            int(st["flapping"]),
-            -1 if lt is None else int(lt),
-            int(ep_start),
-        ))
-        yield from outs
+    def step(carry, pdf):
+        ring, since, alert = carry
+        out, gate, ring, since = _count_window_step(
+            ring, since, pdf[fld].to_numpy(dtype=float), period_count,
+            every_count, agg, full_only,
+        )
+        rows = pdf.loc[gate, [time_col, *dims]].assign(**{as_: out[gate]})
+        alert, rows = stage(alert, rows)
+        return (ring, since, alert), rows
 
-    if not dims:
-        df = df.withColumn("__g", F.lit(0))
-    gcols = [F.col(d) for d in dims] if dims else [F.col("__g")]
-    return df.groupBy(*gcols).applyInPandasWithState(
-        machine,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _keyed_scan(
+        df, time_col, dims, tiebreak, step, (np.empty(0), 0, stage.init),
+        out_schema,
     )
 
 
@@ -1961,12 +1552,6 @@ def window_barrier_stream(
                 barrier_us = max(times) + p_us + 1
                 rows, emitted_until, times = flush(key, times, emitted_until, barrier_us)
                 out.extend(rows)
-            if mode == "period":
-                state.setTimeoutDuration(b_ms)
-            else:
-                # idle: stay armed so sustained silence keeps flushing
-                # anything a late replay adds
-                state.setTimeoutDuration(b_ms)
         else:
             for pdf in pdfs:
                 ts = (
@@ -1979,7 +1564,10 @@ def window_barrier_stream(
                     key, times, emitted_until, max(times) + 1
                 )
                 out.extend(rows)
-            state.setTimeoutDuration(b_ms)
+        # re-armed on every invocation (Spark clears the timer each call);
+        # after a firing this keeps sustained silence flushing anything a
+        # late replay adds
+        state.setTimeoutDuration(b_ms)
         state.update((",".join(str(t) for t in times), emitted_until))
         if out:
             yield pd.DataFrame(

@@ -30,10 +30,20 @@ def stream_src(fixture_df, tmp_path_factory):
     return str(src)
 
 
+@pytest.fixture(scope="module")
+def split_src(fixture_df, tmp_path_factory):
+    """The same fixture as 3 time-ordered files: read with
+    maxFilesPerTrigger=1, every host's points span 3 micro-batches."""
+    src = str(tmp_path_factory.mktemp("tick_stream_split") / "in")
+    for cond in ("id < 5", "id >= 5 and id < 11", "id >= 11"):
+        fixture_df.filter(cond).coalesce(1).write.mode("append").parquet(src)
+    return src
+
+
 def _stream_df(spark, src):
     return spark.readStream.schema(
         "id long, time timestamp, host string, value double"
-    ).parquet(src)
+    ).option("maxFilesPerTrigger", 1).parquet(src)
 
 
 def _run_both(spark, script, out, fixture_df, stream_src, tmp_path, cols):
@@ -46,7 +56,7 @@ def _run_both(spark, script, out, fixture_df, stream_src, tmp_path, cols):
         script, sources={"cpu": _stream_df(spark, stream_src)},
         time_col="time",
     )
-    tag = f"ts_{out}_{abs(hash(script)) % 10**8}"
+    tag = f"ts_{out}_{abs(hash((script, stream_src))) % 10**8}"
     res = run_available_now(souts[out], tag, str(tmp_path / f"ck_{tag}"))
 
     def rows(df):
@@ -88,7 +98,7 @@ stream
 
 
 def test_alert_reset_hysteresis_stream_equals_batch(
-    spark, fixture_df, stream_src, tmp_path
+    spark, fixture_df, stream_src, split_src, tmp_path
 ):
     """Level resets (alert.go:915-950): once WARNING is active it HOLDS
     until warnReset passes — the held level lives in keyed state, shared
@@ -112,6 +122,12 @@ stream
     # hysteresis visible: a value in (20, 90] while WARNING held must NOT
     # appear as an OK transition (h2 values 50/40 hold the warning)
     assert not any(r[2] in (50.0, 40.0) and r[3] == "OK" for r in s)
+    # the held level crosses micro-batch boundaries in keyed state
+    s2, _ = _run_both(
+        spark, script, "a", fixture_df, split_src, tmp_path,
+        ["time", "host", "value", "level"],
+    )
+    assert s2 == b
 
 
 def test_alert_no_recoveries_and_max_interval(
@@ -137,7 +153,7 @@ stream
 
 
 def test_alert_duration_field_stream_equals_batch(
-    spark, fixture_df, stream_src, tmp_path
+    spark, fixture_df, stream_src, split_src, tmp_path
 ):
     """.durationField() on the LIVE path (the last alert template knob
     that raised toward batch): episode duration — ns since the OK→non-OK
@@ -164,6 +180,12 @@ stream
     # non-degenerate: at least one mid-episode/recovery row with a
     # positive duration AND a fresh episode start at 0
     assert any(r[4] > 0 for r in s) and any(r[4] == 0 for r in s)
+    # episodes that span micro-batches keep their start in keyed state
+    s2, _ = _run_both(
+        spark, script, "a", fixture_df, split_src, tmp_path,
+        ["time", "host", "value", "level", "dur"],
+    )
+    assert s2 == b
 
 
 def test_alert_duration_field_without_stateful_knobs(
@@ -1045,6 +1067,20 @@ stream
     b = sorted(r["id"] for r in bouts["cd"].collect())
     assert s == b == [1, 3, 4, 5, 6, 7]
 
+    # the same points split so each duplicate pair straddles a file
+    # boundary: under maxFilesPerTrigger=1 the previous value must come
+    # from keyed state carried into the second micro-batch
+    split = tmp_path / "in_split"
+    df.filter("id in (1, 7)").coalesce(1).write.parquet(str(split))
+    df.filter("id not in (1, 7)").coalesce(1).write.mode("append").parquet(
+        str(split)
+    )
+    outs2 = run_tickscript_stream(
+        script, sources={"cpu": _stream_df(spark, str(split))}, time_col="time"
+    )
+    res2 = run_available_now(outs2["cd"], "ts_cd_split", str(tmp_path / "ck2"))
+    assert sorted(r["id"] for r in res2.collect()) == b
+
 
 def _run_windowed_alert_both(
     spark, script, fixture_df, stream_src, tmp_path, period_s, out="a",
@@ -1691,7 +1727,7 @@ stream
 
 
 def test_count_window_stateful_alert_stream_equals_batch(
-    spark, fixture_df, stream_src, tmp_path
+    spark, fixture_df, stream_src, split_src, tmp_path
 ):
     """Stateful alert after a COUNT window — formerly out-of-subset —
     now fuses ring + alert machine into ONE keyed operator
@@ -1722,6 +1758,12 @@ stream
     )
     assert s == b and len(s) >= 4
     assert {r[3] for r in s} >= {"WARNING", "OK"}
+    # ring, alert walk and episode start all cross micro-batch boundaries
+    s2, _ = _run_both(
+        spark, script, "a", fixture_df, split_src, tmp_path,
+        ["time", "host", "mean", "level", "dur"],
+    )
+    assert s2 == b
 
 
 def test_count_window_alert_fill_period_and_every(

@@ -1233,6 +1233,41 @@ def test_sideload_http_source_rejects_bad_body(spark):
             srv.shutdown()
 
 
+def test_sideload_file_source_without_matches_applies_defaults(
+    spark, tmp_path
+):
+    """A file:// level with no matching files is an empty lookup (not a
+    schema-inference error): points fall through to the .field()/.tag()
+    defaults. Only a missing source directory raises."""
+    (tmp_path / "t0").mkdir()
+    (tmp_path / "t0" / "unrelated.json").write_text('{"f1": 5}')
+    df = spark.createDataFrame(
+        [(1, "2024-01-01 00:00:00", "a", 1.0),
+         (2, "2024-01-01 00:00:01", "b", 2.0)],
+        "id long, time string, t0 string, value double",
+    ).withColumn("time", F.to_timestamp("time"))
+    script = f"""
+stream
+    |from()
+        .measurement('m')
+    |sideload()
+        .source('file://{tmp_path}')
+        .order('t0/{{{{.t0}}}}.yml', 'missing/{{{{.t0}}}}.yml')
+        .field('f1', 7)
+        .tag('t3', 'none')
+    |httpOut('s')
+"""
+    outs = run_tickscript(script, sources={"m": df}, time_col="time")
+    got = sorted((r["id"], r["f1"], r["t3"]) for r in outs["s"].collect())
+    assert got == [(1, 7, "none"), (2, 7, "none")]
+
+    with pytest.raises(ValueError, match="does not exist"):
+        run_tickscript(
+            script.replace(str(tmp_path), str(tmp_path / "absent")),
+            sources={"m": df}, time_col="time",
+        )
+
+
 def test_batch_query_fill_modes(spark):
     """query().fill(...) — InfluxQL groupBy-time gap filling inside each
     batch window (reference batch.go:210-225 fill dispatch): number /
