@@ -716,7 +716,8 @@ def state_tracking(spark, sf_dir):
     outputs share one streak computation + one per-streak window
     (Pipeline._state_track — the chained state_count().state_duration()
     build runs the identical machinery twice: 6 Window / 4 Sort vs
-    4 Window / 2 Sort fused, same values)."""
+    at most 3 Window / 2 Sort fused, pinned by test_plans.py, same
+    values)."""
     p = _events_by_user(spark, sf_dir)._state_track(
         "value > 100", "1s", "state_n", "state_dur"
     )

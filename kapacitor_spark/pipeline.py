@@ -54,6 +54,13 @@ def _col(c: str | Column) -> Column:
     return c
 
 
+def _level_label(idx: Column) -> Column:
+    """Level index (Pipeline._level_index) → its name."""
+    from kapacitor_spark.streaming.state import LEVELS
+
+    return F.get(F.array(*[F.lit(n) for n in LEVELS]), idx)
+
+
 def _flat(name: str) -> Column:
     """Column ref for a FLAT name that may contain dots (join-prefixed
     fields like 'errors.value') — backtick-quoted so it never reads as
@@ -1463,173 +1470,164 @@ class Pipeline:
         streaming/state.py).
 
         Batch mode: the level CASE + transition filter are pure column
-        expressions; flapping hysteresis is sequential, so enabling it
-        switches the transition walk to applyInPandas per group (same core
-        the streaming mode uses across micro-batches).
+        expressions. Reset hysteresis, flapping, the maxInterval expiry and
+        noRecoveries under stateChangesOnly are sequential, so any of them
+        runs the whole group through the alert stage the streaming
+        operators use (streaming/state.py AlertStage) in one applyInPandas.
         """
-        resets = {1: info_reset, 2: warn_reset, 3: crit_reset}
         preds = {1: info, 2: warn, 3: crit}
-        if any(r is not None for r in resets.values()):
-            # reset hysteresis (alert.go:915-930 determineLevel): the level
-            # can only FALL below the current one once the current level's
-            # reset lambda passes — a sequential walk per group over
-            # pre-evaluated (codegen'd) predicate columns
-            df = self.df
-            for l in (1, 2, 3):
-                df = df.withColumn(
-                    f"__m{l}",
-                    self._expr(preds[l]) if preds[l] is not None else F.lit(False),
-                )
-                df = df.withColumn(
-                    f"__r{l}",
-                    self._expr(resets[l]).cast("boolean")
-                    if resets[l] is not None
-                    else F.lit(None).cast("boolean"),
-                )
-            time_col, tiebreak = self.time_col, list(self.tiebreak)
-            defined = {l for l in (1, 2, 3) if preds[l] is not None}
-            # picklable closure state only (Columns hold JVM handles)
-            has_reset = {l: resets[l] is not None for l in (1, 2, 3)}
-            out_schema = df.withColumn(level_col, F.lit("")).drop(
-                "__m1", "__m2", "__m3", "__r1", "__r2", "__r3"
-            ).schema
-            out_cols = [f.name for f in out_schema]
-            from kapacitor_spark.streaming.state import LEVELS as _LVS
-            from kapacitor_spark.streaming.state import determine_levels
-
-            def level_walk(pdf):
-                pdf = pdf.sort_values([time_col, *tiebreak], kind="stable")
-                m = {l: pdf[f"__m{l}"].fillna(False).to_numpy() for l in (1, 2, 3)}
-                r = {l: pdf[f"__r{l}"].to_numpy(dtype=object) for l in (1, 2, 3)}
-                lvs, _ = determine_levels(m, r, defined, has_reset, 0)
-                pdf = pdf.assign(**{level_col: [_LVS[int(l)] for l in lvs]})
-                return pdf[out_cols]
-
-            gb = df.groupBy(*[F.col(d) for d in self.dims]) if self.dims else df.groupBy()
-            df = gb.applyInPandas(level_walk, schema=out_schema)
-        else:
-            expr = F.lit("OK")
-            if info is not None:
-                expr = F.when(self._expr(info), "INFO").otherwise(expr)
-            if warn is not None:
-                expr = F.when(self._expr(warn), "WARNING").otherwise(expr)
-            if crit is not None:
-                expr = F.when(self._expr(crit), "CRITICAL").otherwise(expr)
-            df = self.df.withColumn(level_col, expr)
-        if duration_field:
-            # .durationField (alert.go event Duration): nanoseconds since
-            # the alert episode began (the OK→non-OK transition); an OK
-            # recovery event carries the ended episode's length; steady OK
-            # is 0 — pure window expressions, computed before any
-            # transition filtering so every candidate event has it
-            w = self._ordered()
-            df = df.withColumn(
-                "__prev_lv", F.coalesce(F.lag(level_col).over(w), F.lit("OK"))
-            ).withColumn(
-                "__ep_start",
-                F.when(
-                    (F.col(level_col) != "OK") & (F.col("__prev_lv") == "OK"),
-                    F.col(self.time_col),
-                ),
-            ).withColumn(
-                "__ep_start",
-                F.last("__ep_start", ignorenulls=True).over(
-                    w.rowsBetween(Window.unboundedPreceding, 0)
-                ),
-            )
-            in_episode = (F.col(level_col) != "OK") | (F.col("__prev_lv") != "OK")
-            dur_ns = (
-                F.unix_micros(F.col(self.time_col)) - F.unix_micros(F.col("__ep_start"))
-            ) * 1000
-            df = df.withColumn(
-                duration_field,
-                F.when(in_episode & F.col("__ep_start").isNotNull(), dur_ns)
-                .otherwise(F.lit(0))
-                .cast("long"),
-            ).drop("__prev_lv", "__ep_start")
+        resets = {1: info_reset, 2: warn_reset, 3: crit_reset}
         if (
-            flapping is not None
-            or (no_recoveries and state_changes_only)
+            any(r is not None for r in resets.values())
+            or flapping is not None
             or max_interval is not None
+            or (no_recoveries and state_changes_only)
         ):
-            from kapacitor_spark.streaming.state import LEVEL_IDX, new_state, walk_levels
+            from pyspark.sql.types import StructType
 
-            in_cols = list(df.columns)
-            time_col, tiebreak = self.time_col, list(self.tiebreak)
-            flap = flapping
-            sco, norec, hist = state_changes_only, no_recoveries, history
-            evo = events_only
-            mi_us = (
-                round(parse_duration(max_interval) * 1_000_000)
-                if max_interval is not None
-                else None
+            from kapacitor_spark.streaming.state import AlertStage, alert_masks
+
+            # _expr(None) is None: undefined levels stay undefined
+            df, preds, resets = alert_masks(
+                self.df,
+                {l: self._expr(c) for l, c in preds.items()},
+                {l: self._expr(c) for l, c in resets.items()},
             )
+            stage = AlertStage(
+                self.time_col, preds, resets,
+                state_changes_only=state_changes_only,
+                events_only=events_only, max_interval=max_interval,
+                no_recoveries=no_recoveries, flapping=flapping,
+                history=history, duration_field=duration_field,
+            )
+            out_schema = StructType(
+                [f for f in self.df.schema if f.name not in ("level", duration_field)]
+                + stage.fields
+            )
+            out_cols = out_schema.fieldNames()
+            sort_cols = [self.time_col, *self.tiebreak]
 
-            def machine(pdf):
-                pdf = pdf.sort_values([time_col, *tiebreak], kind="stable")
-                lv = pdf[level_col].map(LEVEL_IDX).to_numpy()
-                tms = (
-                    pdf[time_col].to_numpy(dtype="datetime64[us]").astype("int64")
-                    if mi_us is not None
-                    else None
-                )
-                emit, _ = walk_levels(
-                    lv, new_state(hist), state_changes_only=sco,
-                    no_recoveries=norec,
-                    flap_low=flap[0] if flap else None,
-                    flap_high=flap[1] if flap else None,
-                    events_only=evo,
-                    times=tms, max_interval_us=mi_us,
-                )
-                return pdf.loc[emit, in_cols]
+            def run(pdf):
+                pdf = pdf.sort_values(sort_cols, kind="stable")
+                return stage(stage.init, pdf)[1][out_cols]
 
             gb = df.groupBy(*[F.col(d) for d in self.dims]) if self.dims else df.groupBy()
-            df = gb.applyInPandas(machine, schema=df.schema)
-        elif state_changes_only:
-            w = self._ordered()
-            prev = F.coalesce(F.lag(level_col).over(w), F.lit("OK"))
-            df = df.withColumn("__prev", prev).filter(
-                F.col(level_col) != F.col("__prev")
-            ).drop("__prev")
-        elif events_only:
-            # the reference's trigger rule (alert.go:1068-1076): non-OK
-            # points always fire; OK fires only as a recovery transition —
-            # and .noRecoveries() silences exactly those recovery events
-            # (golden TestStream_Alert_NoRecoveries: six non-OK events,
-            # no OK rows)
-            if no_recoveries:
-                df = df.filter(F.col(level_col) != "OK")
-            else:
+            df = gb.applyInPandas(run, schema=out_schema)
+        else:
+            df = self.df.withColumn(
+                "level", _level_label(self._level_index(crit, warn, info))
+            )
+            if duration_field:
+                # .durationField (alert.go event Duration): nanoseconds
+                # since the alert episode began (the OK→non-OK transition);
+                # an OK recovery event carries the ended episode's length;
+                # steady OK is 0 — pure window expressions, computed before
+                # any transition filtering so every candidate event has it
                 w = self._ordered()
-                prev = F.coalesce(F.lag(level_col).over(w), F.lit("OK"))
+                df = df.withColumn(
+                    "__prev_lv", F.coalesce(F.lag("level").over(w), F.lit("OK"))
+                ).withColumn(
+                    "__ep_start",
+                    F.when(
+                        (F.col("level") != "OK") & (F.col("__prev_lv") == "OK"),
+                        F.col(self.time_col),
+                    ),
+                ).withColumn(
+                    "__ep_start",
+                    F.last("__ep_start", ignorenulls=True).over(
+                        w.rowsBetween(Window.unboundedPreceding, 0)
+                    ),
+                )
+                in_episode = (F.col("level") != "OK") | (F.col("__prev_lv") != "OK")
+                dur_ns = (
+                    F.unix_micros(F.col(self.time_col))
+                    - F.unix_micros(F.col("__ep_start"))
+                ) * 1000
+                df = df.withColumn(
+                    duration_field,
+                    F.when(in_episode & F.col("__ep_start").isNotNull(), dur_ns)
+                    .otherwise(F.lit(0))
+                    .cast("long"),
+                ).drop("__prev_lv", "__ep_start")
+            if state_changes_only:
+                w = self._ordered()
+                prev = F.coalesce(F.lag("level").over(w), F.lit("OK"))
                 df = df.withColumn("__prev", prev).filter(
-                    (F.col(level_col) != "OK") | (F.col("__prev") != "OK")
+                    F.col("level") != F.col("__prev")
                 ).drop("__prev")
+            elif events_only:
+                # the reference's trigger rule (alert.go:1068-1076): non-OK
+                # points always fire; OK fires only as a recovery
+                # transition — and .noRecoveries() silences exactly those
+                # recovery events (golden TestStream_Alert_NoRecoveries:
+                # six non-OK events, no OK rows)
+                if no_recoveries:
+                    df = df.filter(F.col("level") != "OK")
+                else:
+                    w = self._ordered()
+                    prev = F.coalesce(F.lag("level").over(w), F.lit("OK"))
+                    df = df.withColumn("__prev", prev).filter(
+                        (F.col("level") != "OK") | (F.col("__prev") != "OK")
+                    ).drop("__prev")
+        return self._with(df)._alert_augment(
+            level_col=level_col, level_tag=level_tag, id_field=id_field,
+            id_tag=id_tag, id_template=id_template,
+            message_template=message_template, message_field=message_field,
+            details_template=details_template, details_field=details_field,
+            topic=topic,
+        )
+
+    def _level_index(self, crit=None, warn=None, info=None) -> Column:
+        """First matching level of CRITICAL > WARNING > INFO
+        (alert.go:915-950 determineLevel) as an index into
+        streaming.state.LEVELS: 3, 2, 1, else 0 (OK)."""
+        lv = F.lit(0)
+        for i, c in ((1, info), (2, warn), (3, crit)):
+            if c is not None:
+                lv = F.when(self._expr(c), i).otherwise(lv)
+        return lv
+
+    def _alert_augment(
+        self,
+        level_col: str = "level",
+        level_tag: str | None = None,
+        id_field: str | None = None,
+        id_tag: str | None = None,
+        id_template: str | None = None,
+        message_template: str | None = None,
+        message_field: str = "message",
+        details_template: str | None = None,
+        details_field: str = "details",
+        topic: str | None = None,
+    ) -> "Pipeline":
+        """The alert event augment (alert.go augment*WithEventState) over
+        the rows an alert machine emitted, whose level is in column
+        ``level``: tags/fields/templates first, then ``level_col``
+        renames the level column (templates read ``level``). Both the
+        batch Pipeline.alert and the live TICK compile end in it."""
+        df = self.df
         if level_tag:
-            # .levelTag (alert.go augmentTagsWithEventState): the level as
-            # a tag — same column model here, named independently
-            df = df.withColumn(level_tag, F.col(level_col))
+            # .levelTag: the level as a tag — same column model here,
+            # named independently
+            df = df.withColumn(level_tag, F.col("level"))
         if id_field or id_tag:
-            # .idField/.idTag (alert.go augment*WithEventState): the
-            # rendered event ID; default template per pipeline/alert.go:18
-            idc = self._template(id_template or "{{ .Name }}:{{ .Group }}", level_col)
+            # .idField/.idTag: the rendered event ID; default template
+            # per pipeline/alert.go:18
+            idc = self._template(id_template or "{{ .Name }}:{{ .Group }}", "level")
             for c in (id_field, id_tag):
                 if c:
                     df = df.withColumn(c, idc)
         if id_template:
-            df = df.withColumn("alert_id", self._template(id_template, level_col))
+            df = df.withColumn("alert_id", self._template(id_template, "level"))
         if message_template:
             # .messageField names the rendered-message column
             # (alert.go MessageField augment; default 'message').
-            # cols=df.columns (not the pre-alert self.df): {{ .ID }} must
-            # see the alert_id rendered just above — the reference's
-            # default message IS "{{ .ID }} is {{ .Level }}"
-            # (pipeline/alert.go:21)
+            # cols=df.columns: {{ .ID }} must see the alert_id rendered
+            # just above — the reference's default message IS
+            # "{{ .ID }} is {{ .Level }}" (pipeline/alert.go:21)
             df = df.withColumn(
                 message_field,
-                self._template(
-                    message_template, level_col, cols=set(df.columns)
-                ),
+                self._template(message_template, "level", cols=set(df.columns)),
             )
         if details_template:
             # .details() (pipeline/alert.go Details — the larger body
@@ -1640,7 +1638,7 @@ class Pipeline:
             df = df.withColumn(
                 details_field,
                 self._template(
-                    details_template, level_col,
+                    details_template, "level",
                     message_col=message_field if message_template else None,
                     cols=set(df.columns),
                 ),
@@ -1649,6 +1647,8 @@ class Pipeline:
             # topic routing (/root/reference/alert/topics.go): events carry
             # their topic; TopicRegistry.dispatch fans out to handlers.
             df = df.withColumn("topic", F.lit(topic))
+        if level_col != "level":
+            df = df.drop(level_col).withColumnRenamed("level", level_col)
         return self._with(df)
 
     def _template(
@@ -1755,13 +1755,7 @@ class Pipeline:
         Scale: two window passes over (group, batch) + a per-group walk of
         BATCH-COUNT-sized data — events, not points, hit the sequential
         machine."""
-        lv = F.lit(0)
-        if info is not None:
-            lv = F.when(self._expr(info), 1).otherwise(lv)
-        if warn is not None:
-            lv = F.when(self._expr(warn), 2).otherwise(lv)
-        if crit is not None:
-            lv = F.when(self._expr(crit), 3).otherwise(lv)
+        lv = self._level_index(crit, warn, info)
         if require not in ("all", "any"):
             raise ValueError("require must be 'all' or 'any'")
         if batch_key not in self.dims:
@@ -1814,18 +1808,11 @@ class Pipeline:
         golden TestBatch_AlertAll shows every point of the all-critical
         batch). A broadcast join of the tiny per-group level table back
         onto the rows — no second shuffle of the fact side."""
-        lv = F.lit(0)
-        if info is not None:
-            lv = F.when(self._expr(info), 1).otherwise(lv)
-        if warn is not None:
-            lv = F.when(self._expr(warn), 2).otherwise(lv)
-        if crit is not None:
-            lv = F.when(self._expr(crit), 3).otherwise(lv)
+        lv = self._level_index(crit, warn, info)
         if require not in ("all", "any"):
             raise ValueError("require must be 'all' or 'any'")
-        names = F.array(F.lit("OK"), F.lit("INFO"), F.lit("WARNING"), F.lit("CRITICAL"))
         out = self.agg((F.min(lv) if require == "all" else F.max(lv)).alias("__lv"))
-        levels = out.df.withColumn(level_col, F.get(names, F.col("__lv"))).drop("__lv")
+        levels = out.df.withColumn(level_col, _level_label(F.col("__lv"))).drop("__lv")
         if not emit_points:
             return Pipeline(df=levels, time_col=out.time_col, dims=out.dims, results=self.results)
         if self.window is not None:

@@ -10,6 +10,7 @@ for every Pandas-UDF boundary.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
 
@@ -96,32 +97,39 @@ def get_spark(
     return spark
 
 
+_SHIP_LOCK = threading.Lock()
+
+
 def ensure_worker_imports(spark: SparkSession) -> None:
     """Make ``kapacitor_spark`` importable in Python workers for sessions we
     did not create (e.g. the driver's own SparkSession): zip the package once
     and ship it with addPyFile — workers unpack it onto their sys.path.
-    No-op on subsequent calls for the same SparkContext."""
+    No-op on subsequent calls for the same SparkContext. The check and the
+    ship run under one lock: concurrent first callers (a thread pool of
+    queries) would otherwise rewrite the shared zip while another thread
+    ships it, and ship it more than once."""
     sc = spark.sparkContext
-    if getattr(sc, "_kapacitor_spark_shipped", False):
-        return
-    import tempfile
-    import zipfile
+    with _SHIP_LOCK:
+        if getattr(sc, "_kapacitor_spark_shipped", False):
+            return
+        import tempfile
+        import zipfile
 
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(tempfile.gettempdir(), "kapacitor_spark_pkg.zip")
-    with zipfile.ZipFile(zpath, "w") as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            if "__pycache__" in root:
-                continue
-            for fn in files:
-                if fn.endswith(".py"):
-                    full = os.path.join(root, fn)
-                    rel = os.path.join(
-                        "kapacitor_spark", os.path.relpath(full, pkg_dir)
-                    )
-                    zf.write(full, rel)
-    sc.addPyFile(zpath)
-    sc._kapacitor_spark_shipped = True
+        pkg_dir = os.path.dirname(os.path.abspath(__file__))
+        zpath = os.path.join(tempfile.gettempdir(), "kapacitor_spark_pkg.zip")
+        with zipfile.ZipFile(zpath, "w") as zf:
+            for root, _dirs, files in os.walk(pkg_dir):
+                if "__pycache__" in root:
+                    continue
+                for fn in files:
+                    if fn.endswith(".py"):
+                        full = os.path.join(root, fn)
+                        rel = os.path.join(
+                            "kapacitor_spark", os.path.relpath(full, pkg_dir)
+                        )
+                        zf.write(full, rel)
+        sc.addPyFile(zpath)
+        sc._kapacitor_spark_shipped = True
 
 
 def local_df(spark: SparkSession, rows, schema, slices: int = 1):

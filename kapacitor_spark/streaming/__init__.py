@@ -51,9 +51,7 @@ from pyspark.sql.types import (
 )
 
 from kapacitor_spark.durations import parse_duration, to_interval
-from kapacitor_spark.streaming.state import (
-    LEVELS, determine_levels, new_state, walk_levels,
-)
+from kapacitor_spark.streaming.state import AlertStage, alert_masks
 
 __all__ = [
     "barrier",
@@ -168,30 +166,6 @@ def _keyed_scan(
     )
 
 
-def _episode_durations(lvs, tms_us, last_level: int, ep_start: int):
-    """Shared .durationField derivation (alert.go event Duration): ns
-    since the OK→non-OK transition; a recovery row carries the ended
-    episode's length; steady OK is 0. ``last_level`` is the PRE-walk
-    carry, ``ep_start`` the carried episode-start µs (-1 = none).
-    Returns (durations int64 ndarray, new ep_start). One implementation
-    for alert_stream and both fused window operators — the batch compile
-    derives the identical value from window expressions."""
-    lv_arr = np.asarray(lvs, dtype=np.int64)
-    tms_us = np.asarray(tms_us, dtype=np.int64)
-    prev = np.concatenate(([last_level], lv_arr[:-1]))
-    starts = (lv_arr != 0) & (prev == 0)
-    sidx = np.where(starts, np.arange(len(lv_arr)), -1)
-    np.maximum.accumulate(sidx, out=sidx)
-    ep = np.where(sidx >= 0, tms_us[np.clip(sidx, 0, None)], ep_start)
-    in_ep = (lv_arr != 0) | (prev != 0)
-    durs = np.where(
-        in_ep & (ep >= 0), (tms_us - ep) * 1000, 0
-    ).astype("int64")
-    if len(ep):
-        ep_start = int(ep[-1])
-    return durs, ep_start
-
-
 def _count_window_step(carry, since, vals, period_count, every_count,
                        agg, full_only):
     """One micro-batch slice of the keyed count-window ring
@@ -225,94 +199,6 @@ def _count_window_step(carry, since, vals, period_count, every_count,
         # correctly across micro-batch boundaries
         gate &= (g + 1) >= period_count
     return out, gate, arr[-period_count:], int((since + len(vals)) % every_count)
-
-
-_LEVEL_NAMES = np.array(LEVELS, dtype=object)
-
-
-class _AlertStage:
-    """The alert machine every alerting stream operator ends in (the
-    reference's alert.go:989-1290): levels from predicate masks —
-    first match of CRITICAL > WARNING > INFO, or the reset-hysteresis
-    walk (determine_levels) when any reset is set — then the
-    .durationField episode clock and walk_levels. Called as
-    ``stage(carry, rows) -> (carry, emitted rows + level [+ duration])``;
-    the carry is (walk state, episode-start µs), seeded by ``init``.
-
-    ``preds``/``resets`` map level (1=INFO, 2=WARNING, 3=CRITICAL) to a
-    TICK lambda source string (compiled to pandas), a callable
-    ``f(rows) -> ndarray``, or None."""
-
-    def __init__(
-        self, time_col, preds, resets, *, state_changes_only, events_only,
-        max_interval, no_recoveries, flapping, history, duration_field,
-    ):
-        from kapacitor_spark.functions.lambdas import compile_lambda_pandas
-
-        def lv(x):
-            if isinstance(x, str):
-                return compile_lambda_pandas(x, time_col)
-            return x
-
-        self.time_col = time_col
-        self.preds = {l: lv(preds[l]) for l in (1, 2, 3)}
-        self.resets = {l: lv(resets[l]) for l in (1, 2, 3)}
-        self.defined = {l for l, f in self.preds.items() if f is not None}
-        self.has_reset = {l: f is not None for l, f in self.resets.items()}
-        self.use_resets = any(self.has_reset.values())
-        self.mi_us = (
-            round(parse_duration(max_interval) * 1_000_000)
-            if max_interval is not None else None
-        )
-        flap_low, flap_high = flapping if flapping else (None, None)
-        self.walk_kw = dict(
-            state_changes_only=state_changes_only, no_recoveries=no_recoveries,
-            events_only=events_only, flap_low=flap_low, flap_high=flap_high,
-            max_interval_us=self.mi_us,
-        )
-        self.duration_field = duration_field
-        self.fields = [StructField("level", StringType())] + (
-            [StructField(duration_field, LongType())] if duration_field else []
-        )
-        self.init = (new_state(history), -1)
-
-    def __call__(self, carry, rows: pd.DataFrame):
-        if not len(rows):
-            return carry, rows
-        st, ep_start = carry
-        n = len(rows)
-        m = {
-            l: f(rows) if f is not None else np.zeros(n, dtype=bool)
-            for l, f in self.preds.items()
-        }
-        if self.use_resets:
-            r = {
-                l: np.asarray(f(rows), dtype=object) if f is not None
-                else np.full(n, None, dtype=object)
-                for l, f in self.resets.items()
-            }
-            lvs, _ = determine_levels(
-                m, r, self.defined, self.has_reset, st["last_level"]
-            )
-        else:
-            # first match of CRITICAL > WARNING > INFO (alert.go:915-950):
-            # ascending, a higher level overrides
-            lvs = np.zeros(n, dtype=np.int64)
-            for l in sorted(self.defined):
-                lvs = np.where(m[l], l, lvs)
-        tms = _t_us(rows[self.time_col])
-        if self.duration_field is not None:
-            # st["last_level"] is still the PRE-walk carry here
-            durs, ep_start = _episode_durations(
-                lvs, tms, st["last_level"], ep_start
-            )
-            rows = rows.assign(**{self.duration_field: durs})
-        emit, st = walk_levels(
-            lvs, st, times=tms if self.mi_us is not None else None,
-            **self.walk_kw,
-        )
-        rows = rows.assign(level=_LEVEL_NAMES[lvs])
-        return (st, ep_start), rows.loc[emit]
 
 
 def alert_stream(
@@ -376,17 +262,12 @@ def alert_stream(
     """
     # predicates run declaratively (codegen'd) into mask columns; the
     # level walk reads them inside the keyed machine
-    preds = {1: info, 2: warn, 3: crit}
-    resets = {1: info_reset, 2: warn_reset, 3: crit_reset}
-    lv_df = df
-    for l in (1, 2, 3):
-        if preds[l] is not None:
-            lv_df = lv_df.withColumn(f"__m{l}", F.coalesce(_col(preds[l]), F.lit(False)))
-            preds[l] = lambda rows, c=f"__m{l}": rows[c].to_numpy(dtype=bool)
-        if resets[l] is not None:
-            lv_df = lv_df.withColumn(f"__r{l}", _col(resets[l]).cast("boolean"))
-            resets[l] = lambda rows, c=f"__r{l}": rows[c].to_numpy(dtype=object)
-    stage = _AlertStage(
+    lv_df, preds, resets = alert_masks(
+        df,
+        {1: info, 2: warn, 3: crit},
+        {1: info_reset, 2: warn_reset, 3: crit_reset},
+    )
+    stage = AlertStage(
         time_col, preds, resets, state_changes_only=state_changes_only,
         events_only=events_only, max_interval=max_interval,
         no_recoveries=no_recoveries, flapping=flapping, history=history,
@@ -479,7 +360,7 @@ def window_alert_stream(
     if period_us <= 0 or every_us <= 0:
         raise ValueError("window_alert_stream: period/every must be > 0")
     out_col = out_col or f"__{agg}"
-    stage = _AlertStage(
+    stage = AlertStage(
         time_col, {1: info, 2: warn, 3: crit},
         {1: info_reset, 2: warn_reset, 3: crit_reset},
         state_changes_only=state_changes_only, events_only=events_only,
@@ -1221,7 +1102,7 @@ def window_count_alert_stream(
     doubles + the alert ring — bytes, safe at millions of groups."""
     if agg not in ("mean", "sum", "count", "min", "max"):
         raise ValueError(f"unsupported count-window agg {agg!r}")
-    stage = _AlertStage(
+    stage = AlertStage(
         time_col, {1: info, 2: warn, 3: crit},
         {1: info_reset, 2: warn_reset, 3: crit_reset},
         state_changes_only=state_changes_only, events_only=events_only,

@@ -45,13 +45,13 @@ Flux, exactly like the reference's FluxQueryService seam.
 from __future__ import annotations
 
 import re
-from typing import Any, Callable
+from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from kapacitor_spark.durations import parse_duration
-from kapacitor_spark.pipeline import Pipeline
+from kapacitor_spark.pipeline import Pipeline, _level_label
 
 __all__ = ["run_tickscript", "task_dot", "template_vars", "TickError"]
 
@@ -72,9 +72,10 @@ _ALERT_LEVEL_PROPS = {
     "crit", "warn", "info", "critReset", "warnReset", "infoReset",
     "stateChangesOnly", "noRecoveries", "flapping", "history", "all",
     "levelField", "levelTag", "idField", "idTag", "durationField",
-    "topic", "id", "message", "messageField", "details", "inhibit",
-    "log", "post", "tcp", "exec",
+    "topic", "id", "message", "messageField", "details", "detailsField",
+    "inhibit", "log", "post", "tcp", "exec",
 }
+_ALERT_SINKS = ("log", "post", "tcp", "exec")
 # Option names that collide with handler-kind names: while a spec of the
 # keyed kind is open, these parse as ITS options, not a new handler —
 # .opsGenie2().teams('t1') routes teams to OpsGenie, not MS-Teams
@@ -144,33 +145,109 @@ def _parse_handler_specs(props) -> list[tuple[str, dict]]:
     return specs
 
 
-def _dispatch_alert_handlers(out, specs, services, time_col,
-                             level_col="level"):
-    """Deliver alert events through the service-handler chains parsed off
-    the alert node (pipeline/alert.go handler list → services/<kind>).
+def _tick_tmpl(v):
+    """TICK .id()/.message()/.details() strings are Go templates: text
+    without {{ }} is a LITERAL ('cpu:h1' must not parse as a Spark
+    variant-extraction expression). Pipeline.alert's SQL pass-through
+    stays available to Python-DSL callers."""
+    if v is None or "{{" in v:
+        return v
+    return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
-    Events collect driver-side (tiny by construction — the filtered alert
-    output) and each spec renders through the matching
-    kapacitor_spark.handlers formatter; delivery is handlers.post_payload
-    against the URL from ``run_tickscript(alert_services={kind: cfg})``
-    (the reference's service config section). Unconfigured kinds raise —
-    a silently dropped page is the one failure mode alerting must not
-    have."""
-    dims = [d for d in out.dims if d != "name"]
-    return _dispatch_alert_handlers_df(
-        out.df, dims, specs, services, time_col, level_col=level_col
+
+class _AlertProps(NamedTuple):
+    """An alert node's parsed prop list (see _alert_props)."""
+
+    machine: dict  # level/reset lambdas + emission knobs + duration_field
+    augment: dict  # Pipeline._alert_augment kwargs
+    specs: list    # service-handler chains (_parse_handler_specs)
+    sinks: list    # .log/.post/.tcp/.exec props, in script order
+
+
+def _alert_props(props, lam) -> _AlertProps:
+    """The one parser for an alert node's ordered prop list
+    (pipeline/alert.go), shared by the batch and the live compile.
+    ``lam`` compiles a level/reset lambda for the caller's engine.
+    ``machine`` holds the kwargs Pipeline.alert, alert_stream and the
+    fused window operators take in common."""
+    pm = dict(props)
+
+    def one(name, default=None):
+        return pm.get(name, [default])[0]
+
+    sco = pm.get("stateChangesOnly")
+    machine = {
+        n.replace("Reset", "_reset"): lam(pm[n][0])
+        for n in ("crit", "warn", "info", "critReset", "warnReset", "infoReset")
+        if n in pm
+    }
+    machine.update(
+        state_changes_only=sco is not None,
+        # the reference's STREAM trigger rule is always on
+        # (alert.go:1127 — non-OK fires, OK fires only as recovery);
+        # stateChangesOnly is the stricter filter when present
+        events_only=sco is None,
+        max_interval=_dur(sco[0]) if sco else None,
+        no_recoveries="noRecoveries" in pm,
+        flapping=(
+            tuple(float(x) for x in pm["flapping"]) if "flapping" in pm
+            else None
+        ),
+        history=int(one("history", 21)),
+        duration_field=one("durationField"),
+    )
+    augment = dict(
+        level_col=one("levelField", "level"),
+        level_tag=one("levelTag"),
+        id_field=one("idField"),
+        id_tag=one("idTag"),
+        id_template=_tick_tmpl(one("id")),
+        message_template=_tick_tmpl(one("message")),
+        message_field=one("messageField", "message"),
+        details_template=_tick_tmpl(one("details")),
+        details_field=one("detailsField", "details"),
+        topic=one("topic"),
+    )
+    return _AlertProps(
+        machine, augment, _parse_handler_specs(props),
+        [(n, a) for n, a in props if n in _ALERT_SINKS],
     )
 
 
-def _dispatch_alert_handlers_df(df, dims, specs, services, time_col,
-                                level_col="level"):
-    """DataFrame-level handler dispatch — the shared core of the batch
-    path and the streaming foreachBatch path (each micro-batch of the
-    live alert stream is a small batch DataFrame of triggered events)."""
+def _deliver_alerts(df, dims, time_col, services, a: _AlertProps):
+    """Deliver an alert DataFrame through the node's sinks and
+    service-handler chains (pipeline/alert.go handler list →
+    services/<kind>) — the batch compile calls it on the alert output,
+    the live compile once per micro-batch.
+
+    Sinks run executor-side. Handler events are collected locally (tiny
+    by construction — the filtered alert output) and each spec renders
+    through the matching kapacitor_spark.handlers formatter; delivery is
+    handlers.post_payload against the URL from
+    ``alert_services={kind: cfg}`` (the reference's service config
+    section). Unconfigured kinds raise — a silently dropped page is the
+    one failure mode alerting must not have."""
     from kapacitor_spark import handlers as H
+    from kapacitor_spark import sinks as S
+
+    for name, args in a.sinks:
+        if name == "log":
+            S.apply_sink(df, S.log_handler(args[0]))
+        elif name == "post":
+            S.apply_sink(df, S.http_post(args[0]))
+        elif name == "tcp":
+            host, _, port = args[0].rpartition(":")
+            S.apply_sink(df, S.tcp_handler(host, int(port)))
+        else:
+            S.apply_sink(df, S.exec_handler(list(args)))
+    if not a.specs:
+        return
+    level_col = a.augment["level_col"]
+    msg_col = a.augment["message_field"]
+    det_col = a.augment["details_field"]
     value_cols = [
         c for c in df.columns
-        if c not in (time_col, level_col, "alert_id", "message", "details",
+        if c not in (time_col, level_col, "alert_id", msg_col, det_col,
                      "topic", "name", *dims)
         and not c.startswith("__")
     ]
@@ -184,13 +261,13 @@ def _dispatch_alert_handlers_df(df, dims, specs, services, time_col,
         dims=dims,
         level_col=level_col,
         id_col="alert_id" if "alert_id" in df.columns else None,
-        message_col="message" if "message" in df.columns else None,
-        details_col="details" if "details" in df.columns else None,
-        duration_col=None,
+        message_col=msg_col if msg_col in df.columns else None,
+        details_col=det_col if det_col in df.columns else None,
+        duration_col=a.machine["duration_field"],
         measurement="",
         value_cols=value_cols[:4],
     )
-    for kind, opts in specs:
+    for kind, opts in a.specs:
         cfg = dict(services.get(kind) or {})
         if not cfg:
             raise TickError(
@@ -1646,74 +1723,12 @@ class _Env:
         )
 
     def _mk_alert(self, p: Pipeline, node: _Node) -> Pipeline:
-        props = node.prop_map()
-        kw = {}
-        for lvl, key in (
-            ("crit", "crit"), ("warn", "warn"), ("info", "info"),
-            ("critReset", "crit_reset"), ("warnReset", "warn_reset"),
-            ("infoReset", "info_reset"),
-        ):
-            if lvl in props:
-                kw[key] = _lam(p, props[lvl][0])
-        sco_args = props.get("stateChangesOnly")
-
-        def tick_tmpl(v):
-            """TICK .id()/.message()/.details() strings are Go templates:
-            text without {{ }} is a LITERAL ('cpu:h1' must not parse as a
-            Spark variant-extraction expression). Pipeline.alert's SQL
-            pass-through stays available to Python-DSL callers."""
-            if v is None or "{{" in v:
-                return v
-            return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-        out = p.alert(
-            state_changes_only="stateChangesOnly" in props,
-            # the reference's STREAM trigger rule is always on
-            # (alert.go:1127 — non-OK fires, OK fires only as recovery);
-            # stateChangesOnly is the stricter filter when present
-            events_only="stateChangesOnly" not in props,
-            max_interval=_dur(sco_args[0]) if sco_args else None,
-            no_recoveries="noRecoveries" in props,
-            flapping=tuple(props["flapping"]) if "flapping" in props else None,
-            history=int(props.get("history", [21])[0]),
-            level_col=props.get("levelField", ["level"])[0],
-            level_tag=props.get("levelTag", [None])[0],
-            id_field=props.get("idField", [None])[0],
-            id_tag=props.get("idTag", [None])[0],
-            duration_field=props.get("durationField", [None])[0],
-            topic=props.get("topic", [None])[0],
-            id_template=tick_tmpl(props.get("id", [None])[0]),
-            message_template=tick_tmpl(props.get("message", [None])[0]),
-            message_field=props.get("messageField", ["message"])[0],
-            details_template=tick_tmpl(props.get("details", [None])[0]),
-            **kw,
+        a = _alert_props(node.props, lambda v: _lam(p, v))
+        out = p.alert(**a.machine, **a.augment)
+        _deliver_alerts(
+            out.df, [d for d in out.dims if d != "name"], self.time_col,
+            self.alert_services or {}, a,
         )
-        # Service-handler chains — shared parse with the streaming
-        # compile (_parse_handler_specs). Specs deliver through
-        # kapacitor_spark.handlers using the service configs passed as
-        # run_tickscript(alert_services={...}).
-        specs = _parse_handler_specs(node.props)
-        for name, args in node.props:
-            if name == "log":
-                from kapacitor_spark.sinks import apply_sink, log_handler
-
-                apply_sink(out.df, log_handler(args[0]))
-            elif name == "post":
-                out = out.http_post(args[0])
-            elif name == "tcp":
-                from kapacitor_spark.sinks import apply_sink, tcp_handler
-
-                host, _, port = args[0].rpartition(":")
-                apply_sink(out.df, tcp_handler(host, int(port)))
-            elif name == "exec":
-                from kapacitor_spark.sinks import apply_sink, exec_handler
-
-                apply_sink(out.df, exec_handler(list(args)))
-        if specs:
-            _dispatch_alert_handlers(
-                out, specs, self.alert_services or {}, self.time_col,
-                level_col=props.get("levelField", ["level"])[0],
-            )
         return out
 
     # -- simple chain methods ------------------------------------------ #
@@ -1917,6 +1932,11 @@ def run_tickscript(
 #     |httpOut(name)
 # Windows become event-time F.window aggregations, so the plan is
 # exactly what Structured Streaming's incremental state store executes.
+# alert() is one node for both compiles: the same prop parser
+# (_alert_props), event augment (Pipeline._alert_augment), delivery
+# (_deliver_alerts) and alert machine (streaming/state.py AlertStage).
+# So .detailsField() works on both, and handler events carry the
+# .messageField(), .detailsField() and .durationField() values.
 # Chain methods outside the subset raise TickError with the batch
 # alternative spelled out — honesty over silent wrong answers.
 # --------------------------------------------------------------------- #
@@ -2293,12 +2313,21 @@ class _SAlert:
     """Streaming alert. With only crit/warn/info lambdas: a stateless
     level CASE on the (windowed) rows — a live levels dashboard. Any
     stateful knob (.stateChangesOnly([maxInterval]) / .noRecoveries() /
-    .flapping(low,high) / .history(n) / level resets) switches to the
-    keyed alert state machine (streaming.alert_stream ←
-    streaming/state.py — the SAME walk the batch replay runs, so stream
-    == batch on identical input; the reference's canonical live task,
-    TestStream_AlertStateChangesOnly in
-    /root/reference/integrations/streamer_test.go)."""
+    .flapping(low,high) / .history(n) / level resets / .durationField())
+    switches to the keyed alert state machine (streaming.alert_stream ←
+    streaming/state.py AlertStage — the SAME stage the batch replay runs,
+    so stream == batch on identical input; the reference's canonical live
+    task, TestStream_AlertStateChangesOnly in the reference's
+    integrations/streamer_test.go). Props parse with the
+    batch compile's _alert_props; the emitted rows go through the same
+    Pipeline._alert_augment and _deliver_alerts."""
+
+    # .durationField() is stateful too: the episode start persists in
+    # keyed state
+    _STATEFUL = {
+        "critReset", "warnReset", "infoReset", "stateChangesOnly",
+        "noRecoveries", "flapping", "history", "durationField",
+    }
 
     def __init__(self, parent, env):
         if isinstance(parent, _SAgg):
@@ -2309,191 +2338,50 @@ class _SAlert:
             st = env._stream_of(parent)
             self.df, self.dims, self.windowed = st.df, st.dims, False
         self.env = env
-        self.levels: dict[str, str] = {}
-        self.resets: dict[str, str] = {}
-        self.flags: dict[str, list] = {}
-        self.hprops: list[tuple[str, list]] = []
-        self.tmpl: dict[str, str] = {}
+        self.props: list[tuple[str, list]] = []
 
-    def _comp(self, src):
-        from kapacitor_spark.functions.lambdas import compile_lambda
+    def prop(self, name, args):
+        self.props.append((name, list(args)))
+        return self
 
-        return compile_lambda(
-            src, ordered_window=None, time_col=self.env.time_col,
-            schema=dict(self.df.dtypes), variables=self.env.vars,
-        )
-
-    _SINK_PROPS = ("log", "post", "tcp", "exec")
-
-    def _apply_templates(self, df):
-        """Alert templating on the LIVE path (r11 2nd wave):
-        .id()/.message()/.details()/.idField()/.idTag() are pure column
-        expressions (Pipeline._template — one codegen'd concat), applied
-        to the emitted alert rows exactly as the batch compile applies
-        them after level determination. .durationField() is consumed in
-        finalize() — it's a stateful knob (episode tracking in the keyed
-        machine), not a template."""
-        t = self.tmpl
-        if not t:
-            return df
-
-        def lit(v):
-            # TICK template strings without {{ }} are LITERALS (same
-            # quoting rule as the batch compile's tick_tmpl)
-            if v is None or "{{" in v:
-                return v
-            return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-        def pl(cur_df):
-            return Pipeline.from_df(
-                cur_df, time_col=self.env.time_col, dims=tuple(self.dims)
-            )
-
-        idt = lit(t.get("id"))
-        if t.get("idField") or t.get("idTag"):
-            idc = pl(df)._template(idt or "{{ .Name }}:{{ .Group }}", "level")
-            for c in (t.get("idField"), t.get("idTag")):
-                if c:
-                    df = df.withColumn(c, idc)
-        if idt:
-            df = df.withColumn("alert_id", pl(df)._template(idt, "level"))
-        mf = t.get("messageField", "message")
-        mt = lit(t.get("message"))
-        if mt:
-            df = df.withColumn(mf, pl(df)._template(mt, "level"))
-        dt_ = lit(t.get("details"))
-        if dt_:
-            df = df.withColumn(
-                t.get("detailsField", "details"),
-                pl(df)._template(
-                    dt_, "level", message_col=mf if mt else None
-                ),
-            )
-        # .levelTag (duplicate column) / .topic (routing lit) /
-        # .levelField (renames the level output — LAST, templates above
-        # read "level"), matching the batch compile's augment order
-        if t.get("levelTag"):
-            df = df.withColumn(t["levelTag"], F.col("level"))
-        if t.get("topic") is not None:
-            df = df.withColumn("topic", F.lit(t["topic"]))
-        lf = t.get("levelField")
-        if lf and lf != "level":
-            df = df.withColumnRenamed("level", lf)
-        return df
-
-    def _attach_handlers(self, out):
-        """Service-handler chains + sink props on the LIVE alert path
-        (r11 2nd wave). Parsed with the SAME _parse_handler_specs as the
-        batch compile and rendered through the SAME
-        kapacitor_spark.handlers formatters — per micro-batch, as a
-        foreachBatch function attached to the output DataFrame
-        (``df._ks_alert_handler_fn``; run_tickscript_stream surfaces it
-        as ``outputs.alert_handlers[name]``). Delivery is at-least-once
-        under micro-batch retries — the reference's own handler
-        semantics (alert.go handlers re-fire on replayed events).
-        Unconfigured service kinds raise AT COMPILE, not mid-stream."""
-        out = self._apply_templates(out)
-        if not self.hprops:
-            return out
+    def finalize(self):
         cur = None
-        for n, _a in self.hprops:
+        for n, _a in self.props:
             if n in _ALERT_HANDLER_KINDS:
                 cur = n
             elif n in _ALERT_LEVEL_PROPS:
-                cur = None  # spec-closing alert-own prop (templates/sinks)
+                cur = None  # spec-closing alert-own prop
             elif cur is None:
                 raise TickError(
                     f"streaming alert() does not support .{n}() — "
                     "run the batch replay (run_tickscript)"
                 )
-        specs = _parse_handler_specs(self.hprops)
-        sinks = [(n, a) for n, a in self.hprops if n in self._SINK_PROPS]
-        if not specs and not sinks:
-            return out  # templates only
-        services = getattr(self.env, "alert_services", None) or {}
-        for kind, _opts in specs:
-            if not dict(services.get(kind) or {}):
-                raise TickError(
-                    f"alert handler .{kind}() used but no config passed "
-                    f"via run_tickscript_stream(alert_services="
-                    f"{{{kind!r}: {{...}}}})"
-                )
-        tcol = self.env.time_col
-        dims = [d for d in self.dims if d != "name"]
-
-        lvcol = self.tmpl.get("levelField") or "level"
-
-        def handler_fn(batch_df, _batch_id):
-            if batch_df.isEmpty():
-                return
-            if specs:
-                _dispatch_alert_handlers_df(
-                    batch_df, dims, specs, services, tcol, level_col=lvcol
-                )
-            for n, a in sinks:
-                if n == "log":
-                    from kapacitor_spark.sinks import apply_sink, log_handler
-
-                    apply_sink(batch_df, log_handler(a[0]))
-                elif n == "post":
-                    Pipeline.from_df(
-                        batch_df, time_col=tcol, dims=tuple(dims)
-                    ).http_post(a[0])
-                elif n == "tcp":
-                    from kapacitor_spark.sinks import apply_sink, tcp_handler
-
-                    host, _, port = a[0].rpartition(":")
-                    apply_sink(batch_df, tcp_handler(host, int(port)))
-                elif n == "exec":
-                    from kapacitor_spark.sinks import apply_sink, exec_handler
-
-                    apply_sink(batch_df, exec_handler(list(a)))
-
-        out._ks_alert_handler_fn = handler_fn
-        return out
-
-    def finalize(self):
-        # .durationField() is a STATEFUL knob (episode start persists in
-        # keyed state) — it routes an otherwise-stateless alert onto the
-        # keyed machine with the batch replay's exact emission flags
-        if not self.resets and not self.flags and \
-                "durationField" not in self.tmpl:
-            col = None
-            for name, label in (
-                ("crit", "CRITICAL"), ("warn", "WARNING"), ("info", "INFO")
-            ):
-                if name not in self.levels:
-                    continue
-                cond = self._comp(self.levels[name])
-                col = F.when(cond, label) if col is None else col.when(cond, label)
-            level = col.otherwise("OK") if col is not None else F.lit("OK")
-            return self._attach_handlers(self.df.withColumn("level", level))
-        if self.windowed:
+        stateful = any(n in self._STATEFUL for n, _a in self.props)
+        if stateful and self.windowed:
             return self._finalize_fused()
         from kapacitor_spark import streaming as _strm
+        from kapacitor_spark.functions.lambdas import compile_lambda
 
-        sco = self.flags.get("stateChangesOnly")
-        lv = {k: self._comp(v) for k, v in self.levels.items()}
-        rs = {k: self._comp(v) for k, v in self.resets.items()}
-        return self._attach_handlers(_strm.alert_stream(
-            self.df, self.env.time_col, list(self.dims),
-            crit=lv.get("crit"), warn=lv.get("warn"), info=lv.get("info"),
-            crit_reset=rs.get("crit"), warn_reset=rs.get("warn"),
-            info_reset=rs.get("info"),
-            state_changes_only=sco is not None,
-            # the reference's stream trigger rule when stateChangesOnly is
-            # off (alert.go:1115-1159) — matches the batch replay's flag
-            events_only=sco is None,
-            max_interval=_dur(sco[0]) if sco else None,
-            no_recoveries="noRecoveries" in self.flags,
-            flapping=(
-                tuple(float(x) for x in self.flags["flapping"])
-                if "flapping" in self.flags else None
-            ),
-            history=int(self.flags.get("history", [21])[0]),
-            tiebreak=self.env.tiebreak,
-            duration_field=self.tmpl.get("durationField"),
-        ))
+        env = self.env
+
+        def lam(v):
+            return compile_lambda(
+                v.src if isinstance(v, _Lambda) else v, ordered_window=None,
+                time_col=env.time_col, schema=dict(self.df.dtypes),
+                variables=env.vars,
+            )
+
+        a = _alert_props(self.props, lam)
+        if not stateful:
+            m = a.machine
+            lv = Pipeline.from_df(self.df)._level_index(
+                m.get("crit"), m.get("warn"), m.get("info")
+            )
+            return self._deliver(self.df.withColumn("level", _level_label(lv)), a)
+        return self._deliver(_strm.alert_stream(
+            self.df, env.time_col, list(self.dims), tiebreak=env.tiebreak,
+            **a.machine,
+        ), a)
 
     def _finalize_fused(self):
         """Stateful alert AFTER a windowed aggregation: re-plan window+
@@ -2518,57 +2406,62 @@ class _SAlert:
         from kapacitor_spark import streaming as _strm
         from kapacitor_spark.functions.lambdas import compile_lambda_pandas
 
-        def comp(src):
-            return compile_lambda_pandas(
-                src, time_col=self.env.time_col, variables=self.env.vars
-            )
-
-        sco = self.flags.get("stateChangesOnly")
-        lv = {k: comp(v) for k, v in self.levels.items()}
-        rs = {k: comp(v) for k, v in self.resets.items()}
+        env = self.env
+        a = _alert_props(self.props, lambda v: compile_lambda_pandas(
+            v.src if isinstance(v, _Lambda) else v, time_col=env.time_col,
+            variables=env.vars,
+        ))
         if prov.get("kind") == "count":
             # count-window sibling (r11 3rd wave): the keyed ring +
             # alert machine fuse the same way
-            return self._attach_handlers(_strm.window_count_alert_stream(
-                prov["src_df"], self.env.time_col, list(prov["dims"]),
+            out = _strm.window_count_alert_stream(
+                prov["src_df"], env.time_col, list(prov["dims"]),
                 prov["field"], prov["period_count"], prov["every_count"],
                 agg=prov["agg"], as_=prov["out_col"],
-                crit=lv.get("crit"), warn=lv.get("warn"),
-                info=lv.get("info"),
-                crit_reset=rs.get("crit"), warn_reset=rs.get("warn"),
-                info_reset=rs.get("info"),
-                state_changes_only=sco is not None,
-                events_only=sco is None,
-                max_interval=_dur(sco[0]) if sco else None,
-                no_recoveries="noRecoveries" in self.flags,
-                flapping=(
-                    tuple(float(x) for x in self.flags["flapping"])
-                    if "flapping" in self.flags else None
-                ),
-                history=int(self.flags.get("history", [21])[0]),
-                tiebreak=self.env.tiebreak,
-                duration_field=self.tmpl.get("durationField"),
-                full_only=prov["full_only"],
-            ))
-        return self._attach_handlers(_strm.window_alert_stream(
-            prov["src_df"], self.env.time_col, list(prov["dims"]),
-            period=prov["period"], every=prov["every"],
-            field=prov["field"], agg=prov["agg"], out_col=prov["out_col"],
-            crit=lv.get("crit"), warn=lv.get("warn"), info=lv.get("info"),
-            crit_reset=rs.get("crit"), warn_reset=rs.get("warn"),
-            info_reset=rs.get("info"),
-            state_changes_only=sco is not None,
-            events_only=sco is None,
-            max_interval=_dur(sco[0]) if sco else None,
-            no_recoveries="noRecoveries" in self.flags,
-            flapping=(
-                tuple(float(x) for x in self.flags["flapping"])
-                if "flapping" in self.flags else None
-            ),
-            history=int(self.flags.get("history", [21])[0]),
-            tiebreak=self.env.tiebreak,
-            duration_field=self.tmpl.get("durationField"),
-        ))
+                tiebreak=env.tiebreak, full_only=prov["full_only"],
+                **a.machine,
+            )
+        else:
+            out = _strm.window_alert_stream(
+                prov["src_df"], env.time_col, list(prov["dims"]),
+                period=prov["period"], every=prov["every"],
+                field=prov["field"], agg=prov["agg"], out_col=prov["out_col"],
+                tiebreak=env.tiebreak, **a.machine,
+            )
+        return self._deliver(out, a)
+
+    def _deliver(self, out, a: _AlertProps):
+        """The batch compile's augment and delivery on the LIVE alert
+        rows: Pipeline._alert_augment, then _deliver_alerts per
+        micro-batch as a foreachBatch function attached to the output
+        DataFrame (``df._ks_alert_handler_fn``; run_tickscript_stream
+        surfaces it as ``outputs.alert_handlers[name]``). Delivery is
+        at-least-once under micro-batch retries — the reference's own
+        handler semantics (alert.go handlers re-fire on replayed
+        events). Unconfigured service kinds raise AT COMPILE, not
+        mid-stream."""
+        env = self.env
+        out = Pipeline.from_df(
+            out, time_col=env.time_col, dims=self.dims
+        )._alert_augment(**a.augment).df
+        if not a.specs and not a.sinks:
+            return out
+        services = env.alert_services or {}
+        for kind, _opts in a.specs:
+            if not dict(services.get(kind) or {}):
+                raise TickError(
+                    f"alert handler .{kind}() used but no config passed "
+                    f"via run_tickscript_stream(alert_services="
+                    f"{{{kind!r}: {{...}}}})"
+                )
+        dims = [d for d in self.dims if d != "name"]
+
+        def handler_fn(batch_df, _batch_id):
+            if not batch_df.isEmpty():
+                _deliver_alerts(batch_df, dims, env.time_col, services, a)
+
+        out._ks_alert_handler_fn = handler_fn
+        return out
 
 
 class _StreamEnv:
@@ -2881,7 +2774,7 @@ class _StreamEnv:
         )
 
     def prop(self, node, name, args):
-        if isinstance(node, (_SPend, _SJoin, _SAutoscale)):
+        if isinstance(node, (_SPend, _SJoin, _SAutoscale, _SAlert)):
             return node.prop(name, args)
         if isinstance(node, _SFrom):
             if name == "measurement":
@@ -2928,36 +2821,6 @@ class _StreamEnv:
                     node.prov["out_col"] = args[0]
                 return node
             raise TickError(f"streaming aggregation does not support .{name}()")
-        if isinstance(node, _SAlert):
-            if name in ("crit", "warn", "info"):
-                node.levels[name] = (
-                    args[0].src if isinstance(args[0], _Lambda) else args[0]
-                )
-                return node
-            if name in ("critReset", "warnReset", "infoReset"):
-                node.resets[name[:-5]] = (
-                    args[0].src if isinstance(args[0], _Lambda) else args[0]
-                )
-                return node
-            if name in ("stateChangesOnly", "noRecoveries", "flapping",
-                        "history"):
-                node.flags[name] = list(args)
-                return node
-            if name in ("id", "message", "details", "idField", "idTag",
-                        "messageField", "detailsField", "durationField",
-                        "levelField", "levelTag", "topic"):
-                # templating (r11 2nd wave): pure column expressions via
-                # Pipeline._template, applied to the emitted alert rows.
-                # ALSO recorded in hprops so the shared spec parser
-                # closes any open handler spec exactly like batch.
-                node.tmpl[name] = args[0]
-                node.hprops.append((name, []))
-                return node
-            # handler chains (.slack()/.post()/... — r11 2nd wave):
-            # collected in order, validated + parsed at finalize with
-            # the SAME _parse_handler_specs as the batch compile
-            node.hprops.append((name, list(args)))
-            return node
         raise TickError(f"unsupported property .{name}() in streaming compile")
 
     def _materialize(self, node):

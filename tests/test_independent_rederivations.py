@@ -206,3 +206,82 @@ def test_flapping_hysteresis_long_series_matches_simulation(spark):
     assert [(r["time"], r["level"]) for r in got] == [
         (t, _LVL_NAME[l]) for t, l in expected
     ]
+
+
+# --------------------------------------------------------------------- #
+# level resets: determineLevel simulated from alert.go
+# --------------------------------------------------------------------- #
+
+
+def _simulate_resets(series, levels, resets):
+    """determineLevel + findFirstMatchLevel (alert.go:915-950), point by
+    point from the previous point's level: a level at or above the
+    current one that matches wins; else the current level HOLDS while its
+    reset lambda is false; else the first lower level that matches, else
+    OK. ``levels``/``resets`` map level int → predicate on the value.
+    Returns [(time, level_int)] for every point."""
+    def first_match(start, stop, v):
+        for l in range(start, max(stop, 0), -1):
+            if l in levels and levels[l](v):
+                return l
+        return None
+
+    cur, out = 0, []
+    for t, v in series:
+        new = first_match(3, cur - 1, v)
+        if new is None:
+            if cur in resets and not resets[cur](v):
+                new = cur
+            else:
+                new = first_match(cur, 0, v) or 0
+        out.append((t, new))
+        cur = new
+    return out
+
+
+def test_reset_hysteresis_matches_simulation(spark):
+    """Batch Pipeline.alert with info/warn/crit resets equals the
+    determineLevel simulation event for event — every point without a
+    transition filter, and the transitions under stateChangesOnly — on a
+    series where each level is held by its reset and then released."""
+    t0 = dt.datetime(2024, 1, 1)
+    vals = [45, 30, 5, 65, 50, 15, 85, 75, 65, 45, 50, 15, 45, 65, 90, 45, 8, 95]
+    hosts = {"a": vals, "b": vals[::-1]}
+    levels = {1: lambda v: v > 40, 2: lambda v: v > 60, 3: lambda v: v > 80}
+    resets = {1: lambda v: v < 10, 2: lambda v: v < 20, 3: lambda v: v < 70}
+    sims = {
+        h: _simulate_resets(
+            [(t0 + dt.timedelta(seconds=i), v) for i, v in enumerate(vs)],
+            levels, resets,
+        )
+        for h, vs in hosts.items()
+    }
+    # the scenario holds every level past its own predicate, and releases
+    # every level
+    seq = [l for _, l in sims["a"]]
+    held = {l for v, l in zip(vals, seq) if l and not levels[l](v)}
+    released = {p for p, l in zip(seq, seq[1:]) if l < p}
+    assert held == released == {1, 2, 3}
+
+    df = spark.createDataFrame(
+        [
+            (t0 + dt.timedelta(seconds=i), h, float(v))
+            for h, vs in hosts.items() for i, v in enumerate(vs)
+        ],
+        "time timestamp, host string, value double",
+    )
+    p = Pipeline.from_df(df, time_col="time", dims=("host",))
+    for sco in (False, True):
+        got = p.alert(
+            info="value > 40", warn="value > 60", crit="value > 80",
+            info_reset="value < 10", warn_reset="value < 20",
+            crit_reset="value < 70", state_changes_only=sco,
+        ).result().collect()
+        expected = []
+        for h, sim in sims.items():
+            prev = 0
+            for t, l in sim:
+                if not sco or l != prev:
+                    expected.append((h, t, _LVL_NAME[l]))
+                prev = l
+        assert sorted((r["host"], r["time"], r["level"]) for r in got) == sorted(expected)

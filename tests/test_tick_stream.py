@@ -1608,7 +1608,8 @@ def test_alert_handler_chains_on_live_path(
     kapacitor_spark.handlers formatters, and deliver per micro-batch via
     the foreachBatch fn surfaced as outputs.alert_handlers[name].
     Deliveries must equal the batch replay's deliveries on the identical
-    script + services config."""
+    script + services config. A second script renames the message field
+    and adds a duration field: the handler events carry both values."""
     import http.server
     import json as _json
     import socketserver
@@ -1628,11 +1629,22 @@ def test_alert_handler_chains_on_live_path(
         def log_message(self, *a):
             pass
 
+    def flat(rx):
+        # http_post arrays are one-per-PARTITION (documented batching
+        # divergence) — compare the multiset of delivered EVENTS
+        out = []
+        for p, b in rx:
+            if isinstance(b, list):
+                out.extend((p, _json.dumps(e, sort_keys=True)) for e in b)
+            else:
+                out.append((p, _json.dumps(b, sort_keys=True)))
+        return sorted(out)
+
     with socketserver.TCPServer(("127.0.0.1", 0), H) as srv:
         port = srv.server_address[1]
         threading.Thread(target=srv.serve_forever, daemon=True).start()
         log_path = tmp_path / "alerts.jsonl"
-        script = f"""
+        head = """
 stream
     |from()
         .measurement('cpu')
@@ -1641,60 +1653,83 @@ stream
         .crit(lambda: "value" > 90)
         .warn(lambda: "value" > 50)
         .stateChangesOnly()
-        .slack()
+"""
+        scripts = [
+            head + f"""        .slack()
         .channel('@oncall')
         .log('{log_path}')
         .post('http://127.0.0.1:{port}/generic')
     |httpOut('a')
-"""
+""",
+            # a renamed message field and a duration field must reach
+            # the handler events: Slack text is the rendered message,
+            # each kafka record carries the row's episode duration
+            head + """        .message('{{ index .Tags "host" }} went {{ .Level }}')
+        .messageField('msg')
+        .durationField('dur')
+        .slack()
+        .kafka()
+    |httpOut('a')
+""",
+        ]
+        produced = []
         services = {
             "slack": {
                 "url": f"http://127.0.0.1:{port}/slack",
                 "channel": "#default",
-            }
+            },
+            "kafka": {
+                "produce": lambda *rec: produced.append(rec),
+                "topic": "alerts",
+            },
         }
-        souts = run_tickscript_stream(
-            script, sources={"cpu": _stream_df(spark, stream_src)},
-            time_col="time", alert_services=services,
-        )
-        assert "a" in souts.alert_handlers
-        q = (
-            souts["a"].writeStream
-            .foreachBatch(souts.alert_handlers["a"])
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ck_h"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
+        for i, script in enumerate(scripts):
+            received.clear()
+            produced.clear()
+            souts = run_tickscript_stream(
+                script, sources={"cpu": _stream_df(spark, stream_src)},
+                time_col="time", alert_services=services,
+            )
+            assert "a" in souts.alert_handlers
+            q = (
+                souts["a"].writeStream
+                .foreachBatch(souts.alert_handlers["a"])
+                .outputMode("append")
+                .option("checkpointLocation", str(tmp_path / f"ck_h{i}"))
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination(120)
+            stream_rx, stream_kafka = flat(received), sorted(produced)
+            assert stream_rx, "no deliveries on the live path"
 
-        def flat(rx):
-            # http_post arrays are one-per-PARTITION (documented batching
-            # divergence) — compare the multiset of delivered EVENTS
-            out = []
-            for p, b in rx:
-                if isinstance(b, list):
-                    out.extend((p, _json.dumps(e, sort_keys=True)) for e in b)
-                else:
-                    out.append((p, _json.dumps(b, sort_keys=True)))
-            return sorted(out)
-
-        stream_rx = flat(received)
-        stream_log = sorted(log_path.read_text().splitlines())
-        assert stream_rx, "no deliveries on the live path"
-
-        # batch replay of the identical script + services = the oracle
-        received.clear()
-        log_path.unlink()
-        run_tickscript(
-            script, sources={"cpu": fixture_df}, time_col="time", dims=(),
-            alert_services=services,
-        )
-        batch_rx = flat(received)
-        batch_log = sorted(log_path.read_text().splitlines())
-        assert stream_rx == batch_rx
-        assert len(stream_log) == len(batch_log)
-        assert {p for p, _ in stream_rx} == {"/slack", "/generic"}
+            # batch replay of the identical script + services = the oracle
+            received.clear()
+            produced.clear()
+            if i == 0:
+                stream_log = sorted(log_path.read_text().splitlines())
+                log_path.unlink()
+            bouts = run_tickscript(
+                script, sources={"cpu": fixture_df}, time_col="time",
+                dims=(), alert_services=services,
+            )
+            assert stream_rx == flat(received)
+            assert stream_kafka == sorted(produced)
+            if i == 0:
+                batch_log = sorted(log_path.read_text().splitlines())
+                assert len(stream_log) == len(batch_log)
+                assert {p for p, _ in stream_rx} == {"/slack", "/generic"}
+                continue
+            rows = bouts["a"].select("host", "level", "msg", "dur").collect()
+            texts = sorted(
+                _json.loads(b)["attachments"][0]["text"]
+                for p, b in stream_rx if p == "/slack"
+            )
+            assert texts == sorted(r["msg"] for r in rows)
+            assert texts == sorted(f"{r['host']} went {r['level']}" for r in rows)
+            durs = sorted(_json.loads(v)["duration"] for _t, _p, _k, v in produced)
+            assert durs == sorted(r["dur"] for r in rows)
+            assert max(durs) > 0
 
 
 def test_alert_templating_on_live_path(
@@ -1724,6 +1759,32 @@ stream
     assert got == exp
     assert any("is CRITICAL" in t[6] for t in got)
     assert all(t[4].startswith("cpu:h") for t in got)
+
+
+def test_alert_details_field_stream_equals_batch(
+    spark, fixture_df, stream_src, tmp_path
+):
+    """.details(...).detailsField('d') renders the details template into
+    column d on both compiles."""
+    script = """
+stream
+    |from()
+        .measurement('cpu')
+        .groupBy('host')
+    |alert()
+        .crit(lambda: "value" > 90)
+        .message('{{ index .Tags "host" }} is {{ .Level }}')
+        .details('{{ .Message }} at {{ index .Fields "value" }}')
+        .detailsField('d')
+        .stateChangesOnly()
+    |httpOut('a')
+"""
+    s, b = _run_both(
+        spark, script, "a", fixture_df, stream_src, tmp_path,
+        ["time", "host", "value", "level", "d"],
+    )
+    assert s == b and len(s) >= 4
+    assert all(r[4] == f"{r[1]} is {r[3]} at {r[2]}" for r in s)
 
 
 def test_count_window_stateful_alert_stream_equals_batch(
