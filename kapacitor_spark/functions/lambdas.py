@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from kapacitor_spark.durations import parse_duration
 from kapacitor_spark.functions import FUNCTIONS
 
-__all__ = ["compile_lambda", "compile_lambda_pandas", "is_lambda"]
+__all__ = ["compile_lambda", "compile_lambda_pandas", "is_lambda", "is_stateful"]
 
 _TOKEN_RE = re.compile(
     r"""\s*(?:
@@ -57,6 +57,15 @@ _TOKEN_RE = re.compile(
 
 def is_lambda(s: str) -> bool:
     return isinstance(s, str) and s.lstrip().startswith("lambda:")
+
+
+_STATEFUL_CALL = re.compile(r"\b(?:sigma|count|spread)\s*\(")
+
+
+def is_stateful(src: str) -> bool:
+    """Whether a lambda calls a stateful function (sigma/count/spread),
+    which compiles to a running window over the event order."""
+    return bool(_STATEFUL_CALL.search(src))
 
 
 def _tokenize(src: str) -> list[tuple[str, str]]:

@@ -43,7 +43,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kapacitor_spark.durations import parse_duration, to_interval
-from kapacitor_spark.functions.lambdas import compile_lambda, is_lambda
+from kapacitor_spark.functions.lambdas import compile_lambda, is_lambda, is_stateful
 
 __all__ = ["Pipeline", "WindowSpec"]
 
@@ -251,14 +251,14 @@ class Pipeline:
         aggregates, which Spark forbids directly inside a filter — those
         predicates are materialized as a column first (same plan shape:
         one window pass, then the filter)."""
-        import re as _re
+        return self._filter(
+            self._expr(cond), is_lambda(cond) and is_stateful(cond)
+        )
 
-        c = self._expr(cond)
-        if (
-            isinstance(cond, str)
-            and cond.lstrip().startswith("lambda:")
-            and _re.search(r"\b(?:sigma|count|spread)\s*\(", cond)
-        ):
+    def _filter(self, c: Column, stateful: bool) -> "Pipeline":
+        """Filter on a compiled predicate; ``stateful`` materializes it
+        first (see where). The TICK where path calls this directly."""
+        if stateful:
             df = self.df.withColumn("__wf", c).filter(F.col("__wf")).drop("__wf")
             return self._with(df)
         return self._with(self.df.filter(c))

@@ -45,13 +45,24 @@ Flux, exactly like the reference's FluxQueryService seam.
 from __future__ import annotations
 
 import re
+from dataclasses import dataclass
 from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from kapacitor_spark.durations import parse_duration
-from kapacitor_spark.pipeline import Pipeline, _level_label
+from kapacitor_spark.functions.lambdas import (
+    compile_lambda,
+    compile_lambda_pandas,
+    is_stateful,
+)
+from kapacitor_spark.pipeline import (
+    CountWindowSpec,
+    Pipeline,
+    WindowSpec,
+    _level_label,
+)
 
 __all__ = ["run_tickscript", "task_dot", "template_vars", "TickError"]
 
@@ -865,17 +876,6 @@ def _dur(v) -> str | float:
     return v
 
 
-def _lam(p: Pipeline, v):
-    if isinstance(v, _Lambda):
-        from kapacitor_spark.functions.lambdas import compile_lambda
-
-        return compile_lambda(
-            v.src, ordered_window=p._ordered(), time_col=p.time_col,
-            schema=dict(p.df.dtypes), variables=v.vars,
-        )
-    return v
-
-
 def _mk_k8s_scaler(client, props):
     from kapacitor_spark.operators.autoscale import K8sAutoscaler
 
@@ -918,8 +918,7 @@ def _mk_ec2_scaler(client, props):
     )
 
 
-# TICK autoscale node name -> (client kind, scaler factory) — shared by
-# the batch env (_mk_*Autoscale) and the streaming compile (_SAutoscale)
+# TICK autoscale node name -> (client kind, scaler factory)
 _AUTOSCALE_KINDS = {
     "k8sAutoscale": ("k8s", _mk_k8s_scaler),
     "swarmAutoscale": ("swarm", _mk_swarm_scaler),
@@ -944,6 +943,11 @@ class _Env:
         "sideload", "barrier", "httpPost", "influxDBOut",
         "k8sAutoscale", "swarmAutoscale", "ec2Autoscale", "queryFlux",
     }
+    # simple chain methods, applied inline by _apply_chain
+    CHAIN = {
+        "where", "shift", "sample", "union", "httpOut", "log", "trickle",
+        "stats", "deadman",
+    }
 
     def __init__(
         self, sources, time_col, dims, tiebreak, outputs, udfs=None,
@@ -962,22 +966,39 @@ class _Env:
         self.endpoints = endpoints
         self.influxdb = influxdb
 
+    def _lam(self, p: Pipeline, v):
+        """Compile a TICK lambda against ``p``: its schema, its event
+        order (for stateful sigma/count/spread) and the script's vars.
+        Anything else passes through (SQL strings, literals)."""
+        if not isinstance(v, _Lambda):
+            return v
+        return compile_lambda(
+            v.src, ordered_window=p._ordered(), time_col=p.time_col,
+            schema=dict(p.df.dtypes), variables=v.vars,
+        )
+
+    def _where(self, p: Pipeline, v) -> Pipeline:
+        """The one TICK where path: from().where() and |where()."""
+        return p._filter(
+            self._lam(p, v), isinstance(v, _Lambda) and is_stateful(v.src)
+        )
+
     # -- source resolution ------------------------------------------- #
 
     def _source_pipeline(self, meas: str | None) -> Pipeline:
+        """A source may be a DataFrame or Pipeline, a dict of them by
+        measurement, or a callable(measurement) returning either."""
         src = self.sources
-        if isinstance(src, Pipeline):
-            return src
-        if isinstance(src, DataFrame):
-            return Pipeline.from_df(src, time_col=self.time_col, dims=self.dims,
-                                    tiebreak=self.tiebreak)
-        if callable(src):
-            return src(meas)
-        if meas is None and len(src) == 1:
-            meas = next(iter(src))
-        if meas not in src:
-            raise TickError(f"no source for measurement {meas!r}")
-        obj = src[meas]
+        if isinstance(src, (Pipeline, DataFrame)):
+            obj = src
+        elif callable(src):
+            obj = src(meas)
+        else:
+            if meas is None and len(src) == 1:
+                meas = next(iter(src))
+            if meas not in src:
+                raise TickError(f"no source for measurement {meas!r}")
+            obj = src[meas]
         return obj if isinstance(obj, Pipeline) else Pipeline.from_df(
             obj, time_col=self.time_col, dims=self.dims, tiebreak=self.tiebreak
         )
@@ -991,7 +1012,7 @@ class _Env:
             p = p.group_by(by_measurement=True)
         for name, args in node.props:
             if name == "where":
-                p = p.where(_lam(p, args[0]))
+                p = self._where(p, args[0])
             elif name == "groupBy":
                 tags = args[0] if args and isinstance(args[0], list) else list(args)
                 p = p.group_by(*[t for t in tags], by_measurement=by_meas)
@@ -1382,12 +1403,17 @@ class _Env:
 
     # -- chain dispatch ----------------------------------------------- #
 
+    def _resolve(self, x):
+        """Materialize a pending builder or aggregation; anything else
+        passes through."""
+        if isinstance(x, _Node):
+            return self._materialize(x)
+        if isinstance(x, _PendingAgg):
+            return x._build()
+        return x
+
     def chain(self, node, name, args):
-        # materialize any pending builder/aggregation the chain continues from
-        if isinstance(node, _Node):
-            node = self._materialize(node)
-        if isinstance(node, _PendingAgg):
-            node = node._build()
+        node = self._resolve(node)
         if isinstance(node, _Source):
             if name == "from":
                 return _Node("from", args, node)
@@ -1407,7 +1433,7 @@ class _Env:
         raise TickError(f"cannot chain |{name}() here")
 
     def prop(self, node, name, args):
-        if isinstance(node, _Node):
+        if isinstance(node, (_Node, _PendingAgg)):
             return node.prop(name, args)
         if isinstance(node, Pipeline) and name == "rename":
             # union(...).rename(m) (/root/reference/pipeline/union.go:
@@ -1418,11 +1444,7 @@ class _Env:
         raise TickError(f"property .{name}() without a node")
 
     def _materialize(self, node: _Node):
-        p = node.parent
-        if isinstance(p, _Node):
-            p = self._materialize(p)
-        if isinstance(p, _PendingAgg):
-            p = p._build()
+        p = self._resolve(node.parent)
         if node.name == "from":
             return self._resolve_from(node)
         if node.name == "query":
@@ -1433,6 +1455,8 @@ class _Env:
             raise TickError(f"|{node.name}() needs an upstream pipeline")
         if node.name.startswith("@"):
             return self._mk_udf(p, node)
+        if node.name in _AUTOSCALE_KINDS:
+            return self._autoscale(p, node)
         fn = getattr(self, f"_mk_{node.name}", None)
         if fn is None:
             raise TickError(f"unsupported node |{node.name}()")
@@ -1578,11 +1602,13 @@ class _Env:
         lookups, ons = load_sideload_levels(p.df.sparkSession, src, order)
         return p.sideload(lookups, on=ons, fields=fields or None, defaults=defaults)
 
-    def _autoscale(self, p: Pipeline, node: _Node, kind: str, mk) -> Pipeline:
-        """Shared k8s/swarm/ec2Autoscale materializer
-        (/root/reference/autoscale.go; pipeline/{k8s,swarm,ec2}_autoscale.go
-        defaults Min=1, Max=0, cooldowns 0). ``mk(client, props)`` builds
+    def _autoscale(self, p: Pipeline, node: _Node) -> Pipeline:
+        """k8s/swarm/ec2Autoscale (reference autoscale.go;
+        pipeline/{k8s,swarm,ec2}_autoscale.go defaults Min=1, Max=0,
+        cooldowns 0): the client lookup and validation, then ``_scale``
+        runs the decision machine. The _AUTOSCALE_KINDS factory builds
         the concrete Autoscaler from the node's naming properties."""
+        kind, mk = _AUTOSCALE_KINDS[node.name]
         props = node.prop_map()
         cluster = props.get("cluster", [""])[0]
         clients = self.autoscale_clients
@@ -1590,7 +1616,7 @@ class _Env:
         if client is None:
             raise TickError(
                 f"{node.name}(): no {kind} client — pass "
-                f"run_tickscript(autoscale_clients={{{kind!r}: client}})"
+                f"autoscale_clients={{{kind!r}: client}}"
             )
         scaler = mk(client, props)
         if "replicas" not in props:
@@ -1600,24 +1626,16 @@ class _Env:
                 f"{node.name}().currentField(): state-dependent replicas "
                 "lambdas need the Python API (Pipeline.autoscale current_fn=)"
             )
-        node._autoscaler = scaler  # exposed for stats assertions
-        return p.autoscale(
-            scaler,
-            _lam(p, props["replicas"][0]),
+        return self._scale(
+            p, scaler, self._lam(p, props["replicas"][0]),
             min=int(props.get("min", [1])[0]),
             max=int(props.get("max", [0])[0]),
             increase_cooldown=_dur(props.get("increaseCooldown", [0.0])[0]),
             decrease_cooldown=_dur(props.get("decreaseCooldown", [0.0])[0]),
         )
 
-    def _mk_k8sAutoscale(self, p: Pipeline, node: _Node) -> Pipeline:
-        return self._autoscale(p, node, "k8s", _mk_k8s_scaler)
-
-    def _mk_swarmAutoscale(self, p: Pipeline, node: _Node) -> Pipeline:
-        return self._autoscale(p, node, "swarm", _mk_swarm_scaler)
-
-    def _mk_ec2Autoscale(self, p: Pipeline, node: _Node) -> Pipeline:
-        return self._autoscale(p, node, "ec2", _mk_ec2_scaler)
+    def _scale(self, p: Pipeline, scaler, want, **kw) -> Pipeline:
+        return p.autoscale(scaler, want, **kw)
 
     def _mk_window(self, p: Pipeline, node: _Node) -> Pipeline:
         props = node.prop_map()
@@ -1627,6 +1645,8 @@ class _Env:
                 int(props.get("everyCount", [1])[0]),
                 fill_period="fillPeriod" in props,
             )
+        if "period" not in props:
+            raise TickError("window() needs .period(d) or .periodCount(n)")
         period = _dur(props["period"][0])
         every = _dur(props.get("every", [None])[0]) if "every" in props else None
         return p.window_time(period, every, fill_period="fillPeriod" in props)
@@ -1648,7 +1668,7 @@ class _Env:
         for n, l in zip(names, node.args):
             # .quiet() (pipeline/eval.go QuietFlag): an eval error (missing
             # field / div-by-zero NULL) drops the point silently
-            out = out.eval(keep=True, drop_errors=quiet, **{n: _lam(out, l)})
+            out = out.eval(keep=True, drop_errors=quiet, **{n: self._lam(out, l)})
         if keep is False:
             cols = [out.time_col, *out.dims, *names]
             out = out._with(out.df.select(*dict.fromkeys(cols)))
@@ -1703,11 +1723,7 @@ class _Env:
         return p.combine(*preds, as_=as_, tolerance=tol)
 
     def _mk_join(self, p: Pipeline, node: _Node) -> Pipeline:
-        other = node.args[0]
-        if isinstance(other, _Node):
-            other = self._materialize(other)
-        if isinstance(other, _PendingAgg):
-            other = other._build()
+        other = self._resolve(node.args[0])
         props = node.prop_map()
         prefixes = tuple(props.get("as", ("a", "b")))
         tol = _dur(props["tolerance"][0]) if "tolerance" in props else None
@@ -1723,7 +1739,7 @@ class _Env:
         )
 
     def _mk_alert(self, p: Pipeline, node: _Node) -> Pipeline:
-        a = _alert_props(node.props, lambda v: _lam(p, v))
+        a = _alert_props(node.props, lambda v: self._lam(p, v))
         out = p.alert(**a.machine, **a.augment)
         _deliver_alerts(
             out.df, [d for d in out.dims if d != "name"], self.time_col,
@@ -1734,17 +1750,15 @@ class _Env:
     # -- simple chain methods ------------------------------------------ #
 
     def _apply_chain(self, p: Pipeline, name, args):
-        if name in ("where",):
-            return p.where(_lam(p, args[0]))
+        if name == "where":
+            return self._where(p, args[0])
         if name == "shift":
             return p.shift(_dur(args[0]))
         if name == "sample":
             a = args[0]
             return p.sample(n=int(a)) if isinstance(a, (int, float)) else p.sample(every=_dur(a))
         if name == "union":
-            others = [self._materialize(a) if isinstance(a, _Node)
-                      else (a._build() if isinstance(a, _PendingAgg) else a) for a in args]
-            return p.union(*others)
+            return p.union(*[self._resolve(a) for a in args])
         if name == "httpOut":
             self.outputs[args[0]] = p.df
             return p
@@ -1752,38 +1766,17 @@ class _Env:
             return p
         if name == "trickle":
             return p.trickle()
-        if name == "barrier":
-            return p  # batch mode: event-time complete; streaming: barrier()
         if name == "stats":
             return p.stats(_dur(args[0]))
         if name == "deadman":
             return p.deadman(args[0], _dur(args[1]))
         if name in self.AGGS:
-            return self._apply_agg(p, name, args)
+            return _PendingAgg(self, p, name, args)
         raise TickError(f"unsupported chain method |{name}()")
 
-    def _apply_agg(self, p: Pipeline, name, args):
-        n = _PendingAgg(p, name, args)
-        return n
-
-
-class _PendingAgg:
-    """An aggregation chain node that still accepts .as()/.unit()/... props;
-    the next pipe (or output) materializes it with defaults applied.
-    Mirrors InfluxQLNode chaining (/root/reference/pipeline/influxql.go:
-    160-175)."""
-
-    def __init__(self, p, name, args):
-        self._src = p
-        self._name = name
-        self._args = args
-        self._props: dict[str, list] = {}
-        self._built = None
-
-    def _build(self) -> Pipeline:
-        if self._built is not None:
-            return self._built
-        p, name, args, props = self._src, self._name, self._args, self._props
+    def _agg(self, n: "_PendingAgg") -> Pipeline:
+        """Build a pending aggregation or per-point transform."""
+        p, name, args, props = n.src, n.name, n.args, n.props
         as_ = props.get("as", [None])[0]
         unit = _dur(props["unit"][0]) if "unit" in props else "1s"
         if name in ("count", "sum", "mean", "median", "mode", "spread",
@@ -1834,22 +1827,38 @@ class _PendingAgg:
         elif name == "changeDetect":
             out = p.change_detect(*args)
         elif name == "stateDuration":
-            lam = args[0].src if isinstance(args[0], _Lambda) else args[0]
-            out = p.state_duration(lam, unit=unit, as_=as_ or "state_duration")
+            out = p.state_duration(
+                self._lam(p, args[0]), unit=unit, as_=as_ or "state_duration"
+            )
         elif name == "stateCount":
-            lam = args[0].src if isinstance(args[0], _Lambda) else args[0]
-            out = p.state_count(lam, as_=as_ or "state_count")
+            out = p.state_count(self._lam(p, args[0]), as_=as_ or "state_count")
         elif name in ("holtWinters", "holtWintersWithFit"):
             out = p.holt_winters(args[0], int(args[1]), int(args[2]),
                                  _dur(args[3]),
                                  include_fit=name.endswith("WithFit"), as_=as_)
         else:  # pragma: no cover
             raise TickError(f"unsupported aggregation {name}")
-        self._built = out
         return out
 
+
+class _PendingAgg:
+    """An aggregation chain node that still accepts .as()/.unit()/... props;
+    the next pipe (or output) materializes it through ``env._agg``.
+    Mirrors InfluxQLNode chaining (reference pipeline/influxql.go:
+    160-175)."""
+
+    def __init__(self, env, p, name, args):
+        self.env, self.src, self.name, self.args = env, p, name, args
+        self.props: dict[str, list] = {}
+        self._built = None
+
+    def _build(self) -> Pipeline:
+        if self._built is None:
+            self._built = self.env._agg(self)
+        return self._built
+
     def prop(self, name, args):
-        self._props[name] = args
+        self.props[name] = args
         self._built = None
         return self
 
@@ -1872,7 +1881,7 @@ def run_tickscript(
     """Execute a TICKscript; returns {httpOut name: DataFrame}.
 
     ``sources``: DataFrame | Pipeline | dict measurement→DataFrame/Pipeline
-    | callable(measurement)→Pipeline.
+    | callable(measurement)→DataFrame/Pipeline.
     ``udfs``: registry for @name() chain methods — name → @udf_node
     function (options become kwargs), the reference's configured-UDF
     scope methods (/root/reference/task_master.go:497-525).
@@ -1891,96 +1900,234 @@ def run_tickscript(
     ``var`` statements become defaults; values given here win. Durations
     pass as "10s"-style strings, lambdas as "lambda: ..." strings.
     """
-    outputs: dict[str, DataFrame] = {}
     env = _Env(
-        sources, time_col, dims, tiebreak, outputs, udfs, endpoints,
+        sources, time_col, dims, tiebreak, {}, udfs, endpoints,
         influxdb, dbrp, alert_services, autoscale_clients, flux_client,
     )
+    return _run(env, script, template_vars)
+
+
+def _run(env: _Env, script: str, template_vars: dict | None) -> dict:
     env.preset_vars = _coerce_template_vars(template_vars or {})
-    toks, src = _tokenize(script)
-    p = _P(toks, src, env)
-    # patch property dispatch for pending aggregations
-    orig_prop = env.prop
-
-    def prop(node, name, args):
-        if isinstance(node, _PendingAgg):
-            return node.prop(name, args)
-        return orig_prop(node, name, args)
-
-    env.prop = prop
-    p.run()
-    return outputs
+    _P(*_tokenize(script), env).run()
+    return env.outputs
 
 
 # --------------------------------------------------------------------- #
-# Structured-Streaming compile target (r10, widened r11) — the
-# continuous-ingestion form of a TICK task. run_tickscript evaluates
-# scripts as batch replay over complete event time (every golden works
-# that way, mirroring the reference's recording/replay tests); this
-# bridge compiles the STREAMING-COMPATIBLE subset of the language
-# directly onto readStream DataFrames so the task-store API can enable a
-# task against live ingestion:
-#   stream|from(measurement, where, groupBy)
-#     [ |eval/default/delete        — stateless projections, built
-#       through the SAME _Env._mk_* code as batch replay ]
-#     [ |derivative/difference/elapsed/cumulativeSum/stateCount/
-#       stateDuration               — keyed streaming operators ]
-#     [ |window(period, every) |mean/sum/count/min/max ]
-#     [ |alert(crit/warn/info [+ stateChangesOnly/noRecoveries/
-#       flapping/history/level resets → streaming.alert_stream keyed
-#       state machine — the reference's canonical live task shape]) ]
-#     |httpOut(name)
-# Windows become event-time F.window aggregations, so the plan is
-# exactly what Structured Streaming's incremental state store executes.
-# alert() is one node for both compiles: the same prop parser
-# (_alert_props), event augment (Pipeline._alert_augment), delivery
-# (_deliver_alerts) and alert machine (streaming/state.py AlertStage).
-# So .detailsField() works on both, and handler events carry the
-# .messageField(), .detailsField() and .durationField() values.
-# Chain methods outside the subset raise TickError with the batch
-# alternative spelled out — honesty over silent wrong answers.
+# Structured-Streaming compile target — the continuous-ingestion form of
+# a TICK task. run_tickscript evaluates scripts as batch replay over
+# complete event time (every golden works that way, mirroring the
+# reference's recording/replay tests); run_tickscript_stream compiles the
+# streaming-compatible subset onto readStream DataFrames so the
+# task-store API can enable a task against live ingestion.
+#
+# There is one front end: _StreamEnv is an _Env, so parsing, prop
+# accumulation, from() resolution, groupBy/eval/default/delete/sideload,
+# where/shift/sample(d)/union/log/httpOut and the aggregation props run
+# the batch compile's own code. It overrides only the operators whose
+# live form differs:
+#   - time-window aggregates are the batch builder's F.window
+#     aggregation (what Structured Streaming's incremental state store
+#     executes); count windows run the keyed ring (window_count_stream)
+#   - derivative/difference/elapsed/cumulativeSum/movingAverage/
+#     stateCount/stateDuration/changeDetect and sample(n) run on the keyed
+#     streaming operators
+#   - join, flatten, combine, barrier (→ watermark), stats/deadman and
+#     the autoscale decision stream have live operators of their own
+#   - alert() is a stateless level CASE, the keyed alert machine, or
+#     fused with its window into one keyed operator — with the batch
+#     compile's prop parser, augment, delivery and AlertStage
+# The supported chain methods are _StreamEnv.SUPPORTED. Any other raises
+# TickError with the batch alternative spelled out — honesty over silent
+# wrong answers.
 # --------------------------------------------------------------------- #
 
 
-class _SFrom:
-    """Streaming from() node: source selection + filters + dims."""
+@dataclass(frozen=True)
+class _Aggregated(Pipeline):
+    """A live stream after a streaming aggregation, ticker or keyed alert.
+    Spark plans no second stateful operator behind one, so only
+    log/httpOut/alert may follow.
+    ``fuse`` is the pending window aggregation it came from: a stateful
+    alert re-plans window + aggregate + alert from it as ONE keyed
+    operator."""
 
-    def __init__(self, env):
-        self.env = env
-        self.measurement = None
-        self.where_src = None
-        self.dims: tuple = ()
-
-
-class _SStream:
-    """Materialized streaming node: a streaming DataFrame + its group
-    dims (what the reference's point-with-group edge carries)."""
-
-    def __init__(self, df, dims):
-        self.df = df
-        self.dims = tuple(dims)
+    fuse: _PendingAgg | None = None
 
 
-class _SPend:
-    """Pending streaming chain node accumulating .props until the next
-    chain call materializes it — the _Node pattern, streaming side.
+class _StreamEnv(_Env):
+    """The live back end of the TICK front end (see the comment above)."""
 
-    Stateless projections (eval/default/delete) build through the SAME
-    _Env._mk_* code paths as the batch replay, applied to a Pipeline
-    wrapping the streaming DataFrame — stream == batch by construction.
-    Ordered/state-tracking transforms compile onto the keyed streaming
-    operators (kapacitor_spark.streaming), whose micro-batch walks are
-    pinned equal to the batch forms by their own tests."""
+    WINDOW_AGGS = {
+        "mean", "sum", "count", "min", "max", "stddev", "median", "spread",
+        "first", "last",
+    }
+    COUNT_AGGS = {"mean", "sum", "count", "min", "max"}
+    _ORDERED = {
+        "derivative": "derivative", "difference": "difference",
+        "elapsed": "elapsed", "cumulativeSum": "cumulative_sum",
+    }
+    KEYED = {
+        *_ORDERED, "movingAverage", "stateCount", "stateDuration",
+        "changeDetect",
+    }
+    SUPPORTED = frozenset({
+        *WINDOW_AGGS, *KEYED, *_AUTOSCALE_KINDS,
+        "from", "where", "groupBy", "eval", "default", "delete", "shift",
+        "sample", "sideload", "flatten", "combine", "barrier", "union",
+        "join", "log", "stats", "deadman", "window", "alert", "httpOut",
+    })
+    # alert props that need the keyed alert machine; .durationField()
+    # too, because the episode start persists in keyed state
+    _STATEFUL_ALERT = {
+        "critReset", "warnReset", "infoReset", "stateChangesOnly",
+        "noRecoveries", "flapping", "history", "durationField",
+    }
 
-    _ORDERED = {"derivative": "derivative", "difference": "difference",
-                "elapsed": "elapsed", "cumulativeSum": "cumulative_sum"}
-    # movingAverage rides the count-window ring with the warm-up gate
+    def __init__(self, *args, flatten_values=None, join_watermark="1h", **kw):
+        super().__init__(*args, **kw)
+        self.flatten_values = flatten_values
+        self.join_watermark = join_watermark
+        self.handler_fns: list = []  # every live alert's delivery fn
 
-    def __init__(self, env, name, args, stream: "_SStream"):
-        self.env, self.name, self.args, self.stream = env, name, args, stream
-        self.props: list[tuple[str, list]] = []
+    @staticmethod
+    def _stateless(v):
+        if isinstance(v, _Lambda) and is_stateful(v.src):
+            raise TickError(
+                f"live lambda {v.src!r}: sigma/count/spread need the whole "
+                "ordered history — run the batch replay (run_tickscript)"
+            )
+        return v
 
-    def _finalize_flatten(self, props) -> "_SAgg":
+    def _lam(self, p: Pipeline, v):
+        return super()._lam(p, self._stateless(v))
+
+    @staticmethod
+    def _no_agg(x, name):
+        if isinstance(x, _Aggregated):
+            raise TickError(
+                f"streaming compile: |{name}() on a stream behind a streaming "
+                "aggregation or keyed alert would chain a second stateful "
+                "operator — run the batch replay (run_tickscript)"
+            )
+        return x
+
+    def chain(self, node, name, args):
+        if name not in self.SUPPORTED:
+            raise TickError(
+                f"|{name}() is not in the streaming compile subset "
+                f"({'/'.join(sorted(self.SUPPORTED))}) — run it as a batch "
+                "replay task (run_tickscript) or wire the stateful operator "
+                "from kapacitor_spark.streaming directly"
+            )
+        node = self._resolve(node)
+        if isinstance(node, _Source) and node.kind != "stream":
+            raise TickError("streaming compile: |from() must chain off `stream`")
+        if name not in ("alert", "log", "httpOut"):
+            self._no_agg(node, name)
+        return super().chain(node, name, args)
+
+    def _apply_chain(self, p: Pipeline, name, args):
+        from kapacitor_spark import streaming as _strm
+
+        if name == "sample" and isinstance(args[0], (int, float)):
+            # every-Nth point: the per-group counter is keyed state
+            # (reference sample.go:97-110)
+            return p._with(_strm.sample_count_stream(
+                p.df, p.time_col, list(p.dims), int(args[0]),
+                tiebreak=self.tiebreak,
+            ))
+        if name == "stats":
+            # wall-clock stats()/deadman() (reference stats.go:
+            # "Stats are REAL-TIME not data-time") — ProcessingTimeTimeout
+            # tickers; a fully-silent group still fires CRITICAL. Not
+            # replayable: availableNow replays use the batch compile.
+            out = _strm.stats_stream(
+                p.df, p.time_col, list(p.dims), interval=_dur(args[0])
+            )
+            return _Aggregated(out, p.time_col, p.dims)
+        if name == "deadman":
+            out = _strm.deadman_stream(
+                p.df, p.time_col, list(p.dims), interval=_dur(args[1]),
+                threshold=float(args[0]),
+            )
+            return _Aggregated(out, p.time_col, p.dims)
+        if name == "union":
+            args = [self._no_agg(self._resolve(a), name) for a in args]
+        return super()._apply_chain(p, name, args)
+
+    def _agg(self, n: _PendingAgg) -> Pipeline:
+        from kapacitor_spark import streaming as _strm
+
+        p, name, args, props = n.src, n.name, n.args, n.props
+        as_ = props.get("as", [None])[0]
+        win, dims, tb = p.window, list(p.dims), self.tiebreak
+        if isinstance(win, CountWindowSpec) and name in self.COUNT_AGGS:
+            # the keyed ring buffer (reference window.go:360-470)
+            out = _strm.window_count_stream(
+                p.df, p.time_col, dims, args[0], win.period, win.every,
+                agg=name, as_=as_ or name, tiebreak=tb,
+                full_only=win.fill_period,
+            )
+            return _Aggregated(out, p.time_col, p.dims, fuse=n)
+        if (
+            isinstance(win, WindowSpec) and name in self.WINDOW_AGGS
+            and not win.fill_period
+        ):
+            out = super()._agg(n)
+            return _Aggregated(out.df, out.time_col, out.dims, fuse=n)
+        if win is not None or name not in self.KEYED:
+            raise TickError(
+                f"streaming |{name}(): live aggregations are "
+                f"{'/'.join(sorted(self.WINDOW_AGGS))} after a time "
+                f"window (no fillPeriod, every > 0) and "
+                f"{'/'.join(sorted(self.COUNT_AGGS))} after a count "
+                "window — run the batch replay (run_tickscript)"
+            )
+        unit = _dur(props["unit"][0]) if "unit" in props else "1s"
+        if name == "movingAverage":
+            # the count-window ring with the warm-up gate
+            out = _strm.window_count_stream(
+                p.df, p.time_col, dims, args[0], int(args[1]), 1,
+                agg="mean", as_=as_ or args[0], tiebreak=tb, full_only=True,
+            )
+        elif name in self._ORDERED:
+            if name == "elapsed" and len(args) > 1:
+                unit = _dur(args[1])
+            out = _strm.ordered_transform_stream(
+                p.df, p.time_col, dims, args[0], op=self._ORDERED[name],
+                unit=unit, as_=as_, non_negative="nonNegative" in props,
+                tiebreak=tb,
+            )
+        elif name == "changeDetect":
+            out = _strm.change_detect_stream(
+                p.df, p.time_col, dims, list(args), tiebreak=tb
+            )
+        elif name == "stateCount":
+            out = _strm.state_count_stream(
+                p.df, p.time_col, dims, cond=self._lam(p, args[0]),
+                as_=as_ or "state_count", tiebreak=tb,
+            )
+        else:
+            out = _strm.state_duration_stream(
+                p.df, p.time_col, dims, cond=self._lam(p, args[0]),
+                unit=unit, as_=as_ or "state_duration", tiebreak=tb,
+            )
+        return p._with(out)
+
+    def _mk_barrier(self, p: Pipeline, node: _Node) -> Pipeline:
+        """barrier().idle(d)/.period(d) → event-time watermark — the
+        reference's late-drop + state-retention bound
+        (reference pipeline/barrier.go:13-56)."""
+        from kapacitor_spark.streaming import barrier
+
+        props = node.prop_map()
+        delay = props.get("idle", props.get("period"))
+        if delay is None:
+            raise TickError("streaming barrier() needs .idle(d) or .period(d)")
+        return p._with(barrier(p.df, p.time_col, _dur(delay[0])), window=p.window)
+
+    def _mk_flatten(self, p: Pipeline, node: _Node) -> Pipeline:
         """Streaming ``flatten().on(...).tolerance(d)`` — a per-bucket
         pivot is a streaming AGGREGATION (grouped conditional
         min_by(field, arrival-order) per pivot value), so it plans as
@@ -1992,8 +2139,7 @@ class _SPend:
         ``run_tickscript_stream(flatten_values=[...])``. Batch parity:
         same Go-style Time.Round bucketing, same earliest-point-wins
         rule (min_by over (time, tiebreak))."""
-        env, st = self.env, self.stream
-        values = getattr(env, "flatten_values", None)
+        values = self.flatten_values
         if not values:
             raise TickError(
                 "streaming flatten() needs its pivot values declared up "
@@ -2001,352 +2147,131 @@ class _SPend:
                 "— pass flatten_values=[...] to run_tickscript_stream, "
                 "or run the batch replay (run_tickscript)"
             )
+        props = node.prop_map()
         on = props.get("on", [])
         on = on[0] if on and isinstance(on[0], list) else list(on)
         delimiter = props.get("delimiter", ["."])[0]
         drop_ofn = "dropOriginalFieldName" in props
-        rest = [d for d in st.dims if d not in on]
-        field = next(
-            c for c in st.df.columns
-            if c not in (env.time_col, *st.dims)
-        )
-        t = F.col(env.time_col)
+        tc = p.time_col
+        rest = [d for d in p.dims if d not in on]
+        field = next(c for c in p.df.columns if c not in (tc, *p.dims))
+        t = F.col(tc)
         if "tolerance" in props:
             us = round(_dur(props["tolerance"][0]) * 1_000_000)
             # Go Time.Round to the nearest multiple (flatten.go:44)
             um = F.unix_micros(t) + F.lit(us // 2)
             t = F.timestamp_micros(um - um % F.lit(us))
         pk = F.concat_ws(delimiter, *[F.col(c) for c in on])
-        order = F.struct(
-            F.col(env.time_col), *[F.col(c) for c in env.tiebreak]
-        )
-        aggs = []
-        for v in values:
-            cond = pk == F.lit(v)
-            name = v if drop_ofn else f"{v}{delimiter}{field}"
-            aggs.append(
-                F.min_by(
-                    F.when(cond, F.col(field)), F.when(cond, order)
-                ).alias(name)
-            )
-        out = (
-            st.df.groupBy(
-                t.alias(env.time_col), *[F.col(d) for d in rest]
-            ).agg(*aggs)
-        )
-        return _SAgg(out, env.time_col, rest)
+        order = F.struct(F.col(tc), *[F.col(c) for c in self.tiebreak])
+        aggs = [
+            F.min_by(
+                F.when(pk == F.lit(v), F.col(field)),
+                F.when(pk == F.lit(v), order),
+            ).alias(v if drop_ofn else f"{v}{delimiter}{field}")
+            for v in values
+        ]
+        out = p.df.groupBy(t.alias(tc), *[F.col(d) for d in rest]).agg(*aggs)
+        return _Aggregated(out, tc, tuple(rest))
 
-    def _finalize_combine(self, props) -> "_SAgg":
+    def _mk_combine(self, p: Pipeline, node: _Node) -> Pipeline:
         """Streaming ``combine(l1, l2, ...)`` — one streaming aggregation
         (the reference's per-bucket buffer as collect_list) + a
         declarative k-combination generator (streaming.combine_stream);
         the batch compile's iterated equi-joins would be chained
-        stream-stream self-joins with multiplied state. Wrapped as _SAgg
-        (a streaming aggregation is upstream), so stateless alert/httpOut
-        chain and keyed operators correctly refuse."""
-        from kapacitor_spark import streaming as _strm
-        from kapacitor_spark.functions.lambdas import compile_lambda
+        stream-stream self-joins with multiplied state."""
+        from kapacitor_spark.streaming import combine_stream
 
-        env, st = self.env, self.stream
-        srcs = [
-            a.src if isinstance(a, _Lambda) else a for a in self.args
-        ]
-        preds = [
-            compile_lambda(
-                s, ordered_window=None, time_col=env.time_col,
-                schema=dict(st.df.dtypes), variables=env.vars,
-            )
-            for s in srcs
-        ]
-        as_ = list(props.get("as", ("a", "b")))
-        tol = _dur(props["tolerance"][0]) if "tolerance" in props else None
-        out = _strm.combine_stream(
-            st.df, env.time_col, list(st.dims), preds,
-            [str(s) for s in srcs], as_, tolerance=tol,
+        props = node.prop_map()
+        out = combine_stream(
+            p.df, p.time_col, list(p.dims),
+            [self._lam(p, a) for a in node.args],
+            [a.src if isinstance(a, _Lambda) else str(a) for a in node.args],
+            list(props.get("as", ("a", "b"))),
+            tolerance=_dur(props["tolerance"][0]) if "tolerance" in props else None,
             delimiter=props.get("delimiter", ["_"])[0],
         )
-        return _SAgg(out, env.time_col, st.dims)
+        return _Aggregated(out, p.time_col, p.dims)
 
-    def prop(self, name, args):
-        self.props.append((name, args))
-        return self
+    def _mk_join(self, p: Pipeline, node: _Node) -> Pipeline:
+        """Stream-stream tolerance join (streaming.join_stream) with
+        watermark state eviction. Props: .as(prefixes) / .tolerance(d)
+        (REQUIRED — the join keys on the tolerance bucket) /
+        .delimiter() / .streamName() / .on(dims...) (dim-subset
+        one-to-many join) / .fill('null'|scalar) (FULL OUTER on the
+        window key; unmatched rows emit once both watermarks pass the
+        bucket — tune run_tickscript_stream(join_watermark=...)) /
+        .deleteAll() (a no-op: state cleanup is native watermark
+        eviction). Documented divergence (join_stream docstring): >1 row
+        per (bucket, dims) cell per side emits the cell cross product,
+        where the batch join pairs sequentially."""
+        from kapacitor_spark.streaming import join_stream
 
-    def prop_map(self):
-        return dict(self.props)
-
-    def finalize(self) -> "_SStream":
-        env, st = self.env, self.stream
-        if self.name in ("eval", "default", "delete", "sideload"):
-            # sideload is a stream-static broadcast join: the lookup
-            # levels load once at compile (like the reference's cached
-            # source), the join composes with readStream unchanged
-            p = Pipeline.from_df(st.df, time_col=env.time_col, dims=st.dims)
-            built = getattr(_Env, f"_mk_{self.name}")(None, p, self)
-            return _SStream(built.df, built.dims)
-        from kapacitor_spark import streaming as _strm
-
-        props = self.prop_map()
-        if self.name == "flatten":
-            return self._finalize_flatten(props)
-        if self.name == "combine":
-            return self._finalize_combine(props)
-        if self.name == "barrier":
-            # barrier().idle(d)/.period(d) → event-time watermark — the
-            # reference's late-drop + state-retention bound
-            # (/root/reference/pipeline/barrier.go:13-56); in batch
-            # replay barrier is a no-op (event time is complete)
-            delay = props.get("idle", props.get("period"))
-            if delay is None:
-                raise TickError("streaming barrier() needs .idle(d) or "
-                                ".period(d)")
-            return _SStream(
-                _strm.barrier(st.df, env.time_col, _dur(delay[0])), st.dims
-            )
-        as_ = props.get("as", [None])[0]
-        unit = _dur(props["unit"][0]) if "unit" in props else "1s"
-        if self.name == "movingAverage":
-            out = _strm.window_count_stream(
-                st.df, env.time_col, list(st.dims), self.args[0],
-                int(self.args[1]), 1, agg="mean",
-                as_=as_ or self.args[0], tiebreak=env.tiebreak,
-                full_only=True,
-            )
-            return _SStream(out, st.dims)
-        if self.name in self._ORDERED:
-            if self.name == "elapsed" and len(self.args) > 1:
-                unit = _dur(self.args[1])
-            out = _strm.ordered_transform_stream(
-                st.df, env.time_col, list(st.dims), self.args[0],
-                op=self._ORDERED[self.name], unit=unit, as_=as_,
-                non_negative="nonNegative" in props, tiebreak=env.tiebreak,
-            )
-            return _SStream(out, st.dims)
-        # stateCount / stateDuration (lambda predicate)
-        from kapacitor_spark.functions.lambdas import compile_lambda
-
-        a = self.args[0]
-        cond = compile_lambda(
-            a.src if isinstance(a, _Lambda) else a, ordered_window=None,
-            time_col=env.time_col, schema=dict(st.df.dtypes),
-            variables=a.vars if isinstance(a, _Lambda) else env.vars,
-        )
-        if self.name == "stateCount":
-            out = _strm.state_count_stream(
-                st.df, env.time_col, list(st.dims), cond=cond,
-                as_=as_ or "state_count", tiebreak=env.tiebreak,
-            )
-        else:
-            out = _strm.state_duration_stream(
-                st.df, env.time_col, list(st.dims), cond=cond, unit=unit,
-                as_=as_ or "state_duration", tiebreak=env.tiebreak,
-            )
-        return _SStream(out, st.dims)
-
-
-class _SJoin:
-    """Pending streaming join() node — materializes onto
-    streaming.join_stream (stream-stream tolerance join with watermark
-    state eviction). Subset: .as(prefixes) / .tolerance(d) (REQUIRED —
-    the join keys on the tolerance bucket) / .delimiter() /
-    .streamName() / .on(dims...) (dim-subset one-to-many join, r11 2nd
-    wave) / .fill('null'|scalar) (FULL OUTER stream-stream join on the
-    window key; unmatched rows emit once both watermarks pass the bucket
-    — tune run_tickscript_stream(join_watermark=...)) / .deleteAll()
-    (recorded no-op: state cleanup is native watermark eviction).
-    Documented divergence (join_stream docstring): >1 row per
-    (bucket, dims) cell per side emits the cell cross product, where the
-    batch join pairs sequentially."""
-
-    def __init__(self, env, left: "_SStream", right: "_SStream"):
-        self.env, self.left, self.right = env, left, right
-        self.props: list[tuple[str, list]] = []
-
-    def prop(self, name, args):
-        self.props.append((name, args))
-        return self
-
-    def prop_map(self):
-        return dict(self.props)
-
-    def finalize(self) -> "_SStream":
-        from kapacitor_spark import streaming as _strm
-
-        props = self.prop_map()
-        # deleteAll: batch mode records it a no-op (no delete messages);
-        # streaming state cleanup is native via watermark eviction —
-        # same recorded no-op here (pipeline/join.go .deleteAll())
+        props = node.prop_map()
         if "tolerance" not in props:
             raise TickError(
                 "streaming join() needs .tolerance(d) — the stream-stream "
                 "join keys on the tolerance bucket; exact equal-timestamp "
                 "pairing runs in the batch replay (run_tickscript)"
             )
+        other = self._resolve(node.args[0]) if len(node.args) == 1 else None
+        if not isinstance(self._no_agg(other, "join"), Pipeline):
+            raise TickError("streaming join() takes exactly one stream node "
+                            "(chain N-way joins pairwise)")
         prefixes = tuple(props.get("as", ("a", "b")))
         delim = props.get("delimiter", ["."])[0]
-        on = None
-        if "on" in props:
-            on = props["on"]
+        on = props.get("on")
+        if on is not None:
             on = list(on[0]) if on and isinstance(on[0], list) else list(on)
-        fill = props["fill"][0] if "fill" in props else None
-        ld, rd = list(self.left.dims), list(self.right.dims)
-        tcol = self.env.time_col
-        out = _strm.join_stream(
-            self.left.df, self.right.df, tcol,
-            [d for d in ld if d in rd],
+        ld, rd, tc = list(p.dims), list(other.dims), p.time_col
+        shared = [d for d in ld if d in rd]
+        out = join_stream(
+            p.df, other.df, tc, shared,
             tolerance=_dur(props["tolerance"][0]),
-            watermark=getattr(self.env, "join_watermark", "1h"),
-            prefixes=prefixes, delimiter=delim,
-            on=on, fill=fill, left_dims=ld, right_dims=rd,
+            watermark=self.join_watermark, prefixes=prefixes,
+            delimiter=delim, on=on, fill=props.get("fill", [None])[0],
+            left_dims=ld, right_dims=rd,
         )
         # batch parity: the joined row's time IS the bucket; per-side
         # original times do not survive (pipeline.py join drops them)
-        out = out.drop(
-            f"{prefixes[0]}{delim}{tcol}", f"{prefixes[1]}{delim}{tcol}"
-        )
+        out = out.drop(f"{prefixes[0]}{delim}{tc}", f"{prefixes[1]}{delim}{tc}")
         if "streamName" in props:
             out = out.withColumn("name", F.lit(props["streamName"][0]))
-        dims = on if on is not None else [d for d in ld if d in rd]
-        out_dims = tuple(dict.fromkeys([*dims, *ld, *rd]))
-        return _SStream(out, out_dims)
+        dims = dict.fromkeys([*(shared if on is None else on), *ld, *rd])
+        return Pipeline(df=out, time_col=tc, dims=tuple(dims),
+                        tiebreak=self.tiebreak)
 
+    def _scale(self, p: Pipeline, scaler, want, **kw) -> Pipeline:
+        """The live decision stream (streaming.autoscale_stream): a
+        per-resource keyed machine. For a STATIC resource name the
+        current replica count prefetches from the client at compile (the
+        reference's lazy Replicas(id) call, made eagerly — executors
+        cannot hold clients); tag-addressed resources seed from their
+        first clamped desired value without emitting. Wire a sink to
+        make the orchestrator calls."""
+        from kapacitor_spark.streaming import autoscale_stream
 
-class _SAutoscale:
-    """Pending streaming k8s/swarm/ec2Autoscale node — materializes onto
-    streaming.autoscale_stream (per-resource keyed decision machine:
-    current replicas + cooldown clocks in state). For a STATIC resource
-    name the current replica count prefetches from the injected client
-    at compile (the reference's lazy Replicas(id) call, made eagerly —
-    executors cannot hold clients); tag-addressed resources seed from
-    their first clamped desired value without emitting (the documented
-    divergence in autoscale_stream). The output is the DECISION stream —
-    wire a sink to make the orchestrator calls."""
-
-    def __init__(self, env, stream: "_SStream", name: str):
-        self.env, self.stream, self.name = env, stream, name
-        self.props: list[tuple[str, list]] = []
-
-    def prop(self, name, args):
-        self.props.append((name, args))
-        return self
-
-    def prop_map(self):
-        return dict(self.props)
-
-    def finalize(self) -> "_SStream":
-        from kapacitor_spark import streaming as _strm
-        from kapacitor_spark.functions.lambdas import compile_lambda
-
-        env, st = self.env, self.stream
-        kind, mk = _AUTOSCALE_KINDS[self.name]
-        props = self.prop_map()
-        cluster = props.get("cluster", [""])[0]
-        clients = env.autoscale_clients
-        client = clients.get((kind, cluster)) or clients.get(kind)
-        if client is None:
-            raise TickError(
-                f"{self.name}(): no {kind} client — pass "
-                f"run_tickscript_stream(autoscale_clients={{{kind!r}: client}})"
-            )
-        scaler = mk(client, props)
-        if "replicas" not in props:
-            raise TickError(f"{self.name}() needs .replicas(lambda: ...)")
-        if "currentField" in props:
-            raise TickError(
-                f"{self.name}().currentField(): state-dependent replicas "
-                "lambdas need the Python API (autoscale_stream + a custom "
-                "want column)"
-            )
-        r = props["replicas"][0]
-        want = compile_lambda(
-            r.src if isinstance(r, _Lambda) else r, ordered_window=None,
-            time_col=env.time_col, schema=dict(st.df.dtypes),
-            variables=r.vars if isinstance(r, _Lambda) else env.vars,
-        )
         initial = None
         if scaler._name is not None:
             initial = {scaler._name: int(scaler.replicas(scaler._name))}
-        out = _strm.autoscale_stream(
-            st.df, env.time_col, scaler, want,
-            min=int(props.get("min", [1])[0]),
-            max=int(props.get("max", [0])[0]),
-            increase_cooldown=_dur(props.get("increaseCooldown", [0.0])[0]),
-            decrease_cooldown=_dur(props.get("decreaseCooldown", [0.0])[0]),
-            initial=initial, tiebreak=env.tiebreak,
+        out = autoscale_stream(
+            p.df, p.time_col, scaler, want, initial=initial,
+            tiebreak=self.tiebreak, **kw,
         )
-        return _SStream(out, ("resource",))
+        return Pipeline(df=out, time_col=p.time_col, dims=("resource",))
 
+    def _mk_alert(self, p: Pipeline, node: _Node) -> Pipeline:
+        """Live alert(). With only crit/warn/info lambdas: a stateless
+        level CASE on the rows — a live levels dashboard. Any
+        _STATEFUL_ALERT prop runs the keyed alert machine
+        (streaming.alert_stream ← streaming/state.py AlertStage, the SAME
+        stage the batch replay runs, so stream == batch on identical
+        input; the reference's canonical live task,
+        TestStream_AlertStateChangesOnly). After a window aggregation the
+        stateful machine fuses with the window (_fused_alert)."""
+        from kapacitor_spark.streaming import alert_stream
 
-class _SWindow:
-    """window() node: period/every durations (time windows) or
-    periodCount/everyCount (count windows) pending the aggregation."""
-
-    def __init__(self, parent: "_SStream"):
-        self.parent = parent
-        self.period = None
-        self.every = None
-        self.period_count = None
-        self.every_count = None
-        self.fill_period = False
-
-
-class _SAgg:
-    """Aggregated streaming node; .as() renames the output column.
-
-    ``prov`` (window-aggregation provenance — raw upstream stream +
-    window/agg parameters) enables the FUSED re-compile when a stateful
-    alert follows: Spark forbids a keyed-state operator after a streaming
-    aggregation, so alert().stateChangesOnly() on a windowed stream
-    re-plans window+agg+alert as ONE keyed operator
-    (streaming.window_alert_stream for time windows,
-    window_count_alert_stream for count windows). Nodes without
-    provenance (stats/deadman tickers, flatten/combine) keep raising
-    toward batch."""
-
-    def __init__(self, df, time_col, dims=(), prov=None):
-        self.df = df
-        self.time_col = time_col
-        self.dims = tuple(dims)
-        self.prov = prov
-
-
-class _SAlert:
-    """Streaming alert. With only crit/warn/info lambdas: a stateless
-    level CASE on the (windowed) rows — a live levels dashboard. Any
-    stateful knob (.stateChangesOnly([maxInterval]) / .noRecoveries() /
-    .flapping(low,high) / .history(n) / level resets / .durationField())
-    switches to the keyed alert state machine (streaming.alert_stream ←
-    streaming/state.py AlertStage — the SAME stage the batch replay runs,
-    so stream == batch on identical input; the reference's canonical live
-    task, TestStream_AlertStateChangesOnly in the reference's
-    integrations/streamer_test.go). Props parse with the
-    batch compile's _alert_props; the emitted rows go through the same
-    Pipeline._alert_augment and _deliver_alerts."""
-
-    # .durationField() is stateful too: the episode start persists in
-    # keyed state
-    _STATEFUL = {
-        "critReset", "warnReset", "infoReset", "stateChangesOnly",
-        "noRecoveries", "flapping", "history", "durationField",
-    }
-
-    def __init__(self, parent, env):
-        if isinstance(parent, _SAgg):
-            self.df, self.dims, self.windowed = parent.df, parent.dims, True
-            self.agg_prov = parent.prov
-        else:
-            self.agg_prov = None
-            st = env._stream_of(parent)
-            self.df, self.dims, self.windowed = st.df, st.dims, False
-        self.env = env
-        self.props: list[tuple[str, list]] = []
-
-    def prop(self, name, args):
-        self.props.append((name, list(args)))
-        return self
-
-    def finalize(self):
         cur = None
-        for n, _a in self.props:
+        for n, _a in node.props:
             if n in _ALERT_HANDLER_KINDS:
                 cur = n
             elif n in _ALERT_LEVEL_PROPS:
@@ -2356,475 +2281,108 @@ class _SAlert:
                     f"streaming alert() does not support .{n}() — "
                     "run the batch replay (run_tickscript)"
                 )
-        stateful = any(n in self._STATEFUL for n, _a in self.props)
-        if stateful and self.windowed:
-            return self._finalize_fused()
+        stateful = any(n in self._STATEFUL_ALERT for n, _a in node.props)
+        if stateful and isinstance(p, _Aggregated):
+            return self._fused_alert(p, node)
+        a = _alert_props(node.props, lambda v: self._lam(p, v))
+        m = a.machine
+        if stateful:
+            out = alert_stream(
+                p.df, p.time_col, list(p.dims), tiebreak=self.tiebreak, **m
+            )
+        else:
+            lv = p._level_index(m.get("crit"), m.get("warn"), m.get("info"))
+            out = p.df.withColumn("level", _level_label(lv))
+        return self._deliver(p, out, a, stateful)
+
+    def _fused_alert(self, p: _Aggregated, node: _Node) -> Pipeline:
+        """Stateful alert AFTER a windowed aggregation: re-plan window +
+        agg + alert as ONE keyed state operator from the pending
+        aggregation. Spark forbids a second stateful operator after a
+        streaming aggregation — the fused operator is instead the
+        reference's own execution shape (per-group window buffer feeding
+        the in-process alert machine, reference window.go:149-260 +
+        alert.go:989-1290; canonical task: TestStream_Alert). Ungrouped
+        windows run as one synthetic group."""
         from kapacitor_spark import streaming as _strm
-        from kapacitor_spark.functions.lambdas import compile_lambda
 
-        env = self.env
-
-        def lam(v):
-            return compile_lambda(
-                v.src if isinstance(v, _Lambda) else v, ordered_window=None,
-                time_col=env.time_col, schema=dict(self.df.dtypes),
-                variables=env.vars,
-            )
-
-        a = _alert_props(self.props, lam)
-        if not stateful:
-            m = a.machine
-            lv = Pipeline.from_df(self.df)._level_index(
-                m.get("crit"), m.get("warn"), m.get("info")
-            )
-            return self._deliver(self.df.withColumn("level", _level_label(lv)), a)
-        return self._deliver(_strm.alert_stream(
-            self.df, env.time_col, list(self.dims), tiebreak=env.tiebreak,
-            **a.machine,
-        ), a)
-
-    def _finalize_fused(self):
-        """Stateful alert AFTER a windowed aggregation: re-plan window+
-        agg+alert as ONE keyed state operator (streaming.
-        window_alert_stream) from the _SAgg provenance. Spark forbids a
-        second stateful operator after a streaming aggregation — the
-        fused operator is instead the reference's own execution shape
-        (per-group window buffer feeding the in-process alert machine,
-        /root/reference/window.go:149-260 + alert.go:989-1290; canonical
-        task: integrations/streamer_test.go TestStream_Alert)."""
-        prov = self.agg_prov
-        if prov is None:
+        n = p.fuse
+        if n is None:
             raise TickError(
                 "streaming alert: stateful knobs after stats / deadman / "
                 "flatten / combine would chain two stateful streaming "
                 "operators — alert on the raw stream, or run the batch "
                 "replay (run_tickscript)"
             )
-        # ungrouped windows (empty dims) run as ONE synthetic group —
-        # serial at the fused stage, like the reference's ungrouped
-        # stream task (r11 3rd wave; the operators handle dims=())
-        from kapacitor_spark import streaming as _strm
-        from kapacitor_spark.functions.lambdas import compile_lambda_pandas
 
-        env = self.env
-        a = _alert_props(self.props, lambda v: compile_lambda_pandas(
-            v.src if isinstance(v, _Lambda) else v, time_col=env.time_col,
-            variables=env.vars,
-        ))
-        if prov.get("kind") == "count":
-            # count-window sibling (r11 3rd wave): the keyed ring +
-            # alert machine fuse the same way
+        if set(n.props) - {"as"}:
+            raise TickError(
+                f"streaming alert after |{n.name}(): the fused window alert "
+                "takes only .as() on the aggregate — run the batch replay "
+                "(run_tickscript)"
+            )
+
+        def lam(v):
+            body = self._stateless(v).src if isinstance(v, _Lambda) else v
+            return compile_lambda_pandas(
+                body, time_col=p.time_col, variables=self.vars
+            )
+
+        a = _alert_props(node.props, lam)
+        src, win = n.src, n.src.window
+        kw = dict(agg=n.name, tiebreak=self.tiebreak, **a.machine)
+        out_col = n.props.get("as", [None])[0] or n.name
+        if isinstance(win, CountWindowSpec):
             out = _strm.window_count_alert_stream(
-                prov["src_df"], env.time_col, list(prov["dims"]),
-                prov["field"], prov["period_count"], prov["every_count"],
-                agg=prov["agg"], as_=prov["out_col"],
-                tiebreak=env.tiebreak, full_only=prov["full_only"],
-                **a.machine,
+                src.df, src.time_col, list(src.dims), n.args[0], win.period,
+                win.every, as_=out_col, full_only=win.fill_period, **kw,
             )
         else:
             out = _strm.window_alert_stream(
-                prov["src_df"], env.time_col, list(prov["dims"]),
-                period=prov["period"], every=prov["every"],
-                field=prov["field"], agg=prov["agg"], out_col=prov["out_col"],
-                tiebreak=env.tiebreak, **a.machine,
+                src.df, src.time_col, list(src.dims), period=win.period,
+                every=win.every, field=n.args[0], out_col=out_col, **kw,
             )
-        return self._deliver(out, a)
+        return self._deliver(p, out, a, True)
 
-    def _deliver(self, out, a: _AlertProps):
+    def _deliver(
+        self, src: Pipeline, out: DataFrame, a: _AlertProps, keyed: bool
+    ) -> Pipeline:
         """The batch compile's augment and delivery on the LIVE alert
-        rows: Pipeline._alert_augment, then _deliver_alerts per
-        micro-batch as a foreachBatch function attached to the output
-        DataFrame (``df._ks_alert_handler_fn``; run_tickscript_stream
-        surfaces it as ``outputs.alert_handlers[name]``). Delivery is
-        at-least-once under micro-batch retries — the reference's own
-        handler semantics (alert.go handlers re-fire on replayed
-        events). Unconfigured service kinds raise AT COMPILE, not
-        mid-stream."""
-        env = self.env
-        out = Pipeline.from_df(
-            out, time_col=env.time_col, dims=self.dims
-        )._alert_augment(**a.augment).df
+        rows ``out`` of ``src``: Pipeline._alert_augment, then
+        _deliver_alerts per micro-batch as a foreachBatch function
+        attached to the output DataFrame (``df._ks_alert_handler_fn``;
+        run_tickscript_stream surfaces it as
+        ``outputs.alert_handlers[name]`` and raises if no httpOut
+        carries it). Delivery is at-least-once under micro-batch
+        retries — the reference's own handler semantics (alert.go
+        handlers re-fire on replayed events). Unconfigured service
+        kinds raise AT COMPILE, not mid-stream. A ``keyed`` alert, or
+        one behind a streaming aggregation, returns _Aggregated."""
+        p = Pipeline(
+            df=out, time_col=self.time_col, dims=tuple(src.dims),
+            tiebreak=self.tiebreak,
+        )._alert_augment(**a.augment)
+        if keyed or isinstance(src, _Aggregated):
+            p = _Aggregated(p.df, p.time_col, p.dims)
         if not a.specs and not a.sinks:
-            return out
-        services = env.alert_services or {}
+            return p
+        services = self.alert_services or {}
         for kind, _opts in a.specs:
-            if not dict(services.get(kind) or {}):
+            if not services.get(kind):
                 raise TickError(
                     f"alert handler .{kind}() used but no config passed "
                     f"via run_tickscript_stream(alert_services="
                     f"{{{kind!r}: {{...}}}})"
                 )
-        dims = [d for d in self.dims if d != "name"]
+        hdims = [d for d in src.dims if d != "name"]
 
         def handler_fn(batch_df, _batch_id):
             if not batch_df.isEmpty():
-                _deliver_alerts(batch_df, dims, env.time_col, services, a)
+                _deliver_alerts(batch_df, hdims, self.time_col, services, a)
 
-        out._ks_alert_handler_fn = handler_fn
-        return out
-
-
-class _StreamEnv:
-    """Parser env for the streaming subset (same surface as _Env /
-    _GraphEnv: chain / prop / _materialize / vars)."""
-
-    # streaming-compatible InfluxQL aggregations: every value is a
-    # callable Column->Column so composite shapes (spread) and exact
-    # sort-based aggregates (median — an ObjectHashAggregate, supported
-    # in streaming aggregation state) express directly
-    AGGS = {
-        "mean": F.avg, "sum": F.sum, "count": F.count,
-        "min": F.min, "max": F.max,
-        "stddev": F.stddev_samp,
-        "median": F.median,
-        "spread": lambda c: F.max(c) - F.min(c),
-    }
-    # event-time selectors (first/last = value at the window's earliest/
-    # latest point) dispatch below — they need the time column
-
-    def __init__(self, sources, time_col, dims, outputs, tiebreak=(),
-                 autoscale_clients=None, flatten_values=None,
-                 join_watermark="1h", alert_services=None):
-        self.sources = sources
-        self.time_col = time_col
-        self.default_dims = tuple(dims)
-        self.outputs = outputs
-        self.tiebreak = tuple(tiebreak)
-        self.autoscale_clients = autoscale_clients or {}
-        self.flatten_values = list(flatten_values) if flatten_values else None
-        self.join_watermark = join_watermark
-        self.alert_services = alert_services or {}
-        self.vars: dict = {}
-
-    # ------------------------------------------------------------- #
-    def _resolve_df(self, frm: _SFrom):
-        src = self.sources
-        if isinstance(src, dict):
-            if frm.measurement is None:
-                if len(src) != 1:
-                    raise TickError("stream|from() needs .measurement() "
-                                    "with multiple sources")
-                df = next(iter(src.values()))
-            else:
-                try:
-                    df = src[frm.measurement]
-                except KeyError:
-                    raise TickError(f"no stream source for measurement "
-                                    f"{frm.measurement!r}")
-        elif callable(getattr(src, "__call__", None)) and not hasattr(src, "schema"):
-            df = src(frm.measurement)
-        else:
-            df = src
-        if frm.where_src is not None:
-            from kapacitor_spark.functions.lambdas import compile_lambda
-
-            df = df.filter(
-                compile_lambda(
-                    frm.where_src, ordered_window=None,
-                    time_col=self.time_col, schema=dict(df.dtypes),
-                    variables=self.vars,
-                )
-            )
-        return df
-
-    @staticmethod
-    def _interval(d) -> str:
-        secs = _dur(d)
-        if not isinstance(secs, (int, float)):
-            raise TickError(f"expected duration, got {d!r}")
-        us = round(float(secs) * 1_000_000)
-        return f"{us} microseconds"
-
-    # ------------------------------------------------------------- #
-    _PEND_NAMES = (
-        "eval", "default", "delete", "barrier", "sideload", "flatten",
-        "combine",
-        "derivative", "difference", "elapsed", "cumulativeSum",
-        "stateCount", "stateDuration", "movingAverage",
-    )
-
-    def _stream_of(self, node) -> "_SStream":
-        if isinstance(node, _SStream):
-            return node
-        if isinstance(node, (_SPend, _SJoin, _SAutoscale)):
-            return node.finalize()
-        if isinstance(node, _SFrom):
-            return _SStream(
-                self._resolve_df(node), node.dims or self.default_dims
-            )
-        raise TickError("streaming compile: node has no stream upstream")
-
-    def chain(self, node, name, args):
-        if isinstance(node, (_SPend, _SJoin, _SAutoscale)):
-            node = node.finalize()
-        if name == "from":
-            if not isinstance(node, _Source) or node.kind != "stream":
-                raise TickError("streaming compile: |from() must chain "
-                                "off `stream`")
-            return _SFrom(self)
-        if name == "window":
-            if not isinstance(node, (_SFrom, _SStream)):
-                raise TickError("streaming compile: |window() must follow "
-                                "stream|from() or a point transform")
-            return _SWindow(self._stream_of(node))
-        if name == "where":
-            if isinstance(node, _SFrom):
-                node.where_src = (
-                    args[0].src if isinstance(args[0], _Lambda) else args[0]
-                )
-                return node
-            if isinstance(node, _SStream):
-                from kapacitor_spark.functions.lambdas import compile_lambda
-
-                cond = compile_lambda(
-                    args[0].src if isinstance(args[0], _Lambda) else args[0],
-                    ordered_window=None, time_col=self.time_col,
-                    schema=dict(node.df.dtypes), variables=self.vars,
-                )
-                return _SStream(node.df.filter(cond), node.dims)
-        if name == "groupBy" and isinstance(node, _SFrom):
-            node.dims = tuple(args)
-            return node
-        if name in self._PEND_NAMES and isinstance(node, (_SFrom, _SStream)):
-            return _SPend(self, name, args, self._stream_of(node))
-        if name == "sample" and isinstance(node, (_SFrom, _SStream)):
-            a = args[0]
-            st = self._stream_of(node)
-            if isinstance(a, (int, float)) and not isinstance(a, _Duration):
-                # every-Nth-point: the per-group counter is keyed state
-                # (/root/reference/sample.go:97-110) — r11 2nd wave
-                from kapacitor_spark import streaming as _strm
-
-                out = _strm.sample_count_stream(
-                    st.df, self.time_col, list(st.dims), int(a),
-                    tiebreak=self.tiebreak,
-                )
-                return _SStream(out, st.dims)
-            p = Pipeline.from_df(st.df, time_col=self.time_col, dims=st.dims)
-            return _SStream(p.sample(every=_dur(a)).df, st.dims)
-        if name == "shift" and isinstance(node, (_SFrom, _SStream)):
-            from kapacitor_spark.durations import to_interval
-
-            st = self._stream_of(node)
-            shifted = st.df.withColumn(
-                self.time_col,
-                F.col(self.time_col)
-                + F.expr(f"INTERVAL {to_interval(_dur(args[0]))}"),
-            )
-            return _SStream(shifted, st.dims)
-        if name == "join" and isinstance(node, (_SFrom, _SStream)):
-            if len(args) != 1 or not isinstance(args[0], (_SFrom, _SStream, _SPend)):
-                raise TickError("streaming join() takes exactly one "
-                                "stream node (chain N-way joins pairwise)")
-            return _SJoin(
-                self, self._stream_of(node), self._stream_of(args[0])
-            )
-        if name == "changeDetect" and isinstance(node, (_SFrom, _SStream)):
-            from kapacitor_spark import streaming as _strm
-
-            st = self._stream_of(node)
-            out = _strm.change_detect_stream(
-                st.df, self.time_col, list(st.dims), list(args),
-                tiebreak=self.tiebreak,
-            )
-            return _SStream(out, st.dims)
-        if name in ("stats", "deadman") and isinstance(node, (_SFrom, _SStream)):
-            # wall-clock stats()/deadman() (/root/reference/stats.go:
-            # "Stats are REAL-TIME not data-time") — the ProcessingTime-
-            # Timeout tickers; a fully-silent group still fires CRITICAL.
-            # Non-replayable by construction: availableNow replays should
-            # use the batch compile (Pipeline.stats/deadman).
-            from kapacitor_spark import streaming as _strm
-
-            st = self._stream_of(node)
-            if name == "stats":
-                out = _strm.stats_stream(
-                    st.df, self.time_col, list(st.dims), interval=_dur(args[0])
-                )
-            else:
-                out = _strm.deadman_stream(
-                    st.df, self.time_col, list(st.dims),
-                    interval=_dur(args[1]), threshold=float(args[0]),
-                )
-            return _SAgg(out, self.time_col, st.dims)
-        if name in _AUTOSCALE_KINDS:
-            if isinstance(node, _SAgg):
-                raise TickError(
-                    f"streaming {name}() after a windowed aggregation "
-                    "would chain two stateful streaming operators — "
-                    "autoscale on the raw stream (the replicas lambda "
-                    "reads point fields) or run the batch replay"
-                )
-            if not isinstance(node, (_SFrom, _SStream)):
-                raise TickError(f"streaming {name}() must follow the stream")
-            return _SAutoscale(self, self._stream_of(node), name)
-        if name == "union" and isinstance(node, (_SFrom, _SStream)):
-            # union emits in global time order in the reference
-            # (union.go:104-166) — declarative here: event-time semantics
-            # order everything downstream, exactly like the batch compile
-            st = self._stream_of(node)
-            out = st.df
-            for a in args:
-                if not isinstance(a, (_SFrom, _SStream, _SPend)):
-                    raise TickError("streaming union() takes stream nodes")
-                out = out.unionByName(self._stream_of(a).df)
-            return _SStream(out, st.dims)
-        if name == "log" and isinstance(node, (_SFrom, _SStream, _SAgg, _SAlert)):
-            return node  # parity with the batch compile: log() passes through
-        if name in self.AGGS or name in ("first", "last"):
-            if not isinstance(node, _SWindow):
-                raise TickError(f"streaming compile: |{name}() must follow "
-                                "|window() (un-windowed streaming "
-                                "aggregation has no emission point)")
-            st = node.parent
-            if node.period_count is not None:
-                # count-based window -> the keyed ring-buffer operator
-                # (/root/reference/window.go:360-470)
-                if name not in ("mean", "sum", "count", "min", "max"):
-                    raise TickError(
-                        f"streaming count windows support mean/sum/count/"
-                        f"min/max, not |{name}()"
-                    )
-                from kapacitor_spark import streaming as _strm
-
-                out = _strm.window_count_stream(
-                    st.df, self.time_col, list(st.dims), args[0],
-                    int(node.period_count), int(node.every_count or 1),
-                    agg=name, as_=f"__{name}", tiebreak=self.tiebreak,
-                    full_only=node.fill_period,
-                )
-                return _SAgg(
-                    out, self.time_col, st.dims,
-                    prov={
-                        "kind": "count", "src_df": st.df, "dims": st.dims,
-                        "period_count": int(node.period_count),
-                        "every_count": int(node.every_count or 1),
-                        "agg": name, "field": args[0],
-                        "out_col": f"__{name}",
-                        "full_only": node.fill_period,
-                    },
-                )
-            if node.fill_period:
-                raise TickError(
-                    "streaming window().fillPeriod() is supported for "
-                    "count windows only — time-window fillPeriod runs in "
-                    "the batch replay"
-                )
-            period = node.period if node.period is not None else node.every
-            every = node.every if node.every is not None else node.period
-            if period is None:
-                raise TickError("streaming compile: window() needs "
-                                ".period()/.every() or .periodCount()")
-            win = F.window(
-                F.col(self.time_col),
-                self._interval(period), self._interval(every),
-            )
-            field = args[0]
-            if name == "first":
-                fn = lambda c: F.min_by(c, F.col(self.time_col))  # noqa: E731
-            elif name == "last":
-                fn = lambda c: F.max_by(c, F.col(self.time_col))  # noqa: E731
-            else:
-                fn = self.AGGS[name]
-            out = (
-                st.df.groupBy(win, *[F.col(d) for d in st.dims])
-                .agg(fn(F.col(field)).alias(f"__{name}"))
-                .select(
-                    F.col("window.start").alias(self.time_col),
-                    *[F.col(d) for d in st.dims],
-                    F.col(f"__{name}"),
-                )
-            )
-            return _SAgg(
-                out, self.time_col, st.dims,
-                prov={
-                    "src_df": st.df, "dims": st.dims,
-                    "period": _dur(period), "every": _dur(every),
-                    "agg": name, "field": field, "out_col": f"__{name}",
-                },
-            )
-        if name == "alert":
-            if not isinstance(node, (_SAgg, _SFrom, _SStream)):
-                raise TickError("streaming compile: |alert() must follow "
-                                "an aggregation, a transform, or "
-                                "stream|from()")
-            return _SAlert(node, self)
-        if name == "httpOut":
-            if isinstance(node, _SAlert):
-                self.outputs[args[0]] = node.finalize()
-                return node
-            if isinstance(node, _SAgg):
-                self.outputs[args[0]] = node.df
-                return node
-            if isinstance(node, (_SFrom, _SStream)):
-                self.outputs[args[0]] = self._stream_of(node).df
-                return node
-            raise TickError("streaming compile: |httpOut() needs a "
-                            "materialized node")
-        raise TickError(
-            f"|{name}() is not in the streaming compile subset (from/"
-            "where/groupBy/eval/default/delete/shift/sample/sideload/"
-            "flatten/barrier/union/join/log/derivative/difference/elapsed/"
-            "cumulativeSum/stateCount/stateDuration/changeDetect/"
-            "movingAverage/stats/deadman/autoscale/window/"
-            "mean/sum/count/min/max/alert/httpOut) "
-            "— run it as a batch replay task (run_tickscript) or wire "
-            "the stateful operator from kapacitor_spark.streaming "
-            "directly"
-        )
-
-    def prop(self, node, name, args):
-        if isinstance(node, (_SPend, _SJoin, _SAutoscale, _SAlert)):
-            return node.prop(name, args)
-        if isinstance(node, _SFrom):
-            if name == "measurement":
-                node.measurement = args[0]
-                return node
-            if name == "where":
-                node.where_src = (
-                    args[0].src if isinstance(args[0], _Lambda) else args[0]
-                )
-                return node
-            if name == "groupBy":
-                node.dims = tuple(args)
-                return node
-            raise TickError(f"streaming from() does not support .{name}()")
-        if isinstance(node, _SStream):
-            if name == "rename":
-                # union().rename(m) — the output measurement name
-                return _SStream(
-                    node.df.withColumn("name", F.lit(args[0])), node.dims
-                )
-            raise TickError(f"streaming node does not support .{name}()")
-        if isinstance(node, _SWindow):
-            if name == "period":
-                node.period = args[0]
-                return node
-            if name == "every":
-                node.every = args[0]
-                return node
-            if name == "periodCount":
-                node.period_count = int(args[0])
-                return node
-            if name == "everyCount":
-                node.every_count = int(args[0])
-                return node
-            if name == "fillPeriod":
-                node.fill_period = True
-                return node
-            raise TickError(f"streaming window() does not support .{name}()")
-        if isinstance(node, _SAgg):
-            if name == "as":
-                cols = node.df.columns
-                node.df = node.df.withColumnRenamed(cols[-1], args[0])
-                if node.prov is not None:
-                    node.prov["out_col"] = args[0]
-                return node
-            raise TickError(f"streaming aggregation does not support .{name}()")
-        raise TickError(f"unsupported property .{name}() in streaming compile")
-
-    def _materialize(self, node):
-        return node
+        p.df._ks_alert_handler_fn = handler_fn
+        self.handler_fns.append(handler_fn)
+        return p
 
 
 def run_tickscript_stream(
@@ -2844,21 +2402,16 @@ def run_tickscript_stream(
     deterministic replay with kapacitor_spark.streaming.run_available_now,
     or attach a real sink for continuous execution).
 
-    ``sources``: streaming DataFrame | dict measurement→streaming DF |
-    callable(measurement)→streaming DF. Supports the streaming-compatible
-    language subset — see the module comment above _StreamEnv: from/
-    where/groupBy, eval/default/delete/shift, barrier (→ watermark:
-    late-drop + state retention bound), derivative/difference/elapsed/
-    cumulativeSum/stateCount/stateDuration, window + mean/sum/count/min/
-    max, alert incl. stateChangesOnly([maxInterval])/noRecoveries/
-    flapping/history and level resets (keyed state machine), httpOut."""
-    outputs: dict[str, DataFrame] = {}
-    env = _StreamEnv(sources, time_col, dims, outputs, tiebreak,
-                     autoscale_clients, flatten_values, join_watermark,
-                     alert_services)
-    env.preset_vars = _coerce_template_vars(template_vars or {})
-    toks, src = _tokenize(script)
-    _P(toks, src, env).run()
+    ``sources``: as for run_tickscript, with streaming DataFrames. The
+    chain methods it compiles are ``_StreamEnv.SUPPORTED`` (see the
+    comment above _StreamEnv); any other raises TickError naming the
+    batch alternative."""
+    env = _StreamEnv(
+        sources, time_col, dims, tiebreak, {},
+        alert_services=alert_services, autoscale_clients=autoscale_clients,
+        flatten_values=flatten_values, join_watermark=join_watermark,
+    )
+    outputs = _run(env, script, template_vars)
     if not outputs:
         raise TickError("streaming compile: script has no httpOut()")
 
@@ -2876,6 +2429,12 @@ def run_tickscript_stream(
         k: fn for k, v in outputs.items()
         if (fn := getattr(v, "_ks_alert_handler_fn", None)) is not None
     }
+    if set(env.handler_fns) - set(outs.alert_handlers.values()):
+        raise TickError(
+            "streaming compile: an alert() with handlers or sinks delivers "
+            "as the foreachBatch of its httpOut() — follow it only with "
+            "|log() and |httpOut(), or run the batch replay (run_tickscript)"
+        )
     return outs
 
 
@@ -2899,24 +2458,13 @@ class _GraphEnv:
     but builds a DAG instead of executing — so ``task_dot`` renders a
     script's graph without needing sources, Spark, or service configs."""
 
-    _CHAIN_NAMES: set | None = None
-
-    @classmethod
-    def _valid_chain(cls) -> set:
-        """Every chain-node name the EXECUTING env can dispatch — AGGS +
-        BUILDERS + the _mk_* builder methods + _apply_chain's inline
-        cases. Derived from _Env itself so define-time validation (the
-        task-store API validates scripts without sources or Spark, like
-        the reference's define path) can never drift from execution."""
-        if cls._CHAIN_NAMES is None:
-            names = set(_Env.AGGS) | set(_Env.BUILDERS)
-            names |= {m[4:] for m in dir(_Env) if m.startswith("_mk_")}
-            names |= {
-                "where", "shift", "sample", "union", "httpOut", "log",
-                "trickle", "stats", "deadman", "from", "query", "queryFlux",
-            }
-            cls._CHAIN_NAMES = names
-        return cls._CHAIN_NAMES
+    @staticmethod
+    def _valid_chain() -> set:
+        """Every chain-node name the EXECUTING env can dispatch. Derived
+        from _Env itself so define-time validation (the task-store API
+        validates scripts without sources or Spark, like the reference's
+        define path) can never drift from execution."""
+        return _Env.AGGS | _Env.BUILDERS | _Env.CHAIN
 
     def __init__(self):
         self.vars: dict = {}

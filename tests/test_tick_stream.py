@@ -1930,3 +1930,330 @@ stream
     assert souts["a"].isStreaming
     plan = souts["a"]._jdf.queryExecution().analyzed().toString()
     assert plan.count("FlatMapGroupsInPandasWithState") == 1
+
+
+@pytest.mark.parametrize(
+    "wheres",
+    [
+        # both predicates as from() props
+        """.where(lambda: "value" > 50)
+        .where(lambda: "host" == 'h1')""",
+        # a from() prop, then a chain node
+        """.where(lambda: "value" > 50)
+    |where(lambda: "host" == 'h1')""",
+        # two chain nodes
+        """
+    |where(lambda: "value" > 50)
+    |where(lambda: "host" == 'h1')""",
+    ],
+    ids=["props", "prop_then_node", "nodes"],
+)
+def test_chained_where_stream_equals_batch(
+    spark, fixture_df, stream_src, tmp_path, wheres
+):
+    """Every where() applies: chained predicates AND together on both
+    compiles, however they are spelled."""
+    script = f"""
+stream
+    |from()
+        .measurement('cpu')
+        {wheres}
+    |httpOut('w')
+"""
+    s, b = _run_both(
+        spark, script, "w", fixture_df, stream_src, tmp_path,
+        ["id", "host", "value"],
+    )
+    assert s == b
+    assert [r[0] for r in s] == [3, 5, 7, 11, 13, 15]
+
+
+@pytest.mark.parametrize(
+    "head,tail,cols",
+    [
+        (""".database('telegraf')
+        .retentionPolicy('autogen')
+        .groupBy('host')""",
+         """|stateCount(lambda: "value" > 50)
+        .as('n')""", ["time", "host", "n"]),
+        (""".truncate(2s)
+        .groupBy('host')""", "|log()", ["id", "time", "host", "value"]),
+        (".groupBy(*)", """|stateCount(lambda: "value" > 50)
+        .as('n')""", ["time", "host", "n"]),
+        (".groupBy(['host'])", """|stateCount(lambda: "value" > 50)
+        .as('n')""", ["time", "host", "n"]),
+        ("", """|eval(lambda: "value" * 2.0)
+        .as('v2')
+        .keep()
+    |groupBy('host')
+    |stateCount(lambda: "v2" > 100)
+        .as('n')""", ["time", "host", "n"]),
+    ],
+    ids=["database_rp", "truncate", "group_by_star", "group_by_list",
+         "eval_then_group_by"],
+)
+def test_from_and_group_by_forms_stream_equals_batch(
+    spark, fixture_df, stream_src, tmp_path, head, tail, cols
+):
+    """from() routing props, truncate, groupBy(*) / groupBy([list]) and a
+    groupBy node after eval compile through the shared front end."""
+    script = f"""
+stream
+    |from()
+        .measurement('cpu')
+        {head}
+    {tail}
+    |httpOut('o')
+"""
+    s, b = _run_both(spark, script, "o", fixture_df, stream_src, tmp_path, cols)
+    assert s == b and len(s) == 16
+
+
+def test_stateful_where_lambda_batch_and_live(spark, fixture_df, stream_src):
+    """A stateful sigma() in a TICK where runs on the batch compile as
+    Pipeline.where does (running window first, then the filter); the
+    live compile refuses stateful lambdas in where and eval at compile,
+    pointing at the batch replay."""
+    from kapacitor_spark.pipeline import Pipeline
+    from kapacitor_spark.tick import TickError, run_tickscript, run_tickscript_stream
+
+    lam = 'lambda: sigma("value") > 1.0'
+    exp = sorted(
+        r["id"] for r in Pipeline.from_df(fixture_df, dims=("host",))
+        .where(lam).df.collect()
+    )
+    assert 0 < len(exp) < 16
+    head = """
+    |from()
+        .measurement('cpu')
+        .groupBy('host')"""
+    for form in (f"\n        .where({lam})", f"\n    |where({lam})"):
+        outs = run_tickscript(
+            f"batch{head}{form}\n    |httpOut('w')\n",
+            sources={"cpu": fixture_df},
+        )
+        assert sorted(r["id"] for r in outs["w"].collect()) == exp
+    for form in (f"|where({lam})", f"|eval({lam}).as('s')"):
+        with pytest.raises(TickError, match="batch replay"):
+            run_tickscript_stream(
+                f"stream{head}\n    {form}\n    |httpOut('w')\n",
+                sources={"cpu": _stream_df(spark, stream_src)},
+                time_col="time",
+            )
+
+
+# minimal arguments for every chain method the front end dispatches
+_SWEEP_CALLS = {
+    "from": "from()",
+    "window": "window().period(4s)",
+    "eval": "eval(lambda: \"value\" * 2.0).as('v')",
+    "default": "default().field('x', 1.0)",
+    "delete": "delete().field('value')",
+    "alert": "alert().crit(lambda: \"value\" > 90)",
+    "join": "join(m).as('a', 'b').tolerance(1s)",
+    "query": "query('SELECT mean(\"value\") FROM \"cpu\"').period(4s)",
+    "queryFlux": "queryFlux('from(bucket: \"b\")').every(1s)",
+    "groupBy": "groupBy('host')",
+    "flatten": "flatten().on('host')",
+    "combine": "combine(lambda: \"value\" > 50, lambda: \"value\" <= 50)"
+               ".as('hi', 'lo').tolerance(1s)",
+    "kapacitorLoopback": "kapacitorLoopback()",
+    "sideload": "sideload()",
+    "barrier": "barrier().period(1s)",
+    "httpPost": "httpPost('http://127.0.0.1:1')",
+    "influxDBOut": "influxDBOut()",
+    "k8sAutoscale": "k8sAutoscale().replicas(lambda: 2)",
+    "swarmAutoscale": "swarmAutoscale().replicas(lambda: 2)",
+    "ec2Autoscale": "ec2Autoscale().replicas(lambda: 2)",
+    "percentile": "percentile('value', 90.0)",
+    "top": "top(2, 'value')",
+    "bottom": "bottom(2, 'value')",
+    "movingAverage": "movingAverage('value', 3)",
+    "elapsed": "elapsed('value', 1s)",
+    "stateCount": "stateCount(lambda: \"value\" > 50)",
+    "stateDuration": "stateDuration(lambda: \"value\" > 50)",
+    "holtWinters": "holtWinters('value', 2, 0, 1s)",
+    "holtWintersWithFit": "holtWintersWithFit('value', 2, 0, 1s)",
+    "where": "where(lambda: \"value\" > 50)",
+    "shift": "shift(1s)",
+    "sample": "sample(2)",
+    "union": "union(m)",
+    "httpOut": "httpOut('y')",
+    "log": "log()",
+    "trickle": "trickle()",
+    "stats": "stats(1s)",
+    "deadman": "deadman(0.0, 1s)",
+}
+
+
+def test_every_chain_method_compiles_live_or_raises_tick_error(
+    spark, stream_src
+):
+    """The live compile either compiles each chain method the front end
+    dispatches or raises a TickError — never a KeyError,
+    AttributeError or Py4J error. Names outside _StreamEnv.SUPPORTED
+    raise the subset error, which lists SUPPORTED."""
+    from kapacitor_spark.tick import (
+        TickError, _Env, _StreamEnv, run_tickscript_stream,
+    )
+
+    names = _Env.BUILDERS | _Env.AGGS | _Env.CHAIN
+    assert names <= set(_SWEEP_CALLS) | {
+        "count", "sum", "mean", "median", "mode", "spread", "stddev", "min",
+        "max", "first", "last", "distinct", "derivative", "difference",
+        "cumulativeSum", "changeDetect",
+    }
+    sdf = _stream_df(spark, stream_src)
+    for name in sorted(names):
+        call = _SWEEP_CALLS.get(name, f"{name}('value')")
+        script = f"""
+var m = stream
+    |from()
+        .measurement('cpu')
+stream
+    |from()
+        .measurement('cpu')
+        .groupBy('host')
+    |{call}
+    |httpOut('x')
+"""
+        try:
+            run_tickscript_stream(script, sources={"cpu": sdf}, time_col="time")
+        except TickError as e:
+            if name not in _StreamEnv.SUPPORTED:
+                assert "streaming compile subset" in str(e), name
+                assert "/".join(sorted(_StreamEnv.SUPPORTED)) in str(e), name
+        except Exception as e:  # noqa: BLE001 — the assertion under test
+            pytest.fail(f"|{name}() raised {type(e).__name__}: {e}")
+        else:
+            assert name in _StreamEnv.SUPPORTED, name
+
+
+@pytest.mark.parametrize(
+    "head, mode",
+    [
+        # a stateless alert behind a window aggregation
+        ("""|window()
+        .period(4s)
+        .every(4s)
+    |mean('value')
+        .as('value')
+    |alert()
+        .crit(lambda: "value" > 90)""", "complete"),
+        # a keyed alert on the raw stream
+        ("""|alert()
+        .crit(lambda: "value" > 90)
+        .stateChangesOnly()""", "append"),
+    ],
+    ids=["window_mean_alert", "keyed_alert"],
+)
+def test_every_chain_method_after_stateful_live_stage(
+    spark, stream_src, tmp_path, head, mode
+):
+    """Behind a streaming aggregation or a keyed alert only
+    log/httpOut/alert compile, and those run; every other chain method
+    raises TickError at compile instead of failing at query start."""
+    from kapacitor_spark.streaming import run_available_now
+    from kapacitor_spark.tick import (
+        TickError, _Env, _StreamEnv, run_tickscript_stream,
+    )
+
+    sdf = _stream_df(spark, stream_src)
+    for name in sorted(_Env.BUILDERS | _Env.AGGS | _Env.CHAIN):
+        call = _SWEEP_CALLS.get(name, f"{name}('value')")
+        script = f"""
+var m = stream
+    |from()
+        .measurement('cpu')
+stream
+    |from()
+        .measurement('cpu')
+        .groupBy('host')
+    {head}
+    |{call}
+    |httpOut('x')
+"""
+        try:
+            outs = run_tickscript_stream(
+                script, sources={"cpu": sdf}, time_col="time"
+            )
+        except TickError:
+            assert name not in ("alert", "log", "httpOut"), name
+            continue
+        except Exception as e:  # noqa: BLE001 — the assertion under test
+            pytest.fail(f"|{name}() raised {type(e).__name__}: {e}")
+        assert name in ("alert", "log", "httpOut") and name in _StreamEnv.SUPPORTED
+        tag = f"after_{mode}_{name}"
+        res = run_available_now(
+            outs["x"], tag, str(tmp_path / tag), output_mode=mode
+        )
+        assert res.count() > 0, name
+
+
+@pytest.mark.parametrize("merge", ["join(w).as('a', 'b').tolerance(1s)", "union(w)"])
+def test_join_union_of_windowed_stream_raises(spark, stream_src, merge):
+    """A windowed stream as the join()/union() argument would chain a
+    second stateful operator behind its aggregation: TickError at
+    compile."""
+    from kapacitor_spark.tick import TickError, run_tickscript_stream
+
+    script = f"""
+var w = stream
+    |from()
+        .measurement('cpu')
+    |window()
+        .period(4s)
+        .every(4s)
+    |mean('value')
+        .as('value')
+stream
+    |from()
+        .measurement('cpu')
+    |{merge}
+    |httpOut('x')
+"""
+    with pytest.raises(TickError, match="second stateful operator"):
+        run_tickscript_stream(
+            script, sources={"cpu": _stream_df(spark, stream_src)},
+            time_col="time",
+        )
+
+
+@pytest.mark.parametrize(
+    "tail, ok",
+    [
+        ("|log()\n    |httpOut('a')", True),
+        ("|where(lambda: \"value\" > 1)\n    |httpOut('a')", False),
+        ("|log()\n        .rename('z')\n    |httpOut('a')", False),
+    ],
+    ids=["log", "where", "rename"],
+)
+def test_live_alert_handlers_deliver_or_raise(
+    spark, stream_src, tmp_path, tail, ok
+):
+    """A live alert's handlers run as the foreachBatch of the httpOut
+    that carries its rows: with only log() in between they surface in
+    outputs.alert_handlers; a node that rebuilds the rows raises
+    TickError instead of silently dropping the handlers."""
+    from kapacitor_spark.tick import TickError, run_tickscript_stream
+
+    script = f"""
+stream
+    |from()
+        .measurement('cpu')
+        .groupBy('host')
+    |alert()
+        .crit(lambda: "value" > 90)
+        .slack()
+        .log('{tmp_path / "alerts.log"}')
+    {tail}
+"""
+    kw = dict(
+        sources={"cpu": _stream_df(spark, stream_src)}, time_col="time",
+        alert_services={"slack": {"url": "http://127.0.0.1:1/slack"}},
+    )
+    if ok:
+        assert "a" in run_tickscript_stream(script, **kw).alert_handlers
+    else:
+        with pytest.raises(TickError, match="foreachBatch of its httpOut"):
+            run_tickscript_stream(script, **kw)
