@@ -147,7 +147,7 @@ def lineprotocol_roundtrip(spark, sf_dir):
     """Line-protocol egress → ingest roundtrip over the full events table —
     /root/reference/services/udp/service.go:145 (ingest) +
     /root/reference/influxdb_out.go (egress). Render is pure JVM concat;
-    parse is Arrow-batched mapInPandas at the ingest edge only."""
+    parse is one pass of SQL regex expressions over the rendered lines."""
     from kapacitor_spark.dataprep.dedup import _spread
     from kapacitor_spark.sources import parse_lines, to_line_protocol
     from kapacitor_spark.sources.line_protocol import promote
@@ -162,12 +162,7 @@ def lineprotocol_roundtrip(spark, sf_dir):
     lines = to_line_protocol(
         ev, F.col("event_type"), tag_cols=["user_id"],
         field_cols=["event_id", "value"], time_col="ts",
-    ).persist()
-    # persist: the hybrid parser's fast/slow branches each filter the
-    # line stream, so an unpersisted render runs twice (measured 1.57s →
-    # 0.95s at sf0.1). Real ingest reads lines from a source scan where
-    # re-reading is cheap; only this render→parse roundtrip re-derives
-    # its own input.
+    )
     parsed = parse_lines(lines, col="line")
     return parsed.select(
         "name",

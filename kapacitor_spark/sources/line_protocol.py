@@ -8,15 +8,16 @@ public InfluxDB line protocol:
 
     measurement[,tag=val...] field=value[,field2=value2...] [timestamp_ns]
 
-Field value types: float (``1.0``), integer (``2i``), string (``"s"``),
-boolean (``t/true/f/false``); commas/spaces/equals in identifiers are
-backslash-escaped; string field values escape ``"``.
+Field value types: float (``1.0``, ``.5``, ``1e3``), integer (``2i``,
+``2u``, within int64), string (``"s"``, escaping ``\\"`` and ``\\\\``),
+boolean (``t/true/f/false`` and capitalised forms); commas/spaces/equals
+in the measurement and keys are backslash-escaped. A line that does not
+fit the grammar is dropped; a repeated key keeps its last value.
 
-Spark mapping: parsing is per-row string work (inherently scalar — the
-reference parses each line in Go too), so it runs in ``mapInPandas`` with a
-compiled regex tokenizer: Arrow-batched, parallel across partitions, and
-ONLY at the ingest edge — everything downstream is typed columns. Egress
-(``to_line_protocol``) is pure JVM concat/regexp (codegen'd).
+Spark mapping: ``parse_lines`` parses each line once, in SQL expressions
+inside the JVM stage that scans it (no Python worker, no second scan);
+``parse_line`` reads the same grammar in plain Python and is its test
+oracle. Egress (``to_line_protocol``) is pure JVM concat/regexp (codegen'd).
 
 Parsed schema (the reference's schemaless point, /root/reference/models/
 point.go, typed by class):
@@ -33,7 +34,8 @@ measurement: tags + chosen fields as top-level typed columns.
 from __future__ import annotations
 
 import re
-from typing import Iterable, Iterator, Sequence
+from datetime import datetime, timedelta
+from typing import Sequence
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -46,199 +48,205 @@ PARSED_SCHEMA = (
     "time timestamp"
 )
 
-# split on unescaped commas / spaces / equals
-_UNESC_COMMA = re.compile(r"(?<!\\),")
-_UNESC_SPACE = re.compile(r"(?<!\\) ")
-_UNESC_EQ = re.compile(r"(?<!\\)=")
-_UNESCAPE = re.compile(r"\\([, =])")
+# The line grammar, as pattern strings that Python ``re`` (parse_line) and
+# java.util.regex (parse_lines, with the UNIX_LINES flag ``(?d)`` so that
+# only ``\n`` ends a line, as in Python) read alike: ``[0-9]``, never
+# ``\d``. Runs are unrolled (``c*(?:\\.c*)*``: java.util.regex recurses
+# once per iteration of an alternation group and overflows on a long
+# string) and possessive (``*+``: safe, as a run is always followed by a
+# delimiter it cannot contain).
+def _run(stop: str) -> str:
+    """One or more characters that are neither a backslash nor in
+    ``stop``, or backslash escapes of any character."""
+    c = rf"[^\\{stop}]"
+    return rf"(?:{c}|\\.){c}*+(?:\\.{c}*+)*+"
 
-# field values: "str" | 123i | 1.5 | true/false — strings may contain
-# escaped quotes and commas, so fields are tokenized with a real scanner.
-_FIELD_TOKEN = re.compile(
-    r'(?P<key>(?:[^\\,= ]|\\.)+)='
-    r'(?P<val>"(?:[^"\\]|\\.)*"|[^,]*)'
+
+def _at_most(n: int) -> str:
+    """Digits (leading zeros allowed) of a value <= ``n``: an integer or
+    timestamp past int64 fails the grammar instead of a cast."""
+    d = str(n)
+    alts = [f"[0-9]{{1,{len(d) - 1}}}+"]
+    alts += [f"{d[:i]}[0-{int(c) - 1}][0-9]{{{len(d) - i - 1}}}"
+             for i, c in enumerate(d) if c != "0"]
+    return f"0*(?:{'|'.join(alts + [d])})"
+
+
+_INT = rf"(?:{_at_most(2**63 - 1)}|-{_at_most(2**63)})"
+_KEY = _run(",= ")
+_TAG_VALUE = _run(", ")
+_STR = r'"[^"\\]*+(?:\\.[^"\\]*+)*+"'
+_VALUE = "|".join((
+    _STR,
+    r"-?(?:[0-9]+(?:\.[0-9]*)?|\.[0-9]+)(?:[eE][+-]?[0-9]+)?",
+    rf"{_INT}i|{_at_most(2**63 - 1)}u",
+    r"[tTfF]|true|True|TRUE|false|False|FALSE",
+))
+_FIELD = rf"{_KEY}=(?:{_VALUE})"
+# groups: measurement, tag list (",k=v" repeated), field list, timestamp;
+# runs of spaces separate the sections (reference fixtures contain
+# double-space lines, TestStream_HttpPost_URL_Template.srpl line 5)
+_LINE = (
+    rf"^((?!#){_run(', ')})((?:,{_KEY}={_TAG_VALUE})*)"
+    rf" +({_FIELD}(?:,{_FIELD})*)(?: +({_INT}))?$"
 )
+# pairs of a list that matched _LINE: key group 1, raw value group 2
+_TAG_PAIR = rf",({_KEY})=({_TAG_VALUE})"
+_FIELD_PAIR = rf"({_KEY})=({_STR}|[^,]*)"
+_KEY_ESCAPE = r"\\([, =])"
+_STR_ESCAPE = r'\\([\\"])'
+
 
 
 def _unescape(s: str) -> str:
-    return _UNESCAPE.sub(r"\1", s)
+    return re.sub(_KEY_ESCAPE, r"\1", s)
 
 
-_PRECISION_US = {"u": 1, "ms": 1_000, "s": 1_000_000}
+_NS_PER = {"ns": 1, "u": 1_000, "ms": 1_000_000, "s": 1_000_000_000}
+_EPOCH = datetime(1970, 1, 1)
 
 
 def parse_line(line: str, precision_ns: bool = True, precision: str | None = None):
-    """Parse one line → dict matching PARSED_SCHEMA or None for blank/
-    comment lines. ``precision`` ('ns'|'u'|'ms'|'s') overrides the legacy
-    precision_ns flag — the reference's replay/write paths carry an
-    explicit precision (replay.go ReplayStreamFromIO; the integration
-    harness replays .srpl at 's')."""
+    """Parse one line → dict matching PARSED_SCHEMA, None for blank/
+    comment lines; a malformed line raises ValueError. ``precision``
+    ('ns'|'u'|'ms'|'s') overrides the legacy precision_ns flag — the
+    reference's replay/write paths carry an explicit precision
+    (replay.go ReplayStreamFromIO; the integration harness replays .srpl
+    at 's'). A repeated key keeps its last value, whatever the field
+    types. The oracle of :func:`parse_lines`, which reads the same grammar."""
     # ASCII-only trim: Python's bare strip() also eats unicode whitespace
     # (e.g. U+00A0), which the reference's Go parser treats as measurement
     # content — found by the hypothesis roundtrip fuzz
     line = line.strip(" \t\r\n")
     if not line or line.startswith("#"):
         return None
-    # split into measurement+tags | fields | [timestamp]; drop empty
-    # segments from repeated separator spaces — influx's parser is
-    # lenient there and reference fixtures contain double-space lines
-    # (TestStream_HttpPost_URL_Template.srpl line 5)
-    parts = [p for p in _UNESC_SPACE.split(line) if p != ""]
-    if len(parts) < 2:
-        raise ValueError(f"line protocol: need fields segment: {line!r}")
-    ts = None
-    if len(parts) >= 3 and re.fullmatch(r"-?\d+", parts[-1]):
-        ts = int(parts[-1])
-        head, field_part = parts[0], " ".join(parts[1:-1])
-    else:
-        head, field_part = parts[0], " ".join(parts[1:])
-
-    head_parts = _UNESC_COMMA.split(head)
-    name = _unescape(head_parts[0])
-    tags = {}
-    for t in head_parts[1:]:
-        k, _, v = t.partition("=")
-        tags[_unescape(k)] = _unescape(v)
-
+    m = re.match(_LINE, line)
+    if m is None:
+        raise ValueError(f"line protocol: malformed line: {line!r}")
+    meas, tag_list, field_list, ts = m.groups()
+    tags = {_unescape(k): _unescape(v) for k, v in re.findall(_TAG_PAIR, tag_list)}
     ff, fi, fs, fb = {}, {}, {}, {}
-    pos = 0
-    while pos < len(field_part):
-        m = _FIELD_TOKEN.match(field_part, pos)
-        if not m:
-            raise ValueError(f"line protocol: bad fields at {field_part[pos:]!r}")
-        key = _unescape(m.group("key"))
-        raw = m.group("val")
-        if raw.startswith('"'):
-            fs[key] = raw[1:-1].replace('\\"', '"').replace("\\\\", "\\")
-        elif raw.endswith(("i", "u")) and re.fullmatch(r"-?\d+[iu]", raw):
-            fi[key] = int(raw[:-1])
-        elif raw in ("t", "T", "true", "True", "TRUE"):
-            fb[key] = True
-        elif raw in ("f", "F", "false", "False", "FALSE"):
-            fb[key] = False
+    for key, v in {_unescape(k): v for k, v in re.findall(_FIELD_PAIR, field_list)}.items():
+        # the type from the first/last character of a value that matched
+        # _VALUE; parse_lines' _FIELD_ENTRY is the same rule
+        if v[0] == '"':
+            fs[key] = re.sub(_STR_ESCAPE, r"\1", v[1:-1])
+        elif v[-1] in "iu":
+            fi[key] = int(v[:-1])
+        elif v[0] in "tTfF":
+            fb[key] = v[0] in "tT"
         else:
-            ff[key] = float(raw)
-        pos = m.end()
-        if pos < len(field_part) and field_part[pos] == ",":
-            pos += 1
+            ff[key] = float(v)
 
     if precision is None:
         precision = "ns" if precision_ns else "u"
-    if ts is None:
-        ts_us = None
-    elif precision == "ns":
-        ts_us = ts // 1000
-    else:
-        ts_us = ts * _PRECISION_US[precision]
     return {
-        "name": name,
+        "name": _unescape(meas),
         "tags": tags,
         "fields_f": ff,
         "fields_i": fi,
         "fields_s": fs,
         "fields_b": fb,
-        "time": pd.Timestamp(ts_us, unit="us") if ts_us is not None else None,
+        # floored to µs; a datetime, as the lowest int64 ns timestamps
+        # floor below pandas' ns range (not Spark's)
+        "time": None if ts is None
+        else _EPOCH + timedelta(microseconds=int(ts) * _NS_PER[precision] // 1000),
     }
 
 
-def _parse_lines_python(df: DataFrame, col: str, precision_ns: bool) -> DataFrame:
-    """Full-fidelity per-line parser (escapes, quoted strings) via
-    mapInPandas — Arrow in/out, no shuffle."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for line in pdf[col]:
-                try:
-                    r = parse_line(line, precision_ns)
-                except ValueError:
-                    r = None  # reference drops unparseable writes
-                if r is not None:
-                    rows.append(r)
-            yield pd.DataFrame(
-                rows,
-                columns=["name", "tags", "fields_f", "fields_i", "fields_s", "fields_b", "time"],
-            )
-
-    return df.mapInPandas(run, schema=PARSED_SCHEMA)
+def _sq(s: str) -> str:
+    """``s`` as a single-quoted Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def _parse_lines_jvm(df: DataFrame, col: str, precision_ns: bool) -> DataFrame:
-    """JVM fast path for SIMPLE lines (no quotes, no backslash escapes —
-    the overwhelmingly common telemetry shape): split + str_to_map +
-    regex-classified typed maps, all inside whole-stage codegen.
+def _jvm_re(p: str) -> str:
+    return _sq("(?d)" + p)
 
-    Built as TWO selectExpr strings (r11 optimization round): the
-    Column-API chain cost ~0.25 s of driver py4j/analysis time per build;
-    the strings are verbatim SQL spellings of the same expressions, so
-    the analyzed plan — and the parse — are identical."""
-    div = 1000 if precision_ns else 1
-    is_int = r"'^-?\\d+[iu]$'"
-    is_bool = "'^(t|T|true|True|TRUE|f|F|false|False|FALSE)$'"
-    is_true = "'^(t|T|true|True|TRUE)$'"
-    is_float = r"'^-?\\d+(\\.\\d+)?([eE][+-]?\\d+)?$'"
-    pre = df.selectExpr(
-        f"element_at(split(`{col}`, ' '), 1) AS __head",
-        f"element_at(split(`{col}`, ' '), 2) AS __fs",
-        f"CAST(CASE WHEN size(split(`{col}`, ' ')) >= 3 "
-        f"THEN element_at(split(`{col}`, ' '), 3) END AS BIGINT) AS __ts",
-    )
-    return pre.selectExpr(
-        "substring_index(__head, ',', 1) AS name",
-        "coalesce(str_to_map(CASE WHEN instr(__head, ',') > 0 "
-        "THEN substring(__head, instr(__head, ',') + 1) END, ',', '='), "
-        "cast(map() as map<string,string>)) AS tags",
-        f"transform_values(map_filter(str_to_map(__fs, ',', '='), "
-        f"(k, v) -> v rlike {is_float}), (k, v) -> cast(v as double)) AS fields_f",
-        f"transform_values(map_filter(str_to_map(__fs, ',', '='), "
-        f"(k, v) -> v rlike {is_int}), "
-        f"(k, v) -> cast(substring(v, 1, length(v) - 1) as bigint)) AS fields_i",
-        "cast(map() as map<string,string>) AS fields_s",
-        f"transform_values(map_filter(str_to_map(__fs, ',', '='), "
-        f"(k, v) -> v rlike {is_bool}), (k, v) -> v rlike {is_true}) AS fields_b",
-        # integer div — float division of ns epochs loses µs precision
-        f"timestamp_micros(__ts div {div}) AS time",
+
+def _pairs(lst: str, pattern: str, entry: str) -> str:
+    """SQL: the key/value pairs in ``lst`` as an array of ``entry``, a
+    struct over ``k`` (the unescaped key) and ``v`` (the raw value)."""
+    p = _jvm_re(pattern)
+    return (
+        f"zip_with(transform(regexp_extract_all({lst}, {p}, 1), "
+        f"x -> regexp_replace(x, {_jvm_re(_KEY_ESCAPE)}, '$1')), "
+        f"regexp_extract_all({lst}, {p}, 2), (k, v) -> {entry})"
     )
 
 
-def parse_lines(
-    df: DataFrame, col: str = "value", precision_ns: bool = True, fast: bool = True
-) -> DataFrame:
+def _last_wins(pairs: str) -> str:
+    """SQL: ``pairs`` without an entry whose key comes again later, so a
+    map built from it keeps each key's last value (without the
+    session-wide spark.sql.mapKeyDedupPolicy)."""
+    return (
+        f"filter({pairs}, (e, i) -> "
+        f"NOT array_contains(slice({pairs}.k, i + 2, size({pairs})), e.k))"
+    )
+
+
+_TAG_ENTRY = f"named_struct('k', k, 'v', regexp_replace(v, {_jvm_re(_KEY_ESCAPE)}, '$1'))"
+# the type from the first/last character of a value that matched
+# _VALUE, the same rule as parse_line's
+_FIELD_ENTRY = (
+    "named_struct('k', k, 't', CASE WHEN left(v, 1) = '\"' THEN 's' "
+    "WHEN right(v, 1) IN ('i', 'u') THEN 'i' "
+    "WHEN left(v, 1) IN ('t', 'T', 'f', 'F') THEN 'b' ELSE 'f' END, 'v', v)"
+)
+_FIELD_VALUE = {
+    "fields_f": ("f", "CAST(e.v AS DOUBLE)"),
+    "fields_i": ("i", "CAST(substring(e.v, 1, length(e.v) - 1) AS BIGINT)"),
+    "fields_s": ("s", f"regexp_replace(substring(e.v, 2, length(e.v) - 2), "
+                      f"{_jvm_re(_STR_ESCAPE)}, '$1')"),
+    "fields_b": ("b", "left(e.v, 1) IN ('t', 'T')"),
+}
+
+
+def parse_lines(df: DataFrame, col: str = "value", precision_ns: bool = True) -> DataFrame:
     """Parse raw line-protocol rows (from ``spark.read.text``/Kafka) into
     typed points.
 
-    Hybrid plan: lines without quotes/escapes parse fully JVM-side
-    (codegen'd split/str_to_map — the hot ingest path); the rest go through
-    the exact Python parser. Both branches read the same scan; Spark unions
-    them without an extra shuffle.
+    One scan and one parse, all in SQL expressions (rlike,
+    regexp_extract, regexp_extract_all, higher-order functions), so each
+    line is parsed once inside the JVM stage that reads it. The grammar
+    is :func:`parse_line`'s: a malformed line is dropped, and a repeated
+    tag or field key keeps its last value.
     """
-    if not fast:
-        return _parse_lines_python(df, col, precision_ns)
-    line = F.col(col)
-    # strict structural shape: head + fields (+ numeric ts), no quotes or
-    # escapes anywhere — anything else takes the exact Python parser
-    simple = (
-        ~line.contains('"')
-        & ~line.contains("\\")
-        & line.rlike(r"^[^ #][^ ]* [^ ]+( -?\d+)?$")
+    # floor division like parse_line's // (float division of ns epochs
+    # loses µs precision)
+    micros = (
+        "__ts div 1000 - CASE WHEN __ts % 1000 < 0 THEN 1 ELSE 0 END"
+        if precision_ns else "__ts"
     )
-    fast_part = _parse_lines_jvm(df.filter(simple), col, precision_ns)
-    slow_src = df.filter(~simple)
-    if not slow_src.isStreaming:
-        # AQE-rebalance boundary before the Python stage (r11, guide
-        # §2.2/§4): without it the exact parser inherits the SOURCE's
-        # partitioning, so a clean corpus still launches one (empty)
-        # Python task per input partition — measured 0.45 s of pure
-        # worker round-trips per run at sf0.1 (hybrid 0.73 s vs 0.28 s
-        # JVM-only with zero slow rows). Rebalance lets AQE size the
-        # Python stage to the slow branch's ACTUAL bytes: empty → one
-        # task; an escape-heavy ingest → advisory-sized partitions. The
-        # shuffle moves only the slow rows (normally a sliver). Streaming
-        # inputs keep the direct plan — no AQE there, and a per-batch
-        # shuffle of the slow sliver would cost more than idle workers.
-        slow_src = slow_src.hint("rebalance")
-    slow_part = _parse_lines_python(slow_src, col, precision_ns)
-    return fast_part.unionByName(slow_part)
+    # The only filter reads the raw line: a pushed-down filter copies in
+    # every expression it reads. Each step is its own projection, as one
+    # that the next step reads twice is not inlined into it.
+    line = _jvm_re(_LINE)
+    return (
+        df.selectExpr(f"trim(BOTH ' \\t\\r\\n' FROM `{col}`) AS __l")
+        .where(f"__l rlike {line}")
+        .selectExpr(*(f"regexp_extract(__l, {line}, {i}) AS __{n}"
+                      for i, n in enumerate("mtfs", 1)))
+        .selectExpr(
+            f"regexp_replace(__m, {_jvm_re(_KEY_ESCAPE)}, '$1') AS name",
+            f"{_pairs('__t', _TAG_PAIR, _TAG_ENTRY)} AS __tags",
+            f"{_pairs('__f', _FIELD_PAIR, _FIELD_ENTRY)} AS __fields",
+            "CAST(nullif(__s, '') AS BIGINT) AS __ts",
+        )
+        .selectExpr(
+            "name",
+            f"map_from_entries({_last_wins('__tags')}) AS tags",
+            f"{_last_wins('__fields')} AS __fields",
+            f"timestamp_micros({micros}) AS time",
+        )
+        .selectExpr(
+            "name",
+            "tags",
+            *(f"map_from_entries(transform(filter(__fields, e -> e.t = '{t}'), "
+              f"e -> named_struct('k', e.k, 'v', {conv}))) AS {name}"
+              for name, (t, conv) in _FIELD_VALUE.items()),
+            "time",
+        )
+    )
 
 
 def read_srpl(spark: SparkSession, path: str, precision: str = "ns") -> DataFrame:
@@ -397,11 +405,6 @@ def promote(
     return out.select(*cols)
 
 
-def _escape_key(c: Column) -> Column:
-    out = F.regexp_replace(c, r"([,= ])", r"\\$1")
-    return out
-
-
 def to_line_protocol(
     df: DataFrame,
     measurement: str | Column,
@@ -421,18 +424,12 @@ def to_line_protocol(
     # keys (measurement string, tag/field names) escape in PYTHON at
     # build time — regexp_replace of a literal is a constant — while
     # data-dependent values keep the identical regexp_replace expression.
-    import re as _re
-
     def _esc_lit(s: str) -> str:
-        return _re.sub(r"([,= ])", r"\\\1", s)
-
-    def _sq(s: str) -> str:
-        # single-quoted SQL string literal (escape backslash + quote)
-        return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        return re.sub(r"([,= ])", r"\\\1", s)
 
     esc_val = (
         lambda e: f"regexp_replace({e}, '([,= ])', '\\\\\\\\$1')"
-    )  # SQL sees pattern ([,= ]) and replacement \\$1 — same as _escape_key
+    )  # SQL sees pattern ([,= ]) and replacement \\$1
     if isinstance(measurement, str):
         mexpr = _sq(_esc_lit(measurement))
         pre = df
@@ -583,7 +580,8 @@ def subscribe_stream(
     services/udp/service.go:145); the transport registration is external
     service plumbing, but the data plane — "line protocol keeps
     arriving, points keep flowing" — is exactly a Structured Streaming
-    text source + the hybrid JVM/Arrow parser. Point the subscriber
+    text source + :func:`parse_lines` (one scan per trigger; a malformed
+    write is dropped, never stopping the query). Point the subscriber
     (or any collector) at a spool directory and read it here; swap the
     text source for Kafka with the same parse_lines call.
 

@@ -160,3 +160,58 @@ def test_record_srpl_rejects_unroundtrippable(spark, tmp_path):
     # clean rows (incl. spaces/commas, which DO escape) still work
     n = record_srpl(df_of(name="my metric", tags={"k": "a,b c"}), p)
     assert n == 1
+
+
+def test_parse_line_follows_reference_grammar():
+    """parse_line is the oracle of parse_lines, so it follows the
+    reference grammar: a quoted string keeps its runs of spaces, an
+    escaped '=' stays inside a tag key, an unterminated quote makes the
+    line malformed."""
+    assert parse_line('m s="a  b" 5')["fields_s"] == {"s": "a  b"}
+    assert parse_line(r"m,h\=k=v f=1i 5")["tags"] == {"h=k": "v"}
+    with pytest.raises(ValueError):
+        parse_line('m s="unterminated 1')
+
+
+# (line, parsed fields or None for a dropped line) — one value grammar
+# for both parsers: float, i/u integer within int64, boolean, quoted
+# string; a repeated tag or field key keeps its last value
+_GRAMMAR_CASES = [
+    ("m value=.5,w=1. 5", {"fields_f": {"value": 0.5, "w": 1.0}}),
+    ("m value=abc 5", None),
+    ("m value=1d 5", None),
+    ("m v=-5u 5", None),
+    ("m v=9223372036854775807i,w=-9223372036854775808i 5",
+     {"fields_i": {"v": 2**63 - 1, "w": -(2**63)}}),
+    ("m v=9223372036854775808i 5", None),
+    ("m v=1 9223372036854775808", None),
+    ("m,t=a", None),
+    ("cpu,host=a,host=b v=1 1000", {"tags": {"host": "b"}, "fields_f": {"v": 1.0}}),
+    ("cpu v=1,v=2 1000", {"fields_f": {"v": 2.0}}),
+    ('cpu v=1,v="s" 1000', {"fields_s": {"v": "s"}}),
+    ('m s="' + "x" * 100_000 + '" 5', {"fields_s": {"s": "x" * 100_000}}),
+]
+
+
+def test_value_grammar_and_duplicate_keys_on_both_parsers(spark):
+    """Every path applies one grammar: a value of no type drops the line
+    (the old JVM branch kept 'abc' as a point with no fields and dropped
+    '.5'), and a repeated key keeps its last value (the old JVM branch
+    failed with DUPLICATED_MAP_KEY). The 100k-character string guards
+    the JVM regex stack."""
+    cols = ("tags", "fields_f", "fields_i", "fields_s", "fields_b")
+
+    def key(d):
+        return repr([sorted(d.get(c, {}).items()) for c in cols])
+
+    df = spark.createDataFrame([(l,) for l, _ in _GRAMMAR_CASES], "value string")
+    got = sorted(key({c: dict(r[c]) for c in cols}) for r in parse_lines(df).collect())
+    want = []
+    for line, fields in _GRAMMAR_CASES:
+        if fields is None:
+            with pytest.raises(ValueError):
+                parse_line(line)
+        else:
+            assert key(parse_line(line)) == key(fields), line
+            want.append(key(fields))
+    assert got == sorted(want)

@@ -639,31 +639,33 @@ def test_q19_disjunction_pushes_cnf_residues(spark):
     assert "CartesianProduct" not in plan and "BatchEvalPython" not in plan
 
 
-def test_parse_lines_slow_branch_rebalanced_batch_only(spark, tmp_path):
-    """r11: the hybrid line-protocol parser's exact-Python branch sits
-    behind an AQE rebalance boundary on BATCH inputs, so its Python task
-    count tracks the slow rows' actual volume (a clean corpus runs ONE
-    empty Python task, not one per input partition). Streaming inputs
-    keep the direct, shuffle-free plan."""
-    from pyspark.sql import functions as F
-
+def test_parse_lines_one_scan_no_python(spark, tmp_path):
+    """The line-protocol parse reads its input once and stays in the JVM,
+    for a batch input and a streaming input alike: one scan, and no
+    MapInPandas, BatchEvalPython or Union node in the executed plan."""
     from kapacitor_spark.sources import parse_lines
 
-    batch = spark.createDataFrame(
-        [("m,t=a f=1i 1000000000",)], "line string"
+    d = str(tmp_path / "lp_in")
+    spark.createDataFrame(
+        [("m,t=a f=1i 1000000000",), ('m s="x y" 2000000000',)], "value string"
+    ).write.text(d)
+    batch = parse_lines(spark.read.text(d))
+    assert batch.count() == 2
+    bplan = batch._jdf.queryExecution().executedPlan().toString()
+
+    q = (
+        parse_lines(spark.readStream.text(d))
+        .writeStream.format("memory").queryName("parse_lines_plan")
+        .option("checkpointLocation", str(tmp_path / "cp"))
+        .trigger(availableNow=True).start()
     )
-    plan = parse_lines(batch, col="line")._jdf.queryExecution().optimizedPlan().toString()
-    assert "rebalance" in plan.lower() or "RoundRobinPartitioning" in plan, plan
-    # streaming twin: same call path must stay legal and boundary-free
-    # (optimizedPlan would demand writeStream; the logical plan carries
-    # the hint when present, so it is the right surface to assert on)
-    d = str(tmp_path / "pl_in")
-    batch.write.mode("overwrite").parquet(d)
-    sdf = spark.readStream.schema("line string").parquet(d)
-    sparsed = parse_lines(sdf, col="line")
-    assert sparsed.isStreaming
-    splan = sparsed._jdf.queryExecution().logical().toString()
-    assert "rebalance" not in splan.lower()
+    q.awaitTermination(120)
+    splan = q._jsq.explainInternal(True)
+    assert spark.table("parse_lines_plan").count() == 2
+    for plan in (bplan, splan):
+        assert plan.count("FileScan") == 1, plan
+        for node in ("MapInPandas", "BatchEvalPython", "Union"):
+            assert node not in plan, plan
 
 
 def test_state_track_fused_single_streak_pass(spark):

@@ -5,8 +5,8 @@ content (commas, spaces, equals, quotes, backslashes, unicode) and asserts
 render → parse is the identity through the REAL Spark path.
 
 The Spark session is reused; each case renders via to_line_protocol (JVM
-concat/escape) and parses via parse_lines' exact parser, so both
-directions of the escaping contract are exercised together.
+concat/escape) and parses via parse_lines, so both directions of the
+escaping contract are exercised together.
 """
 
 import datetime as dt
@@ -88,8 +88,7 @@ def test_line_protocol_roundtrip_property(_spark, meas, tagv, sval, fval, ival):
     lines = to_line_protocol(
         src, meas, tag_cols=["host"], field_cols=["value", "n", "note"],
     )
-    # exact parser branch: quotes/escapes route here in the hybrid plan too
-    parsed = parse_lines(lines, col="line", fast=False).collect()
+    parsed = parse_lines(lines, col="line").collect()
     assert len(parsed) == 1
     r = parsed[0]
     assert r["name"] == meas
@@ -99,6 +98,116 @@ def test_line_protocol_roundtrip_property(_spark, meas, tagv, sval, fval, ival):
     got_f = r["fields_f"]["value"]
     assert got_f == fval or math.isclose(got_f, fval, rel_tol=1e-15)
     assert r["time"] == ts
+
+
+# --------------------------------------------------------------------- #
+# parse_lines (one SQL parse) == parse_line (the plain-Python oracle),
+# line by line, over generated well-formed and malformed lines
+# --------------------------------------------------------------------- #
+
+# raw text for names: the wire format's delimiters, both escapes' marks,
+# a comment mark, and whitespace the two regex engines could read apart
+_lp_text = st.text(
+    alphabet=st.one_of(
+        st.sampled_from(list('ab,= "\\#\t\r\n\u2028')),
+        st.characters(codec="utf-8", exclude_categories=("Cs", "Cc")),
+    ),
+    min_size=1,
+    max_size=6,
+)
+# a small key pool makes repeated keys common
+_lp_key = st.one_of(st.sampled_from(["host", "v", "a b", "k=v", "x,y"]), _lp_text)
+
+
+def _lp_escape(s, chars):
+    for c in chars:
+        s = s.replace(c, "\\" + c)
+    return s
+
+
+_lp_value = st.one_of(
+    st.floats(allow_nan=False, allow_infinity=False).map(repr),
+    st.sampled_from([".5", "1.", "-0", "1e3", "2.5E-3", "7"]),
+    st.integers(-(2**63), 2**63 - 1).map(lambda n: f"{n}i"),
+    st.integers(0, 2**63 - 1).map(lambda n: f"{n}u"),
+    st.sampled_from(["t", "T", "true", "True", "TRUE", "f", "F", "false", "False", "FALSE"]),
+    _lp_text.map(lambda s: '"' + s.replace("\\", "\\\\").replace('"', '\\"') + '"'),
+)
+
+
+@st.composite
+def _lp_line(draw):
+    meas = _lp_escape(draw(_lp_text), ", ")
+    tags = "".join(
+        f",{_lp_escape(k, ',= ')}={_lp_escape(v, ', ')}"
+        for k, v in draw(st.lists(st.tuples(_lp_key, _lp_text), max_size=3))
+    )
+    fields = ",".join(
+        f"{_lp_escape(k, ',= ')}={v}"
+        for k, v in draw(st.lists(st.tuples(_lp_key, _lp_value), min_size=1, max_size=3))
+    )
+    ts = draw(st.one_of(st.none(), st.integers(-(2**63), 2**63 - 1)))
+    line = f"{meas}{tags} {fields}" + ("" if ts is None else f" {ts}")
+    mutation = draw(st.sampled_from(
+        ["none"] * 6 + ["unterminated", "bad_value", "no_fields", "comment", "blank"]))
+    if mutation == "unterminated":
+        line = f'{meas}{tags} s="open {ts or 0}'
+    elif mutation == "bad_value":
+        bad = draw(st.sampled_from(["abc", "1d", "1.2.3", "nan", "0x1", "--1", ""]))
+        line = f"{meas}{tags} {fields},bad={bad}"
+    elif mutation == "no_fields":
+        line = f"{meas}{tags}" + ("" if ts is None else f" {ts}")
+    elif mutation == "comment":
+        line = "# " + line
+    elif mutation == "blank":
+        line = draw(st.sampled_from(["", "  ", "\t"]))
+    return line
+
+
+def _lp_point(r, us):
+    """A parsed point (parse_line dict or parse_lines Row) as a comparable
+    string; ``us`` is its time in epoch microseconds or None."""
+    maps = ("tags", "fields_f", "fields_i", "fields_s", "fields_b")
+    return repr((r["name"], *(sorted(r[m].items()) for m in maps), us))
+
+
+def _lp_oracle(line):
+    """parse_line's point for ``line``, or None when it is dropped."""
+    from kapacitor_spark.sources.line_protocol import parse_line
+
+    try:
+        r = parse_line(line)
+    except ValueError:
+        return None
+    if r is None:
+        return None
+    t = r["time"]
+    us = None if t is None else (t - dt.datetime(1970, 1, 1)) // dt.timedelta(microseconds=1)
+    return _lp_point(r, us)
+
+
+@given(lines=st.lists(_lp_line(), min_size=1, max_size=12))
+@settings(
+    max_examples=40,
+    derandomize=True,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+def test_parse_lines_matches_parse_line(_spark, lines):
+    """parse_lines over a DataFrame yields exactly the points parse_line
+    yields line by line, malformed lines dropped on both: escapes in the
+    measurement and keys, quoted strings with spaces/commas/'='/\\"/\\\\,
+    all four field types, optional timestamps over the whole int64
+    range, repeated keys, and malformed mutations."""
+    from kapacitor_spark.sources.line_protocol import parse_lines
+
+    df = _spark.createDataFrame([(l,) for l in lines], "value string")
+    got = sorted(
+        _lp_point(r, r["us"])
+        for r in parse_lines(df).selectExpr("*", "unix_micros(time) AS us").collect()
+    )
+    want = sorted(p for p in map(_lp_oracle, lines) if p is not None)
+    assert got == want, lines
 
 
 @given(

@@ -915,8 +915,8 @@ def test_autoscale_stream_cooldown_across_batches(spark, tmp_path):
 
 def test_subscribe_stream_line_protocol(spark, tmp_path):
     """Subscription data plane: line-protocol files landing in a spool
-    dir parse into typed points continuously (two micro-batches, both
-    JVM fast path and quoted slow path lines), ready for streaming ops."""
+    dir parse into typed points continuously (two micro-batches, plain
+    and quoted-string lines), ready for streaming ops."""
     import os
 
     from kapacitor_spark.sources.line_protocol import subscribe_stream
@@ -939,6 +939,42 @@ def test_subscribe_stream_line_protocol(spark, tmp_path):
     assert rows["serverC"]["fields_s"]["msg"] == "hello world"
     assert rows["serverC"]["fields_f"]["value"] == 70.25
     assert rows["serverA"]["time"].second == 1
+
+
+def test_subscribe_stream_survives_bad_writes(spark, tmp_path):
+    """One bad write must not kill a live task: a repeated tag or field
+    key keeps its last value, a malformed line or an int64 overflow is
+    dropped, and the running query goes on to the next trigger (the old
+    JVM parse failed the query with DUPLICATED_MAP_KEY or a cast error)."""
+    import os
+
+    from kapacitor_spark.sources.line_protocol import subscribe_stream
+
+    spool = tmp_path / "spool"
+    os.makedirs(spool)
+    (spool / "b1.txt").write_text(
+        "cpu,host=a,host=b v=1 1000\n"
+        "cpu,host=c v=1,v=2 2000\n"
+        "cpu,host=x v=abc 2500\n"
+        "cpu,host=y v=99999999999999999999i 2600\n"
+    )
+    rows = []
+    q = (
+        subscribe_stream(spark, str(spool))
+        .writeStream.foreachBatch(lambda df, _bid: rows.extend(df.collect()))
+        .option("checkpointLocation", str(tmp_path / "cp"))
+        .trigger(processingTime="200 milliseconds")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        (spool / "b2.txt").write_text("cpu,host=d v=3 3000\n")
+        q.processAllAvailable()
+        assert q.isActive and q.exception() is None
+    finally:
+        q.stop()
+    got = {(r["tags"]["host"], r["fields_f"]["v"]) for r in rows}
+    assert got == {("b", 1.0), ("c", 2.0), ("d", 3.0)}
 
 
 def test_parse_prometheus_exposition():
