@@ -3769,7 +3769,7 @@ def alert_topics_q(spark, sf_dir):
     """alert().topic(name) routing — /root/reference/alert/topics.go +
     services/alert/: two alert categories publish to distinct topics;
     TopicRegistry.dispatch fans events to per-topic handlers executor-side
-    (exercised in tests/test_sinks_stats_udf.py)."""
+    (exercised in tests/test_round3.py)."""
     ev = _t(spark, sf_dir, "events")
     clicks = Pipeline.from_df(
         ev.filter("event_type = 'click'").select("ts", "user_id", "value"),

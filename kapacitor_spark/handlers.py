@@ -1,31 +1,41 @@
-"""Alert handler payload formatters — the reference's alert-service
-matrix (slack, pagerDuty2, opsGenie2, victorOps, teams, telegram, alerta,
-sensu, pushover, hipChat, discord, talk) re-implemented as PURE payload
-builders over an :class:`AlertEvent`, verified field-for-field against
-the reference's own integration goldens
+"""Alert handlers — the reference's alert-service matrix as ONE table.
+
+Payload formatters are PURE builders over an :class:`AlertEvent`,
+verified field-for-field against the reference's own integration goldens
 (tests/test_alert_handlers.py ← /root/reference/integrations/
 streamer_test.go TestStream_AlertSlack etc.).
 
-Design: the reference couples each service to its config/HTTP client
-(/root/reference/services/<name>/service.go preparePost); here the
-payload construction is a pure function (event, handler options) →
-(url-or-path, JSON-able dict), and delivery is one generic
-:func:`post_payload` (urllib, tolerant-mode like sinks.http_post). On a
-cluster the formatters run driver-side over the COLLECTED alert events —
-alert streams are tiny by construction (they are the filtered
-state-change output, not the raw data), so this never becomes a data-path
-bottleneck; for firehose-scale fan-out use ``sinks.http_post`` which
-posts per-partition.
+:data:`HANDLERS` maps each reference lower-case kind to the builder of
+its delivery; :func:`build_handler` turns "kind + options + service
+config" into ``deliver(events)`` for TICK chains (``tick._build_handlers``)
+and topic handler specs (``topics.register_handler_spec``) alike — the
+reference's alert service builds every handler from its HandlerConfig
+(services/alert/service.go). Three rules live here only: kind names
+(TICK chain names map by ``.lower()``, service-section keys match
+case-insensitively), option names (:func:`option_name`; options override
+the section; a formatter's keyword args are its options) and build-time
+errors (:class:`HandlerConfigError`).
+
+TICK delivers on the driver over the COLLECTED alert events — alert
+streams are tiny by construction (the filtered state-change output, not
+the raw data); topic handlers deliver per partition. For firehose-scale
+fan-out use ``sinks.http_post``, which posts per partition.
 """
 
 from __future__ import annotations
 
 import base64
 import datetime as dt
+import inspect
 import json
+import re
 import urllib.request
+from collections import ChainMap
 from dataclasses import dataclass, field
-from typing import Any
+from functools import partial
+from typing import Any, Callable, NamedTuple
+
+from kapacitor_spark import sinks
 
 __all__ = [
     "AlertEvent",
@@ -51,6 +61,11 @@ __all__ = [
     "kafka_record",
     "events_from_alert_df",
     "post_payload",
+    "HANDLERS",
+    "Handler",
+    "HandlerConfigError",
+    "build_handler",
+    "option_name",
 ]
 
 # alert.Level ints and names (reference alert/types.go)
@@ -621,7 +636,6 @@ def render_event_template(ev: AlertEvent, tmpl: str) -> str:
     Strings without '{{' pass through unchanged."""
     if "{{" not in tmpl:
         return tmpl
-    import re as _re
 
     def sub(m):
         expr = m.group(1).strip()
@@ -638,12 +652,12 @@ def render_event_template(ev: AlertEvent, tmpl: str) -> str:
             return ev.details
         if expr == ".TaskName":
             return ev.task_name
-        tm = _re.fullmatch(r'index\s+\.Tags\s+"(\w+)"', expr)
+        tm = re.fullmatch(r'index\s+\.Tags\s+"(\w+)"', expr)
         if tm:
             return str(ev.tags.get(tm.group(1), ""))
         raise ValueError(f"unsupported event template {expr!r}")
 
-    return _re.sub(r"\{\{(.+?)\}\}", sub, tmpl)
+    return re.sub(r"\{\{(.+?)\}\}", sub, tmpl)
 
 
 def mqtt_record(
@@ -841,42 +855,70 @@ def events_from_alert_df(
             f"events_from_alert_df: more than {limit} alert events — this "
             "looks like an unfiltered data stream, not an alert stream"
         )
-    out = []
-    for r in rows:
+    event = _event_builder(
+        time_col, dims, level_col, id_col, message_col, details_col,
+        duration_col, measurement, task_name, value_cols,
+    )
+    return [event(r) for r in rows]
+
+
+def _event_builder(
+    time_col, dims=(), level_col="level", id_col=None, message_col=None,
+    details_col=None, duration_col=None, measurement="", task_name="",
+    value_cols=(), default_id=None,
+) -> Callable:
+    """The one Row → :class:`AlertEvent` constructor, shared by
+    events_from_alert_df and the topic handlers. Without ``id_col`` the
+    id is ``default_id`` (a topic handler's spec id) or
+    ``<measurement>:<group>``; without ``message_col`` the message is
+    ``<id> is <level>``."""
+    cols = list(value_cols)
+
+    def event(r) -> AlertEvent:
         tags = {d: str(r[d]) for d in dims}
         t = r[time_col]
         if t.tzinfo is None:
             t = t.replace(tzinfo=dt.timezone.utc)
         group = ",".join(f"{k}={v}" for k, v in tags.items())
-        ev_id = (
-            str(r[id_col]) if id_col else
-            (f"{measurement}:{group}" if group else measurement)
+        if id_col:
+            ev_id = str(r[id_col])
+        elif default_id is not None:
+            ev_id = default_id
+        else:
+            ev_id = f"{measurement}:{group}" if group else measurement
+        return AlertEvent(
+            id=ev_id,
+            message=(
+                str(r[message_col]) if message_col
+                else f"{ev_id} is {r[level_col]}"
+            ),
+            time=t,
+            level=str(r[level_col]),
+            details=str(r[details_col]) if details_col else "",
+            duration_ns=int(r[duration_col]) if duration_col else 0,
+            task_name=task_name,
+            data={
+                "series": [
+                    {
+                        "name": measurement,
+                        "tags": tags,
+                        "columns": [time_col, *cols],
+                        "values": [[t, *[r[c] for c in cols]]],
+                    }
+                ]
+            },
         )
-        msg = str(r[message_col]) if message_col else f"{ev_id} is {r[level_col]}"
-        details = str(r[details_col]) if details_col else ""
-        cols = list(value_cols)
-        out.append(
-            AlertEvent(
-                id=ev_id,
-                message=msg,
-                time=t,
-                level=str(r[level_col]),
-                details=details,
-                duration_ns=int(r[duration_col]) if duration_col else 0,
-                task_name=task_name,
-                data={
-                    "series": [
-                        {
-                            "name": measurement,
-                            "tags": tags,
-                            "columns": [time_col, *cols],
-                            "values": [[t, *[r[c] for c in cols]]],
-                        }
-                    ]
-                },
-            )
-        )
-    return out
+
+    return event
+
+
+def _value_columns(columns, *attrs: str) -> list[str]:
+    """An event row's data columns (its series values after the time):
+    every column but the alert attributes ``attrs``, ``alert_id``,
+    ``topic``, ``name`` and internal ``__`` columns — at most four. One
+    rule for the TICK chains and the topic handlers."""
+    skip = {*attrs, "alert_id", "topic", "name"}
+    return [c for c in columns if c not in skip and not c.startswith("__")][:4]
 
 
 def post_payload(
@@ -902,3 +944,305 @@ def post_payload(
         import sys
 
         print(f"alert handler error for {url}: {e}", file=sys.stderr)
+
+
+# ------------------------------------------------------------------ #
+# the handler table: kind + options + service config → delivery
+# ------------------------------------------------------------------ #
+
+
+class HandlerConfigError(ValueError):
+    """A handler that cannot be built: an unknown kind, a missing service
+    setting or option, a missing transport callable, an email with no
+    recipients. Raised when the handler is BUILT, never mid-delivery."""
+
+
+class Handler(NamedTuple):
+    """A built handler. ``deliver`` takes a list of AlertEvents — or, for
+    the ``rows`` kinds (log/post/tcp/exec), the event Rows themselves,
+    which those handlers write out whole."""
+
+    deliver: Callable
+    rows: bool = False
+
+
+def option_name(name: str) -> str:
+    """The one option-name rule: TICK camelCase props (``routingKey``,
+    ``URLTitle``) and the reference's kebab-case spec options
+    (``routing-key``) → this repo's snake_case config keys."""
+    s = re.sub(r"(?<=[a-z0-9])(?=[A-Z])", "_", name)
+    s = re.sub(r"(?<=[A-Z])(?=[A-Z][a-z])", "_", s)
+    return s.replace("-", "_").lower()
+
+
+def build_handler(
+    kind: str, options: dict | None = None, services: dict | None = None
+) -> Handler:
+    """Build the delivery of one handler from the table: ``kind`` is a
+    :data:`HANDLERS` key, ``options`` its handler options (any spelling
+    :func:`option_name` maps), ``services`` the per-kind service sections
+    (``{"slack": {"url": ...}}``, keys matched case-insensitively).
+    Options override the section. Every config error raises
+    :class:`HandlerConfigError` here."""
+    if kind not in HANDLERS:
+        raise HandlerConfigError(
+            f"unsupported handler kind {kind!r} "
+            f"(supported: {', '.join(sorted(HANDLERS))})"
+        )
+    build, rows = HANDLERS[kind]
+    section = next(
+        (v for k, v in (services or {}).items() if k.lower() == kind), None
+    )
+    opts = {option_name(k): v for k, v in (options or {}).items()}
+    try:
+        return Handler(build(ChainMap(opts, dict(section or {}))), rows)
+    except HandlerConfigError as e:
+        raise HandlerConfigError(f"{kind}: {e}") from None
+
+
+def _need(o: ChainMap, key: str):
+    """``o[key]``, or HandlerConfigError naming what is missing."""
+    v = o.get(key)
+    if v is None or v == "":
+        raise HandlerConfigError(
+            f"no {key!r} in its options or service section"
+            + ("" if o.maps[-1] else " (no service section is configured)")
+        )
+    return v
+
+
+def _aslist(x) -> list:
+    return [x] if isinstance(x, str) else list(x or [])
+
+
+class _Blank(dict):
+    """format_map target: a missing key renders as ''."""
+
+    def __missing__(self, key):
+        return ""
+
+
+def _fields(fmt: Callable, o, *skip: str) -> dict:
+    """``fmt``'s keyword args read from the merged options/section under
+    their own names — a formatter's signature IS its option list. A
+    list-valued (tuple-defaulted) arg takes a single value too; a
+    required one defaults to ''."""
+    out = {}
+    for p in list(inspect.signature(fmt).parameters.values())[1:]:
+        if p.name in skip:
+            continue
+        if p.name in o:
+            v = o[p.name]
+            out[p.name] = _aslist(v) if isinstance(p.default, tuple) else v
+        elif p.default is p.empty:
+            out[p.name] = ""
+    return out
+
+
+def _poster(url: str, payload: Callable, headers: dict | None = None):
+    """deliver(events): POST ``payload(ev)`` to ``url`` per event; a
+    ``(path, body)`` payload POSTs ``body`` to ``url`` + ``path``."""
+
+    def deliver(events) -> None:
+        for ev in events:
+            body = payload(ev)
+            path, body = body if isinstance(body, tuple) else ("", body)
+            post_payload(url.rstrip("/") + path if path else url, body, headers)
+
+    return deliver
+
+
+def _http(fmt: Callable, path: str = "", headers=None, **per_event):
+    """The builder of a plain HTTP kind: POST ``fmt(ev, **kw)`` per event
+    to the section's url plus ``path`` (rendered over the options and
+    section). ``kw`` is _fields(fmt) plus the ``per_event`` args, each
+    computed from the event; ``headers(o)`` builds the request headers."""
+
+    def build(o):
+        url = _need(o, "url")
+        if path:
+            url = url.rstrip("/") + path.format_map(_Blank(o))
+        kw = _fields(fmt, o, *per_event)
+        return _poster(
+            url,
+            lambda ev: fmt(ev, **kw, **{k: f(ev) for k, f in per_event.items()}),
+            headers(o) if headers else None,
+        )
+
+    return build
+
+
+def _auth(scheme: str, key: str) -> Callable:
+    """headers(o): ``Authorization: <scheme> <o[key]>``, none if unset."""
+    return lambda o: {"Authorization": f"{scheme} {o[key]}"} if o.get(key) else {}
+
+
+_bearer = _auth("Bearer", "token")
+
+
+def _slack(o):
+    ws = o.get("workspace")
+    if ws:
+        section = o.maps[-1]
+        o = ChainMap(o.maps[0], (section.get("workspaces") or {}).get(ws, section))
+    return _http(slack_payload, headers=_bearer)(o)
+
+
+def _pagerduty(o):
+    post = _http(pagerduty_payload, incident_key=lambda ev: ev.id)(o)
+    # the v1 API has no INFO: the reference logs and skips those events
+    return lambda events: post([ev for ev in events if ev.level != "INFO"])
+
+
+def _pagerduty2(o):
+    # .link(href[, text]) calls append (pipeline/alert.go:1166); a spec
+    # carries the same entries as links: [{href, text}]
+    links = [
+        {"href": l[0], "text": l[1] if len(l) > 1 else ""}
+        for l in o.get("link", [])
+    ] + list(o.get("links") or [])
+    return _http(pagerduty2_payload)(ChainMap({"links": links or None}, o))
+
+
+def _teams(o):
+    # .channelURL() / channel-url overrides the configured webhook
+    return _poster(o.get("channel_url") or _need(o, "url"), teams_payload)
+
+
+def _pushover(o):
+    # the section's url is the API endpoint; a handler's .URL() / url
+    # option is the supplementary link shown with the message
+    kw = {**_fields(pushover_payload, o), "url": o.maps[0].get("url", "")}
+    return _poster(
+        _need(ChainMap(o.maps[-1]), "url"), partial(pushover_payload, **kw)
+    )
+
+
+def _alerta(o):
+    # the handler option is .services(); the formatter's arg is service
+    return _http(
+        alerta_payload, "/alert",
+        lambda c: {"Authorization": (
+            f"{c.get('token_prefix', 'Bearer')} {c.get('token', '')}"
+        )},
+    )(ChainMap({"service": o.get("services", ())}, o))
+
+
+def _servicenow(o):
+    kw = {**_fields(servicenow_event, o), "type_": o.get("type", "")}
+    return _poster(
+        _need(o, "url"),
+        lambda ev: {"records": [servicenow_event(ev, **kw)]},
+    )
+
+
+def _email(o):
+    # SMTP is external: the section's send(email.message.Message) is the
+    # smtplib send_message seam. Recipients: the handler's .email(to...)
+    # and .to() entries, else the section's to
+    send = _need(o, "send")
+    to = (
+        _aslist(o.maps[0].get("_arg")) + _aslist(o.maps[0].get("to"))
+        or _aslist(o.maps[-1].get("to"))
+    )
+    if not to:
+        raise HandlerConfigError("no recipients")
+
+    def deliver(events) -> None:
+        for ev in events:
+            send(email_message(ev, to=to, from_=o.get("from", "")))
+
+    return deliver
+
+
+def _kafka(o):
+    # the broker is external: produce(topic, partition, key, value)
+    produce = _need(o, "produce")
+    topic = o.get("kafka_topic") or o.get("topic", "")
+    nparts = int(o.get("partitions", 1))
+    algo = o.get("partition_algorithm", "crc32")
+    by_id = o.get("partition_by_id", True) and nparts > 1
+    tmpl = o.get("template")
+
+    def deliver(events) -> None:
+        for ev in events:
+            # the reference executes .template() per alert
+            # (services/kafka/service.go:407-410)
+            rec = kafka_record(
+                ev, topic,
+                None if tmpl is None else render_event_template(ev, tmpl),
+            )
+            part = kafka_partition(rec["key"], nparts, algo) if by_id else 0
+            produce(rec["topic"], part, rec["key"], rec["value"])
+
+    return deliver
+
+
+def _snmptrap(o):
+    # BER wire encoding is external: send(varbinds)
+    send = _need(o, "send")
+    trap_oid = o.get("_arg") or o.get("trap_oid", "")
+    data = o.get("data") or []
+
+    def deliver(events) -> None:
+        for ev in events:
+            # .data() VALUES are templates executed per event
+            # (services/snmptrap/service.go:220-246)
+            rows = [
+                (oid, typ, render_event_template(ev, str(value)))
+                for oid, typ, value in data
+            ]
+            send(snmptrap_varbinds(ev, trap_oid, rows))
+
+    return deliver
+
+
+def _mqtt(o):
+    # the broker is external: publish(topic, qos, retained, payload), the
+    # reference's mqtttest client seam
+    publish = _need(o, "publish")
+    topic = o.get("_arg") or o.get("topic", "")
+    qos, retained = int(o.get("qos", 0)), bool(o.get("retained", False))
+
+    def deliver(events) -> None:
+        for ev in events:
+            rec = mqtt_record(ev, topic, qos=qos, retained=retained)
+            publish(rec["topic"], rec["qos"], rec["retained"], rec["payload"])
+
+    return deliver
+
+
+#: The one alert-handler table: the reference's lower-case kind →
+#: (builder of its delivery from the merged options/section, whether the
+#: delivery takes the event Rows instead of AlertEvents). Its keys are
+#: the only list of handler kinds.
+HANDLERS: dict[str, tuple[Callable, bool]] = {
+    "slack": (_slack, False),
+    "victorops": (_http(victorops_payload, "/{api_key}/{routing_key}"), False),
+    "pagerduty": (_pagerduty, False),
+    "pagerduty2": (_pagerduty2, False),
+    "opsgenie": (_http(opsgenie_payload), False),
+    "opsgenie2": (
+        _http(opsgenie2_payload, headers=_auth("GenieKey", "api_key")), False
+    ),
+    "telegram": (_http(telegram_payload, "/bot{token}/sendMessage"), False),
+    "teams": (_teams, False),
+    "talk": (_http(talk_payload), False),
+    "discord": (_http(discord_payload), False),
+    "hipchat": (
+        _http(hipchat_payload, "/{room}/notification?auth_token={token}"),
+        False,
+    ),
+    "pushover": (_pushover, False),
+    "alerta": (_alerta, False),
+    "sensu": (_http(sensu_payload, name=lambda ev: ev.id), False),
+    "servicenow": (_servicenow, False),
+    "zenoss": (_http(zenoss_event), False),
+    "bigpanda": (_http(bigpanda_payload, headers=_bearer), False),
+    "email": (_email, False),
+    "kafka": (_kafka, False),
+    "snmptrap": (_snmptrap, False),
+    "mqtt": (_mqtt, False),
+    **{k: (partial(sinks.alert_sink, k), True)
+       for k in ("log", "post", "tcp", "exec")},
+}

@@ -417,7 +417,7 @@ class TaskStoreService:
         return self._LEVELS.index(v), None
 
     def _validate_handler(self, body: dict):
-        from kapacitor_spark.topics import SPEC_HANDLER_KINDS
+        from kapacitor_spark.handlers import HANDLERS
 
         hid = body.get("id", "")
         if not hid or not _VALID_ID.match(hid):
@@ -425,10 +425,10 @@ class TaskStoreService:
         kind = body.get("kind")
         if not kind:
             return "handler kind required"
-        if kind not in SPEC_HANDLER_KINDS:
+        if kind not in HANDLERS:
             return (
                 f"unsupported handler kind {kind!r} "
-                f"(supported: {sorted(SPEC_HANDLER_KINDS)})"
+                f"(supported: {sorted(HANDLERS)})"
             )
         match = body.get("match", "")
         if match:
@@ -606,16 +606,21 @@ class TaskStoreService:
         (the reference's Topics.Collect → handler fan-out,
         alert/topics.go). Specs build their delivery callables through
         topics.register_handler_spec — the same path the YAML
-        define-topic-handler contract uses — so match conditions, kind
-        formatters and service configs behave identically whether a
-        handler arrived via REST or via code.
+        define-topic-handler contract uses, over the one handler table
+        that TICK chains build through too (handlers.HANDLERS: every
+        kind is accepted) — so match conditions, kind formatters and
+        service configs behave identically whether a handler arrived via
+        REST, via code or as a TICK chain. Handlers run per partition
+        where the registry dispatches them, and so does any transport
+        callable injected through ``services``.
 
         ``prev_level_col``: the previous-level column match ``changed()``
         conditions read; defaults to ``"prev"`` when the DataFrame has
         one. A spec whose callable cannot be built (missing option,
-        unconfigured service) is SKIPPED with a warning instead of
-        aborting delivery for every other handler — a page must not be
-        dropped because an unrelated handler is misconfigured.
+        unconfigured service, a ``changed()`` match with no previous-level
+        column) is SKIPPED with a warning instead of aborting delivery
+        for every other handler — a page must not be dropped because an
+        unrelated handler is misconfigured.
 
         Returns the list of (handler_key, error) pairs skipped."""
         from kapacitor_spark.topics import (

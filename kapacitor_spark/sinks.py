@@ -203,6 +203,31 @@ def tcp_handler(host: str, port: int) -> Callable:
     return send
 
 
+def alert_sink(kind: str, options) -> Callable:
+    """The log/post/tcp/exec alert handlers built from the reference's
+    topic-spec options: ``log {path}``, ``post {url[, tolerant]}``,
+    ``tcp {address}``, ``exec {prog[, args]}`` (``prog`` may also be the
+    whole argv list). TICK's ``.log(path)``/``.post(url)``/``.tcp(addr)``/
+    ``.exec(prog, args...)`` map their positional args onto the same
+    names. A missing option raises handlers.HandlerConfigError."""
+    from kapacitor_spark.handlers import HandlerConfigError
+
+    need = {"log": "path", "post": "url", "tcp": "address", "exec": "prog"}[kind]
+    target = options.get(need)
+    if not target:
+        raise HandlerConfigError(f"no {need!r} option")
+    if kind == "log":
+        return log_handler(target)
+    if kind == "post":
+        return http_post(target, tolerant=bool(options.get("tolerant")))
+    if kind == "tcp":
+        host, _, port = target.rpartition(":")
+        return tcp_handler(host, int(port))
+    if isinstance(target, (list, tuple)):
+        return exec_handler(list(target))
+    return exec_handler([target, *options.get("args", [])])
+
+
 def apply_sink(df: DataFrame, handler: Callable) -> None:
     """Run a handler over a batch DataFrame (executor-side)."""
     df.foreachPartition(handler)

@@ -51,6 +51,7 @@ from typing import Any, Callable, NamedTuple
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kapacitor_spark import handlers as H
 from kapacitor_spark.durations import parse_duration
 from kapacitor_spark.functions.lambdas import (
     compile_lambda,
@@ -71,13 +72,6 @@ class TickError(ValueError):
     pass
 
 
-# alert-node service handler kinds (pipeline/alert.go:39-61 chain list)
-_ALERT_HANDLER_KINDS = {
-    "slack", "victorOps", "pagerDuty", "pagerDuty2", "opsGenie", "opsGenie2",
-    "telegram", "teams", "talk", "hipChat", "discord", "pushover", "alerta",
-    "sensu", "serviceNow", "zenoss", "bigPanda", "email", "snmpTrap", "kafka",
-    "mqtt",
-}
 # alert-node OWN props — anything here closes a pending handler spec
 _ALERT_LEVEL_PROPS = {
     "crit", "warn", "info", "critReset", "warnReset", "infoReset",
@@ -86,16 +80,26 @@ _ALERT_LEVEL_PROPS = {
     "topic", "id", "message", "messageField", "details", "detailsField",
     "inhibit", "log", "post", "tcp", "exec",
 }
-_ALERT_SINKS = ("log", "post", "tcp", "exec")
+# the alert node's own sink props → the spec option their first
+# positional arg maps to (the rest ride as ``args``: .exec(prog, args...))
+_ALERT_SINKS = {"log": "path", "post": "url", "tcp": "address", "exec": "prog"}
 # Option names that collide with handler-kind names: while a spec of the
 # keyed kind is open, these parse as ITS options, not a new handler —
 # .opsGenie2().teams('t1') routes teams to OpsGenie, not MS-Teams
 # (reference pipeline/alert.go:1957,2043 — the typed receiver disambiguates
 # there; the flat prop scan needs this whitelist).
 _HANDLER_KIND_OPTIONS = {
-    "opsGenie": {"teams", "recipients"},
-    "opsGenie2": {"teams", "recipients"},
+    "opsgenie": {"teams", "recipients"},
+    "opsgenie2": {"teams", "recipients"},
 }
+
+
+def _handler_kind(name: str) -> bool:
+    """Does prop ``name`` open a service-handler chain? Its lower-cased
+    name is a kind of the one handler table (handlers.HANDLERS), other
+    than the alert node's own .log/.post/.tcp/.exec sink props."""
+    kind = name.lower()
+    return kind in H.HANDLERS and kind not in _ALERT_SINKS
 
 
 def _parse_handler_specs(props) -> list[tuple[str, dict]]:
@@ -119,7 +123,7 @@ def _parse_handler_specs(props) -> list[tuple[str, dict]]:
             # the MS-Teams handler itself (its options are config-
             # driven), so only an argumented call binds as an option.
             current[name] = args[0] if len(args) == 1 else list(args)
-        elif name in _ALERT_HANDLER_KINDS:
+        elif _handler_kind(name):
             # the kind call's own positional args ride as '_arg'
             # (.mqtt(topic) takes one, .email(to...) is variadic —
             # pipeline/alert.go:1376, :1493)
@@ -127,29 +131,24 @@ def _parse_handler_specs(props) -> list[tuple[str, dict]]:
                 {"_arg": args[0] if len(args) == 1 else list(args)}
                 if args else {}
             )
-            cur_kind = name
+            cur_kind = name.lower()
             specs.append((name, current))
         elif current is not None and name not in _ALERT_LEVEL_PROPS:
-            val = args[0] if len(args) == 1 else list(args)
-            if name in ("data", "link") and name in current:
-                # multi-arg APPEND options ("Multiple calls append",
-                # pipeline/alert.go .Data/.Link): list of entries
-                prev = current[name]
-                if not (prev and isinstance(prev[0], (list, tuple))):
-                    prev = [prev]
-                prev.append(val)
-                current[name] = prev
-            elif name == "to" and name in current:
-                # flat-append option (.to(a).to(b).to(c) — alert.go
-                # Email/To docs: "Multiple calls append")
-                prev = current[name]
-                flat = prev if isinstance(prev, list) else [prev]
-                flat.extend(val if isinstance(val, list) else [val])
-                current[name] = flat
+            if name in ("data", "link"):
+                # each call appends one entry (pipeline/alert.go
+                # .Data/.Link: "Multiple calls append")
+                current.setdefault(name, []).append(list(args))
+            elif name == "to":
+                # .to(a).to(b, c) appends recipients (alert.go Email/To)
+                current.setdefault(name, []).extend(args)
             else:
                 # every other option overwrites (last wins), like the
-                # reference's plain property setters
-                current[name] = val
+                # reference's plain property setters; a zero-arg option
+                # is a flag (.disableNotification(), .retained())
+                current[name] = (
+                    True if not args else args[0] if len(args) == 1
+                    else list(args)
+                )
         else:
             current = None
             cur_kind = None
@@ -172,7 +171,7 @@ class _AlertProps(NamedTuple):
     machine: dict  # level/reset lambdas + emission knobs + duration_field
     augment: dict  # Pipeline._alert_augment kwargs
     specs: list    # service-handler chains (_parse_handler_specs)
-    sinks: list    # .log/.post/.tcp/.exec props, in script order
+    sinks: list    # .log/.post/.tcp/.exec props as spec options, in order
 
 
 def _alert_props(props, lam) -> _AlertProps:
@@ -221,369 +220,63 @@ def _alert_props(props, lam) -> _AlertProps:
     )
     return _AlertProps(
         machine, augment, _parse_handler_specs(props),
-        [(n, a) for n, a in props if n in _ALERT_SINKS],
+        [
+            (n, {_ALERT_SINKS[n]: (a or [None])[0], "args": list(a[1:])})
+            for n, a in props if n in _ALERT_SINKS
+        ],
     )
 
 
-def _deliver_alerts(df, dims, time_col, services, a: _AlertProps):
-    """Deliver an alert DataFrame through the node's sinks and
-    service-handler chains (pipeline/alert.go handler list →
-    services/<kind>) — the batch compile calls it on the alert output,
-    the live compile once per micro-batch.
+def _build_handlers(a: _AlertProps, services) -> list:
+    """Build the node's .log/.post/.tcp/.exec sinks and service-handler
+    chains through the one handler table (handlers.build_handler), at
+    compile: a config error is a TickError here, never a failed
+    delivery."""
+    built = []
+    for name, opts in [*a.sinks, *a.specs]:
+        try:
+            built.append(H.build_handler(name.lower(), opts, services))
+        except H.HandlerConfigError as e:
+            raise TickError(
+                f"alert handler .{name}(): {e} (service sections come from "
+                f"alert_services={{{name!r}: {{...}}}})"
+            ) from None
+    return built
 
-    Sinks run executor-side. Handler events are collected locally (tiny
-    by construction — the filtered alert output) and each spec renders
-    through the matching kapacitor_spark.handlers formatter; delivery is
-    handlers.post_payload against the URL from
-    ``alert_services={kind: cfg}`` (the reference's service config
-    section). Unconfigured kinds raise — a silently dropped page is the
-    one failure mode alerting must not have."""
-    from kapacitor_spark import handlers as H
+
+def _deliver_alerts(df, dims, time_col, a: _AlertProps, built: list):
+    """Deliver an alert DataFrame through the node's ``built`` handlers
+    (_build_handlers) — on the batch alert output, or once per live
+    micro-batch. Sinks run executor-side over the rows; service handlers
+    get the events collected locally (tiny by construction)."""
     from kapacitor_spark import sinks as S
 
-    for name, args in a.sinks:
-        if name == "log":
-            S.apply_sink(df, S.log_handler(args[0]))
-        elif name == "post":
-            S.apply_sink(df, S.http_post(args[0]))
-        elif name == "tcp":
-            host, _, port = args[0].rpartition(":")
-            S.apply_sink(df, S.tcp_handler(host, int(port)))
-        else:
-            S.apply_sink(df, S.exec_handler(list(args)))
-    if not a.specs:
-        return
     level_col = a.augment["level_col"]
     msg_col = a.augment["message_field"]
     det_col = a.augment["details_field"]
-    value_cols = [
-        c for c in df.columns
-        if c not in (time_col, level_col, "alert_id", msg_col, det_col,
-                     "topic", "name", *dims)
-        and not c.startswith("__")
-    ]
-    # OK rows pass through: the alert node's events_only/stateChangesOnly
-    # logic already restricts OK to genuine recovery transitions, and the
-    # reference delivers those to handlers (pagerduty2 'resolve', opsGenie2
-    # close, victorops RECOVERY — streamer_test.go expects alert.OK events)
-    events = H.events_from_alert_df(
-        df,
-        time_col,
-        dims=dims,
-        level_col=level_col,
-        id_col="alert_id" if "alert_id" in df.columns else None,
-        message_col=msg_col if msg_col in df.columns else None,
-        details_col=det_col if det_col in df.columns else None,
-        duration_col=a.machine["duration_field"],
-        measurement="",
-        value_cols=value_cols[:4],
-    )
-    for kind, opts in a.specs:
-        cfg = dict(services.get(kind) or {})
-        if not cfg:
-            raise TickError(
-                f"alert handler .{kind}() used but no config passed via "
-                f"run_tickscript(alert_services={{{kind!r}: {{...}}}})"
+    events = None
+    for h in built:
+        if h.rows:
+            S.apply_sink(df, h.deliver)
+            continue
+        if events is None:
+            # OK rows pass through: the alert node's events_only/
+            # stateChangesOnly logic already restricts OK to genuine
+            # recovery transitions, and the reference delivers those to
+            # handlers (pagerduty2 'resolve', opsGenie2 close, victorops
+            # RECOVERY — streamer_test.go expects alert.OK events)
+            cols = df.columns
+            events = H.events_from_alert_df(
+                df, time_col, dims=dims, level_col=level_col,
+                id_col="alert_id" if "alert_id" in cols else None,
+                message_col=msg_col if msg_col in cols else None,
+                details_col=det_col if det_col in cols else None,
+                duration_col=a.machine["duration_field"],
+                value_cols=H._value_columns(
+                    cols, time_col, level_col, msg_col, det_col, *dims
+                ),
             )
-        if kind == "slack":
-            ws = opts.get("workspace", "")
-            c = (cfg.get("workspaces", {}) or {}).get(ws, cfg) if ws else cfg
-            headers = (
-                {"Authorization": f"Bearer {c['token']}"} if c.get("token") else {}
-            )
-            for ev in events:
-                H.post_payload(
-                    c["url"],
-                    H.slack_payload(
-                        ev,
-                        channel=opts.get("channel", c.get("channel", "")),
-                        username=opts.get("username", c.get("username", "kapacitor")),
-                        icon_emoji=opts.get("iconEmoji", c.get("icon_emoji", "")),
-                    ),
-                    headers,
-                )
-        elif kind == "victorOps":
-            rk = opts.get("routingKey", cfg.get("routing_key", ""))
-            base = cfg["url"].rstrip("/")
-            for ev in events:
-                H.post_payload(
-                    f"{base}/{cfg.get('api_key', '')}/{rk}",
-                    H.victorops_payload(ev, json_data=cfg.get("json_data", False)),
-                )
-        elif kind == "pagerDuty2":
-            rk = opts.get("routingKey", cfg.get("routing_key", ""))
-            # .link(href[, text]) entries append (pipeline/alert.go:1166)
-            raw_links = opts.get("link", [])
-            if isinstance(raw_links, str):
-                raw_links = [[raw_links]]  # single .link('href')
-            elif raw_links and not isinstance(raw_links[0], (list, tuple)):
-                raw_links = [raw_links]    # single .link('href', 'text')
-            links = [
-                {"href": l[0] if isinstance(l, (list, tuple)) else l,
-                 "text": (l[1] if isinstance(l, (list, tuple)) and len(l) > 1
-                          else "")}
-                for l in raw_links
-            ]
-            for ev in events:
-                H.post_payload(
-                    cfg["url"],
-                    H.pagerduty2_payload(
-                        ev, routing_key=rk,
-                        client_url=cfg.get("client_url", ""),
-                        links=links or None,
-                    ),
-                )
-        elif kind == "telegram":
-            for ev in events:
-                H.post_payload(
-                    f"{cfg['url'].rstrip('/')}/bot{cfg.get('token', '')}/sendMessage",
-                    H.telegram_payload(
-                        ev,
-                        chat_id=opts.get("chatId", cfg.get("chat_id", "")),
-                        parse_mode=opts.get("parseMode", cfg.get("parse_mode", "")),
-                        disable_web_page_preview=bool(
-                            opts.get("disableWebPagePreview",
-                                     cfg.get("disable_web_page_preview", False))
-                        ),
-                        disable_notification=bool(
-                            opts.get("disableNotification",
-                                     cfg.get("disable_notification", False))
-                        ),
-                    ),
-                )
-        elif kind == "teams":
-            for ev in events:
-                H.post_payload(
-                    opts.get("channelURL", cfg["url"]), H.teams_payload(ev)
-                )
-        elif kind == "talk":
-            for ev in events:
-                H.post_payload(
-                    cfg["url"],
-                    H.talk_payload(ev, author_name=cfg.get("author_name", "Kapacitor")),
-                )
-        elif kind == "discord":
-            for ev in events:
-                H.post_payload(
-                    cfg["url"],
-                    H.discord_payload(
-                        ev, username=opts.get("username", cfg.get("username", "kapacitor"))
-                    ),
-                )
-        elif kind == "hipChat":
-            room = opts.get("room", cfg.get("room", ""))
-            token = opts.get("token", cfg.get("token", ""))
-            for ev in events:
-                H.post_payload(
-                    f"{cfg['url'].rstrip('/')}/{room}/notification?auth_token={token}",
-                    H.hipchat_payload(ev),
-                )
-        elif kind == "pushover":
-            for ev in events:
-                H.post_payload(
-                    cfg["url"],
-                    H.pushover_payload(
-                        ev, token=cfg.get("token", ""),
-                        user_key=opts.get("userKey", cfg.get("user_key", "")),
-                        device=opts.get("device", ""),
-                        title=opts.get("title", ""),
-                        url=opts.get("URL", ""),
-                        url_title=opts.get("URLTitle", ""),
-                        sound=opts.get("sound", ""),
-                    ),
-                )
-        elif kind == "opsGenie2":
-            headers = {"Authorization": f"GenieKey {cfg.get('api_key', '')}"}
-            teams_ = opts.get("teams", cfg.get("teams", []))
-            recips = opts.get("recipients", cfg.get("recipients", []))
-            for ev in events:
-                path, payload = H.opsgenie2_payload(
-                    ev,
-                    teams=teams_ if isinstance(teams_, list) else [teams_],
-                    recipients=recips if isinstance(recips, list) else [recips],
-                )
-                H.post_payload(cfg["url"].rstrip("/") + path, payload, headers)
-        elif kind == "alerta":
-            headers = {
-                "Authorization": f"{cfg.get('token_prefix', 'Bearer')} "
-                                 f"{opts.get('token', cfg.get('token', ''))}"
-            }
-            for ev in events:
-                H.post_payload(
-                    cfg["url"].rstrip("/") + "/alert",
-                    H.alerta_payload(
-                        ev,
-                        resource=opts.get("resource", ""),
-                        event=opts.get("event", ""),
-                        environment=opts.get(
-                            "environment", cfg.get("environment", "")
-                        ),
-                        group=opts.get("group", ""),
-                        value=opts.get("value", ""),
-                        origin=opts.get("origin", cfg.get("origin", "Kapacitor")),
-                        service=opts.get("services", []),
-                    ),
-                    headers,
-                )
-        elif kind == "bigPanda":
-            headers = (
-                {"Authorization": f"Bearer {cfg['token']}"}
-                if cfg.get("token") else {}
-            )
-            for ev in events:
-                H.post_payload(
-                    cfg["url"],
-                    H.bigpanda_payload(
-                        ev,
-                        app_key=opts.get("appKey", cfg.get("app_key", "")),
-                        primary_property=opts.get(
-                            "primaryProperty", cfg.get("primary_property", "")
-                        ),
-                        secondary_property=opts.get(
-                            "secondaryProperty", cfg.get("secondary_property", "")
-                        ),
-                    ),
-                    headers,
-                )
-        elif kind == "serviceNow":
-            for ev in events:
-                H.post_payload(
-                    cfg["url"],
-                    {"records": [
-                        H.servicenow_event(
-                            ev,
-                            source=opts.get("source", cfg.get("source", "Kapacitor")),
-                            node=opts.get("node", ""),
-                            type_=opts.get("type", ""),
-                            resource=opts.get("resource", ""),
-                            metric_name=opts.get("metricName", ""),
-                            message_key=opts.get("messageKey", ""),
-                        )
-                    ]},
-                )
-        elif kind == "zenoss":
-            for ev in events:
-                H.post_payload(
-                    cfg["url"],
-                    H.zenoss_event(
-                        ev,
-                        device=opts.get("device", ""),
-                        component=opts.get("component", ""),
-                        event_class=opts.get(
-                            "eventClass", cfg.get("event_class", "")
-                        ),
-                        collector=opts.get("collector", cfg.get("collector", "")),
-                    ),
-                )
-        elif kind == "email":
-            # .email('to'...) — SMTP transport is external: the config
-            # supplies ``send(email.message.Message)`` (smtplib
-            # send_message seam); the message itself is the golden-tested
-            # handlers.email_message format
-            send = cfg.get("send")
-            if send is None:
-                raise TickError(
-                    "alert handler .email(): pass a send callable via "
-                    "alert_services={'email': {'send': fn, 'from': ..., "
-                    "'to': [...]}} — SMTP transport is external"
-                )
-            def _aslist(x):
-                return [x] if isinstance(x, str) else list(x or [])
-
-            to = (
-                _aslist(opts.get("_arg"))
-                + _aslist(opts.get("to"))
-                + ([] if ("_arg" in opts or "to" in opts)
-                   else _aslist(cfg.get("to")))
-            )
-            if not to:
-                raise TickError("alert handler .email(): no recipients")
-            for ev in events:
-                send(H.email_message(ev, to=to, from_=cfg.get("from", "")))
-        elif kind == "kafka":
-            # .kafka().cluster(c).template(t) — broker transport external:
-            # config supplies ``produce(topic, partition, key, value)``;
-            # record format + partitionById mapping are the golden-tested
-            # handlers.kafka_record / kafka_partition
-            produce = cfg.get("produce")
-            if produce is None:
-                raise TickError(
-                    "alert handler .kafka(): pass a produce callable via "
-                    "alert_services={'kafka': {'produce': fn, 'topic': ..., "
-                    "'partitions': N}} — the broker transport is external"
-                )
-            topic = opts.get("kafkaTopic", cfg.get("topic", ""))
-            nparts = int(cfg.get("partitions", 1))
-            algo = cfg.get("partition_algorithm", "crc32")
-            tmpl = opts.get("template")
-            for ev in events:
-                rec = H.kafka_record(
-                    ev, topic,
-                    # the reference executes .template() per alert
-                    # (services/kafka/service.go:407-410)
-                    template_message=(
-                        H.render_event_template(ev, tmpl)
-                        if tmpl is not None else None
-                    ),
-                )
-                part = (
-                    H.kafka_partition(rec["key"], nparts, algo)
-                    if cfg.get("partition_by_id", True) and nparts > 1
-                    else 0
-                )
-                produce(rec["topic"], part, rec["key"], rec["value"])
-        elif kind == "snmpTrap":
-            # .snmpTrap('oid').data(oid, type, value)... — wire encoding
-            # (BER) external: config supplies ``send(varbinds)``; the
-            # varbind list is the golden-tested handlers.snmptrap_varbinds
-            send = cfg.get("send")
-            if send is None:
-                raise TickError(
-                    "alert handler .snmpTrap(): pass a send callable via "
-                    "alert_services={'snmpTrap': {'send': fn}} — the SNMP "
-                    "wire transport is external"
-                )
-            trap_oid = opts.get("_arg", cfg.get("trap_oid", ""))
-            data = opts.get("data", [])
-            if data and not isinstance(data[0], (list, tuple)):
-                data = [tuple(data)]
-            for ev in events:
-                # .data() VALUES are templates executed per event
-                # (services/snmptrap/service.go:220-246)
-                rows = [
-                    (oid, typ, H.render_event_template(ev, str(value)))
-                    for oid, typ, value in (tuple(d) for d in data)
-                ]
-                send(H.snmptrap_varbinds(ev, trap_oid, rows))
-        elif kind == "mqtt":
-            # .mqtt('topic').qos(n).retained(): the broker transport is
-            # external (like kafka) — the config supplies ``publish``
-            # (topic, qos, retained, payload) just as the reference's
-            # mqtttest client seam does
-            publish = cfg.get("publish")
-            if publish is None:
-                raise TickError(
-                    "alert handler .mqtt(): pass a publish callable via "
-                    "alert_services={'mqtt': {'publish': fn}} — the broker "
-                    "transport itself is external"
-                )
-            topic = opts.get("_arg", opts.get("topic", cfg.get("topic", "")))
-            for ev in events:
-                rec = H.mqtt_record(
-                    ev,
-                    topic,
-                    qos=int(opts.get("qos", cfg.get("qos", 0))),
-                    retained=bool(opts.get("retained", cfg.get("retained", False))),
-                )
-                publish(rec["topic"], rec["qos"], rec["retained"], rec["payload"])
-        else:
-            raise TickError(
-                f"alert handler .{kind}(): payload formatter exists in "
-                "kapacitor_spark.handlers — call it directly with "
-                "events_from_alert_df (TICK-chain delivery covers the HTTP "
-                "services plus mqtt/kafka/snmpTrap/email via injected "
-                "transport callables in alert_services)"
-            )
+        h.deliver(events)
 
 
 # --------------------------------------------------------------------- #
@@ -1740,10 +1433,11 @@ class _Env:
 
     def _mk_alert(self, p: Pipeline, node: _Node) -> Pipeline:
         a = _alert_props(node.props, lambda v: self._lam(p, v))
+        built = _build_handlers(a, self.alert_services)
         out = p.alert(**a.machine, **a.augment)
         _deliver_alerts(
-            out.df, [d for d in out.dims if d != "name"], self.time_col,
-            self.alert_services or {}, a,
+            out.df, [d for d in out.dims if d != "name"], self.time_col, a,
+            built,
         )
         return out
 
@@ -2272,7 +1966,7 @@ class _StreamEnv(_Env):
 
         cur = None
         for n, _a in node.props:
-            if n in _ALERT_HANDLER_KINDS:
+            if _handler_kind(n):
                 cur = n
             elif n in _ALERT_LEVEL_PROPS:
                 cur = None  # spec-closing alert-own prop
@@ -2366,19 +2060,12 @@ class _StreamEnv(_Env):
             p = _Aggregated(p.df, p.time_col, p.dims)
         if not a.specs and not a.sinks:
             return p
-        services = self.alert_services or {}
-        for kind, _opts in a.specs:
-            if not services.get(kind):
-                raise TickError(
-                    f"alert handler .{kind}() used but no config passed "
-                    f"via run_tickscript_stream(alert_services="
-                    f"{{{kind!r}: {{...}}}})"
-                )
+        built = _build_handlers(a, self.alert_services)
         hdims = [d for d in src.dims if d != "name"]
 
         def handler_fn(batch_df, _batch_id):
             if not batch_df.isEmpty():
-                _deliver_alerts(batch_df, hdims, self.time_col, services, a)
+                _deliver_alerts(batch_df, hdims, self.time_col, a, built)
 
         p.df._ks_alert_handler_fn = handler_fn
         self.handler_fns.append(handler_fn)

@@ -28,18 +28,10 @@ __all__ = [
     "publish_to_topics",
     "match_filter",
     "register_handler_spec",
-    "SPEC_HANDLER_KINDS",
 ]
 
 # alert.Level severity order (reference alert/types.go)
 _LEVEL_SEVERITY = {"OK": 0, "INFO": 1, "WARNING": 2, "CRITICAL": 3}
-
-#: handler kinds register_handler_spec can build delivery callables for
-#: (other reference services deliver via kapacitor_spark.handlers
-#: formatters directly) — the REST layer validates against this set
-SPEC_HANDLER_KINDS = frozenset(
-    {"log", "post", "exec", "tcp", "slack", "victorops", "pagerduty2"}
-)
 
 
 class TopicRegistry:
@@ -249,8 +241,6 @@ def match_filter(
                 out_toks.append("true")
             elif text == "FALSE":
                 out_toks.append("false")
-            elif text in ("AND", "OR", "NOT"):
-                out_toks.append(text)
             else:
                 out_toks.append(text)
         elif kind == "op":
@@ -263,10 +253,8 @@ def match_filter(
     return events.withColumn("__sev", sev).filter(F.expr(expr)).drop("__sev")
 
 
-import re as _re
-
-_VALID_HANDLER_ID = _re.compile(r"^[-\._A-Za-z0-9]+$")
-_VALID_TOPIC_ID = _re.compile(r"^[-:\._A-Za-z0-9]+$")
+_VALID_HANDLER_ID = _match_re.compile(r"^[-\._A-Za-z0-9]+$")
+_VALID_TOPIC_ID = _match_re.compile(r"^[-:\._A-Za-z0-9]+$")
 
 
 def register_handler_spec(
@@ -279,20 +267,24 @@ def register_handler_spec(
     (/root/reference/services/alert/types.go HandlerSpec +
     api.go RegisterHandlerSpec): a spec dict
     ``{"id", "topic", "kind", "options": {...}, "match": "..."}`` —
-    exactly the YAML/JSON the reference CLI accepts — validates, builds a
-    delivery callable from the kind (the handlers-module formatter for
-    service kinds; log/post/exec/tcp via sinks), wraps it in the optional
-    match condition, and subscribes it to the topic.
+    exactly the YAML/JSON the reference CLI accepts — validates, builds
+    its delivery through the one handler table (handlers.build_handler:
+    every kind in handlers.HANDLERS, options in the reference's
+    kebab-case or TICK's camelCase), wraps it in the optional match
+    condition, and subscribes it to the topic. Every config error —
+    unknown kind, missing service setting or transport callable, a
+    ``changed()`` match without ``prev_level_col`` — raises here.
 
     ``services``: per-kind base configs ({"slack": {"url": ...}}), the
-    reference's config-file sections.
+    reference's config-file sections. The handler runs wherever
+    TopicRegistry.dispatch runs it — per partition, on the executors —
+    and so does an injected transport callable (email ``send``, kafka
+    ``produce``, mqtt ``publish``, snmpTrap ``send``).
     """
     from kapacitor_spark import handlers as H
 
     spec_id = spec.get("id", "")
     topic = spec.get("topic", "")
-    kind = spec.get("kind", "")
-    options = dict(spec.get("options") or {})
     match = spec.get("match", "")
     if not _VALID_TOPIC_ID.match(topic):
         raise ValueError(
@@ -304,88 +296,35 @@ def register_handler_spec(
             f"handler ID must contain only letters, numbers, '-', '.' "
             f"and '_'. {spec_id!r}"
         )
-    cfg = {**(services or {}).get(kind, {}), **options}
-
-    def _event(row) -> "H.AlertEvent":
-        import datetime as dt
-
-        t = row["ts"] if "ts" in row.__fields__ else row["time"]
-        if t.tzinfo is None:
-            t = t.replace(tzinfo=dt.timezone.utc)
-        return H.AlertEvent(
-            id=str(row["alert_id"]) if "alert_id" in row.__fields__ else spec_id,
-            message=str(row["message"])
-            if "message" in row.__fields__
-            else f"{spec_id} is {row['level']}",
-            time=t,
-            level=str(row["level"]),
-        )
-
-    if kind == "log":
-        from kapacitor_spark.sinks import log_handler
-
-        deliver = log_handler(cfg["path"])
-    elif kind == "post":
-        from kapacitor_spark.sinks import http_post
-
-        deliver = http_post(cfg["url"], tolerant=bool(cfg.get("tolerant")))
-    elif kind == "exec":
-        from kapacitor_spark.sinks import exec_handler
-
-        deliver = exec_handler(list(cfg["prog"]) if isinstance(cfg.get("prog"), (list, tuple)) else [cfg["prog"], *cfg.get("args", [])])
-    elif kind == "tcp":
-        from kapacitor_spark.sinks import tcp_handler
-
-        host, _, port = cfg["address"].rpartition(":")
-        deliver = tcp_handler(host, int(port))
-    elif kind == "slack":
-        def deliver(rows):
-            for row in rows:
-                H.post_payload(
-                    cfg["url"],
-                    H.slack_payload(
-                        _event(row), channel=cfg.get("channel", "")
-                    ),
-                    {"Authorization": f"Bearer {cfg['token']}"}
-                    if cfg.get("token")
-                    else {},
-                )
-    elif kind == "victorops":
-        def deliver(rows):
-            for row in rows:
-                H.post_payload(
-                    f"{cfg['url'].rstrip('/')}/{cfg.get('api_key', '')}/"
-                    f"{cfg.get('routing_key', '')}",
-                    H.victorops_payload(_event(row)),
-                )
-    elif kind == "pagerduty2":
-        def deliver(rows):
-            for row in rows:
-                H.post_payload(
-                    cfg["url"],
-                    H.pagerduty2_payload(
-                        _event(row), routing_key=cfg.get("routing_key", "")
-                    ),
-                )
-    else:
+    h = H.build_handler(spec.get("kind", ""), spec.get("options"), services)
+    if prev_level_col is None and ("fn", "changed()") in _match_tokens(match):
         raise ValueError(
-            f"unsupported handler kind {kind!r} (spec kinds implemented: "
-            "log/post/exec/tcp/slack/victorops/pagerduty2; other services "
-            "via kapacitor_spark.handlers formatters directly)"
+            "match uses changed() — pass prev_level_col (the previous "
+            "level column)"
         )
 
-    if match:
-        inner = deliver
-
-        def deliver(rows):  # noqa: F811 — intentional wrap
-            # per-row match evaluation mirrors matchHandler.Handle; the
-            # expressions are tiny (level()/changed()/name() comparisons)
-            import pyspark.sql as _sql
-
-            del _sql  # no Spark here: rows are plain Rows — evaluate in python
-            kept = [r for r in rows if _match_row(r, match, prev_level_col)]
-            if kept:
-                inner(kept)
+    def deliver(rows):
+        if match:
+            # per-row match evaluation mirrors matchHandler.Handle
+            rows = [r for r in rows if _match_row(r, match, prev_level_col)]
+        if not rows:
+            return
+        if h.rows:
+            h.deliver(rows)
+            return
+        f = rows[0].__fields__
+        time_col = "ts" if "ts" in f else "time"
+        event = H._event_builder(
+            time_col,
+            id_col="alert_id" if "alert_id" in f else None,
+            message_col="message" if "message" in f else None,
+            details_col="details" if "details" in f else None,
+            value_cols=H._value_columns(
+                f, time_col, "level", "message", "details", prev_level_col
+            ),
+            default_id=spec_id,
+        )
+        h.deliver([event(r) for r in rows])
 
     registry.subscribe(topic, deliver)
     return registry
@@ -584,10 +523,6 @@ class TopicStore:
         # persisted alert state on a crash mid-write. Readers (_load)
         # only ever see a complete file; the temp name never matches the
         # topic_*.json load glob.
-        import json as _json
-        import os
-        import tempfile
-
         if self._dir is None:
             return
         from kapacitor_spark._io import atomic_write_json
