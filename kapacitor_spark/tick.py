@@ -2049,8 +2049,9 @@ class _StreamEnv(_Env):
         ``outputs.alert_handlers[name]`` and raises if no httpOut
         carries it). Delivery is at-least-once under micro-batch
         retries — the reference's own handler semantics (alert.go
-        handlers re-fire on replayed events). Unconfigured service
-        kinds raise AT COMPILE, not mid-stream. A ``keyed`` alert, or
+        handlers re-fire on replayed events). The handlers are built
+        once, here (_build_handlers), so every config error raises AT
+        COMPILE, not mid-stream. A ``keyed`` alert, or
         one behind a streaming aggregation, returns _Aggregated."""
         p = Pipeline(
             df=out, time_col=self.time_col, dims=tuple(src.dims),
