@@ -12,8 +12,8 @@ and topic handler specs (``topics.register_handler_spec``) alike — the
 reference's alert service builds every handler from its HandlerConfig
 (services/alert/service.go). Three rules live here only: kind names
 (TICK chain names map by ``.lower()``, service-section keys match
-case-insensitively), option names (:func:`option_name`; options override
-the section; a formatter's keyword args are its options) and build-time
+case-insensitively), option names (:func:`_option_name`; options override
+the section; each entry names the options it reads) and build-time
 errors (:class:`HandlerConfigError`).
 
 TICK delivers on the driver over the COLLECTED alert events — alert
@@ -29,6 +29,7 @@ import datetime as dt
 import inspect
 import json
 import re
+import socket
 import urllib.request
 from collections import ChainMap
 from dataclasses import dataclass, field
@@ -62,10 +63,8 @@ __all__ = [
     "events_from_alert_df",
     "post_payload",
     "HANDLERS",
-    "Handler",
     "HandlerConfigError",
     "build_handler",
-    "option_name",
 ]
 
 # alert.Level ints and names (reference alert/types.go)
@@ -869,9 +868,10 @@ def _event_builder(
 ) -> Callable:
     """The one Row → :class:`AlertEvent` constructor, shared by
     events_from_alert_df and the topic handlers. Without ``id_col`` the
-    id is ``default_id`` (a topic handler's spec id) or
-    ``<measurement>:<group>``; without ``message_col`` the message is
-    ``<id> is <level>``."""
+    id is ``default_id`` or ``<measurement>:<group>``; without
+    ``message_col`` the message is ``<id> is <level>``. A topic handler
+    passes its spec id as ``default_id``: its events carry an empty
+    series list, since a spec knows neither group-by nor value columns."""
     cols = list(value_cols)
 
     def event(r) -> AlertEvent:
@@ -886,6 +886,12 @@ def _event_builder(
             ev_id = default_id
         else:
             ev_id = f"{measurement}:{group}" if group else measurement
+        series = {
+            "name": measurement,
+            "tags": tags,
+            "columns": [time_col, *cols],
+            "values": [[t, *[r[c] for c in cols]]],
+        }
         return AlertEvent(
             id=ev_id,
             message=(
@@ -897,28 +903,10 @@ def _event_builder(
             details=str(r[details_col]) if details_col else "",
             duration_ns=int(r[duration_col]) if duration_col else 0,
             task_name=task_name,
-            data={
-                "series": [
-                    {
-                        "name": measurement,
-                        "tags": tags,
-                        "columns": [time_col, *cols],
-                        "values": [[t, *[r[c] for c in cols]]],
-                    }
-                ]
-            },
+            data={"series": [] if default_id is not None else [series]},
         )
 
     return event
-
-
-def _value_columns(columns, *attrs: str) -> list[str]:
-    """An event row's data columns (its series values after the time):
-    every column but the alert attributes ``attrs``, ``alert_id``,
-    ``topic``, ``name`` and internal ``__`` columns — at most four. One
-    rule for the TICK chains and the topic handlers."""
-    skip = {*attrs, "alert_id", "topic", "name"}
-    return [c for c in columns if c not in skip and not c.startswith("__")][:4]
 
 
 def post_payload(
@@ -957,16 +945,19 @@ class HandlerConfigError(ValueError):
     recipients. Raised when the handler is BUILT, never mid-delivery."""
 
 
-class Handler(NamedTuple):
+class _Handler(NamedTuple):
     """A built handler. ``deliver`` takes a list of AlertEvents — or, for
-    the ``rows`` kinds (log/post/tcp/exec), the event Rows themselves,
-    which those handlers write out whole."""
+    the alert node's own sinks (``rows``: log/post/tcp/exec), the event
+    Rows themselves, which those handlers write out whole."""
 
     deliver: Callable
-    rows: bool = False
+    rows: bool
 
 
-def option_name(name: str) -> str:
+_ROW_KINDS = ("log", "post", "tcp", "exec")
+
+
+def _option_name(name: str) -> str:
     """The one option-name rule: TICK camelCase props (``routingKey``,
     ``URLTitle``) and the reference's kebab-case spec options
     (``routing-key``) → this repo's snake_case config keys."""
@@ -977,10 +968,10 @@ def option_name(name: str) -> str:
 
 def build_handler(
     kind: str, options: dict | None = None, services: dict | None = None
-) -> Handler:
+) -> _Handler:
     """Build the delivery of one handler from the table: ``kind`` is a
     :data:`HANDLERS` key, ``options`` its handler options (any spelling
-    :func:`option_name` maps), ``services`` the per-kind service sections
+    :func:`_option_name` maps), ``services`` the per-kind service sections
     (``{"slack": {"url": ...}}``, keys matched case-insensitively).
     Options override the section. Every config error raises
     :class:`HandlerConfigError` here."""
@@ -989,15 +980,15 @@ def build_handler(
             f"unsupported handler kind {kind!r} "
             f"(supported: {', '.join(sorted(HANDLERS))})"
         )
-    build, rows = HANDLERS[kind]
     section = next(
         (v for k, v in (services or {}).items() if k.lower() == kind), None
     )
-    opts = {option_name(k): v for k, v in (options or {}).items()}
+    opts = {_option_name(k): v for k, v in (options or {}).items()}
     try:
-        return Handler(build(ChainMap(opts, dict(section or {}))), rows)
+        deliver = HANDLERS[kind](ChainMap(opts, dict(section or {})))
     except HandlerConfigError as e:
         raise HandlerConfigError(f"{kind}: {e}") from None
+    return _Handler(deliver, kind in _ROW_KINDS)
 
 
 def _need(o: ChainMap, key: str):
@@ -1022,20 +1013,21 @@ class _Blank(dict):
         return ""
 
 
-def _fields(fmt: Callable, o, *skip: str) -> dict:
-    """``fmt``'s keyword args read from the merged options/section under
-    their own names — a formatter's signature IS its option list. A
-    list-valued (tuple-defaulted) arg takes a single value too; a
-    required one defaults to ''."""
+def _fields(fmt: Callable, o: ChainMap, shared: str = "", own: str = "") -> dict:
+    """The args of formatter ``fmt`` that a kind reads from its config:
+    each name in ``shared`` from the handler's options, else its service
+    section; each name in ``own`` from the handler's options only. A
+    list-valued (tuple-defaulted) arg takes a single value too; an unset
+    required one is ''."""
+    params = inspect.signature(fmt).parameters
     out = {}
-    for p in list(inspect.signature(fmt).parameters.values())[1:]:
-        if p.name in skip:
-            continue
-        if p.name in o:
-            v = o[p.name]
-            out[p.name] = _aslist(v) if isinstance(p.default, tuple) else v
-        elif p.default is p.empty:
-            out[p.name] = ""
+    for names, src in ((shared, o), (own, o.maps[0])):
+        for k in names.split():
+            p = params[k]
+            if k in src:
+                out[k] = _aslist(src[k]) if isinstance(p.default, tuple) else src[k]
+            elif p.default is p.empty:
+                out[k] = ""
     return out
 
 
@@ -1052,17 +1044,22 @@ def _poster(url: str, payload: Callable, headers: dict | None = None):
     return deliver
 
 
-def _http(fmt: Callable, path: str = "", headers=None, **per_event):
+def _http(
+    fmt: Callable, path: str = "", headers=None, shared: str = "",
+    own: str = "", **per_event,
+):
     """The builder of a plain HTTP kind: POST ``fmt(ev, **kw)`` per event
     to the section's url plus ``path`` (rendered over the options and
-    section). ``kw`` is _fields(fmt) plus the ``per_event`` args, each
-    computed from the event; ``headers(o)`` builds the request headers."""
+    section). ``kw`` is the _fields that ``shared``/``own`` name, the
+    ``fixed`` args the builder is called with, and the ``per_event``
+    args, each computed from the event; ``headers(o)`` builds the
+    request headers."""
 
-    def build(o):
+    def build(o, **fixed):
         url = _need(o, "url")
         if path:
             url = url.rstrip("/") + path.format_map(_Blank(o))
-        kw = _fields(fmt, o, *per_event)
+        kw = {**_fields(fmt, o, shared, own), **fixed}
         return _poster(
             url,
             lambda ev: fmt(ev, **kw, **{k: f(ev) for k, f in per_event.items()}),
@@ -1081,15 +1078,19 @@ _bearer = _auth("Bearer", "token")
 
 
 def _slack(o):
-    ws = o.get("workspace")
+    ws = o.maps[0].get("workspace")
     if ws:
         section = o.maps[-1]
         o = ChainMap(o.maps[0], (section.get("workspaces") or {}).get(ws, section))
-    return _http(slack_payload, headers=_bearer)(o)
+    return _http(
+        slack_payload, headers=_bearer, shared="channel username icon_emoji"
+    )(o)
 
 
 def _pagerduty(o):
-    post = _http(pagerduty_payload, incident_key=lambda ev: ev.id)(o)
+    post = _http(
+        pagerduty_payload, shared="service_key", incident_key=lambda ev: ev.id
+    )(o)
     # the v1 API has no INFO: the reference logs and skips those events
     return lambda events: post([ev for ev in events if ev.level != "INFO"])
 
@@ -1099,20 +1100,24 @@ def _pagerduty2(o):
     # carries the same entries as links: [{href, text}]
     links = [
         {"href": l[0], "text": l[1] if len(l) > 1 else ""}
-        for l in o.get("link", [])
-    ] + list(o.get("links") or [])
-    return _http(pagerduty2_payload)(ChainMap({"links": links or None}, o))
+        for l in o.maps[0].get("link", [])
+    ] + list(o.maps[0].get("links") or [])
+    return _http(pagerduty2_payload, shared="routing_key client_url")(
+        o, links=links or None
+    )
 
 
 def _teams(o):
     # .channelURL() / channel-url overrides the configured webhook
-    return _poster(o.get("channel_url") or _need(o, "url"), teams_payload)
+    return _poster(o.maps[0].get("channel_url") or _need(o, "url"), teams_payload)
 
 
 def _pushover(o):
     # the section's url is the API endpoint; a handler's .URL() / url
     # option is the supplementary link shown with the message
-    kw = {**_fields(pushover_payload, o), "url": o.maps[0].get("url", "")}
+    kw = _fields(
+        pushover_payload, o, "token user_key", "device title url url_title sound"
+    )
     return _poster(
         _need(ChainMap(o.maps[-1]), "url"), partial(pushover_payload, **kw)
     )
@@ -1125,11 +1130,38 @@ def _alerta(o):
         lambda c: {"Authorization": (
             f"{c.get('token_prefix', 'Bearer')} {c.get('token', '')}"
         )},
-    )(ChainMap({"service": o.get("services", ())}, o))
+        shared="environment origin", own="resource event group value",
+    )(o, service=_aslist(o.maps[0].get("services")))
+
+
+def _sensu(o):
+    # the reference writes each event as JSON to the sensu client's TCP
+    # socket and takes anything but "ok" back as an error
+    # (services/sensu/service.go Alert)
+    addr = _need(o, "addr")
+    host, _, port = addr.rpartition(":")
+    if not port.isdigit():
+        raise HandlerConfigError(f"addr {addr!r} is not host:port")
+    kw = _fields(sensu_payload, o, shared="source handlers")
+
+    def deliver(events) -> None:
+        for ev in events:
+            body = _go_json(sensu_payload(ev, ev.id, **kw)) + "\n"
+            with socket.create_connection((host, int(port)), timeout=10) as s:
+                s.sendall(body.encode())
+                s.shutdown(socket.SHUT_WR)
+                resp = b"".join(iter(lambda: s.recv(4096), b""))
+            if resp != b"ok":
+                raise OSError(f"sensu socket error: {resp.decode(errors='replace')}")
+
+    return deliver
 
 
 def _servicenow(o):
-    kw = {**_fields(servicenow_event, o), "type_": o.get("type", "")}
+    kw = _fields(
+        servicenow_event, o, "source", "node resource metric_name message_key"
+    )
+    kw["type_"] = o.maps[0].get("type", "")
     return _poster(
         _need(o, "url"),
         lambda ev: {"records": [servicenow_event(ev, **kw)]},
@@ -1158,11 +1190,11 @@ def _email(o):
 def _kafka(o):
     # the broker is external: produce(topic, partition, key, value)
     produce = _need(o, "produce")
-    topic = o.get("kafka_topic") or o.get("topic", "")
+    topic = o.maps[0].get("kafka_topic") or o.get("topic", "")
     nparts = int(o.get("partitions", 1))
     algo = o.get("partition_algorithm", "crc32")
     by_id = o.get("partition_by_id", True) and nparts > 1
-    tmpl = o.get("template")
+    tmpl = o.maps[0].get("template")
 
     def deliver(events) -> None:
         for ev in events:
@@ -1182,7 +1214,7 @@ def _snmptrap(o):
     # BER wire encoding is external: send(varbinds)
     send = _need(o, "send")
     trap_oid = o.get("_arg") or o.get("trap_oid", "")
-    data = o.get("data") or []
+    data = o.maps[0].get("data") or []
 
     def deliver(events) -> None:
         for ev in events:
@@ -1212,37 +1244,44 @@ def _mqtt(o):
     return deliver
 
 
-#: The one alert-handler table: the reference's lower-case kind →
-#: (builder of its delivery from the merged options/section, whether the
-#: delivery takes the event Rows instead of AlertEvents). Its keys are
+#: The one alert-handler table: the reference's lower-case kind → the
+#: builder of its delivery from the merged options/section. Its keys are
 #: the only list of handler kinds.
-HANDLERS: dict[str, tuple[Callable, bool]] = {
-    "slack": (_slack, False),
-    "victorops": (_http(victorops_payload, "/{api_key}/{routing_key}"), False),
-    "pagerduty": (_pagerduty, False),
-    "pagerduty2": (_pagerduty2, False),
-    "opsgenie": (_http(opsgenie_payload), False),
-    "opsgenie2": (
-        _http(opsgenie2_payload, headers=_auth("GenieKey", "api_key")), False
+HANDLERS: dict[str, Callable] = {
+    "slack": _slack,
+    "victorops": _http(
+        victorops_payload, "/{api_key}/{routing_key}", shared="json_data"
     ),
-    "telegram": (_http(telegram_payload, "/bot{token}/sendMessage"), False),
-    "teams": (_teams, False),
-    "talk": (_http(talk_payload), False),
-    "discord": (_http(discord_payload), False),
-    "hipchat": (
-        _http(hipchat_payload, "/{room}/notification?auth_token={token}"),
-        False,
+    "pagerduty": _pagerduty,
+    "pagerduty2": _pagerduty2,
+    "opsgenie": _http(opsgenie_payload, shared="api_key teams recipients"),
+    "opsgenie2": _http(
+        opsgenie2_payload, headers=_auth("GenieKey", "api_key"),
+        shared="teams recipients",
     ),
-    "pushover": (_pushover, False),
-    "alerta": (_alerta, False),
-    "sensu": (_http(sensu_payload, name=lambda ev: ev.id), False),
-    "servicenow": (_servicenow, False),
-    "zenoss": (_http(zenoss_event), False),
-    "bigpanda": (_http(bigpanda_payload, headers=_bearer), False),
-    "email": (_email, False),
-    "kafka": (_kafka, False),
-    "snmptrap": (_snmptrap, False),
-    "mqtt": (_mqtt, False),
-    **{k: (partial(sinks.alert_sink, k), True)
-       for k in ("log", "post", "tcp", "exec")},
+    "telegram": _http(
+        telegram_payload, "/bot{token}/sendMessage",
+        shared="chat_id parse_mode disable_web_page_preview "
+        "disable_notification",
+    ),
+    "teams": _teams,
+    "talk": _http(talk_payload, shared="author_name"),
+    "discord": _http(discord_payload, shared="username"),
+    "hipchat": _http(hipchat_payload, "/{room}/notification?auth_token={token}"),
+    "pushover": _pushover,
+    "alerta": _alerta,
+    "sensu": _sensu,
+    "servicenow": _servicenow,
+    "zenoss": _http(
+        zenoss_event, shared="event_class collector", own="device component"
+    ),
+    "bigpanda": _http(
+        bigpanda_payload, headers=_bearer,
+        shared="app_key primary_property secondary_property",
+    ),
+    "email": _email,
+    "kafka": _kafka,
+    "snmptrap": _snmptrap,
+    "mqtt": _mqtt,
+    **{k: partial(sinks.alert_sink, k) for k in _ROW_KINDS},
 }

@@ -266,15 +266,19 @@ def _deliver_alerts(df, dims, time_col, a: _AlertProps, built: list):
             # handlers (pagerduty2 'resolve', opsGenie2 close, victorops
             # RECOVERY — streamer_test.go expects alert.OK events)
             cols = df.columns
+            value_cols = [
+                c for c in cols
+                if c not in (time_col, level_col, "alert_id", msg_col,
+                             det_col, "topic", "name", *dims)
+                and not c.startswith("__")
+            ]
             events = H.events_from_alert_df(
                 df, time_col, dims=dims, level_col=level_col,
                 id_col="alert_id" if "alert_id" in cols else None,
                 message_col=msg_col if msg_col in cols else None,
                 details_col=det_col if det_col in cols else None,
                 duration_col=a.machine["duration_field"],
-                value_cols=H._value_columns(
-                    cols, time_col, level_col, msg_col, det_col, *dims
-                ),
+                value_cols=value_cols[:4],
             )
         h.deliver(events)
 

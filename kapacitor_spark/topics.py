@@ -241,6 +241,8 @@ def match_filter(
                 out_toks.append("true")
             elif text == "FALSE":
                 out_toks.append("false")
+            elif text in ("AND", "OR", "NOT"):
+                out_toks.append(text)
             else:
                 out_toks.append(text)
         elif kind == "op":
@@ -253,8 +255,10 @@ def match_filter(
     return events.withColumn("__sev", sev).filter(F.expr(expr)).drop("__sev")
 
 
-_VALID_HANDLER_ID = _match_re.compile(r"^[-\._A-Za-z0-9]+$")
-_VALID_TOPIC_ID = _match_re.compile(r"^[-:\._A-Za-z0-9]+$")
+import re as _re
+
+_VALID_HANDLER_ID = _re.compile(r"^[-\._A-Za-z0-9]+$")
+_VALID_TOPIC_ID = _re.compile(r"^[-:\._A-Za-z0-9]+$")
 
 
 def register_handler_spec(
@@ -319,9 +323,6 @@ def register_handler_spec(
             id_col="alert_id" if "alert_id" in f else None,
             message_col="message" if "message" in f else None,
             details_col="details" if "details" in f else None,
-            value_cols=H._value_columns(
-                f, time_col, "level", "message", "details", prev_level_col
-            ),
             default_id=spec_id,
         )
         h.deliver([event(r) for r in rows])
@@ -523,6 +524,10 @@ class TopicStore:
         # persisted alert state on a crash mid-write. Readers (_load)
         # only ever see a complete file; the temp name never matches the
         # topic_*.json load glob.
+        import json as _json
+        import os
+        import tempfile
+
         if self._dir is None:
             return
         from kapacitor_spark._io import atomic_write_json
