@@ -31,7 +31,7 @@ import json
 import re
 import socket
 import urllib.request
-from collections import ChainMap
+from collections import ChainMap, defaultdict
 from dataclasses import dataclass, field
 from functools import partial
 from typing import Any, Callable, NamedTuple
@@ -1006,13 +1006,6 @@ def _aslist(x) -> list:
     return [x] if isinstance(x, str) else list(x or [])
 
 
-class _Blank(dict):
-    """format_map target: a missing key renders as ''."""
-
-    def __missing__(self, key):
-        return ""
-
-
 def _fields(fmt: Callable, o: ChainMap, shared: str = "", own: str = "") -> dict:
     """The args of formatter ``fmt`` that a kind reads from its config:
     each name in ``shared`` from the handler's options, else its service
@@ -1049,16 +1042,14 @@ def _http(
     own: str = "", **per_event,
 ):
     """The builder of a plain HTTP kind: POST ``fmt(ev, **kw)`` per event
-    to the section's url plus ``path`` (rendered over the options and
-    section). ``kw`` is the _fields that ``shared``/``own`` name, the
-    ``fixed`` args the builder is called with, and the ``per_event``
-    args, each computed from the event; ``headers(o)`` builds the
-    request headers."""
+    to the url + ``path`` (formatted over the config) with ``headers(o)``;
+    ``kw``: the _fields ``shared``/``own`` name, the builder's ``fixed``
+    args and the ``per_event`` args, each computed from the event."""
 
     def build(o, **fixed):
         url = _need(o, "url")
         if path:
-            url = url.rstrip("/") + path.format_map(_Blank(o))
+            url = url.rstrip("/") + path.format_map(defaultdict(str, o))
         kw = {**_fields(fmt, o, shared, own), **fixed}
         return _poster(
             url,
@@ -1261,8 +1252,7 @@ HANDLERS: dict[str, Callable] = {
     ),
     "telegram": _http(
         telegram_payload, "/bot{token}/sendMessage",
-        shared="chat_id parse_mode disable_web_page_preview "
-        "disable_notification",
+        shared="chat_id parse_mode disable_web_page_preview disable_notification",
     ),
     "teams": _teams,
     "talk": _http(talk_payload, shared="author_name"),

@@ -106,7 +106,7 @@ stream
 
 # Fields rendered from an event's data series. A TICK chain's events
 # carry the alert row's series; a topic spec's events an empty series
-# list, as they always have (a spec knows no group-by or value columns).
+# list (a spec knows no group-by or value columns).
 _DATA_FIELDS = {
     "victorops": [("data",)],
     "pagerduty": [("details",)],
