@@ -5,13 +5,27 @@ chosen so the same code scales to a multi-executor cluster: AQE handles
 runtime coalescing + skew joins, shuffle partitions sized to cores locally
 (a cluster deployment would raise this to ~2-3x total cores), Arrow enabled
 for every Pandas-UDF boundary.
+
+Importing this module inside a Python worker also makes the worker's
+per-task import-cache reset cheap. Before every task PySpark's worker calls
+``importlib.invalidate_caches()``; on CPython < 3.13 that makes every
+``zipimporter`` on the worker's path re-read its whole archive directory
+(pyspark.zip's package importers and the spark-core jar: 200-420 ms per
+task on a 4-core box). ``_stamped_zip_invalidation`` keeps an importer's
+directory while its archive's ``(st_mtime_ns, st_size)`` is unchanged and
+re-reads exactly as before otherwise, as CPython 3.13's lazy
+``zipimporter.invalidate_caches`` does. The driver and newer interpreters
+are left untouched.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 import threading
+import zipimport
 
+from pyspark import TaskContext
 from pyspark.sql import SparkSession
 
 
@@ -130,6 +144,32 @@ def ensure_worker_imports(spark: SparkSession) -> None:
                         zf.write(full, rel)
         sc.addPyFile(zpath)
         sc._kapacitor_spark_shipped = True
+
+
+def _stamped_zip_invalidation() -> bool:
+    """In a Python worker on CPython < 3.13, replace
+    ``zipimporter.invalidate_caches`` with one that re-reads an archive's
+    directory only when the archive changed, is gone, or was never stamped
+    by this importer. Returns whether the patch was applied."""
+    if sys.version_info >= (3, 13) or TaskContext.get() is None:
+        return False
+    reread = zipimport.zipimporter.invalidate_caches
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        if stamp is None or stamp != getattr(self, "_kspark_stamp", None):
+            reread(self)
+            self._kspark_stamp = stamp
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+    return True
+
+
+_stamped_zip_invalidation()
 
 
 def local_df(spark: SparkSession, rows, schema, slices: int = 1):

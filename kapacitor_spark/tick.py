@@ -72,13 +72,15 @@ class TickError(ValueError):
     pass
 
 
-# alert-node OWN props — anything here closes a pending handler spec
+# alert-node OWN props — anything here closes a pending handler spec.
+# .quiet() only silences the reference node's error logging
+# (pipeline/alert.go Quiet): a documented no-op on both compiles.
 _ALERT_LEVEL_PROPS = {
     "crit", "warn", "info", "critReset", "warnReset", "infoReset",
-    "stateChangesOnly", "noRecoveries", "flapping", "history", "all",
+    "stateChangesOnly", "noRecoveries", "flapping", "history",
     "levelField", "levelTag", "idField", "idTag", "durationField",
     "topic", "id", "message", "messageField", "details", "detailsField",
-    "inhibit", "log", "post", "tcp", "exec",
+    "quiet", "log", "post", "tcp", "exec",
 }
 # the alert node's own sink props → the spec option their first
 # positional arg maps to (the rest ride as ``args``: .exec(prog, args...))
@@ -179,7 +181,17 @@ def _alert_props(props, lam) -> _AlertProps:
     (pipeline/alert.go), shared by the batch and the live compile.
     ``lam`` compiles a level/reset lambda for the caller's engine.
     ``machine`` holds the kwargs Pipeline.alert, alert_stream and the
-    fused window operators take in common."""
+    fused window operators take in common. A prop that is neither the
+    node's own nor an option of the handler spec it follows raises
+    TickError: no compile drops one silently."""
+    cur = None
+    for n, _a in props:
+        if _handler_kind(n):
+            cur = n
+        elif n in _ALERT_LEVEL_PROPS:
+            cur = None  # spec-closing alert-own prop
+        elif cur is None:
+            raise TickError(f"alert() does not support .{n}()")
     pm = dict(props)
 
     def one(name, default=None):
@@ -1968,17 +1980,6 @@ class _StreamEnv(_Env):
         stateful machine fuses with the window (_fused_alert)."""
         from kapacitor_spark.streaming import alert_stream
 
-        cur = None
-        for n, _a in node.props:
-            if _handler_kind(n):
-                cur = n
-            elif n in _ALERT_LEVEL_PROPS:
-                cur = None  # spec-closing alert-own prop
-            elif cur is None:
-                raise TickError(
-                    f"streaming alert() does not support .{n}() — "
-                    "run the batch replay (run_tickscript)"
-                )
         stateful = any(n in self._STATEFUL_ALERT for n, _a in node.props)
         if stateful and isinstance(p, _Aggregated):
             return self._fused_alert(p, node)

@@ -301,7 +301,8 @@ def register_handler_spec(
             f"and '_'. {spec_id!r}"
         )
     h = H.build_handler(spec.get("kind", ""), spec.get("options"), services)
-    if prev_level_col is None and ("fn", "changed()") in _match_tokens(match):
+    toks = _match_tokens(match)  # lexed once, not per dispatched row
+    if prev_level_col is None and ("fn", "changed()") in toks:
         raise ValueError(
             "match uses changed() — pass prev_level_col (the previous "
             "level column)"
@@ -310,7 +311,7 @@ def register_handler_spec(
     def deliver(rows):
         if match:
             # per-row match evaluation mirrors matchHandler.Handle
-            rows = [r for r in rows if _match_row(r, match, prev_level_col)]
+            rows = [r for r in rows if _match_row(r, toks, prev_level_col)]
         if not rows:
             return
         if h.rows:
@@ -331,12 +332,12 @@ def register_handler_spec(
     return registry
 
 
-def _match_row(row, match: str, prev_level_col: str | None) -> bool:
-    """Evaluate a handler match expression against one event Row — the
-    row-level twin of match_filter: same tokens, same closed grammar,
-    evaluated by a tiny recursive-descent parser (NOT eval — the
-    reference's matchHandler grammar is closed; spec-provided strings
-    must not reach a general evaluator)."""
+def _match_row(row, toks, prev_level_col: str | None) -> bool:
+    """Evaluate a handler match expression, lexed by _match_tokens,
+    against one event Row — the row-level twin of match_filter: same
+    tokens, same closed grammar, evaluated by a tiny recursive-descent
+    parser (NOT eval — the reference's matchHandler grammar is closed;
+    spec-provided strings must not reach a general evaluator)."""
     fields = set(row.__fields__)
 
     def fn_value(fname: str):
@@ -356,7 +357,6 @@ def _match_row(row, match: str, prev_level_col: str | None) -> bool:
             )
         raise ValueError(f"unknown match function {fname}()")
 
-    toks = _match_tokens(match)
     i = 0
 
     def peek():
@@ -433,7 +433,9 @@ def _match_row(row, match: str, prev_level_col: str | None) -> bool:
 
     result = parse_or()
     if i != len(toks):
-        raise ValueError(f"trailing tokens in match expression {match!r}")
+        raise ValueError(
+            f"trailing tokens in match expression {toks[i:]!r}"
+        )
     return bool(result)
 
 

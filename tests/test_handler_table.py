@@ -453,3 +453,35 @@ def test_rest_validator_accepts_exactly_the_table_kinds(tmp_path):
             assert st == 400 and "unsupported handler kind" in err["error"]
     finally:
         service.stop()
+
+
+def test_spec_match_is_lexed_once_not_per_row(tmp_path, monkeypatch):
+    """A topic handler spec lexes its match expression once, at
+    registration: its delivery filters any number of rows without
+    lexing again."""
+    from pyspark.sql import Row
+
+    from kapacitor_spark import topics
+
+    calls = []
+    lex = topics._match_tokens
+    monkeypatch.setattr(
+        topics, "_match_tokens", lambda m: calls.append(m) or lex(m)
+    )
+    path = tmp_path / "m.jsonl"
+    reg = TopicRegistry()
+    register_handler_spec(reg, {
+        "id": "m", "topic": "t", "kind": "log",
+        "options": {"path": str(path)},
+        "match": "level() == CRITICAL && !(name() == 'skip')",
+    })
+    ((_topic, deliver),) = reg._subs
+    rows = [
+        Row(time=dt.datetime(2024, 1, 1, 0, 0, i % 60), name="cpu",
+            level="CRITICAL" if i % 2 else "OK", message="m", topic="t")
+        for i in range(400)
+    ]
+    deliver(rows)
+    deliver(rows)
+    assert calls == ["level() == CRITICAL && !(name() == 'skip')"]
+    assert len(path.read_text().splitlines()) == 400  # 200 per call

@@ -2257,3 +2257,52 @@ stream
     else:
         with pytest.raises(TickError, match="foreachBatch of its httpOut"):
             run_tickscript_stream(script, **kw)
+
+
+@pytest.mark.parametrize(
+    "prop", ["quiet()", "all()", "inhibit('cpu', 'host')", "madeUp(1)"]
+)
+def test_alert_props_one_rule_for_batch_and_live(
+    spark, fixture_df, stream_src, tmp_path, prop
+):
+    """Both compiles read an alert node's props through one rule:
+    .quiet() (it only silences the reference node's error log) is a
+    no-op on both, and a prop neither compile reads — .all(), .inhibit()
+    or an unknown name — raises TickError naming it on both, instead of
+    the batch compile dropping it."""
+    from kapacitor_spark.tick import TickError, run_tickscript, run_tickscript_stream
+
+    head = """
+stream
+    |from()
+        .measurement('cpu')
+        .groupBy('host')
+    |alert()
+        .crit(lambda: "value" > 90)
+        .stateChangesOnly()"""
+    script = f"{head}\n        .{prop}\n    |httpOut('a')\n"
+    name = prop.split("(")[0]
+    if name == "quiet":
+        cols = ["time", "host", "value", "level"]
+        s, b = _run_both(
+            spark, script, "a", fixture_df, stream_src, tmp_path, cols
+        )
+        plain = run_tickscript(
+            f"{head}\n    |httpOut('a')\n", sources={"cpu": fixture_df},
+            time_col="time", dims=(),
+        )["a"]
+        exp = sorted(
+            tuple(str(r[c]) if c == "time" else r[c] for c in cols)
+            for r in plain.select(*cols).collect()
+        )
+        assert s == b == exp and len(exp) >= 4
+        return
+    with pytest.raises(TickError, match=rf"\.{name}\(\)"):
+        run_tickscript(
+            script, sources={"cpu": fixture_df}, time_col="time", dims=()
+        )
+    with pytest.raises(TickError, match=rf"\.{name}\(\)"):
+        run_tickscript_stream(
+            script, sources={"cpu": _stream_df(spark, stream_src)},
+            time_col="time",
+        )

@@ -4,7 +4,7 @@ import ast
 import os
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-SCANNED = ("kapacitor_spark", "perfbench")
+SCANNED = ("kapacitor_spark", "perfbench", "tests")
 
 
 def _redefinitions(body, prefix):
