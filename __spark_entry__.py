@@ -3072,7 +3072,6 @@ def _planted_warc_archives(docs: DataFrame, record_of) -> DataFrame:
 def _planted_warcs(docs: DataFrame) -> DataFrame:
     """Plain planted crawl: one response record per document — URL
     http://example.com/doc/<id>, raw UTF-8 text payload."""
-
     def rec(doc_id: int, text: str):
         return f"http://example.com/doc/{doc_id}", text.encode("utf-8")
 
@@ -3116,7 +3115,6 @@ def _planted_web_warcs(docs: DataFrame) -> DataFrame:
     the document text) under a MESSY url (mixed case, www, default
     port, tracking params, fragment) — the raw-crawl shape the full
     ingest pipeline has to clean."""
-
     def rec(doc_id: int, text: str):
         url = (
             f"HTTPS://WWW.Host{doc_id % 7}.COM:443/d/{doc_id}"
@@ -3798,16 +3796,25 @@ def _stream_t(spark, sf_dir: str, name: str) -> DataFrame:
     )
 
 
-def _ckpt() -> str:
+def _replay(stream_df, prefix: str, **kw):
+    """run_available_now into a fresh memory-sink table named after
+    ``prefix``. The checkpoint is throwaway, so it lives on tmpfs when
+    there is one (the state-store fsync traffic is pure overhead on a
+    disk-backed /tmp; a real deployment checkpoints to durable shared
+    storage) and is removed once the query has finished: the sink table
+    already holds every row."""
     import os
+    import shutil
     import tempfile
 
-    # prefer tmpfs: replay checkpoints are throwaway and the state-store
-    # fsync traffic is pure overhead on a disk-backed /tmp (a real
-    # deployment checkpoints to durable shared storage — this helper only
-    # serves the deterministic replay queries)
+    from kapacitor_spark.streaming import run_available_now
+
     base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    return tempfile.mkdtemp(prefix="kspark_ckpt_", dir=base)
+    ckpt = tempfile.mkdtemp(prefix="kspark_ckpt_", dir=base)
+    try:
+        return run_available_now(stream_df, _mem_name(prefix), ckpt, **kw)
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def _mem_name(prefix: str) -> str:
@@ -3855,8 +3862,6 @@ def stream_window_mean(spark, sf_dir):
     compare final windows). availableNow trigger + complete-mode memory
     sink = deterministic end-of-replay emission; the oracle is the
     identical batch SQL."""
-    from kapacitor_spark.streaming import run_available_now
-
     sdf = _stream_t(spark, sf_dir, "events")
     s = F.sum(F.col("value").cast("decimal(20,4)")).cast("double")
     agg = (
@@ -3871,8 +3876,8 @@ def stream_window_mean(spark, sf_dir):
             "n", "sum_value", "mean_value",
         )
     )
-    return run_available_now(
-        agg, _mem_name("swm"), _ckpt(), output_mode="complete",
+    return _replay(
+        agg, "swm", output_mode="complete",
         # state keys = hour-windows × event_type ≈ 720 × 5 = 3600
         state_partitions=_state_parts(spark, 3600),
     )
@@ -3892,7 +3897,6 @@ def tick_stream_window(spark, sf_dir):
     memory sink) — the continuous-ingestion twin of tickscript_e2e,
     closing the task-store enable path with the streaming engine. The
     oracle is the identical batch SQL."""
-    from kapacitor_spark.streaming import run_available_now
     from kapacitor_spark.tick import run_tickscript_stream
 
     script = """
@@ -3910,8 +3914,8 @@ stream
 """
     sdf = _stream_t(spark, sf_dir, "events")
     outs = run_tickscript_stream(script, sources={"events": sdf}, time_col="ts")
-    return run_available_now(
-        outs["win"], _mem_name("tsw"), _ckpt(), output_mode="complete",
+    return _replay(
+        outs["win"], "tsw", output_mode="complete",
         # state keys = hour-windows × event_type ≈ 720 × 5 = 3600
         state_partitions=_state_parts(spark, 3600),
     ).select("ts", "event_type", "mean_value")
@@ -3940,7 +3944,6 @@ def tick_stream_alert(spark, sf_dir):
     the batch transition SQL (identical to stream_alert_changes, which
     pins the same machine invoked directly — this row pins the TICK
     compile path)."""
-    from kapacitor_spark.streaming import run_available_now
     from kapacitor_spark.tick import run_tickscript_stream
 
     script = """
@@ -3959,8 +3962,8 @@ stream
         script, sources={"events": sdf}, time_col="ts",
         tiebreak=("event_id",),
     )
-    return run_available_now(
-        outs["alerts"], _mem_name("tsa"), _ckpt()
+    return _replay(
+        outs["alerts"], "tsa"
         # NO state_partitions pin: this operator is a keyed PYTHON state
         # machine over every event row — per-batch compute parallelism
         # (one Arrow worker per partition) dominates the per-partition
@@ -4007,7 +4010,6 @@ def tick_stream_windowed_alert(spark, sf_dir):
     oracle re-derives windows, levels, the stateChangesOnly transition
     walk, AND the per-group sealing rule (a window emits only once a
     later point of its group passes its end) in SQL."""
-    from kapacitor_spark.streaming import run_available_now
     from kapacitor_spark.tick import run_tickscript_stream
 
     script = """
@@ -4030,8 +4032,8 @@ stream
     outs = run_tickscript_stream(
         script, sources={"events": sdf}, time_col="ts",
     )
-    return run_available_now(
-        outs["alerts"], _mem_name("tswa"), _ckpt(),
+    return _replay(
+        outs["alerts"], "tswa",
         # keyed-state cardinality: the stateful operator is the fused
         # window+alert Python machine keyed by event_type (5 groups, each
         # holding its open-window partials in ONE state row) — not the
@@ -4088,7 +4090,6 @@ def tick_stream_count_alert(spark, sf_dir):
     OK→non-OK transition; a recovery row carries the ended episode's
     length) entirely in SQL — count windows emit at the triggering
     point's event time, so no sealing restriction applies."""
-    from kapacitor_spark.streaming import run_available_now
     from kapacitor_spark.tick import run_tickscript_stream
 
     script = """
@@ -4113,8 +4114,8 @@ stream
         script, sources={"events": sdf}, time_col="ts",
         tiebreak=("event_id",),
     )
-    return run_available_now(
-        outs["alerts"], _mem_name("tsca"), _ckpt()
+    return _replay(
+        outs["alerts"], "tsca"
         # NO state_partitions pin: keyed Python state machine over every
         # event row — worker parallelism dominates commit overhead (see
         # tick_stream_alert)
@@ -4138,7 +4139,6 @@ def tick_stream_pipeline(spark, sf_dir):
     _Env._mk_eval code as the batch replay and derivative rides
     ordered_transform_stream's cross-micro-batch state. The oracle
     re-derives the projection and the lag formula in batch SQL."""
-    from kapacitor_spark.streaming import run_available_now
     from kapacitor_spark.tick import run_tickscript_stream
 
     script = """
@@ -4161,9 +4161,9 @@ stream
         script, sources={"events": sdf}, time_col="ts",
         tiebreak=("event_id",),
     )
-    return run_available_now(
-        outs["out"], _mem_name("tsp"), _ckpt()
-    ).select("event_id", "user_id", "ts", "rate")
+    return _replay(outs["out"], "tsp").select(
+        "event_id", "user_id", "ts", "rate"
+    )
 
 
 @_q(
@@ -4184,8 +4184,6 @@ def stream_sketch_distinct(spark, sf_dir):
     complete-mode memory sink = deterministic end-of-stream emission;
     at fixture cardinality the sketches are in exact mode, so the
     oracle recomputes the exact distinct counts."""
-    from kapacitor_spark.streaming import run_available_now
-
     sdf = _stream_t(spark, sf_dir, "events")
     agg = (
         sdf.groupBy(F.window("ts", "1 day"), "event_type")
@@ -4202,9 +4200,7 @@ def stream_sketch_distinct(spark, sf_dir):
             .alias("distinct_users"),
         )
     )
-    return run_available_now(
-        agg, _mem_name("ssd"), _ckpt(), output_mode="complete"
-    )
+    return _replay(agg, "ssd", output_mode="complete")
 
 
 @_q(
@@ -4226,7 +4222,7 @@ def stream_alert_changes(spark, sf_dir):
     TestStream_Alert*): per-group keyed state persists across
     micro-batches; availableNow replay must reproduce the batch walk
     exactly, so the oracle is the identical batch SQL."""
-    from kapacitor_spark.streaming import alert_stream, run_available_now
+    from kapacitor_spark.streaming import alert_stream
 
     sdf = _stream_t(spark, sf_dir, "events")
     out = alert_stream(
@@ -4234,7 +4230,7 @@ def stream_alert_changes(spark, sf_dir):
         crit="value > 180", warn="value > 120",
         state_changes_only=True, tiebreak=["event_id"],
     ).select("ts", "user_id", "value", "level")
-    return run_available_now(out, _mem_name("sac"), _ckpt())
+    return _replay(out, "sac")
 
 
 @_q(
@@ -4258,14 +4254,14 @@ def stream_state_count(spark, sf_dir):
     applyInPandasWithState: consecutive-true counter whose streak survives
     micro-batch boundaries; availableNow replay equals the batch streak
     walk, so the oracle is the batch SQL."""
-    from kapacitor_spark.streaming import run_available_now, state_count_stream
+    from kapacitor_spark.streaming import state_count_stream
 
     sdf = _stream_t(spark, sf_dir, "events")
     out = state_count_stream(
         sdf, "ts", ["user_id"], cond="value > 100", as_="state_n",
         tiebreak=["event_id"],
     ).select("event_id", "user_id", "state_n")
-    return run_available_now(out, _mem_name("ssc"), _ckpt())
+    return _replay(out, "ssc")
 
 
 @_q(
@@ -4289,7 +4285,7 @@ def stream_state_duration(spark, sf_dir):
     via applyInPandasWithState: the episode start time carries across
     micro-batches, so durations keep accruing; oracle is the batch streak
     SQL."""
-    from kapacitor_spark.streaming import run_available_now, state_duration_stream
+    from kapacitor_spark.streaming import state_duration_stream
 
     sdf = _stream_t(spark, sf_dir, "events").select(
         "ts", "user_id", "event_id", "value"
@@ -4298,7 +4294,7 @@ def stream_state_duration(spark, sf_dir):
         sdf, "ts", ["user_id"], cond="value > 100", unit="1s",
         as_="state_dur", tiebreak=["event_id"],
     ).select("event_id", "user_id", "state_dur")
-    return run_available_now(out, _mem_name("ssd"), _ckpt())
+    return _replay(out, "ssd")
 
 
 @_q(
@@ -4318,7 +4314,7 @@ def stream_sigma(spark, sf_dir):
     functions.go:1131 via applyInPandasWithState: Welford (n, mean, M2)
     state persists across micro-batches, so the availableNow replay
     equals the batch running-window SQL."""
-    from kapacitor_spark.streaming import run_available_now, sigma_stream
+    from kapacitor_spark.streaming import sigma_stream
 
     sdf = _stream_t(spark, sf_dir, "events").select(
         "ts", "user_id", "event_id", "value"
@@ -4328,7 +4324,7 @@ def stream_sigma(spark, sf_dir):
     ).select(
         "event_id", "user_id", "value", F.round("sigma_raw", 6).alias("sigma")
     )
-    return run_available_now(out, _mem_name("ssig"), _ckpt())
+    return _replay(out, "ssig")
 
 
 @_q(
@@ -4344,7 +4340,7 @@ def stream_derivative(spark, sf_dir):
     applyInPandasWithState: the previous point carries across micro-batch
     boundaries in keyed state, so availableNow replay equals the batch
     lag; oracle is the batch SQL."""
-    from kapacitor_spark.streaming import ordered_transform_stream, run_available_now
+    from kapacitor_spark.streaming import ordered_transform_stream
 
     sdf = _stream_t(spark, sf_dir, "events").select(
         "ts", "user_id", "event_id", "value"
@@ -4353,7 +4349,7 @@ def stream_derivative(spark, sf_dir):
         sdf, "ts", ["user_id"], "value", op="derivative", unit="1s",
         tiebreak=["event_id"],
     ).select("event_id", "user_id", "ts", "value")
-    return run_available_now(out, _mem_name("sdrv"), _ckpt())
+    return _replay(out, "sdrv")
 
 
 @_q(
@@ -4369,7 +4365,7 @@ def stream_count_window(spark, sf_dir):
     the last 5 values persists across micro-batches, numpy prefix-sum
     aggregation, no per-row Python. availableNow replay equals the batch
     trailing-window SQL, so the oracle is the identical window function."""
-    from kapacitor_spark.streaming import run_available_now, window_count_stream
+    from kapacitor_spark.streaming import window_count_stream
 
     sdf = _stream_t(spark, sf_dir, "events")
     out = window_count_stream(
@@ -4379,7 +4375,7 @@ def stream_count_window(spark, sf_dir):
     ).select("ts", "user_id", F.round("value", 4).alias("value"))
     # rounded on BOTH sides: the ring's prefix-sum float accumulation and
     # DuckDB's windowed avg differ in final ulps
-    return run_available_now(out, _mem_name("scw"), _ckpt())
+    return _replay(out, "scw")
 
 
 @_q(
@@ -4491,7 +4487,7 @@ def stream_join_tolerance(spark, sf_dir):
     sides on Go-Round 1m buckets; the within-cell pairing of a streaming
     join is the cell cross product, which is exactly SQL join semantics,
     so the oracle is the plain bucket equi-join."""
-    from kapacitor_spark.streaming import join_stream, run_available_now
+    from kapacitor_spark.streaming import join_stream
 
     sdf = _stream_t(spark, sf_dir, "events")
     clicks = sdf.filter("event_type = 'click'").select("ts", "user_id", "value")
@@ -4503,7 +4499,7 @@ def stream_join_tolerance(spark, sf_dir):
         "ts", "user_id",
         F.col("click_value"), F.col("purchase_value"),
     )
-    return run_available_now(j, _mem_name("sjt"), _ckpt())
+    return _replay(j, "sjt")
 
 
 @_q(

@@ -86,10 +86,6 @@ class WindowSpec:
     closed: str = "left"  # 'left' = [s, e); 'right' = (s, e] (reference)
     offset: float = 0.0  # bucket-boundary shift (InfluxQL time(d, offset))
 
-    @property
-    def is_sliding(self) -> bool:
-        return self.every < self.period
-
 
 @dataclass(frozen=True)
 class TrailingWindowSpec:
@@ -734,10 +730,6 @@ class Pipeline:
             emit=emit, closed=closed, offset=parse_duration(offset),
         )
         return replace(self, window=spec)
-
-    # alias matching the reference chain-method name
-    def window_(self, *a, **kw) -> "Pipeline":
-        return self.window_time(*a, **kw)
 
     def session_window(self, gap: str | float, *aggs: Column) -> "Pipeline":
         """Session windows — no reference equivalent (SURVEY §2.8 lists it

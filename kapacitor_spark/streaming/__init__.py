@@ -12,21 +12,23 @@ Spark mapping:
   watermark passing window end ≈ emission on barrier,
   /root/reference/window.go:149-182)
 * stateful per-group operators (alert stateChangesOnly/flapping,
-  stateCount/stateDuration, count windows) = ``applyInPandasWithState``
-  keyed state — the analog of per-group receivers + snapshots
-  (/root/reference/edge/grouped.go, task.go:532-586); checkpointing
-  replaces snapshot/restore.
+  stateCount/stateDuration, count windows, and the wall-clock
+  stats/deadman/barrier tickers) = one keyed-state kernel — the analog
+  of per-group receivers + snapshots (/root/reference/edge/grouped.go,
+  task.go:532-586); checkpointing replaces snapshot/restore.
 
-Every event-time keyed operator runs on ONE kernel, ``_keyed_scan``: per
-group it sorts each micro-batch slice by event time and folds it through
-the operator's ``step(carry, pdf)``. The carry is any picklable value,
-stored pickled in a single ``BinaryType`` state column — operators never
-declare their own state schema or encoding. Checkpoints written before
-this state layout (per-operator state columns) cannot be resumed: Spark's
-state-schema check rejects them when the query starts
-(``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``); start from a fresh
-checkpoint. Only the processing-time operators (deadman_stream,
-stats_stream, window_barrier_stream) drive ``GroupState`` timers directly.
+Every keyed operator runs on ONE kernel, ``_keyed_scan``: per group it
+sorts each micro-batch slice by event time and folds it through the
+operator's ``step(carry, pdf)``. The carry is any picklable value, stored
+pickled in a single ``BinaryType`` state column — operators never
+declare their own state schema or encoding. The kernel also owns the
+two timers: the event-time idle timeout (DeleteGroup) and the
+processing-time timer the wall-clock operators (deadman_stream,
+stats_stream, window_barrier_stream) fire through ``on_timer(carry,
+key)``. Checkpoints written before this state layout (per-operator state
+columns) cannot be resumed: Spark's state-schema check rejects them when
+the query starts (``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``); start
+from a fresh checkpoint.
 
 The DECLARATIVE subset of Pipeline (where/eval/default/shift/union/
 window_time+agg) works unchanged on streaming DataFrames — Spark plans it
@@ -97,6 +99,10 @@ def _t_us(s: pd.Series) -> np.ndarray:
 
 _CARRY_SCHEMA = StructType([StructField("carry", BinaryType())])
 
+#: A step's or timer's output when it emits nothing (the kernel yields
+#: only non-empty output).
+_NO_ROWS = pd.DataFrame()
+
 
 def _keyed_scan(
     df: DataFrame,
@@ -107,9 +113,12 @@ def _keyed_scan(
     init,
     out_schema: StructType,
     idle_timeout: str | float | None = None,
+    on_timer: Callable | None = None,
+    timer_ms: int | None = None,
+    ticker: bool = False,
 ) -> DataFrame:
-    """The keyed-state kernel every event-time stateful operator runs on
-    — the per-group receiver of the reference's edge/grouped.go, with the
+    """The keyed-state kernel every stateful stream operator runs on —
+    the per-group receiver of the reference's edge/grouped.go, with the
     checkpoint as its snapshot/restore (task.go:532-586).
 
     Per group and micro-batch, each non-empty slice is stably sorted on
@@ -122,7 +131,25 @@ def _keyed_scan(
 
     ``idle_timeout``: event-time DeleteGroup (see alert_stream) — the
     group's state is dropped once the watermark passes its last event
-    time + ``idle_timeout``; requires an upstream watermark."""
+    time + ``idle_timeout``; requires an upstream watermark.
+
+    ``on_timer``: a processing-time (wall-clock) timer instead — the
+    reference's stats ticker and barriers (stats.go, barrier.go:86-335).
+    It falls due ``timer_ms`` after the group's last call (idle rule:
+    every call postpones it) or, with ``ticker``, every ``timer_ms``
+    from the group's first point whatever the traffic (the absolute
+    tick is pickled with the carry). When due, ``on_timer(carry, key) ->
+    (carry, out_pdf)`` runs before the call's data, on a data call too:
+    Spark never times out a key that has data in the batch. ``key``
+    holds the real dims only; a ``None`` carry drops the group until its
+    next point. The clock is ``GroupState.getCurrentProcessingTimeMs()``
+    (one value per trigger); Spark clears a key's timer on every call,
+    so the kernel re-arms it on every call."""
+    if on_timer is not None and idle_timeout is not None:
+        raise ValueError(
+            "_keyed_scan: an event-time idle_timeout and a processing-time "
+            "timer exclude each other"
+        )
     timeout_ms = (
         round(parse_duration(idle_timeout) * 1000)
         if idle_timeout is not None else None
@@ -130,12 +157,29 @@ def _keyed_scan(
     out_cols = [f.name for f in out_schema]
     sort_cols = [time_col, *tiebreak]
     init_blob = pickle.dumps(init)
+    n_dims = len(dims)
 
     def machine(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        carry = pickle.loads(state.get[0] if state.exists else init_blob)
+        if on_timer is None:
+            if state.hasTimedOut:
+                state.remove()
+                return
+            carry = pickle.loads(state.get[0] if state.exists else init_blob)
+        else:
+            now = state.getCurrentProcessingTimeMs()
+            carry, due = (
+                pickle.loads(state.get[0]) if state.exists
+                else (pickle.loads(init_blob), None)
+            )
+            if due is not None and due <= now:
+                carry, out = on_timer(carry, key[:n_dims])
+                if len(out):
+                    yield out[out_cols]
+                if carry is None:
+                    if state.hasTimedOut:  # a timed-out call has no data
+                        state.remove()
+                        return
+                    carry, due = pickle.loads(init_blob), None
         last_ms = None
         for pdf in pdfs:
             if not len(pdf):
@@ -147,19 +191,29 @@ def _keyed_scan(
             if timeout_ms is not None:
                 ms = int(_t_us(pdf[time_col])[-1]) // 1000
                 last_ms = ms if last_ms is None else max(last_ms, ms)
-        state.update((pickle.dumps(carry),))
+        if on_timer is None:
+            state.update((pickle.dumps(carry),))
+        else:
+            if due is None or not ticker:
+                due = now + timer_ms
+            elif due <= now:  # the tick just fired
+                due += timer_ms
+            state.update((pickle.dumps((carry, due)),))
+            state.setTimeoutDuration(max(due - now, 1))
         if last_ms is not None:
             state.setTimeoutTimestamp(last_ms + timeout_ms)
 
     if not dims:
         df = df.withColumn("__g", F.lit(0))
-    return df.groupBy(*[F.col(d) for d in dims or ["__g"]]).applyInPandasWithState(
+    return df.groupBy(*(dims or ["__g"])).applyInPandasWithState(
         machine,
         outputStructType=out_schema,
         stateStructType=_CARRY_SCHEMA,
         outputMode="append",
         timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
+            GroupStateTimeout.ProcessingTimeTimeout
+            if on_timer is not None
+            else GroupStateTimeout.EventTimeTimeout
             if timeout_ms is not None
             else GroupStateTimeout.NoTimeout
         ),
@@ -1216,7 +1270,7 @@ def deadman_stream(
     — CRITICAL when the count since the last tick is <= threshold — and
     keep ticking every interval while the silence lasts. Unlike the
     event-time deadman (Pipeline.deadman / stats.py), a FULLY SILENT
-    group still fires: the group's ProcessingTimeTimeout triggers on an
+    group still fires: the kernel's processing-time timer triggers on an
     empty micro-batch (spark.sql.streaming.noDataMicroBatches keeps
     batches running), so a stopped stream raises CRITICAL after one
     interval — the reference's wall-clock semantics, which event-time
@@ -1230,55 +1284,32 @@ def deadman_stream(
     with it, a departed group alerts for the grace window and is then
     garbage-collected (it re-registers on its next point).
 
-    State per group: a running count + silent-tick counter (24 bytes) —
-    safe at millions of groups; emission volume is groups/interval,
-    independent of data rate."""
-    interval_ms = round(parse_duration(interval) * 1000)
+    Carry per group: a running count + silent-tick counter — safe at
+    millions of groups; emission volume is groups/interval, independent
+    of data rate."""
+
+    def step(carry, pdf):
+        return (carry[0] + len(pdf), 0), _NO_ROWS
+
+    def fire(carry, key):
+        n, silent = carry
+        crit = n <= threshold
+        silent = silent + 1 if crit else 0
+        row = pd.DataFrame(
+            [[*key, n, "CRITICAL" if crit else "OK"]],
+            columns=[*dims, "emitted", "level"],
+        )
+        if max_silent_intervals is not None and silent >= max_silent_intervals:
+            return None, row  # departed group: grace window exhausted
+        return (0, silent), row
+
     out_schema = StructType(
         [df.schema[d] for d in dims]
         + [StructField("emitted", LongType()), StructField("level", StringType())]
     )
-    state_schema = StructType(
-        [StructField("n", LongType()), StructField("silent", LongType())]
-    )
-
-    def walk(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.hasTimedOut:
-            n, silent = state.get
-            level = "CRITICAL" if n <= threshold else "OK"
-            silent = silent + 1 if n <= threshold else 0
-            if max_silent_intervals is not None and silent >= max_silent_intervals:
-                # departed group: grace window exhausted — GC its state
-                # (it re-registers on its next point, like DeleteGroup)
-                state.remove()
-            else:
-                state.update((0, silent))
-                state.setTimeoutDuration(interval_ms)
-            yield pd.DataFrame(
-                [[*key, n, level]],
-                columns=[*dims, "emitted", "level"],
-            )
-        else:
-            n, silent = state.get if state.exists else (0, 0)
-            fresh = 0
-            for pdf in pdfs:
-                fresh += len(pdf)
-            # Spark clears a key's timeout on every invocation, so it is
-            # re-armed here: the timer therefore fires after ``interval``
-            # of SILENCE (classic deadman), and keeps firing each interval
-            # while the group stays silent (re-armed in the timeout branch)
-            state.setTimeoutDuration(interval_ms)
-            state.update((n + fresh, 0))
-            yield pd.DataFrame(columns=[*dims, "emitted", "level"]).astype(
-                {"emitted": "int64"}
-            )
-
-    return df.groupBy(*[F.col(d) for d in dims]).applyInPandasWithState(
-        walk,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    return _keyed_scan(
+        df, time_col, dims, (), step, (0, 0), out_schema,
+        on_timer=fire, timer_ms=round(parse_duration(interval) * 1000),
     )
 
 
@@ -1292,51 +1323,23 @@ def stats_stream(
     interval. Stats are REAL-TIME not data-time"): per group, one
     (dims..., emitted) row every ``interval`` of processing time — under
     steady traffic AND through silence (emitted=0), exactly the
-    reference's ticker.
+    reference's ticker: the kernel's absolute-tick timer, which data
+    never postpones. deadman_stream is the silence-only variant (its
+    timer resets on data)."""
 
-    Spark clears a key's processing-time timer on every invocation, so a
-    steady ticker needs the ABSOLUTE next-tick time in state: data
-    batches re-arm the timer with the REMAINING duration (next_tick -
-    now) instead of a full interval; the timeout branch emits, advances
-    next_tick by one interval, and re-arms. deadman_stream is the
-    silence-only variant (its timer resets on data)."""
-    import time as _time
+    def step(n, pdf):
+        return n + len(pdf), _NO_ROWS
 
-    interval_ms = round(parse_duration(interval) * 1000)
+    def fire(n, key):
+        return 0, pd.DataFrame([[*key, n]], columns=[*dims, "emitted"])
+
     out_schema = StructType(
         [df.schema[d] for d in dims] + [StructField("emitted", LongType())]
     )
-    state_schema = StructType(
-        [StructField("n", LongType()), StructField("next_tick_ms", LongType())]
-    )
-
-    def walk(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        now_ms = int(_time.time() * 1000)
-        if state.hasTimedOut:
-            n, next_tick = state.get
-            state.update((0, next_tick + interval_ms))
-            state.setTimeoutDuration(max(next_tick + interval_ms - now_ms, 1))
-            yield pd.DataFrame([[*key, n]], columns=[*dims, "emitted"])
-        else:
-            if state.exists:
-                n, next_tick = state.get
-            else:
-                n, next_tick = 0, now_ms + interval_ms
-            fresh = 0
-            for pdf in pdfs:
-                fresh += len(pdf)
-            state.update((n + fresh, next_tick))
-            state.setTimeoutDuration(max(next_tick - now_ms, 1))
-            yield pd.DataFrame(columns=[*dims, "emitted"]).astype(
-                {"emitted": "int64"}
-            )
-
-    return df.groupBy(*[F.col(d) for d in dims]).applyInPandasWithState(
-        walk,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    return _keyed_scan(
+        df, time_col, dims, (), step, 0, out_schema,
+        on_timer=fire, timer_ms=round(parse_duration(interval) * 1000),
+        ticker=True,
     )
 
 
@@ -1361,8 +1364,8 @@ def window_barrier_stream(
     The problem barriers solve: an event-time watermark only advances
     when NEW data arrives, so the last (partial) window of a stalled
     stream never emits. The reference forces emission with wall-clock
-    barriers; here the same contract compiles to keyed state + a
-    ProcessingTimeTimeout:
+    barriers; here the same contract compiles to the kernel's
+    processing-time timer:
 
     * new data closes every window whose end <= the group's max event
       time (the event-time barrier — same as watermark emission);
@@ -1376,13 +1379,41 @@ def window_barrier_stream(
     Emits one row per (dims, window_start): count of buffered points.
     Windows are epoch-aligned [k*every, k*every + period) — the engine's
     documented divergence from the reference's arrival-relative grid.
-    State per group: the un-emitted tail of point times (bounded by
+    Carry per group: the un-emitted tail of point times (bounded by
     period × rate) + the emit frontier."""
     p_us = round(parse_duration(period) * 1_000_000)
     e_us = round(parse_duration(every if every is not None else period) * 1_000_000)
-    b_ms = round(parse_duration(barrier_interval) * 1000)
     if mode not in ("idle", "period"):
         raise ValueError("mode must be 'idle' or 'period'")
+
+    def flush(carry, key, force):
+        """Emit every not-yet-emitted window [ws, ws+p) that ends at or
+        before the newest point — with ``force`` (the barrier), every
+        pending window, partial ones included."""
+        times, emitted_until = carry
+        if not times:
+            return carry, _NO_ROWS
+        barrier_us = max(times) + (p_us if force else 0) + 1
+        ws = max((min(times) // e_us) * e_us, emitted_until)
+        ws = ((ws + e_us - 1) // e_us) * e_us  # align up to the every-grid
+        rows = []
+        while ws + p_us <= barrier_us:
+            n = sum(1 for t in times if ws <= t < ws + p_us)
+            if n:
+                rows.append([*key, pd.Timestamp(ws, unit="us"), n])
+            ws += e_us
+        # a point can still matter while some window containing it is
+        # un-emitted: keep t if t + p > the new emit frontier
+        kept = [t for t in times if t + p_us > ws]
+        return (kept, ws), pd.DataFrame(
+            rows, columns=[*dims, "window_start", "count"]
+        )
+
+    def step(carry, pdf):
+        times = carry[0] + _t_us(pdf[time_col]).tolist()
+        key = [pdf[d].iloc[0] for d in dims]
+        return flush((times, carry[1]), key, force=False)
+
     out_schema = StructType(
         [df.schema[d] for d in dims]
         + [
@@ -1390,83 +1421,11 @@ def window_barrier_stream(
             StructField("count", LongType()),
         ]
     )
-    state_schema = StructType(
-        [
-            StructField("times", StringType()),   # comma-joined µs (Arrow-safe)
-            StructField("emitted_until", LongType()),  # window starts < this emitted
-        ]
-    )
-
-    def flush(key, times_us, emitted_until, barrier_us):
-        """Emit every window [ws, ws+p) with ws+p <= barrier and ws >=
-        emitted_until; return (rows, new_emitted_until, retained)."""
-        rows = []
-        if times_us:
-            first = min(times_us)
-            start0 = (first // e_us) * e_us
-            ws = max(start0, emitted_until)
-            # align ws up to the every-grid
-            ws = ((ws + e_us - 1) // e_us) * e_us
-            while ws + p_us <= barrier_us:
-                n = sum(1 for t in times_us if ws <= t < ws + p_us)
-                if n:
-                    rows.append((ws, n))
-                ws += e_us
-            emitted_until = ws
-            # a point can still matter while some window containing it is
-            # un-emitted: keep t if t + p > emitted_until
-            retained = [t for t in times_us if t + p_us > emitted_until]
-        else:
-            retained = []
-        return rows, emitted_until, retained
-
-    def walk(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            stimes, emitted_until = state.get
-            times = [int(x) for x in stimes.split(",") if x]
-        else:
-            times, emitted_until = [], -(2**62)
-        out = []
-        if state.hasTimedOut:
-            # barrier fires: close EVERYTHING pending (partial included)
-            if times:
-                barrier_us = max(times) + p_us + 1
-                rows, emitted_until, times = flush(key, times, emitted_until, barrier_us)
-                out.extend(rows)
-        else:
-            for pdf in pdfs:
-                ts = (
-                    pdf[time_col].to_numpy(dtype="datetime64[us]").astype("int64")
-                )
-                times.extend(int(t) for t in ts)
-            if times:
-                # event-time barrier: newest point closes older windows
-                rows, emitted_until, times = flush(
-                    key, times, emitted_until, max(times) + 1
-                )
-                out.extend(rows)
-        # re-armed on every invocation (Spark clears the timer each call);
-        # after a firing this keeps sustained silence flushing anything a
-        # late replay adds
-        state.setTimeoutDuration(b_ms)
-        state.update((",".join(str(t) for t in times), emitted_until))
-        if out:
-            yield pd.DataFrame(
-                [
-                    [*key, pd.Timestamp(ws, unit="us"), n]
-                    for ws, n in out
-                ],
-                columns=[*dims, "window_start", "count"],
-            )
-        else:
-            yield pd.DataFrame(columns=[*dims, "window_start", "count"])
-
-    return df.groupBy(*[F.col(d) for d in dims]).applyInPandasWithState(
-        walk,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+    return _keyed_scan(
+        df, time_col, dims, (), step, ([], -(2**62)), out_schema,
+        on_timer=lambda carry, key: flush(carry, key, force=True),
+        timer_ms=round(parse_duration(barrier_interval) * 1000),
+        ticker=mode == "period",
     )
 
 

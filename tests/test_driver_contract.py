@@ -74,6 +74,20 @@ def test_queries_are_uniquely_named_and_callable():
     assert all(callable(f) for f in qs.values())
 
 
+def test_streaming_entry_query_removes_its_checkpoint(spark, sf_dir):
+    """A replay query's checkpoint is throwaway: it is gone once the
+    query returns, and the memory-sink table still holds the rows."""
+    import glob
+    import tempfile
+
+    base = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
+    pattern = os.path.join(base, "kspark_ckpt_*")
+    before = set(glob.glob(pattern))
+    out = entry_mod.queries()["stream_state_count"](spark, sf_dir)
+    assert set(glob.glob(pattern)) == before
+    assert out.count() > 0
+
+
 # ---- schema exactness ------------------------------------------------- #
 # The driver's hash is over typed (Arrow) values, so a Spark int32 against
 # a DuckDB BIGINT — or a windowed SUM that DuckDB widens to DECIMAL(38,0) —

@@ -822,6 +822,68 @@ def test_stats_stream_ticks_through_traffic_and_silence(spark, tmp_path):
     assert counts.count(0) >= 1
 
 
+def test_stats_stream_ungrouped_ticks(spark, tmp_path):
+    """An ungrouped wall-clock operator (dims=[]) runs: Spark refuses a
+    stateful operator grouped on no keys at query start, so the kernel
+    keys ungrouped input on a synthetic column — and emits only the
+    real dims, not that key."""
+    from kapacitor_spark.streaming import stats_stream
+
+    path = str(tmp_path / "in_ssu")
+    _write_batches(
+        spark, path,
+        [[("2024-01-01 00:00:00", "a", 1.0), ("2024-01-01 00:00:01", "b", 2.0)]],
+    )
+    src = spark.readStream.schema(SCHEMA).parquet(path)
+    q = (
+        stats_stream(src, "t", [], interval="1s")
+        .writeStream.format("memory").queryName("ssu_out")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ck_ssu"))
+        .trigger(processingTime="300 milliseconds")
+        .start()
+    )
+    try:
+        rows = _poll_table(spark, "ssu_out", lambda rs: len(rs) >= 2)
+    finally:
+        q.stop()
+    assert [r.asDict() for r in rows[:2]] == [{"emitted": 2}, {"emitted": 0}]
+
+
+def test_stream_barrier_period_fires_during_traffic(spark, tmp_path):
+    """The period barrier ticks on the wall clock REGARDLESS of data
+    (barrier.go period barrier): while a point arrives every trigger, it
+    still force-emits the partial window that no point can close (the
+    1h window outlives the test). An idle barrier would wait for
+    silence."""
+    from kapacitor_spark.streaming import window_barrier_stream
+
+    src = (
+        spark.readStream.format("rate").option("rowsPerSecond", 20).load()
+        .select(
+            F.timestamp_seconds(F.col("value")).alias("t"),
+            F.lit("a").alias("host"),
+        )
+    )
+    out = window_barrier_stream(
+        src, "t", ["host"], period="1h", barrier_interval="1s",
+        mode="period",
+    )
+    q = (
+        out.writeStream.format("memory").queryName("bpt_out")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ck_bpt"))
+        .trigger(processingTime="300 milliseconds")
+        .start()
+    )
+    try:
+        rows = _poll_table(spark, "bpt_out", lambda rs: len(rs) >= 1,
+                           timeout_s=20)
+    finally:
+        q.stop()
+    assert rows and rows[0]["count"] > 0
+
+
 def test_autoscale_stream_matches_batch_golden(spark, tmp_path):
     """Streaming autoscale (live mode) replays the TestStream_Autoscale
     decision sequence split across TWO micro-batches and must emit the

@@ -896,6 +896,56 @@ stream
     assert crit and all(r["host"] == "h1" and r["emitted"] == 0 for r in crit)
 
 
+def test_deadman_live_ungrouped_fires_on_silent_stream(spark, tmp_path):
+    """The reference's canonical, ungrouped
+    ``stream|from().measurement('cpu')|deadman(0.0, 1s)`` compiles and
+    runs live: one group over the whole stream, CRITICAL once it falls
+    silent, and rows with no group columns."""
+    import time
+
+    from kapacitor_spark.tick import run_tickscript_stream
+
+    src = tmp_path / "in"
+    spark.createDataFrame(
+        [(1, "2024-01-01 00:00:00", "h1", 1.0)],
+        "id long, time string, host string, value double",
+    ).withColumn("time", F.to_timestamp("time")).coalesce(1).write.parquet(
+        str(src)
+    )
+    sdf = spark.readStream.schema(
+        "id long, time timestamp, host string, value double"
+    ).parquet(str(src))
+    script = """
+stream
+    |from()
+        .measurement('cpu')
+    |deadman(0.0, 1s)
+    |httpOut('dm')
+"""
+    outs = run_tickscript_stream(script, sources={"cpu": sdf}, time_col="time")
+    q = (
+        outs["dm"].writeStream.format("memory").queryName("tick_dm_ungrouped")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(processingTime="300 milliseconds")
+        .start()
+    )
+    try:
+        deadline = time.time() + 30
+        crit = []
+        while time.time() < deadline and not crit:
+            crit = [
+                r for r in spark.table("tick_dm_ungrouped").collect()
+                if r["level"] == "CRITICAL"
+            ]
+            time.sleep(0.5)
+    finally:
+        q.stop()
+    assert crit and all(
+        r.asDict() == {"emitted": 0, "level": "CRITICAL"} for r in crit
+    )
+
+
 def test_count_window_stream_equals_batch(
     spark, fixture_df, stream_src, tmp_path
 ):

@@ -42,3 +42,16 @@ def test_no_shadowed_definitions():
                 rel = os.path.relpath(path, ROOT)
                 found += list(_redefinitions(tree.body, f"{rel}:"))
     assert not found, f"shadowed definitions: {found}"
+
+
+def test_one_keyed_state_kernel_in_streaming():
+    """Every stateful stream operator runs on ``_keyed_scan``: it is the
+    one ``applyInPandasWithState`` call in the streaming package, so no
+    operator keeps its own state schema, encoding or timer rule."""
+    pkg = os.path.join(ROOT, "kapacitor_spark", "streaming")
+    calls = 0
+    for fn in sorted(os.listdir(pkg)):
+        if fn.endswith(".py"):
+            with open(os.path.join(pkg, fn), encoding="utf-8") as f:
+                calls += f.read().count("applyInPandasWithState(")
+    assert calls == 1
