@@ -157,7 +157,6 @@ def _keyed_scan(
     out_cols = [f.name for f in out_schema]
     sort_cols = [time_col, *tiebreak]
     init_blob = pickle.dumps(init)
-    n_dims = len(dims)
 
     def machine(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
         if on_timer is None:
@@ -172,7 +171,7 @@ def _keyed_scan(
                 else (pickle.loads(init_blob), None)
             )
             if due is not None and due <= now:
-                carry, out = on_timer(carry, key[:n_dims])
+                carry, out = on_timer(carry, key[:len(dims)])
                 if len(out):
                     yield out[out_cols]
                 if carry is None:

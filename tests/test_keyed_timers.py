@@ -28,7 +28,7 @@ class FakeFrame:
         return self
 
     def applyInPandasWithState(self, func, **kw):
-        self.func, self.kw = func, kw
+        self.func = func
         return self
 
 
