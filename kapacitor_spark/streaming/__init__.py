@@ -14,7 +14,7 @@ Spark mapping:
 * stateful per-group operators (alert stateChangesOnly/flapping,
   stateCount/stateDuration, count windows, and the wall-clock
   stats/deadman/barrier tickers) = one keyed-state kernel — the analog
-  of per-group receivers + snapshots (/root/reference/edge/grouped.go,
+  of the reference's per-group receivers + snapshots (edge/grouped.go,
   task.go:532-586); checkpointing replaces snapshot/restore.
 
 Every keyed operator runs on ONE kernel, ``_keyed_scan``: per group it

@@ -65,7 +65,7 @@ class FakeGroup:
     def getCurrentProcessingTimeMs(self):
         return self.now
 
-    # --- the driver ---
+    # --- one trigger ---
     def batch(self, now, secs=()):
         """Run one trigger at wall-clock ``now`` ms, with points at event
         times ``secs`` (seconds) for this group; return what it emits."""
