@@ -3072,6 +3072,7 @@ def _planted_warc_archives(docs: DataFrame, record_of) -> DataFrame:
 def _planted_warcs(docs: DataFrame) -> DataFrame:
     """Plain planted crawl: one response record per document — URL
     http://example.com/doc/<id>, raw UTF-8 text payload."""
+
     def rec(doc_id: int, text: str):
         return f"http://example.com/doc/{doc_id}", text.encode("utf-8")
 
@@ -3115,6 +3116,7 @@ def _planted_web_warcs(docs: DataFrame) -> DataFrame:
     the document text) under a MESSY url (mixed case, www, default
     port, tracking params, fragment) — the raw-crawl shape the full
     ingest pipeline has to clean."""
+
     def rec(doc_id: int, text: str):
         url = (
             f"HTTPS://WWW.Host{doc_id % 7}.COM:443/d/{doc_id}"

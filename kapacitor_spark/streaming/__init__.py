@@ -116,6 +116,7 @@ def _keyed_scan(
     on_timer: Callable | None = None,
     timer_ms: int | None = None,
     ticker: bool = False,
+    finish: Callable | None = None,
 ) -> DataFrame:
     """The keyed-state kernel every stateful stream operator runs on —
     the per-group receiver of the reference's edge/grouped.go, with the
@@ -124,10 +125,15 @@ def _keyed_scan(
     Per group and micro-batch, each non-empty slice is stably sorted on
     ``(time_col, *tiebreak)`` and folded through ``step(carry, pdf) ->
     (carry, out_pdf)``; ``out_pdf``'s ``out_schema`` columns are emitted.
-    The carry starts as (a copy of) ``init`` and persists pickled in one
-    BinaryType state column. Empty ``dims`` key every row on one
-    synthetic constant — a single group, serial at this stage like the
-    reference's ungrouped stream task.
+    A ``time_col`` of ``None`` folds the slices unsorted, for a step that
+    ignores row order. Spark hands a large group's rows over in slices of
+    at most ``maxRecordsPerBatch``, each sorted on its own; ``finish(carry,
+    key) -> (carry, out_pdf)`` runs once after a call's last slice, for
+    output that depends on all of the call's points. The carry starts as
+    (a copy of) ``init`` and persists pickled in one BinaryType state
+    column. Empty ``dims`` key every row on one synthetic constant — a
+    single group, serial at this stage like the reference's ungrouped
+    stream task.
 
     ``idle_timeout``: event-time DeleteGroup (see alert_stream) — the
     group's state is dropped once the watermark passes its last event
@@ -155,7 +161,7 @@ def _keyed_scan(
         if idle_timeout is not None else None
     )
     out_cols = [f.name for f in out_schema]
-    sort_cols = [time_col, *tiebreak]
+    sort_cols = [time_col, *tiebreak] if time_col is not None else None
     init_blob = pickle.dumps(init)
 
     def machine(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
@@ -183,13 +189,18 @@ def _keyed_scan(
         for pdf in pdfs:
             if not len(pdf):
                 continue
-            pdf = pdf.sort_values(sort_cols, kind="stable")
+            if sort_cols:
+                pdf = pdf.sort_values(sort_cols, kind="stable")
             carry, out = step(carry, pdf)
             if len(out):
                 yield out[out_cols]
             if timeout_ms is not None:
                 ms = int(_t_us(pdf[time_col])[-1]) // 1000
                 last_ms = ms if last_ms is None else max(last_ms, ms)
+        if finish is not None and not state.hasTimedOut:
+            carry, out = finish(carry, key[:len(dims)])
+            if len(out):
+                yield out[out_cols]
         if on_timer is None:
             state.update((pickle.dumps(carry),))
         else:
@@ -1307,7 +1318,7 @@ def deadman_stream(
         + [StructField("emitted", LongType()), StructField("level", StringType())]
     )
     return _keyed_scan(
-        df, time_col, dims, (), step, (0, 0), out_schema,
+        df, None, dims, (), step, (0, 0), out_schema,
         on_timer=fire, timer_ms=round(parse_duration(interval) * 1000),
     )
 
@@ -1336,7 +1347,7 @@ def stats_stream(
         [df.schema[d] for d in dims] + [StructField("emitted", LongType())]
     )
     return _keyed_scan(
-        df, time_col, dims, (), step, 0, out_schema,
+        df, None, dims, (), step, 0, out_schema,
         on_timer=fire, timer_ms=round(parse_duration(interval) * 1000),
         ticker=True,
     )
@@ -1368,50 +1379,57 @@ def window_barrier_stream(
 
     * new data closes every window whose end <= the group's max event
       time (the event-time barrier — same as watermark emission);
-    * ``mode='idle'``: ``barrier_interval`` of wall-clock SILENCE closes
+    * ``mode='idle'``: ``barrier_interval`` of wall-clock SILENCE emits
       ALL pending windows, partial ones included (idle barrier; the
       timer re-arms on data, so a busy group never force-flushes);
     * ``mode='period'``: the timer fires every ``barrier_interval``
-      regardless of data (period barrier) and closes all pending
+      regardless of data (period barrier) and emits all pending
       windows.
 
-    Emits one row per (dims, window_start): count of buffered points.
-    Windows are epoch-aligned [k*every, k*every + period) — the engine's
-    documented divergence from the reference's arrival-relative grid.
-    Carry per group: the un-emitted tail of point times (bounded by
-    period × rate) + the emit frontier."""
+    Emits (dims..., window_start, count) rows, one per closed window. A
+    barrier can emit a window before event time closes it; points that
+    land in it later are emitted in a follow-up row for the same
+    window_start, so a window's rows add up to its points. Windows are
+    epoch-aligned [k*every, k*every + period) — the engine's documented
+    divergence from the reference's arrival-relative grid. Carry per
+    group: the points of windows event time has not closed (bounded by
+    period × rate), the closed-window frontier and the counts already
+    emitted for open windows."""
     p_us = round(parse_duration(period) * 1_000_000)
     e_us = round(parse_duration(every if every is not None else period) * 1_000_000)
     if mode not in ("idle", "period"):
         raise ValueError("mode must be 'idle' or 'period'")
 
-    def flush(carry, key, force):
-        """Emit every not-yet-emitted window [ws, ws+p) that ends at or
-        before the newest point — with ``force`` (the barrier), every
-        pending window, partial ones included."""
-        times, emitted_until = carry
-        if not times:
-            return carry, _NO_ROWS
-        barrier_us = max(times) + (p_us if force else 0) + 1
-        ws = max((min(times) // e_us) * e_us, emitted_until)
-        ws = ((ws + e_us - 1) // e_us) * e_us  # align up to the every-grid
-        rows = []
-        while ws + p_us <= barrier_us:
-            n = sum(1 for t in times if ws <= t < ws + p_us)
-            if n:
-                rows.append([*key, pd.Timestamp(ws, unit="us"), n])
-            ws += e_us
-        # a point can still matter while some window containing it is
-        # un-emitted: keep t if t + p > the new emit frontier
-        kept = [t for t in times if t + p_us > ws]
-        return (kept, ws), pd.DataFrame(
-            rows, columns=[*dims, "window_start", "count"]
-        )
-
     def step(carry, pdf):
-        times = carry[0] + _t_us(pdf[time_col]).tolist()
-        key = [pdf[d].iloc[0] for d in dims]
-        return flush((times, carry[1]), key, force=False)
+        times, closed, counted = carry
+        return (np.concatenate([times, _t_us(pdf[time_col])]), closed,
+                counted), _NO_ROWS
+
+    def flush(carry, key, force):
+        """Emit the not-yet-emitted points of every window [ws, ws+p) that
+        ends at or before the newest point, which closes it — with
+        ``force`` (the barrier), of every window holding a point, partial
+        ones included."""
+        times, closed, counted = carry
+        if not len(times):
+            return carry, _NO_ROWS
+        times = np.sort(times)
+        hi = int(times[-1])
+        ws = max((int(times[0]) // e_us) * e_us, closed)
+        ws = ((ws + e_us - 1) // e_us) * e_us  # align up to the every-grid
+        starts = np.arange(ws, (hi if force else hi + 1 - p_us) + 1, e_us)
+        ns = np.searchsorted(times, starts + p_us) - np.searchsorted(times, starts)
+        rows = []
+        for w, n in zip(starts.tolist(), ns.tolist()):
+            if n > counted.get(w, 0):
+                rows.append([*key, pd.Timestamp(w, unit="us"), n - counted.get(w, 0)])
+                counted[w] = n
+        # a point can still matter while some window containing it is open
+        closed = max(closed, (hi + 1 - p_us) // e_us * e_us + e_us)
+        return (
+            times[times + p_us > closed], closed,
+            {w: n for w, n in counted.items() if w >= closed},
+        ), pd.DataFrame(rows, columns=[*dims, "window_start", "count"])
 
     out_schema = StructType(
         [df.schema[d] for d in dims]
@@ -1421,10 +1439,12 @@ def window_barrier_stream(
         ]
     )
     return _keyed_scan(
-        df, time_col, dims, (), step, ([], -(2**62)), out_schema,
+        df, None, dims, (), step,
+        (np.empty(0, dtype="int64"), -(2**62), {}), out_schema,
         on_timer=lambda carry, key: flush(carry, key, force=True),
         timer_ms=round(parse_duration(barrier_interval) * 1000),
         ticker=mode == "period",
+        finish=lambda carry, key: flush(carry, key, force=False),
     )
 
 

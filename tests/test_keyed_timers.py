@@ -66,15 +66,17 @@ class FakeGroup:
         return self.now
 
     # --- one trigger ---
-    def batch(self, now, secs=()):
-        """Run one trigger at wall-clock ``now`` ms, with points at event
-        times ``secs`` (seconds) for this group; return what it emits."""
+    def batch(self, now, *chunks):
+        """Run one trigger at wall-clock ``now`` ms, with this group's
+        points handed over in ``chunks``, each a list of event times in
+        seconds (Spark slices a large group's rows); return what it
+        emits."""
         self.now = now
-        if secs:
+        if chunks:
             pdfs = [pd.DataFrame({
                 "t": pd.to_datetime(list(secs), unit="s"),
                 "host": "a", "value": 1.0,
-            })]
+            }) for secs in chunks]
             self.hasTimedOut = False
         elif self.exists and self.timer is not None and self.timer < now:
             pdfs, self.hasTimedOut = [], True
@@ -116,22 +118,54 @@ def test_stats_keeps_its_absolute_tick_under_traffic():
     assert g.batch(4100) == [{"emitted": 0}]
 
 
+def _barrier(mode, **kw):
+    return FakeGroup(streaming.window_barrier_stream(
+        FakeFrame(), "t", ["host"], period="10s", barrier_interval="1s",
+        mode=mode, **kw,
+    ))
+
+
 @pytest.mark.parametrize("mode, first_flush_ms", [
     ("period", 1200),   # fires every interval while points keep arriving
     ("idle", 4200),     # fires only after an interval of silence
 ])
 def test_idle_and_period_barriers_differ_under_traffic(mode, first_flush_ms):
-    g = FakeGroup(streaming.window_barrier_stream(
-        FakeFrame(), "t", ["host"], period="10s", barrier_interval="1s",
-        mode=mode,
-    ))
+    g = _barrier(mode)
     flushes = []
     for now in range(0, 3000, 300):     # one point per 300 ms, all in [0, 10)
         flushes += [(now, r) for r in g.batch(now, [now // 1000])]
     flushes += [(now, r) for now in (3500, 4200) for r in g.batch(now)]
-    now, row = flushes[0]
-    assert now == first_flush_ms
-    assert row["window_start"] == pd.Timestamp(0) and row["count"] >= 4
+    flushes += [(5000, r) for r in g.batch(5000, [12])]  # closes [0, 10)
+    assert flushes[0][0] == first_flush_ms
+    # a point landing in a window the barrier already emitted is counted
+    # in a follow-up row: the window's rows add up to its 10 points
+    assert {r["window_start"] for _, r in flushes} == {pd.Timestamp(0)}
+    assert sum(r["count"] for _, r in flushes) == 10
+    if mode == "period":
+        assert len(flushes) > 1
+
+
+def test_stream_resuming_inside_an_idle_flushed_window_is_counted():
+    g = _barrier("idle")
+    assert g.batch(0, [1, 2]) == []
+    assert g.batch(1100) == [{"window_start": pd.Timestamp(0), "count": 2}]
+    assert g.batch(1200, [3, 4]) == []
+    assert g.batch(1300, [11]) == [
+        {"window_start": pd.Timestamp(0), "count": 2},
+    ]
+
+
+def test_barrier_counts_a_group_sliced_out_of_time_order():
+    """Spark sorts each slice of a large group on its own: a later slice
+    can hold points older than an earlier slice's newest. The event-time
+    flush runs once, after the last slice, so none is lost."""
+    g = _barrier("idle")
+    assert g.batch(0, [15, 16], [1, 2, 3]) == [
+        {"window_start": pd.Timestamp(0), "count": 3},
+    ]
+    assert g.batch(1100) == [
+        {"window_start": pd.Timestamp(10 * 10**9), "count": 2},
+    ]
 
 
 def test_timer_and_idle_timeout_exclude_each_other():

@@ -854,7 +854,8 @@ def test_stream_barrier_period_fires_during_traffic(spark, tmp_path):
     """The period barrier ticks on the wall clock REGARDLESS of data
     (barrier.go period barrier): while a point arrives every trigger, it
     still force-emits the partial window that no point can close (the
-    1h window outlives the test). An idle barrier would wait for
+    1h window outlives the test), and each later tick emits a follow-up
+    row with the points that came since. An idle barrier would wait for
     silence."""
     from kapacitor_spark.streaming import window_barrier_stream
 
@@ -877,11 +878,13 @@ def test_stream_barrier_period_fires_during_traffic(spark, tmp_path):
         .start()
     )
     try:
-        rows = _poll_table(spark, "bpt_out", lambda rs: len(rs) >= 1,
+        rows = _poll_table(spark, "bpt_out", lambda rs: len(rs) >= 2,
                            timeout_s=20)
     finally:
         q.stop()
-    assert rows and rows[0]["count"] > 0
+    assert len(rows) >= 2
+    assert len({r["window_start"] for r in rows}) == 1
+    assert all(r["count"] > 0 for r in rows)
 
 
 def test_autoscale_stream_matches_batch_golden(spark, tmp_path):
