@@ -123,6 +123,9 @@ class Pipeline:
     window: WindowSpec | None = None
     tiebreak: tuple[str, ...] = ()
     results: dict = field(default_factory=dict, compare=False)
+    # one row per (time, dims): set only by a batch time-window agg();
+    # every rebuild (_with, replace) drops it
+    _unique: bool = field(default=False, init=False, repr=False, compare=False)
 
     # ------------------------------------------------------------------ #
     # sources (reference: stream|from() /root/reference/stream.go:41,
@@ -695,7 +698,9 @@ class Pipeline:
         """Declare a time window (/root/reference/window.go:80-358); consumed
         by the next aggregation, which compiles to
         ``groupBy(F.window(time, period, every), *dims)`` — Spark's native
-        sliding/tumbling windows.
+        sliding/tumbling windows. A batch aggregate keys on the emitted
+        bound instead of the struct, and a live one keeps the watermarked
+        struct (see ``agg``).
 
         ``closed='left'`` (default) = [start, stop) half-open windows —
         this matches the reference (verified against its own fixtures:
@@ -825,6 +830,14 @@ class Pipeline:
         aggregates in ONE hash-aggregate pass is strictly better (single
         shuffle, map-side partial agg) so this is the primitive and the
         named methods below are sugar.
+
+        A batch time window (emit 'start' or 'end') groups on the emitted
+        bound itself, ``__w.<emit> AS time``, not on the window struct: the
+        output is then hash-partitioned on (time, dims), the key a
+        following join() pairs on, so the join reuses this exchange. The
+        result holds one row per (time, dims), which join() reads to skip
+        its pairing sequence. A live aggregate keeps the struct key:
+        append mode needs the watermarked window column as the key.
         """
         if isinstance(self.window, (CountWindowSpec, TrailingWindowSpec)):
             raise ValueError(
@@ -832,6 +845,12 @@ class Pipeline:
                 "methods (.mean/.sum/...) or .agg_over(name=expr)"
             )
         df, keys, dim_names = self._window_grouping()
+        by_time = (
+            self.window is not None and self.window.emit != "both"
+            and not df.isStreaming
+        )
+        if by_time:
+            keys[0] = F.col(f"__w.{self.window.emit}").alias(self.time_col)
         # the measurement name is part of the reference's group identity
         # (models.ToGroupID(name, tags)) and rides through every
         # aggregation (golden alert IDs template {{ .Name }} off windowed
@@ -840,13 +859,22 @@ class Pipeline:
         if "name" in df.columns and "name" not in dim_names:
             aggs = (*aggs, F.any_value("name").alias("name"))
         out = df.groupBy(*keys).agg(*aggs) if keys else df.agg(*aggs)
+        if by_time:
+            # time stays the last column, as _emit_window_time puts it
+            out = out.select(
+                *[_flat(c) for c in out.columns if c != self.time_col],
+                _flat(self.time_col),
+            )
         out = self._emit_window_time(out)
         if emit_time and self.window is None:
             # unwindowed batch reduce: reference emits at batch time (max)
             raise ValueError("emit_time applies to windowed aggregation only")
-        tc = self.time_col if self.window is not None and self.window.emit != "both" else None
-        dims = tuple(dim_names)
-        return Pipeline(df=out, time_col=tc or self.time_col, dims=dims, results=self.results)
+        res = Pipeline(
+            df=out, time_col=self.time_col, dims=tuple(dim_names),
+            results=self.results,
+        )
+        object.__setattr__(res, "_unique", by_time)  # frozen dataclass
+        return res
 
     def agg_over(self, **named_aggs: Column) -> "Pipeline":
         """Aggregates over a pending count window: each expression is
@@ -1127,8 +1155,17 @@ class Pipeline:
         sets — the golden TestStream_JoinTolerance rows are 1st-with-1st,
         2nd-with-2nd, never a cross product), so each side gets a
         within-bucket sequence number that joins as part of the key.
+        The bucket is the time column itself without a tolerance, and the
+        rounded ``__jt`` with one. The sequence is needed only where a cell
+        can hold more than one point: a tolerance bucket, or a side that
+        is not a batch time-window aggregate (raw points can repeat a
+        timestamp). When both sides are such aggregates and there is no
+        tolerance, every cell holds one point per side, its sequence would
+        always be 1, and the join keys on (time, dims) alone, which each
+        aggregate's output is already hash-partitioned on, so no side is
+        shuffled again.
 
-        Scale: equi-join on (time bucket, dims, seq) — Catalyst/AQE choose
+        Scale: equi-join on (time bucket, dims[, seq]) — Catalyst/AQE choose
         broadcast vs sort-merge; skewed buckets are split by AQE skew-join,
         and the sequence key also bounds any hot bucket to linear output.
         """
@@ -1145,49 +1182,53 @@ class Pipeline:
                 "not join keys; add them to on=[...] or drop them from one side"
             )
 
-        def bucket(p: "Pipeline") -> DataFrame:
-            if tolerance:
-                us = round(parse_duration(tolerance) * 1_000_000)
-                um = F.unix_micros(F.col(p.time_col)) + F.lit(us // 2)
-                # Go Time.Round semantics (join.go rounds to the NEAREST
-                # multiple, half up — golden TestStream_JoinTolerance puts
-                # a t=3s point in the 4s bucket at tolerance 2s), done as
-                # exact integer math: floor(t + d/2, d)
-                b = um - um % F.lit(us)
-            else:
-                b = F.unix_micros(F.col(p.time_col))
-            df = p.df.withColumn("__jt", b)
-            # sequence within the side's OWN full group (join.go builds
-            # join sets per (time, group)); with an .on() subset join the
-            # coarse side's seq stays per its coarse group, so the single
-            # coarse point still matches every fine subgroup's first point
-            # (one-to-many, pipeline/join.go:204-236)
-            seq = F.row_number().over(
-                Window.partitionBy("__jt", *p.dims).orderBy(
-                    F.col(p.time_col), *[F.col(c) for c in p.tiebreak]
-                )
-            )
-            return df.withColumn("__jseq", seq)
+        tcol = self.time_col
+        key = "__jt" if tolerance else tcol
+        paired = bool(tolerance) or not (self._unique and other._unique)
 
-        def prefix(df: DataFrame, p: str | None, keep_dims: Iterable[str], tcol: str) -> DataFrame:
-            """p=None → pass through unrenamed (chained N-way joins:
+        def bucket(p: "Pipeline") -> Column:
+            if not tolerance:
+                return F.col(p.time_col)
+            us = round(parse_duration(tolerance) * 1_000_000)
+            um = F.unix_micros(F.col(p.time_col)) + F.lit(us // 2)
+            # Go Time.Round semantics (join.go rounds to the NEAREST
+            # multiple, half up — golden TestStream_JoinTolerance puts
+            # a t=3s point in the 4s bucket at tolerance 2s), done as
+            # exact integer math: floor(t + d/2, d)
+            return um - um % F.lit(us)
+
+        def side(p: "Pipeline", pre: str | None, keep_dims: Iterable[str]) -> DataFrame:
+            """The side keyed on ``key`` (plus ``__jseq`` when paired), its
+            other columns prefixed; pre=None → pass through unrenamed
+            (chained N-way joins:
             cpu.join(mem, ('cpu','mem')).join(disk, (None,'disk')))."""
-            cols = []
-            for c in df.columns:
-                if c == tcol:
+            cols = [bucket(p).alias(key)]
+            if paired:
+                # sequence within the side's OWN full group (join.go builds
+                # join sets per (time, group)); with an .on() subset join
+                # the coarse side's seq stays per its coarse group, so the
+                # single coarse point still matches every fine subgroup's
+                # first point (one-to-many, pipeline/join.go:204-236)
+                cols.append(F.row_number().over(
+                    Window.partitionBy(bucket(p), *p.dims).orderBy(
+                        F.col(p.time_col), *[F.col(c) for c in p.tiebreak]
+                    )
+                ).alias("__jseq"))
+            for c in p.df.columns:
+                if c == p.time_col:
                     continue  # time is rebuilt from the bucket key
-                if c in ("__jt", "__jseq") or c in keep_dims or p is None:
+                if c in keep_dims or pre is None:
                     cols.append(_flat(c))
                 else:
-                    cols.append(_flat(c).alias(f"{p}{delimiter}{c}"))
-            return df.select(*cols)
+                    cols.append(_flat(c).alias(f"{pre}{delimiter}{c}"))
+            return p.df.select(*cols)
 
         # each side's own dims stay unprefixed — the fine side's extra tags
         # become output tags (golden TestStream_JoinOn keeps 'dc' a tag)
-        left = prefix(bucket(self), lp, {*self.dims, *join_dims}, self.time_col)
-        right = prefix(bucket(other), rp, {*other.dims, *join_dims}, other.time_col)
+        left = side(self, lp, {*self.dims, *join_dims})
+        right = side(other, rp, {*other.dims, *join_dims})
         how = "inner" if fill in (None, "none") else "full_outer"
-        keys = ["__jt", "__jseq", *join_dims]
+        keys = [key, *(["__jseq"] if paired else []), *join_dims]
         out = left.join(right, keys, how)
         # explicit coalesce, not DataFrame.fillna: prefixed field names
         # contain the delimiter ('errors.value') which fillna's column
@@ -1215,15 +1256,16 @@ class Pipeline:
             out = _fill(out, [(c, v) for c, v in fill.items() if c in out.columns])
         elif fill not in (None, "none", "null"):
             out = _fill(out, [(c, fill) for c in out.columns if c not in keys])
-        out = out.withColumn(
-            self.time_col, F.timestamp_micros(F.col("__jt"))
-        ).drop("__jt", "__jseq")
+        # time last, as before the join; a tolerance bucket is µs
+        t = F.timestamp_micros(F.col(key)) if tolerance else F.col(key)
+        out = out.select(
+            *[_flat(c) for c in out.columns if c not in (key, "__jseq")],
+            t.alias(tcol),
+        )
         if stream_name is not None:
             out = out.withColumn("name", F.lit(stream_name))
         out_dims = tuple(dict.fromkeys([*join_dims, *self.dims, *other.dims]))
-        return Pipeline(
-            df=out, time_col=self.time_col, dims=out_dims, results=self.results
-        )
+        return Pipeline(df=out, time_col=tcol, dims=out_dims, results=self.results)
 
     def combine(
         self,

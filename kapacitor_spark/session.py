@@ -181,7 +181,13 @@ def local_df(spark: SparkSession, rows, schema, slices: int = 1):
     each when a coalesce(1) serializes them (measured: a one-row
     append-write went 5.5 s → 0.4 s with one slice). Lookup tables and
     constant results are a few KB; one partition is the right layout.
-    Results are identical — this only sets the partition count."""
+    Results are identical — this only sets the partition count.
+
+    Row and schema verification is deferred: ``createDataFrame(list,
+    schema)`` checks every row against the schema at the call, while
+    ``parallelize`` + schema checks them on the executors at the frame's
+    first action. A malformed row therefore raises at that action, not
+    here."""
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, max(1, int(slices))), schema
     )

@@ -697,3 +697,116 @@ def test_state_track_fused_single_streak_pass(spark):
     )
     assert chained.exceptAll(fused).count() == 0
     assert fused.exceptAll(chained).count() == 0
+
+
+_TICK_JOIN = """
+var c = stream
+    |from()
+        .measurement('cpu')
+        .groupBy('host')
+    |window()
+        .period(10s)
+        .every(10s)
+    |max('value')
+        .as('v')
+var m = stream
+    |from()
+        .measurement('mem')
+        .groupBy('host')
+    |window()
+        .period(10s)
+        .every(10s)
+    |max('value')
+        .as('v')
+c
+    |join(m)
+        .as('cpu', 'mem'){props}
+    |httpOut('out')
+"""
+
+
+def _measurements(spark):
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(
+        [(s * 1_000_000, f"h{s % 3}", m, float(s)) for s in range(40)
+         for m in ("cpu", "mem")],
+        "us long, host string, measurement string, value double",
+    ).select(F.timestamp_micros("us").alias("time"), "host", "measurement", "value")
+    return {m: df.filter(df.measurement == m).drop("measurement") for m in ("cpu", "mem")}
+
+
+def _sort_merge_plan(spark, df) -> str:
+    """The executed plan with broadcast joins off, so the join's own
+    shuffle requirement shows as it would on big sides."""
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        return df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def test_join_of_window_aggregates_reuses_their_exchange(spark):
+    """The canonical two-measurement join: each side's window max is
+    keyed on its emitted time, one row per (time, host), so the join
+    pairs on (time, host) with no sequence — no row_number Window, and
+    the aggregate's hash exchange is the only one on each side."""
+    from kapacitor_spark.tick import run_tickscript
+
+    out = run_tickscript(
+        _TICK_JOIN.format(props=""), sources=_measurements(spark), time_col="time"
+    )["out"]
+    plan = _sort_merge_plan(spark, out)
+    assert "SortMergeJoin" in plan, plan
+    assert "row_number" not in plan and "__jseq" not in plan, plan
+    assert " Window [" not in plan, plan
+    assert plan.count("Exchange hashpartitioning") == 2, plan
+
+
+def test_joins_that_can_repeat_keep_the_sequence(spark):
+    """A tolerance bucket can hold several points, and so can a raw-point
+    side: both joins still pair through the row_number sequence."""
+    from kapacitor_spark import Pipeline
+    from kapacitor_spark.tick import run_tickscript
+
+    srcs = _measurements(spark)
+    tol = run_tickscript(
+        _TICK_JOIN.format(props="\n        .tolerance(20s)"), sources=srcs,
+        time_col="time",
+    )["out"]
+    raw = Pipeline.from_df(srcs["cpu"], dims=["host"]).join(
+        Pipeline.from_df(srcs["mem"], dims=["host"])
+    ).df
+    for df in (tol, raw):
+        plan = _sort_merge_plan(spark, df)
+        assert "row_number" in plan and " Window [" in plan, plan
+
+
+def test_live_window_aggregate_keeps_the_window_struct_key(spark, tmp_path):
+    """The live compile groups on the watermarked window struct (append
+    mode needs it as the key), not on its start as the batch one does."""
+    import re
+
+    from kapacitor_spark.tick import run_tickscript, run_tickscript_stream
+
+    srcs = _measurements(spark)
+    srcs["cpu"].write.parquet(str(tmp_path / "cpu"))
+    sdf = spark.readStream.schema(srcs["cpu"].schema).parquet(str(tmp_path / "cpu"))
+    script = """
+stream
+    |from()
+        .measurement('cpu')
+        .groupBy('host')
+    |window()
+        .period(10s)
+        .every(10s)
+    |max('value')
+        .as('v')
+    |httpOut('out')
+"""
+    live = run_tickscript_stream(script, sources={"cpu": sdf}, time_col="time")["out"]
+    batch = run_tickscript(script, sources=srcs, time_col="time")["out"]
+    struct_key = re.compile(r"Aggregate \[__w#\d+, host#\d+\]")
+    assert struct_key.search(live._jdf.queryExecution().analyzed().toString())
+    assert not struct_key.search(batch._jdf.queryExecution().analyzed().toString())

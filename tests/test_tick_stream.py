@@ -749,12 +749,31 @@ def test_sideload_and_sample_stream_equals_batch(spark, tmp_path):
     """sideload() is a stream-static broadcast join (lookup levels load
     once, like the reference's cached file source) and sample(duration)
     is a stateless boundary filter — both over the reference's OWN
-    testdata/sideload files, pinned stream == batch replay; sample(N)
-    raises toward the batch replay (needs a per-group counter)."""
-    from kapacitor_spark.streaming import run_available_now
-    from kapacitor_spark.tick import TickError, run_tickscript, run_tickscript_stream
-
+    testdata/sideload files, pinned stream == batch replay."""
     fixtures = "/root/reference/integrations/testdata"
+    sideload = f"{fixtures}/sideload"
+    if not os.path.isdir(sideload):
+        pytest.skip(
+            f"reference sideload files not found at {sideload}; "
+            "test_sideload_and_sample_stream_equals_batch_hermetic is the "
+            "in-repo twin"
+        )
+    byid = _sideload_sample_stream_vs_batch(spark, tmp_path, sideload)
+    assert byid["1"] == ("0.0", "0.0", "one")      # defaults
+    assert byid["3"] == ("2.0", "3.5", "why")      # t0/b + t1/n + t2/y
+    assert byid["4"] == ("12.0", "13.5", "why")    # t0/c beats t1/o
+
+    # sample(N) compiles live since the r11 2nd wave (keyed counter) —
+    # covered by test_sample_n_stream_equals_batch; the duration form
+    # above stays a stateless boundary filter
+
+
+def _sideload_sample_stream_vs_batch(spark, tmp_path, sideload_dir):
+    """Run one sample(2s)|sideload() script live and as the batch replay
+    over four points tagged (t0, t1, t2); assert the two paths agree and
+    return ``{id: (f1, f2, t3)}`` as strings."""
+    from kapacitor_spark import streaming, tick
+
     rows = [
         (1, "2024-01-01 00:00:00", "a", "m", "x", 1.0),
         (2, "2024-01-01 00:00:01", "a", "m", "x", 9.0),  # off-boundary: sampled out
@@ -777,29 +796,41 @@ stream
         .groupBy('t0', 't1', 't2')
     |sample(2s)
     |sideload()
-        .source('file://{fixtures}/sideload')
+        .source('file://{sideload_dir}')
         .order('t0/{{{{.t0}}}}.yml', 't1/{{{{.t1}}}}.yml', 't2/{{{{.t2}}}}.yml')
         .field('f1', 0)
         .field('f2', 0.0)
         .tag('t3', 'one')
     |httpOut('s')
 """
-    outs = run_tickscript_stream(script, sources={"m": sdf}, time_col="time")
-    res = run_available_now(outs["s"], "ts_sideload", str(tmp_path / "ck"))
+    outs = tick.run_tickscript_stream(script, sources={"m": sdf}, time_col="time")
+    res = streaming.run_available_now(outs["s"], "ts_sideload", str(tmp_path / "ck"))
     cols = ["id", "f1", "f2", "t3"]
     s = sorted(tuple(str(r[c]) for c in cols) for r in res.collect())
-    bouts = run_tickscript(script, sources={"m": df}, time_col="time", dims=())
+    bouts = tick.run_tickscript(script, sources={"m": df}, time_col="time", dims=())
     b = sorted(tuple(str(r[c]) for c in cols) for r in bouts["s"].collect())
     assert s == b and len(s) == 3          # id 2 sampled out on both paths
-    assert not any(r[0] == "2" for r in s)
-    byid = {r[0]: r for r in s}
-    assert byid["1"][1:] == ("0.0", "0.0", "one")      # defaults
-    assert byid["3"][1:] == ("2.0", "3.5", "why")      # t0/b + t1/n + t2/y
-    assert byid["4"][1:] == ("12.0", "13.5", "why")    # t0/c beats t1/o
+    return {r[0]: r[1:] for r in s}
 
-    # sample(N) compiles live since the r11 2nd wave (keyed counter) —
-    # covered by test_sample_n_stream_equals_batch; the duration form
-    # above stays a stateless boundary filter
+
+def test_sideload_and_sample_stream_equals_batch_hermetic(spark, tmp_path):
+    """The same stream == batch pin over level files written here: each
+    field resolves at the first level (t0, then t1, then t2) whose file
+    holds it, and falls back to its .field()/.tag() default."""
+    levels = {
+        "t0/c.yml": "f1: 12.0\nf2: 13.5\n",
+        "t1/o.yml": "f1: 100.0\nt3: oh\n",
+        "t1/n.yml": "f1: 2.0\n",
+        "t2/y.yml": "f1: 50.0\nf2: 3.5\nt3: why\n",
+    }
+    root = tmp_path / "sideload"
+    for rel, text in levels.items():
+        (root / rel).parent.mkdir(parents=True, exist_ok=True)
+        (root / rel).write_text(text)
+    byid = _sideload_sample_stream_vs_batch(spark, tmp_path, root)
+    assert byid["1"] == ("0.0", "0.0", "one")      # no file for a/m/x
+    assert byid["3"] == ("2.0", "3.5", "why")      # t1/n, then t2/y
+    assert byid["4"] == ("12.0", "13.5", "oh")     # t0/c beats t1/o; t3 from t1/o
 
 
 def test_extended_window_aggs_stream_equals_batch(
